@@ -14,7 +14,9 @@ Mirrors the reference's ``main()`` argparse surface
 Spark-first deltas from the reference (documented in SURVEY §1.1):
 the envelope JSON document becomes a flat partitioned table plus a
 ``_run_metrics`` table, and the watermark commits once per batch
-AFTER the sink write succeeds (the reference commits per row).
+AFTER the sink write succeeds (the reference commits per row). A batch
+is one Spark action — the sink write, or a ``noop`` write under
+``--skip-upload`` — and its run counters are observed on that action.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 
 from ag_data_ingestion_github_to_snowflake_spark.config import EngineConfig
@@ -75,6 +78,7 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
     """
     from ag_data_ingestion_github_to_snowflake_spark.pipeline.github import (
         incremental_extract,
+        metrics_row,
     )
     from ag_data_ingestion_github_to_snowflake_spark.sources.rest import (
         RestSourceConfig,
@@ -144,21 +148,29 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
         commit_state=False,  # commit AFTER the sink write below
     )
 
-    valid_count = result.valid.count()
-    invalid_count = result.invalid.count()
-    if not skip_upload and valid_count:
+    sink_existed = os.path.exists(sink_path)
+    if skip_upload:
+        result.valid.write.format("noop").mode("overwrite").save()
+    else:
         partitioned_append(result.valid, sink_path, ts_col="updated_at")
-        write_run_metrics(result.metrics, sink_path + "_run_metrics")
+    metrics = result.metrics(test_mode)
+    uploaded = not skip_upload and metrics["valid_count"] > 0
+    if uploaded:
+        write_run_metrics(metrics_row(spark, metrics), sink_path + "_run_metrics")
+    elif not skip_upload and not sink_existed:
+        # An empty partitioned append leaves a directory with only
+        # _SUCCESS, which spark.read.parquet cannot infer a schema from.
+        shutil.rmtree(sink_path, ignore_errors=True)
     # Watermark advances only once the batch is durably sunk (or the
     # run explicitly skipped the sink) — a failed write re-fetches.
     state.set(result.new_watermark)
 
     summary = {
         "success": True,
-        "valid_count": valid_count,
-        "invalid_count": invalid_count,
+        "valid_count": metrics["valid_count"],
+        "invalid_count": metrics["invalid_count"],
         "new_watermark": result.new_watermark,
-        "uploaded": bool(not skip_upload and valid_count),
+        "uploaded": uploaded,
         "sink_path": sink_path if not skip_upload else None,
         "test_mode": test_mode,
     }

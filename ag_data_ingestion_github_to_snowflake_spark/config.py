@@ -7,9 +7,7 @@
 | GITHUB_TOKEN             | auth -> 5000 req/h tier      | token |
 | MAX_REQUESTS_PER_RUN     | API budget per run           | max_requests_per_run |
 | REPOS_PER_PAGE           | list page size               | per_page |
-| REQUEST_DELAY            | inter-request pacing (s)     | request_delay |
 | S3_BUCKET / S3_PREFIX    | sink location                | sink_path |
-| S3_USE_DATE_PARTITIONING | yyyy/mm/dd layout toggle     | date_partitioning |
 | STATE_BACKEND/STATE_PATH | watermark persistence        | state_path |
 | TEST_MODE / SKIP_UPLOAD  | dry-run switches             | test_mode / skip_upload |
 """
@@ -31,9 +29,7 @@ class EngineConfig:
     token: str | None = None
     max_requests_per_run: int = 60
     per_page: int = 100
-    request_delay: float = 0.0  # Spark source paces via partitions, not sleep
     sink_path: str = "/tmp/ag_spark_sink"
-    date_partitioning: bool = True
     state_path: str = "/tmp/ag_spark_state/last_repo_id.txt"
     test_mode: bool = False
     skip_upload: bool = False
@@ -48,9 +44,7 @@ class EngineConfig:
                 e.get("MAX_REQUESTS_PER_RUN", "5000" if e.get("GITHUB_TOKEN") else "60")
             ),
             per_page=int(e.get("REPOS_PER_PAGE", "100")),
-            request_delay=float(e.get("REQUEST_DELAY", "0")),
             sink_path=e.get("S3_BUCKET", "/tmp/ag_spark_sink"),
-            date_partitioning=_bool(e.get("S3_USE_DATE_PARTITIONING"), True),
             state_path=e.get("STATE_PATH", "/tmp/ag_spark_state/last_repo_id.txt"),
             test_mode=_bool(e.get("TEST_MODE"), False),
             skip_upload=_bool(e.get("SKIP_UPLOAD"), False),

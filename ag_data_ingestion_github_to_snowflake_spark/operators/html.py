@@ -120,8 +120,9 @@ def pagerank(
                    (rank(u) div out_deg(u))) div d_den
 
     Returns ``(node, rank)`` with ``rank`` scaled by ``scale``.
-    ``checkpoint`` truncates lineage per round (eager localCheckpoint,
-    same pattern as ``connected_components``); disable for plan tests.
+    ``checkpoint`` truncates lineage per round (lazy localCheckpoint: the
+    consumer's one action materializes every round); disable for plan
+    tests.
     """
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
@@ -153,15 +154,8 @@ def pagerank(
             )
         )
         if checkpoint:
-            # r14 (guide §5, VERDICT r13 item 2 applied to the probe-free
-            # loop): LAZY — the eager form paid one materialization job
-            # per round (5 driver-latency-bound jobs of ~1 task each at
-            # label-table scale); lazy marks each round's RDD for
-            # truncation and the CONSUMER's single action materializes
-            # the whole chain, saving every marked RDD's blocks as it
-            # computes. Interleaved A/B ×3 at sf0.1: eager
-            # [1.85, 2.20, 2.52] s vs lazy [1.64, 1.80, 2.07] s, results
-            # bit-identical (fixed-point BIGINT arithmetic).
+            # Lazy: an eager checkpoint costs one job per round
+            # (OPTIMIZATION_r14.md, pagerank_link_graph).
             ranks = ranks.localCheckpoint(eager=False)
     return ranks
 

@@ -6,16 +6,20 @@ Covers SURVEY §2 A10 (flatten), A12/A13 (validation split), A14 (error
 row skip), A15 (run counters), A21 (resume/at-least-once), composed in
 ``incremental_extract`` — the whole of the reference's
 ``extract_repositories`` (/root/reference/src/extract_github_data.py:
-607-762) as one lazily-planned DataFrame pipeline.
+607-762) as one lazily-planned DataFrame pipeline. The run counters
+are ``df.observe`` metrics on that plan: they ride the one action that
+consumes the batch (the sink write) instead of a second pass.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import datetime
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ag_data_ingestion_github_to_snowflake_spark.sources.rest import (
@@ -104,34 +108,75 @@ def latest_snapshot(df: DataFrame, key: str = "id", order_col: str = "updated_at
     )
 
 
-def run_metrics(
-    flat: DataFrame,
-    api_calls: int = 0,
-    cache_hits: int = 0,
-    test_mode: bool = False,
-) -> DataFrame:
-    """A15: the run-summary counters as one aggregate row
-    (processed/valid/invalid + id range; reference :730-742)."""
+# The ``_run_metrics`` table's columns and types.
+RUN_METRICS_SCHEMA = T.StructType(
+    [
+        T.StructField("total_processed", T.LongType()),
+        T.StructField("valid_count", T.LongType()),
+        T.StructField("invalid_count", T.LongType()),
+        T.StructField("start_repo_id", T.LongType()),
+        T.StructField("last_repo_id", T.LongType()),
+        T.StructField("api_calls", T.IntegerType()),
+        T.StructField("cache_hits", T.IntegerType()),
+        T.StructField("test_mode", T.BooleanType()),
+        T.StructField("extraction_date", T.TimestampType()),
+    ]
+)
+
+
+def metrics_row(spark: SparkSession, metrics: dict) -> DataFrame:
+    """``metrics`` as one ``_run_metrics`` row, built in the JVM so
+    writing it needs no Python worker."""
+    return spark.range(1).select(
+        *[F.lit(metrics[f.name]).cast(f.dataType).alias(f.name) for f in RUN_METRICS_SCHEMA.fields]
+    )
+
+
+def observed_run_metrics(flat: DataFrame):
+    """A15 run counters (processed/valid/invalid + id range; reference
+    :730-742) as an ``Observation`` on ``flat``: the first action that
+    consumes the returned DataFrame, or a filter of it, computes them
+    with no extra job.
+
+    Returns ``(observed_df, observation)`` — run the action on
+    ``observed_df``, then read ``observation.get`` for the metrics dict.
+    """
     pred = valid_predicate()
-    return flat.agg(
-        F.count("*").alias("total_processed"),
-        F.sum(F.when(pred, 1).otherwise(0)).alias("valid_count"),
-        F.sum(F.when(~pred, 1).otherwise(0)).alias("invalid_count"),
+    obs = Observation("run_metrics")
+    observed = flat.observe(
+        obs,
+        F.count(F.lit(1)).alias("total_processed"),
+        F.count_if(pred).alias("valid_count"),
+        F.count_if(~pred).alias("invalid_count"),
         F.min("id").alias("start_repo_id"),
         F.max("id").alias("last_repo_id"),
-        F.lit(api_calls).alias("api_calls"),
-        F.lit(cache_hits).alias("cache_hits"),
-        F.lit(test_mode).alias("test_mode"),
-        F.current_timestamp().alias("extraction_date"),
     )
+    return observed, obs
 
 
 @dataclass
 class ExtractResult:
+    """One batch. ``valid`` and ``invalid`` share one observed plan: the
+    first action over either fills ``counters`` and ``lookups``."""
+
     valid: DataFrame
     invalid: DataFrame
-    metrics: DataFrame
     new_watermark: int
+    list_pages: int
+    counters: Observation
+    lookups: Observation
+
+    def metrics(self, test_mode: bool = False) -> dict:
+        """The ``_run_metrics`` row, once the batch's action has run:
+        the observed counters, one API call per list page and per detail
+        lookup, and no cache hits."""
+        return {
+            **self.counters.get,
+            "api_calls": self.list_pages + self.lookups.get["lookups"],
+            "cache_hits": 0,
+            "test_mode": test_mode,
+            "extraction_date": datetime.now(),
+        }
 
 
 def incremental_extract(
@@ -145,54 +190,35 @@ def incremental_extract(
     """The full reference pipeline as one Spark job (A1-A15, A21).
 
     state-read -> paginated list scan -> budget limit -> distributed
-    detail enrichment -> flatten -> validate split -> dedupe on id ->
-    metrics. The watermark commits once per batch (not per row as the
-    reference does, :714) and only AFTER the batch has materialized —
-    the outputs are persisted and computed before ``state.set``, so a
-    failed enrichment job aborts with the watermark untouched and the
-    next run re-fetches the batch. Idempotency comes from
-    ``latest_snapshot`` on id — the documented at-least-once design
-    (README.md:121-129) made exactly-once at the table level. Callers
-    writing to durable sinks should pass ``commit_state=False`` and
-    commit the watermark themselves after the sink write succeeds.
+    detail enrichment -> flatten -> dedupe on id -> observed counters
+    -> validate split. Nothing runs until an action consumes ``valid``
+    or ``invalid``. The watermark commits once per batch (not per row as
+    the reference does, :714) and only after that action succeeded, so
+    a failed batch is re-fetched by the next run. Idempotency comes
+    from ``latest_snapshot`` on id — the documented at-least-once design
+    (README.md:121-129) made exactly-once at the table level.
+
+    With ``commit_state`` the batch runs here as a ``noop`` write before
+    ``state.set``; later actions on the outputs recompute them. Callers
+    writing to a durable sink pass ``commit_state=False``, write
+    ``valid`` and then commit the watermark themselves.
     """
     config = config or RestSourceConfig()
     since = state.get()
-    list_df, new_wm = list_scan_df(spark, transport, since, config, max_pages)
+    pages = 0
+
+    def listing(path: str, params: dict):
+        nonlocal pages
+        pages += 1
+        return transport(path, params)
+
+    list_df, new_wm = list_scan_df(spark, listing, since, config, max_pages)
+    lookups = Observation("lookups")
+    list_df = list_df.observe(lookups, F.count(F.lit(1)).alias("lookups"))
     raw = enrich_details(list_df, transport, config)
-    flat = latest_snapshot(flatten_repos(raw), "id", "updated_at")
-    flat = flat.persist()
+    flat, counters = observed_run_metrics(latest_snapshot(flatten_repos(raw), "id", "updated_at"))
     valid, invalid = validation_split(flat)
-    metrics = run_metrics(flat)
     if commit_state:
-        flat.count()  # force the fetch/flatten to succeed first
+        flat.write.format("noop").mode("overwrite").save()
         state.set(new_wm)
-    return ExtractResult(valid=valid, invalid=invalid, metrics=metrics, new_watermark=new_wm)
-
-
-def observed_run_metrics(flat: DataFrame):
-    """A15 counters as a zero-extra-scan ``Observation``.
-
-    :func:`run_metrics` recomputes the counters with a second aggregate
-    over the data — at 100 TB that is a second full pass over the
-    warehouse write's input. ``df.observe`` instead piggybacks the
-    counters on whatever action consumes the returned DataFrame (the
-    sink write itself): accumulator-style, exactly-once per action, no
-    extra job.
-
-    Returns ``(observed_df, observation)`` — write ``observed_df``,
-    then read ``observation.get`` for the metrics dict.
-    """
-    from pyspark.sql import Observation
-
-    pred = valid_predicate()
-    obs = Observation("run_metrics")
-    observed = flat.observe(
-        obs,
-        F.count(F.lit(1)).alias("total_processed"),
-        F.sum(F.when(pred, 1).otherwise(0)).alias("valid_count"),
-        F.sum(F.when(~pred, 1).otherwise(0)).alias("invalid_count"),
-        F.min("id").alias("start_repo_id"),
-        F.max("id").alias("last_repo_id"),
-    )
-    return observed, obs
+    return ExtractResult(valid, invalid, new_wm, pages, counters, lookups)

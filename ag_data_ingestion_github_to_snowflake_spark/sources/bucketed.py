@@ -26,6 +26,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ag_data_ingestion_github_to_snowflake_spark.sources.staging import write_marker
+
 
 def write_bucketed(
     df: DataFrame,
@@ -60,21 +62,18 @@ def _ensure_bucketed(
     fingerprint_extra: str = "",
 ) -> DataFrame:
     """Stage ``df`` as a bucketed external table, reusing an existing
-    layout when it is newer than ``src_mtime`` (r13: the pair staging
-    rewrote BOTH tables on every build — the one staging helper without
-    the repo's mtime-marker convention, ~3 s per bench line for a query
-    whose whole point is that the layout shuffle is paid ONCE). A fresh
-    session that finds a fresh layout re-registers the catalog entry
-    with CREATE TABLE ... CLUSTERED BY ... LOCATION — no data rewrite —
-    so the bucket metadata the planner needs survives session churn.
+    layout when it is newer than ``src_mtime``, so the layout shuffle is
+    paid once rather than on every build. A fresh session that finds a
+    fresh layout re-registers the catalog entry with CREATE TABLE ...
+    CLUSTERED BY ... LOCATION — no data rewrite — so the bucket metadata
+    the planner needs survives session churn.
 
-    Reuse additionally requires the marker's FINGERPRINT (source
-    identity + projected schema + bucket spec) to match (ADVICE r13,
-    medium): an mtime-only marker under a basename-tagged /tmp path
-    could silently serve stale parquet when two sf dirs share a
-    basename, or when the caller's projection changed in code — the
-    re-register branch would then declare the CURRENT schema over old
-    files and read missing columns as NULLs."""
+    Reuse also requires the marker's fingerprint (source identity +
+    projected schema + bucket spec) to match: an mtime-only marker under
+    a basename-tagged temp path could serve stale parquet when two sf
+    dirs share a basename, or when the caller's projection changed in
+    code — the re-register branch would then declare the current schema
+    over old files and read missing columns as NULLs."""
     marker = os.path.join(path, "_staged")
     fingerprint = (
         f"{fingerprint_extra}|{df.schema.simpleString()}|{key}|{buckets}\n"
@@ -90,8 +89,7 @@ def _ensure_bucketed(
     )
     if not fresh:
         write_bucketed(df, table, key, buckets, path)
-        with open(marker, "w") as f:
-            f.write(fingerprint)
+        write_marker(marker, fingerprint)
         return spark.table(table)
     if not spark.catalog.tableExists(table):
         cols = ", ".join(
@@ -123,7 +121,7 @@ def bucketed_pair(
     mtime of the source files) enables layout reuse across builds —
     omit it to force a rewrite every call. ``src_id`` (e.g. the FULL
     source dir path) disambiguates tag collisions in the reuse
-    fingerprint (ADVICE r13)."""
+    fingerprint."""
     base = os.path.join(tempfile.gettempdir(), f"ag_bucketed_{tag}")
     lt, rt = f"ag_bkt_left_{tag}", f"ag_bkt_right_{tag}"
     bl = _ensure_bucketed(

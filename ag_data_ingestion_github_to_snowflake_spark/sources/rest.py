@@ -8,20 +8,18 @@ Re-expresses the reference's ingestion operators Spark-first
 - A5 header/auth construction (:351-369)
 - A20 rate-limit governor (:372-391)
 
-Architecture: the *list scan* is a driver-side keyset-paginated fetch
-(pages are inherently sequential — each page's ``since`` comes from the
-previous page's last id), producing a small DataFrame of list rows.
-The *detail enrichment* — the expensive part, one call per row — runs
-distributed via ``mapInPandas``: each executor partition owns an HTTP
-client and fetches its rows' details in parallel across partitions
-(the reference does this serially at 1 row/s; Spark parallelizes it to
-#partitions concurrent streams while a token-bucket throttle enforces
-the per-run budget).
+Architecture: ``keyset_pages`` is the one keyset pager. The CLI's
+driver-side list scan (``fetch_repo_list``/``list_scan_df``) and both
+``github_repos`` Data Source readers (``rest_datasource``) consume it
+and stop pulling pages at their own bounds. The *detail enrichment* —
+the expensive part, one call per row — runs distributed via
+``mapInPandas``: each executor partition fetches its rows' details
+concurrently with the others, while the ``rows[:budget]`` cap bounds
+the calls per run.
 
 The transport is injectable (callable) so tests replay canned JSON
 (the reference's cache-file format, :293-344) without any network; the
-real transport is a thin ``requests``/urllib adapter gated behind an
-import-try.
+real transport is a thin urllib adapter.
 """
 
 from __future__ import annotations
@@ -33,6 +31,7 @@ import urllib.parse
 import urllib.request
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
+from itertools import islice
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -108,36 +107,48 @@ class RestSourceConfig:
     detail_partitions: int = 8  # parallel enrichment streams
 
 
+def keyset_pages(transport: Transport, since: int, per_page: int) -> Iterator[list[tuple]]:
+    """Keyset pagination over ``GET /repositories``: yields each page's
+    rows as ``LIST_SCHEMA`` tuples, ids strictly increasing past ``since``.
+
+    Ids ``<= cursor`` (replayed or stale rows) are dropped. The scan
+    stops on a non-200 or empty response, on a page that does not
+    advance the cursor and after a short page. Callers apply their own
+    bounds by no longer iterating, so no page past them is requested.
+    """
+    cursor = since
+    while True:
+        status, payload = transport("/repositories", {"since": cursor, "per_page": per_page})
+        if status != 200 or not payload:
+            return
+        page = []
+        for r in payload:
+            rid = int(r["id"])
+            if rid > cursor:
+                page.append((rid, r.get("name"), r.get("full_name"), (r.get("owner") or {}).get("login")))
+                cursor = rid
+        if not page:
+            return
+        yield page
+        if len(payload) < per_page:
+            return
+
+
 def fetch_repo_list(
     transport: Transport,
     since: int,
     per_page: int = 100,
     max_pages: int = 1,
 ) -> tuple[list[dict], int]:
-    """A1: keyset-paginated list scan. Returns (rows, new_watermark).
-
-    Pages are fetched sequentially on the driver (keyset pagination is
-    a serial dependency); each row is the lightweight list record.
-    """
-    rows: list[dict] = []
-    watermark = since
-    for _ in range(max_pages):
-        status, payload = transport("/repositories", {"since": watermark, "per_page": per_page})
-        if status != 200 or not payload:
-            break
-        for r in payload:
-            rows.append(
-                {
-                    "id": int(r["id"]),
-                    "name": r.get("name"),
-                    "full_name": r.get("full_name"),
-                    "owner_login": (r.get("owner") or {}).get("login"),
-                }
-            )
-        watermark = rows[-1]["id"]
-        if len(payload) < per_page:
-            break
-    return rows, watermark
+    """A1: the first ``max_pages`` pages of the keyset scan on the driver
+    (each page's ``since`` is the previous page's last id). Returns
+    (rows, new_watermark)."""
+    rows = [
+        dict(zip(LIST_SCHEMA.names, r))
+        for page in islice(keyset_pages(transport, since, per_page), max_pages)
+        for r in page
+    ]
+    return rows, rows[-1]["id"] if rows else since
 
 
 def list_scan_df(
@@ -157,8 +168,7 @@ def list_scan_df(
     # The watermark must never advance past rows the budget discarded:
     # an empty batch keeps the caller's watermark unchanged.
     watermark = rows[-1]["id"] if rows else since
-    df = spark.createDataFrame(rows, LIST_SCHEMA) if rows else spark.createDataFrame([], LIST_SCHEMA)
-    return df, watermark
+    return spark.createDataFrame(rows, LIST_SCHEMA), watermark
 
 
 def enrich_details(

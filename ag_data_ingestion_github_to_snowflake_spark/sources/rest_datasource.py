@@ -1,15 +1,14 @@
 """GitHub-repos REST connector as a Spark 4 Python Data Source.
 
-Promotes the driver-side fetch (sources/rest.py) to a first-class
-``spark.read.format("github_repos")`` source (SURVEY §7.4): the list
-scan is keyset-paginated so page N+1 depends on page N's last id —
-but with a fixed ``since``/``until`` id range the keyspace can be
-*sharded by id*: each input partition owns an id sub-range and pages
-through it independently (``GET /repositories?since=<shard_start>``
-stopping at shard end). That turns the reference's serial loop
-(/root/reference/src/extract_github_data.py:394-435) into N parallel
-scan streams, one per Spark task — the same technique JDBC sources use
-for predicate-sharded parallel reads.
+Promotes the driver-side list scan (sources/rest.py) to a first-class
+``spark.read.format("github_repos")`` source (SURVEY §7.4). Keyset
+pagination is serial — page N+1 starts after page N's last id — but
+with a fixed ``since``/``until`` id range the keyspace can be *sharded
+by id*: each input partition owns an id sub-range and pages through it
+independently, one Spark task per shard, the way JDBC sources shard
+reads by predicate. Both readers consume ``rest.keyset_pages`` through
+``_scan``, which adds only their bounds: the shard or offset end and a
+row cap.
 
 Registration requires a picklable transport factory; tests inject the
 stub via ``TransportRegistry`` (executors re-create the transport from
@@ -28,7 +27,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-from ag_data_ingestion_github_to_snowflake_spark.sources.rest import LIST_SCHEMA
+from ag_data_ingestion_github_to_snowflake_spark.sources.rest import LIST_SCHEMA, keyset_pages
 
 
 class TransportRegistry:
@@ -44,6 +43,23 @@ class TransportRegistry:
     @classmethod
     def build(cls, name: str, spec: str):
         return cls._factories[name](spec)
+
+
+def _scan(transport, since: int, per_page: int, end: int | None, limit: int | None) -> Iterator[tuple]:
+    """Rows of the keyset scan in ``(since, end]``, at most ``limit`` of
+    them. Returns as soon as a bound is reached, so no page past it is
+    requested."""
+    if (limit is not None and limit <= 0) or (end is not None and since >= end):
+        return
+    n = 0
+    for page in keyset_pages(transport, since, per_page):
+        for row in page:
+            if end is not None and row[0] > end:
+                return
+            yield row
+            n += 1
+            if n == limit or row[0] == end:
+                return
 
 
 class _IdRangePartition(InputPartition):
@@ -94,42 +110,7 @@ class GithubReposReader(DataSourceReader):
         """Page through one (start, end] id shard (executor-side),
         honoring the shard's planned row cap (budget share)."""
         transport = TransportRegistry.build(self.transport_name, self.transport_spec)
-        cursor = partition.start
-        emitted = 0
-        while cursor < partition.end:
-            if partition.row_cap is not None and emitted >= partition.row_cap:
-                return
-            status, payload = transport(
-                "/repositories", {"since": cursor, "per_page": self.per_page}
-            )
-            if status != 200 or not payload:
-                break
-            prev_cursor = cursor
-            for r in payload:
-                rid = int(r["id"])
-                if rid <= prev_cursor:
-                    # ``since`` means strictly-greater ids; replayed or
-                    # stale rows from a misbehaving server are dropped.
-                    continue
-                if rid > partition.end:
-                    return
-                if partition.row_cap is not None and emitted >= partition.row_cap:
-                    return
-                yield (
-                    rid,
-                    r.get("name"),
-                    r.get("full_name"),
-                    (r.get("owner") or {}).get("login"),
-                )
-                emitted += 1
-                cursor = max(cursor, rid)
-            if cursor <= prev_cursor:
-                # Forward-progress guard: a page that advanced nothing
-                # must not trap the executor in an infinite loop of
-                # identical requests.
-                break
-            if len(payload) < self.per_page:
-                break
+        yield from _scan(transport, partition.start, self.per_page, partition.end, partition.row_cap)
 
 
 class GithubReposStreamReader(SimpleDataSourceStreamReader):
@@ -162,37 +143,8 @@ class GithubReposStreamReader(SimpleDataSourceStreamReader):
 
     def _pull(self, after: int, limit: int | None, stop_at: int | None = None):
         transport = TransportRegistry.build(self.transport_name, self.transport_spec)
-        rows: list[tuple] = []
-        cursor = after
-        while limit is None or len(rows) < limit:
-            status, payload = transport(
-                "/repositories", {"since": cursor, "per_page": self.per_page}
-            )
-            if status != 200 or not payload:
-                break
-            prev_cursor = cursor
-            for r in payload:
-                rid = int(r["id"])
-                if rid <= prev_cursor:
-                    continue
-                if stop_at is not None and rid > stop_at:
-                    return rows, cursor
-                if limit is not None and len(rows) >= limit:
-                    return rows, cursor
-                rows.append(
-                    (
-                        rid,
-                        r.get("name"),
-                        r.get("full_name"),
-                        (r.get("owner") or {}).get("login"),
-                    )
-                )
-                cursor = max(cursor, rid)
-            if cursor <= prev_cursor:  # forward-progress guard
-                break
-            if len(payload) < self.per_page:
-                break
-        return rows, cursor
+        rows = list(_scan(transport, after, self.per_page, stop_at, limit))
+        return rows, rows[-1][0] if rows else after
 
     def read(self, start: dict):
         rows, cursor = self._pull(int(start["cursor"]), self.batch_rows)

@@ -194,8 +194,8 @@ def make_funnel_cep_kernel(window_us: int):
     purchase' is exactly the last click processed, and its
     view-at-click was frozen when the click arrived. Requires
     time-ordered micro-batches (the staged slices guarantee it);
-    within a batch, rows sort by (ts, stage-rank, event_id) so
-    same-instant view->click->purchase chains match inclusively,
+    within a batch, rows sort by (ts, stage-rank) so same-instant
+    view->click->purchase chains match inclusively,
     mirroring the <= joins of the batch oracle.
     """
 
@@ -210,26 +210,16 @@ def make_funnel_cep_kernel(window_us: int):
         for pdf in batches:
             if matched:
                 break
-            # Plain-Python group interior (r14, guide §4.2 inverted for
-            # TINY batches): each per-user group frame is a handful of
-            # rows, where the former 4 pandas ops (isin filter, assign,
-            # map, sort_values) cost fixed ~µs-scale overhead per call
-            # that dominated the kernel. One generator + sorted() over
-            # .values does the identical (ts, stage-rank, event_id)
-            # ordering; unmapped stages (signup/error/...) are dropped
-            # by the `et in _CEP_RANK` guard exactly as isin did.
-            # Interleaved A/B ×3 at sf0.1: [3.52,3.67,3.78] s →
-            # [3.21,3.22,3.30] s, emitted matches identical.
+            # Plain Python: a per-user frame is a handful of rows, where
+            # pandas per-call overhead dominated (OPTIMIZATION_r14.md §8).
+            # Rows tied on (ts, stage-rank) update the state identically,
+            # so event_id, which may be null, is not part of the key.
             rows = sorted(
-                (int(ts), _CEP_RANK[et], int(eid))
-                for ts, et, eid in zip(
-                    pdf["ts_us"].values,
-                    pdf["event_type"].values,
-                    pdf["event_id"].values,
-                )
+                (int(ts), _CEP_RANK[et])
+                for ts, et in zip(pdf["ts_us"].values, pdf["event_type"].values)
                 if et in _CEP_RANK
             )
-            for ts, rank, _eid in rows:
+            for ts, rank in rows:
                 if rank == 0:
                     lv = ts
                 elif rank == 1:

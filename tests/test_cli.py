@@ -103,3 +103,113 @@ def test_cli_use_cache_seeds_watermark_from_sink(spark, tmp_path):
         spark=spark,
     )
     assert summary["valid_count"] == 0  # nothing past the cached max id
+
+
+def _replaying_stub(lookup_log: str):
+    """A stub server that answers every list request with page 1 and
+    appends each detail lookup to ``lookup_log`` (lookups run in Python
+    workers, so they are counted through a file)."""
+    from ag_data_ingestion_github_to_snowflake_spark.sources.stub import StubTransport
+
+    class ReplayPageOne(StubTransport):
+        def __call__(self, path, params):
+            if path == "/repositories":
+                params = {**params, "since": 0}
+            else:
+                with open(lookup_log, "a") as f:
+                    f.write(path + "\n")
+            return super().__call__(path, params)
+
+    return ReplayPageOne
+
+
+def test_cli_replayed_page_is_listed_and_looked_up_once(spark, tmp_path, monkeypatch):
+    """A replayed page is dropped and stops the list scan: each id is
+    listed and looked up once, and the watermark is the last distinct id."""
+    from ag_data_ingestion_github_to_snowflake_spark.sources import stub
+    from ag_data_ingestion_github_to_snowflake_spark.sources.rest import (
+        RestSourceConfig,
+        fetch_repo_list,
+        list_scan_df,
+    )
+
+    log = tmp_path / "lookups.txt"
+    replay = _replaying_stub(str(log))
+    tr = replay(n_repos=300)
+    rows, wm = fetch_repo_list(tr, 0, per_page=100, max_pages=3)
+    assert [r["id"] for r in rows] == list(range(1, 101)) and wm == 100
+    assert tr.calls == ["/repositories"] * 2  # page 1 and its replay
+    cfg = RestSourceConfig(per_page=100, max_requests_per_run=1000)
+    df, wm = list_scan_df(spark, tr, since=0, config=cfg, max_pages=3)
+    assert sorted(r.id for r in df.collect()) == list(range(1, 101)) and wm == 100
+
+    monkeypatch.setattr(stub, "StubTransport", replay)
+    monkeypatch.setenv("MAX_REQUESTS_PER_RUN", "1000")
+    sink = str(tmp_path / "sink")
+    state = str(tmp_path / "wm.txt")
+    summary = run(
+        ["--test-mode", "--n-repos", "300", "--max-pages", "3", "--sink", sink, "--state", state],
+        spark=spark,
+    )
+    lookups = log.read_text().split()
+    assert len(lookups) == len(set(lookups)) == 100
+    assert summary["new_watermark"] == int(open(state).read()) == 100
+    ids = [r.id for r in spark.read.parquet(sink).select("id").collect()]
+    assert len(ids) == len(set(ids)) == summary["valid_count"]
+    (m,) = spark.read.parquet(sink + "_run_metrics").collect()
+    assert m.api_calls == 2 + 100  # page 1, its replay, one lookup per id
+
+
+def test_cli_run_metrics_row_matches_ground_truth(spark, tmp_path, monkeypatch):
+    """One test-mode batch from watermark 37: one list page capped at the
+    60-call budget's 59 detail slots, ids 38..96. The stub 404s on
+    id % 19 and returns invalid rows on id % 13 and id % 17."""
+    monkeypatch.delenv("MAX_REQUESTS_PER_RUN", raising=False)
+    monkeypatch.delenv("GITHUB_TOKEN", raising=False)
+    sink = str(tmp_path / "sink")
+    state = tmp_path / "wm.txt"
+    state.write_text("37")
+    summary = run(
+        ["--test-mode", "--n-repos", "300", "--sink", sink, "--state", str(state)],
+        spark=spark,
+    )
+    listed = range(38, 97)
+    found = [i for i in listed if i % 19]
+    invalid = [i for i in found if i % 13 == 0 or i % 17 == 0]
+    (m,) = spark.read.parquet(sink + "_run_metrics").collect()
+    assert m.total_processed == len(found) == 55
+    assert m.valid_count == len(found) - len(invalid) == 47
+    assert m.invalid_count == len(invalid) == 8
+    assert m.start_repo_id == 39  # 38 is a 404
+    assert m.last_repo_id == 96
+    assert m.api_calls == 1 + len(listed)
+    assert m.cache_hits == 0
+    assert m.test_mode is True
+    assert summary["valid_count"] == m.valid_count
+    assert summary["invalid_count"] == m.invalid_count
+    assert summary["new_watermark"] == 96
+
+
+def test_cli_empty_batch_leaves_no_sink_and_next_batch_lands(spark, tmp_path):
+    """A batch whose only listed id (19) is a 404 advances the watermark
+    and writes neither a sink directory nor a metrics row; the next
+    batch lands and ``--use-cache`` still reads the sink."""
+    import os
+
+    sink = str(tmp_path / "sink")
+    state = tmp_path / "wm.txt"
+    state.write_text("18")
+    argv = ["--test-mode", "--sink", sink, "--state", str(state)]
+    empty = run([*argv, "--n-repos", "19"], spark=spark)
+    assert empty["valid_count"] == empty["invalid_count"] == 0
+    assert not empty["uploaded"] and empty["new_watermark"] == 19
+    assert not os.path.exists(sink) and not os.path.exists(sink + "_run_metrics")
+
+    landed = run([*argv, "--n-repos", "60"], spark=spark)
+    assert landed["uploaded"] and landed["new_watermark"] == 60
+    assert spark.read.parquet(sink).count() == landed["valid_count"] > 0
+    assert spark.read.parquet(sink + "_run_metrics").count() == 1
+
+    os.remove(state)
+    cached = run([*argv, "--n-repos", "60", "--use-cache"], spark=spark)
+    assert cached["valid_count"] == 0 and cached["new_watermark"] == 60

@@ -12,7 +12,6 @@ def test_config_defaults_unauthenticated():
     cfg = EngineConfig.from_env({})
     assert cfg.max_requests_per_run == 60  # reference unauth default
     assert cfg.per_page == 100
-    assert cfg.date_partitioning is True
 
 
 def test_config_token_raises_budget_tier():
@@ -24,12 +23,11 @@ def test_config_explicit_overrides():
     cfg = EngineConfig.from_env(
         {
             "MAX_REQUESTS_PER_RUN": "123",
-            "S3_USE_DATE_PARTITIONING": "false",
             "TEST_MODE": "1",
         }
     )
     assert cfg.max_requests_per_run == 123
-    assert cfg.date_partitioning is False and cfg.test_mode is True
+    assert cfg.test_mode is True
 
 
 def test_binaryfile_source_to_media_features(spark, tmp_path):

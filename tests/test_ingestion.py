@@ -109,9 +109,9 @@ def test_incremental_extract_end_to_end_with_resume(spark, tmp_path):
     r1 = incremental_extract(spark, tr, state, cfg, max_pages=1)
     assert r1.new_watermark == 40
     assert state.get() == 40
-    m = r1.metrics.collect()[0]
-    assert m.total_processed == r1.valid.count() + r1.invalid.count()
-    assert m.start_repo_id >= 1 and m.last_repo_id <= 40
+    m = r1.metrics()
+    assert m["total_processed"] == r1.valid.count() + r1.invalid.count()
+    assert m["start_repo_id"] >= 1 and m["last_repo_id"] <= 40
 
     r2 = incremental_extract(spark, tr, state, cfg, max_pages=1)
     assert r2.new_watermark == 80
@@ -388,11 +388,10 @@ def test_compact_table_zorder_bounds_both_columns(spark, tmp_path):
 
 
 def test_observed_run_metrics_single_pass(spark, tmp_path):
-    """Observation counters ride the sink write (no second scan) and
-    match the two-pass run_metrics aggregate."""
+    """Observation counters ride the one action — a write of the valid
+    split, as the CLI does — and still count every row."""
     from ag_data_ingestion_github_to_snowflake_spark.pipeline.github import (
         observed_run_metrics,
-        run_metrics,
     )
     from ag_data_ingestion_github_to_snowflake_spark.sources.rest import (
         RAW_DETAIL_SCHEMA,
@@ -404,12 +403,12 @@ def test_observed_run_metrics_single_pass(spark, tmp_path):
     flat = flatten_repos(spark.createDataFrame(rows, RAW_DETAIL_SCHEMA))
 
     observed, obs = observed_run_metrics(flat)
-    observed.write.mode("overwrite").parquet(str(tmp_path / "out"))  # the one action
+    valid, _ = validation_split(observed)
+    valid.write.mode("overwrite").parquet(str(tmp_path / "out"))  # the one action
     got = obs.get
-    want = run_metrics(flat).collect()[0]
-    assert got["total_processed"] == want.total_processed == 5
-    assert got["valid_count"] == want.valid_count == 4
-    assert got["invalid_count"] == want.invalid_count == 1
+    assert got["total_processed"] == 5
+    assert got["valid_count"] == 4
+    assert got["invalid_count"] == 1
     assert got["start_repo_id"] == 1 and got["last_repo_id"] == 5
 
 

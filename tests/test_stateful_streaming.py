@@ -238,3 +238,31 @@ def test_transform_with_state_matches_v1(spark, tmp_path):
     for uid in e:
         assert g[uid][0] == e[uid][0]
         assert abs(g[uid][1] - e[uid][1]) < 1e-4
+
+
+def test_funnel_cep_kernel_null_event_id():
+    """A null event_id — NaN once Arrow hands a nullable BIGINT to
+    pandas, or None in an object column — must not crash the kernel,
+    and the chain still matches."""
+    import pandas as pd
+
+    from ag_data_ingestion_github_to_snowflake_spark.streaming.stateful import (
+        make_funnel_cep_kernel,
+    )
+
+    class State:
+        hasTimedOut = False
+        exists = False
+
+        def update(self, v):
+            self.value = v
+
+    kernel = make_funnel_cep_kernel(window_us=100)
+    for event_ids in ([1.0, float("nan"), 3.0], pd.Series([1, None, 3], dtype=object)):
+        pdf = pd.DataFrame(
+            {"ts_us": [10, 20, 30], "event_type": ["view", "click", "purchase"], "event_id": event_ids}
+        )
+        st = State()
+        out = list(kernel((1,), iter([pdf]), st))
+        assert out[0].values.tolist() == [[1, 10, 20, 30]]
+        assert st.value == (10, 20, 10, 1)

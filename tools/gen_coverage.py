@@ -17,7 +17,7 @@ from ag_data_ingestion_github_to_snowflake_spark.plans.registry import all_specs
 # Non-query evidence: operator ids covered by modules/tests rather than
 # (or in addition to) registry entries.
 MODULE_EVIDENCE = {
-    "A1": ["sources/rest.py:fetch_repo_list", "sources/rest_datasource.py (parallel DataSource + SimpleDataSourceStreamReader)", "tests/test_rest_datasource.py"],
+    "A1": ["sources/rest.py:keyset_pages (the one pager: fetch_repo_list + both github_repos readers)", "tests/test_cli.py::test_cli_replayed_page_is_listed_and_looked_up_once", "tests/test_rest_datasource.py"],
     "A2": ["sources/rest.py:enrich_details (mapInPandas)", "tests/test_ingestion.py::test_enrichment_skips_404_and_flattens"],
     "A3": ["sources/sinks.py:bronze_cache_write"],
     "A4": ["sources/state.py (File/Env/Memory/KVWatermark)", "tests/test_ingestion.py::test_incremental_extract_resume_from_remote_kv_state"],
@@ -27,11 +27,11 @@ MODULE_EVIDENCE = {
     "A8": ["sources/state.py", "pipeline/github.py:incremental_extract (batch commit)"],
     "A9": ["sources/sinks.py:merge_into_warehouse (idempotent key-merge)", "tests/test_ingestion.py::test_merge_into_warehouse_idempotent_reload"],
     "A10": ["pipeline/github.py:flatten_repos", "tests/test_operators.py::test_flatten_golden"],
-    "A11": ["sources/rest.py:list_scan_df budget slice", "sources/rest_datasource.py (per-shard row caps)", "tests/test_rest_datasource.py::test_budget_capped_scan"],
+    "A11": ["sources/rest.py:list_scan_df budget slice", "sources/rest_datasource.py:_scan (per-shard row caps)", "tests/test_rest_datasource.py::test_budget_capped_scan"],
     "A12": ["pipeline/github.py:valid_predicate", "tests/test_operators.py::test_validation_split_partitions_input"],
     "A13": ["pipeline/github.py:validation_split", "tests/test_ingestion.py::test_validation_split_counts"],
     "A14": ["sources/rest.py:enrich_details 404 branch", "tests/test_ingestion.py::test_enrichment_skips_404_and_flattens"],
-    "A15": ["pipeline/github.py:run_metrics", "tests/test_ingestion.py::test_incremental_extract_end_to_end_with_resume"],
+    "A15": ["pipeline/github.py:observed_run_metrics + ExtractResult.metrics (observed on the sink write)", "tests/test_cli.py::test_cli_run_metrics_row_matches_ground_truth"],
     "A16": [], "A17": [], "A18": [], "A19": [],
     "A20": ["sources/rest.py:HeaderRateLimitGovernor (X-RateLimit parse + reset backoff)", "tests/test_rate_governor.py"],
     "A21": ["pipeline/github.py:incremental_extract + latest_snapshot", "tests/test_ingestion.py::test_latest_snapshot_idempotent"],
