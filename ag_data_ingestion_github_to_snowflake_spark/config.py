@@ -10,6 +10,7 @@
 | S3_BUCKET / S3_PREFIX    | sink location                | sink_path |
 | STATE_BACKEND/STATE_PATH | watermark persistence        | state_path |
 | TEST_MODE / SKIP_UPLOAD  | dry-run switches             | test_mode / skip_upload |
+| DETAIL_PARTITIONS        | (none)                       | detail_partitions: at most N concurrent enrichment tasks |
 """
 
 from __future__ import annotations

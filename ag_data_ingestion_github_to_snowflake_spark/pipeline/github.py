@@ -187,15 +187,17 @@ def incremental_extract(
     max_pages: int = 1,
     commit_state: bool = True,
 ) -> ExtractResult:
-    """The full reference pipeline as one Spark job (A1-A15, A21).
+    """The full reference pipeline as one lazily planned batch (A1-A15, A21).
 
     state-read -> paginated list scan -> budget limit -> distributed
     detail enrichment -> flatten -> dedupe on id -> observed counters
     -> validate split. Nothing runs until an action consumes ``valid``
-    or ``invalid``. The watermark commits once per batch (not per row as
-    the reference does, :714) and only after that action succeeded, so
-    a failed batch is re-fetched by the next run. Idempotency comes
-    from ``latest_snapshot`` on id — the documented at-least-once design
+    or ``invalid``; the CLI's batch is then 3 Spark jobs: the dedupe
+    shuffle, the sink write and the metrics-row write. The watermark
+    commits once per batch (not per row as the reference does, :714)
+    and only after that action succeeded, so a failed batch is
+    re-fetched by the next run. Idempotency comes from
+    ``latest_snapshot`` on id — the documented at-least-once design
     (README.md:121-129) made exactly-once at the table level.
 
     With ``commit_state`` the batch runs here as a ``noop`` write before

@@ -11,11 +11,14 @@ Re-expresses the reference's ingestion operators Spark-first
 Architecture: ``keyset_pages`` is the one keyset pager. The CLI's
 driver-side list scan (``fetch_repo_list``/``list_scan_df``) and both
 ``github_repos`` Data Source readers (``rest_datasource``) consume it
-and stop pulling pages at their own bounds. The *detail enrichment* —
-the expensive part, one call per row — runs distributed via
-``mapInPandas``: each executor partition fetches its rows' details
-concurrently with the others, while the ``rows[:budget]`` cap bounds
-the calls per run.
+and stop pulling pages at their own bounds. ``list_scan_df`` hands the
+listed rows to Spark as an Arrow table, a JVM ``LocalTableScan`` with
+one slice per core, so no Python task runs before the lookups. The
+*detail enrichment* — one call per row — runs in ``mapInPandas``
+over those slices, coalesced to at most ``detail_partitions`` tasks
+without a shuffle; the ``rows[:budget]`` cap bounds the calls per run.
+Each Python task has a fixed CPU cost larger than a slice's lookups
+(OPTIMIZATION_r15.md), hence one task per core and no more.
 
 The transport is injectable (callable) so tests replay canned JSON
 (the reference's cache-file format, :293-344) without any network; the
@@ -33,8 +36,10 @@ from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 from itertools import islice
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # transport: (path, params) -> (status_code, payload_dict_or_list)
 Transport = Callable[[str, dict], tuple[int, object]]
@@ -104,7 +109,7 @@ class RestSourceConfig:
 
     per_page: int = 100  # REPOS_PER_PAGE (API max)
     max_requests_per_run: int = 60  # MAX_REQUESTS_PER_RUN
-    detail_partitions: int = 8  # parallel enrichment streams
+    detail_partitions: int = 8  # at most N concurrent enrichment tasks
 
 
 def keyset_pages(transport: Transport, since: int, per_page: int) -> Iterator[list[tuple]]:
@@ -158,7 +163,11 @@ def list_scan_df(
     config: RestSourceConfig | None = None,
     max_pages: int = 1,
 ) -> tuple[DataFrame, int]:
-    """List scan as a DataFrame + new watermark (A1 + A11 budget limit)."""
+    """List scan as a DataFrame + new watermark (A1 + A11 budget limit).
+
+    The rows become an Arrow-backed local relation: it plans as a JVM
+    ``LocalTableScan`` split into one slice per core (never more slices
+    than rows), so reading it starts no Python worker."""
     config = config or RestSourceConfig()
     rows, _ = fetch_repo_list(transport, since, config.per_page, max_pages)
     # Budget: reserve one call per list page (conservative if the scan
@@ -168,7 +177,8 @@ def list_scan_df(
     # The watermark must never advance past rows the budget discarded:
     # an empty batch keeps the caller's watermark unchanged.
     watermark = rows[-1]["id"] if rows else since
-    return spark.createDataFrame(rows, LIST_SCHEMA), watermark
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(LIST_SCHEMA))
+    return spark.createDataFrame(table, LIST_SCHEMA), watermark
 
 
 def enrich_details(
@@ -178,11 +188,13 @@ def enrich_details(
 ) -> DataFrame:
     """A2: distributed point-lookup enrichment via mapInPandas.
 
-    Each partition drives its own transport connection; a failed or
-    404 lookup yields no row (A14 skip semantics). The reference does
-    this loop serially on one thread (:677-714); here partitions fetch
-    concurrently and the output is the *nested raw* record, flattening
-    happens downstream (pipeline.github.flatten_repos).
+    The list relation's per-core slices are coalesced (narrow, no
+    shuffle) to at most ``detail_partitions`` tasks. Each task drives
+    its own transport connection; a failed or 404 lookup yields no row
+    (A14 skip semantics). The reference does this loop serially on one
+    thread (:677-714); here tasks fetch concurrently and the output is
+    the *nested raw* record, flattening happens downstream
+    (pipeline.github.flatten_repos).
     """
     import pandas as pd  # executor-side import
 
@@ -224,7 +236,7 @@ def enrich_details(
             )
 
     return (
-        list_df.repartition(config.detail_partitions)
+        list_df.coalesce(config.detail_partitions)
         .mapInPandas(kernel, RAW_DETAIL_SCHEMA)
     )
 

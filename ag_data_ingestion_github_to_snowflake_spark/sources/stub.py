@@ -55,7 +55,7 @@ class StubTransport:
         if path == "/repositories":
             since = int(params.get("since", 0))
             per_page = int(params.get("per_page", 100))
-            ids = [i for i in range(since + 1, self.n_repos + 1)][:per_page]
+            ids = range(since + 1, min(since + per_page, self.n_repos) + 1)
             return 200, [self._list_row(i) for i in ids]
         if path.startswith("/repos/"):
             name = path.rsplit("/", 1)[-1]

@@ -213,3 +213,56 @@ def test_cli_empty_batch_leaves_no_sink_and_next_batch_lands(spark, tmp_path):
     os.remove(state)
     cached = run([*argv, "--n-repos", "60", "--use-cache"], spark=spark)
     assert cached["valid_count"] == 0 and cached["new_watermark"] == 60
+
+
+def test_cli_batch_is_three_jobs_over_a_local_list_scan(spark, tmp_path, monkeypatch):
+    """A CLI batch is the enrichment → dedupe shuffle, the sink write and
+    the metrics-row write. The listed rows reach the lookup kernel from a
+    JVM ``LocalTableScan`` through a narrow coalesce: no Python list
+    stage and no round-robin shuffle."""
+    from ag_data_ingestion_github_to_snowflake_spark.pipeline.github import (
+        incremental_extract,
+    )
+    from ag_data_ingestion_github_to_snowflake_spark.sources.state import MemoryWatermark
+    from ag_data_ingestion_github_to_snowflake_spark.sources.stub import StubTransport
+
+    monkeypatch.delenv("MAX_REQUESTS_PER_RUN", raising=False)
+    monkeypatch.delenv("GITHUB_TOKEN", raising=False)
+    sc = spark.sparkContext
+    group = f"cli-batch-shape-{tmp_path.name}"
+    sc.setJobGroup(group, "one CLI batch")
+    try:
+        summary = run(
+            ["--test-mode", "--n-repos", "300", "--sink", str(tmp_path / "sink"),
+             "--state", str(tmp_path / "wm.txt")],
+            spark=spark,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert summary["uploaded"] and summary["new_watermark"] == 59
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+    result = incremental_extract(
+        spark, StubTransport(n_repos=300), MemoryWatermark(0), commit_state=False
+    )
+    plan = result.valid._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "RoundRobinPartitioning" not in plan
+
+
+def test_cli_nothing_listed_keeps_watermark_and_writes_nothing(spark, tmp_path):
+    """State already at ``--n-repos``: the keyset scan lists no row, so
+    the batch's list relation is an empty Arrow table."""
+    import os
+
+    sink = str(tmp_path / "sink")
+    state = tmp_path / "wm.txt"
+    state.write_text("300")
+    summary = run(
+        ["--test-mode", "--n-repos", "300", "--sink", sink, "--state", str(state)],
+        spark=spark,
+    )
+    assert summary["success"] and not summary["uploaded"]
+    assert summary["valid_count"] == summary["invalid_count"] == 0
+    assert summary["new_watermark"] == int(state.read_text()) == 300
+    assert not os.path.exists(sink) and not os.path.exists(sink + "_run_metrics")

@@ -43,6 +43,20 @@ def test_list_scan_pagination_and_watermark(spark):
     assert ids[0] == 101 and wm2 == 120
 
 
+def test_stub_list_pages_near_the_end_of_the_universe():
+    """Each list page is the next ``per_page`` ids past ``since``, cut at
+    ``n_repos``: full pages, the short last page and the empty page
+    past the end."""
+    n = 250
+    tr = StubTransport(n_repos=n)
+    for per_page in (1, 7, 100):
+        for since in (0, 1, n - per_page - 1, n - per_page, n - per_page + 1, n - 1, n, n + 5):
+            status, page = tr("/repositories", {"since": since, "per_page": per_page})
+            expected = [i for i in range(since + 1, n + 1)][:per_page]
+            assert status == 200
+            assert [r["id"] for r in page] == expected, (since, per_page)
+
+
 def test_budget_limit_truncates(spark):
     tr = StubTransport(n_repos=120)
     cfg = RestSourceConfig(per_page=50, max_requests_per_run=11, detail_partitions=2)
