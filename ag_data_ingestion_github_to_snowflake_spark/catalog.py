@@ -130,21 +130,13 @@ def parallelize_cpu_scan(
     """Round-robin repartition a scan feeding CPU-heavy per-row work —
     but ONLY when the source layout cannot parallelize the scan itself.
 
-    Optimization r13 (guide §2.5 "input skew: one huge unsplittable
-    file... repartition immediately after the read" and §1.2 step 1).
-    The fixtures are single-row-group parquet files, so scans get ONE
-    task regardless of size; any expression-heavy per-row operator
-    downstream (per-row md5 fan-outs, 64-dim array folds, tokenize +
-    hash pipelines) then runs single-threaded while 31 cores idle —
-    measured 10.4 s -> sub-second on the bootstrap fan-out. At real
-    scale tables have >= cores row groups, the condition is false and
-    NO extra exchange is added — the repartition is derived from input
-    layout, not pinned to local mode. Call it AFTER projecting to the
-    columns the heavy stage needs (guide §2.3: shuffle only the bytes
-    the work requires).
+    A single-row-group parquet file scans as ONE task regardless of
+    size, so expression-heavy per-row work downstream (md5 fan-outs,
+    64-dim array folds, tokenize + hash) would run single-threaded.
+    Tables with >= cores/2 row groups get no extra exchange. Call it
+    AFTER projecting to the columns the heavy stage needs. Evidence:
+    OPTIMIZATION_r13.md §2.
     """
-    if os.environ.get("SPARK_GRAFT_SCAN_REPARTITION", "1") == "0":
-        return df  # ops kill-switch; also the A/B lever for tooling
     cores = spark.sparkContext.defaultParallelism
     if scan_units(sf_dir, name) >= max(2, cores // 2):
         return df

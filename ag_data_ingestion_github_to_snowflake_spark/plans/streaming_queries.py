@@ -178,35 +178,22 @@ def _staged_json_batches(base: str, sf: str, batches) -> str:
 # partition count is pinned into the CHECKPOINT on first run, so it is
 # a per-query knob, not a global one.
 STREAM_SHUFFLE_PARTITIONS = "8"
+STREAM_ROWS_PER_PART = 50_000
 
 
 def _adaptive_stream_partitions(
-    spark: SparkSession, stage: str, floor: int | None = None
+    spark: SparkSession, stage: str, floor: int = 2
 ) -> str:
-    """Input-size-derived state-shuffle partition count for drains whose
-    per-row cost scales with the data (Python stateful kernels, dedup
-    probes): ``clamp(staged_rows / ROWS_PER_PART, floor,
-    defaultParallelism)`` where ``floor`` defaults to 2 for JVM
-    aggregation drains and 8 for Python-stateful kernels (ADVICE r13:
-    the docstring used to claim a blanket floor of 8 — the code and
-    the inline measurements below are authoritative).
+    """State-shuffle partition count derived from the staged input size:
+    ``clamp(staged_rows / STREAM_ROWS_PER_PART, floor, defaultParallelism)``.
 
-    Optimization r13 (guide §2: make partitioning scale-adaptive —
-    derive from input size — rather than a constant tuned for either
-    local mode or the cluster). The r8 retune pinned these drains to
-    core-count partitions because 8 partitions idled 3/4 of the box at
-    the 100x decade (31.6 -> 20.8 s), accepting a measured sf0.1
-    regression (1.11 -> 1.75 s: 100k events cannot amortize 32 state
-    stores x batches; cep_funnel measured 23-30 s at 32 parts vs
-    7-14 s at 8, interleaved A/B, r13). Deriving from staged row count
-    keeps BOTH measured optima: sf0.1 (100k rows) -> floor 8; the 100x
-    fixture (10-19M rows) -> core count, exactly the r8 pin. Results
-    are partition-invariant (driver_sim sweeps the parallelism axis).
-    ``SPARK_GRAFT_STREAM_ROWS_PER_PART`` (default 50k) is the
-    production knob: cluster deployments size it to per-core stateful
-    throughput so the clamp ceiling (total cores) engages at volume.
+    State-store commits contend super-linearly in the partition count
+    when state is small, while large state needs core-count
+    parallelism. JVM aggregation drains keep ``floor=2`` (their
+    fixture-scale cost is the per-partition commit); Python-stateful
+    kernels pass ``floor=8`` (their cost is per-row Python work).
+    Results are partition-invariant. Evidence: OPTIMIZATION_r13.md §3.
     """
-    rows_per_part = int(os.environ.get("SPARK_GRAFT_STREAM_ROWS_PER_PART", "50000"))
     n_rows = 0
     try:
         import pyarrow.parquet as pq
@@ -218,26 +205,11 @@ def _adaptive_stream_partitions(
         n_rows = 0
     cores = spark.sparkContext.defaultParallelism
     if n_rows <= 0:
-        # Unknown layout (pyarrow missing, unreadable stage dir): fall
-        # back to the fixture-sized default, NOT core count — the
-        # measurements below show core-count partitions regressing
-        # 2-4x when state is small, so the conservative failure mode
-        # is the small pin (ADVICE r13).
+        # Unknown layout: the fixture-sized default, not core count —
+        # core-count partitions regress 2-4x when state is small.
         return STREAM_SHUFFLE_PARTITIONS
-    # Floor 2, not 8 (r13): state-store COMMITS contend super-linearly
-    # in the partition count when state is small — measured on the
-    # drift drain (8 batches, 3.6k state rows): total commitMs 0.5-2 s
-    # at 1-2 partitions vs 8-58 s at 8 and 266 s at 16. The input-rows
-    # derivation still reaches core count at the 100x decade where the
-    # r8 sweep measured parallelism winning.
-    # Per-drain floor: JVM aggregation drains default to 2 (their
-    # fixture-scale cost IS the per-partition commit); Python-stateful
-    # kernels (applyInPandasWithState) pass floor=8 — their cost is
-    # per-row Python work, and the r8 sweep measured parallelism
-    # winning there even at 100k rows.
-    if floor is None:
-        floor = int(os.environ.get("SPARK_GRAFT_STREAM_PART_FLOOR", "2"))
-    return str(max(floor, min(cores, (n_rows + rows_per_part - 1) // rows_per_part)))
+    parts = (n_rows + STREAM_ROWS_PER_PART - 1) // STREAM_ROWS_PER_PART
+    return str(max(floor, min(cores, parts)))
 
 
 _ROCKSDB_PROVIDER = (
@@ -255,9 +227,9 @@ def _drain(
     """Run the streaming plan to completion and hand back a *detached*
     result: the memory-sink table is snapshotted via an eager
     localCheckpoint, then the sink view and the checkpoint dir are torn
-    down so repeated builds leak neither driver-memory tables nor /tmp
-    dirs (each run still gets a fresh checkpoint — offsets are
-    per-run).
+    down — on failure and timeout too — so repeated builds leak neither
+    driver-memory tables nor /tmp dirs (each run still gets a fresh
+    checkpoint — offsets are per-run).
 
     ``rocksdb=True`` scopes the RocksDB state store provider to this
     drain (the conf is read at query start and pinned in the fresh
@@ -302,6 +274,7 @@ def _drain(
         if not finished:
             q.stop()
             raise TimeoutError("streaming drain did not finish within 300s")
+        return spark.table(name).localCheckpoint(eager=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         if rocksdb:
@@ -311,34 +284,17 @@ def _drain(
                 spark.conf.set(
                     "spark.sql.streaming.stateStore.providerClass", prev_provider
                 )
-    out = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(cp, ignore_errors=True)
-    # r13: unload this drain's state-store providers. Every drain uses
-    # a FRESH checkpoint, so a finished drain's providers are pure
-    # dead weight — yet they stay registered in the executor and their
-    # maintenance keeps running. Measured (6 sequential drains,
-    # parts=8): without unload, per-drain wall is erratic 5-37 s with
-    # state commitMs climbing to 84 s as providers pile up; with
-    # unload it settles at 4.4-8.7 s. Maintenance restarts lazily on
-    # the next streaming query, so this is safe between drains.
-    # SEQUENTIAL-DRAINS ASSUMPTION (ADVICE r13): StateStore.stop() is
-    # a private JVM API that unloads ALL loaded providers process-wide
-    # — a CONCURRENT streaming query in this session would have its
-    # providers yanked mid-run (forced checkpoint reloads; latency,
-    # not correctness). All registry drains run sequentially, and the
-    # guard below skips the unload whenever any streaming query is
-    # still active, so a concurrent caller degrades to the pre-r13
-    # behavior instead of being disturbed.
-    if (
-        os.environ.get("SPARK_GRAFT_STREAM_UNLOAD", "1") != "0"
-        and not spark.streams.active
-    ):
-        try:
-            spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-        except Exception:
-            pass  # py4j surface moved: stale providers cost time, not correctness
-    return out
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(cp, ignore_errors=True)
+        # Unload the state-store providers: every drain has a fresh
+        # checkpoint, so they are dead weight whose maintenance slows
+        # the next drain (OPTIMIZATION_r13.md §3). StateStore.stop() is
+        # process-wide, so skip it while another streaming query runs.
+        if not spark.streams.active:
+            try:
+                spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+            except Exception:
+                pass  # py4j surface moved: stale providers cost time, not correctness
 
 
 @register(
@@ -537,7 +493,7 @@ def streaming_dedup_events(spark: SparkSession, sf: str) -> DataFrame:
     sdf, stage = _staged_events_stream(spark, sf)
     deduped = S.dedup_stream(sdf, ["event_id"], delay="40 days").select("event_id")
     # Knobs MEASURED at 100x (10M dedup states, single AvailableNow
-    # commit; tools/sweep_dedup_drain.py, r8): heap/32-part 20.3 s,
+    # commit, r8): heap/32-part 20.3 s,
     # heap/8 29.1 s, RocksDB/32 26.7 s, RocksDB/8 36.9 s, and delay
     # width is cost-neutral (heap/32 with "1 day" = 21.4 s — one
     # commit means the watermark only advances at the end, so eviction

@@ -39,21 +39,9 @@ def get_spark(app_name: str = "ag-data-ingestion-spark", master: str | None = No
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # r14 (guide §2.4/§5): let AQE re-optimize the partitioning of
-        # CACHED plans too. Spark defaults this off for plan-stability
-        # compatibility, which pins every persist() materialization at
-        # the static shuffle width — the 19 registry queries that
-        # persist a small intermediate then paid full-width task launch
-        # on every cached read. Interleaved A/B (min over 3-5 reps,
-        # sf0.1): dau_mau_stickiness 1.23->0.42 s, burrows_delta
-        # 1.98->0.99, bpe_train_merges 2.73->1.98, jaccard_link
-        # 1.99->1.32, clustering_coefficient 1.52->1.02, entropy_rate
-        # 1.09->0.73, js_divergence 0.84->0.54, +6 more 1.2-1.5x; the
-        # suspected regressions (semdedup, cluster_topic, ivf_recall)
-        # dissolved at 5 reps (<=3%, inside the box's noise band).
-        # Scale-sound: AQE coalescing targets the advisory partition
-        # size, so production-sized caches keep their parallelism —
-        # only fixture-scale caches collapse.
+        # Let AQE coalesce cached-plan output too, so small persisted
+        # intermediates stop paying full-width task launch on every read
+        # (OPTIMIZATION_r14.md §9).
         .config(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
             "true",

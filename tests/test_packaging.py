@@ -11,6 +11,7 @@ an actual ``docker build`` is offline-documented (no daemon here).
 
 from __future__ import annotations
 
+import re
 import subprocess
 import sys
 import zipfile
@@ -113,3 +114,17 @@ def test_cli_test_mode_runs_offline(tmp_path):
         timeout=600,
     )
     assert res.returncode == 0, res.stderr[-2000:]
+
+
+def test_env_knobs_are_the_deployment_contract():
+    """The package reads only the deployment/driver env vars; a new
+    tuning lever has to be argued for here."""
+    names = set()
+    for path in (ROOT / "ag_data_ingestion_github_to_snowflake_spark").rglob("*.py"):
+        names |= set(re.findall(r"SPARK_GRAFT_[A-Z_]+", path.read_text()))
+    assert names == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_DRIVER_MEM",
+        "SPARK_GRAFT_SF_DIR",
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS",
+    }

@@ -624,3 +624,31 @@ def test_crash_mid_drain_restart_recovers_exactly_once(spark, tmp_path):
     assert got.count() == ev.count()
     assert got.select("event_id").distinct().count() == ev.count()
     assert got.exceptAll(ev).count() == 0 and ev.exceptAll(got).count() == 0
+
+
+def test_failed_drain_leaves_no_checkpoint_dir_or_memory_table(spark):
+    """A drain whose query raises still tears down its checkpoint dir
+    and its memory-sink view."""
+    import glob
+    import tempfile
+
+    from pyspark.sql.types import LongType
+
+    from ag_data_ingestion_github_to_snowflake_spark.plans import streaming_queries as SQ
+
+    def cps():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "ag_stream_cp_*")))
+
+    def mem_tables():
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")}
+
+    @F.udf(LongType())
+    def boom(x):
+        raise ValueError("boom")
+
+    cps0, mem0 = cps(), mem_tables()
+    sdf, _ = SQ._staged_events_stream(spark, SF)
+    with pytest.raises(Exception, match="boom"):
+        SQ._drain(sdf.select(boom("event_id").alias("x")), spark, "append")
+    assert cps() - cps0 == set()
+    assert mem_tables() - mem0 == set()
