@@ -33,8 +33,8 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# Per-session plan cache for fixture scans (optimization r13, guide
-# §6/§1: metadata overhead). ``spark.read.parquet`` costs ~200 ms per
+# Per-session plan cache for fixture scans (``OPTIMIZATION_r13.md``
+# §1: metadata overhead). ``spark.read.parquet`` costs ~200 ms per
 # call on this box (py4j + driver-side footer/schema read + file
 # listing); a full bench issues >1000 of them for the same ten files.
 # Caching the analyzed DataFrame (keyed by resolved path + file mtime,
@@ -154,26 +154,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     for name, df in tables.items():
         df.createOrReplaceTempView(name)
     return tables
-
-
-def load_evolving_table(
-    spark: SparkSession, path: str, strict: bool = False
-) -> DataFrame:
-    """Read an append-only table whose batches were written under
-    EVOLVING schemas (columns added over time) as one DataFrame with
-    the union schema; rows from batches that predate a column read it
-    as NULL.
-
-    Without ``mergeSchema`` Spark takes one file's footer as the
-    table schema and silently DROPS columns the sampled file lacks —
-    at 100 TB, an ingestion pipeline that gained a column mid-stream
-    would lose it from every downstream read. ``strict=True`` keeps
-    that cheap single-footer behavior for tables whose schema is
-    managed externally (a metastore/table format), which is the
-    at-scale default: footer-merging lists every file's footer, so
-    pair ``strict=False`` with partition-pruned paths, not full
-    table scans.
-    """
-    return (
-        spark.read.option("mergeSchema", "false" if strict else "true").parquet(path)
-    )

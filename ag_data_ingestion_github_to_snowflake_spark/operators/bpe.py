@@ -249,23 +249,16 @@ def train_bpe_merges(
     )
 
 
-def apply_bpe_merges(
-    df: DataFrame, merges: list[tuple[str, str]], sym_col: str = "sym"
-) -> Column:
+def apply_bpe_merges_expr(sym: Column, merges: list[tuple[str, str]]) -> Column:
     """Apply a learned merge table in order — a composition of array
     folds, map-side only (tokenize at inference time)."""
-    return apply_bpe_merges_expr(F.col(sym_col), merges)
-
-
-def apply_bpe_merges_expr(sym: Column, merges: list[tuple[str, str]]) -> Column:
-    """Column-level form of ``apply_bpe_merges``."""
     for left, right in merges:
         sym = _merge_pair_expr(sym, left, right)
     return sym
 
 
 def bpe_apply_oracle_expr(sym_expr: str, merges: list[tuple[str, str]]) -> str:
-    """DuckDB replay of ``apply_bpe_merges``: the same left-to-right
+    """DuckDB replay of ``apply_bpe_merges_expr``: the same left-to-right
     non-overlapping fold as ``_merge_pair_expr``, via ``list_reduce``.
 
     The accumulator is a flat VARCHAR[] whose LAST element is the

@@ -193,98 +193,6 @@ def _band_hashes(num_hashes: int, bands: int, hash_fn=None):
     )
 
 
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
-    """MinHash-LSH candidate duplicate pairs (id_a < id_b).
-
-    Bands the signature into ``bands`` groups of ``num_hashes/bands``
-    rows and buckets on the hash of each band; docs sharing any band
-    bucket become candidates. The pair join happens only within
-    buckets: the shuffle key is (band_idx, band_hash), so the cost is
-    proportional to the number of colliding docs, not n².
-    """
-    banded = df.select(
-        F.col(id_col),
-        F.posexplode(_band_hashes(num_hashes, bands)).alias("band_idx", "band_hash"),
-    )
-    # Bucket-then-expand instead of a self-join: groupBy collects each
-    # band bucket's ids, then nested array transforms emit the sorted
-    # in-bucket pairs. One shuffle on (band_idx, band_hash) and ONE
-    # evaluation of the minhash-signature subtree — the aliased
-    # self-join shuffled the banded table twice and (absent exchange
-    # reuse) recomputed the 32-hash signatures per side. Per-bucket
-    # pair expansion is m²/2 for an m-doc bucket — exactly the rows the
-    # join emitted for the same bucket, in the same single task, so the
-    # skew profile is unchanged; buckets are collision-sized, never
-    # corpus-sized.
-    ids = F.array_sort(F.collect_list(id_col))
-    pair_structs = F.filter(
-        F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda x, i: F.transform(
-                    F.slice(
-                        F.col("ids"), i + F.lit(2), F.greatest(F.size("ids") - i - 1, F.lit(0))
-                    ),
-                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                ),
-            )
-        ),
-        lambda s: s["id_a"] < s["id_b"],  # guards duplicate ids in a bucket
-    )
-    return (
-        banded.groupBy("band_idx", "band_hash")
-        .agg(ids.alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(F.explode(pair_structs).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .distinct()
-    )
-
-
-def jaccard_pairs(
-    candidates: DataFrame,
-    shingled: DataFrame,
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact n-gram Jaccard on candidate pairs; keep pairs ≥ threshold.
-
-    Only candidates are verified — the expensive set ops never run on
-    the full cross product. Accepts either string shingles
-    (``shingle``) or hashed shingles (``hshingle``, preferred: compact
-    long arrays).
-    """
-    col = "hshingle" if "hshingle" in shingled.columns else "shingle"
-    sh = shingled.select(F.col(id_col), col)
-    a = sh.alias("sa")
-    b = sh.alias("sb")
-    joined = (
-        candidates.join(a, candidates.id_a == F.col(f"sa.{id_col}"))
-        .join(b, candidates.id_b == F.col(f"sb.{id_col}"))
-        .select(
-            "id_a",
-            "id_b",
-            F.col(f"sa.{col}").alias("sh_a"),
-            F.col(f"sb.{col}").alias("sh_b"),
-        )
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        joined.select(
-            "id_a",
-            "id_b",
-            F.round(inter / F.greatest(union, F.lit(1)), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def minhash_near_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -310,19 +218,9 @@ def minhash_near_dedup(
     triple is distinct-safe). Cost shape: the band shuffle carries
     ``bands`` copies of each doc's shingle hashes (longs, ~52/doc on
     the fixture corpus). For very long documents the duplication can
-    exceed the two verify joins it replaces — at that end of the
-    spectrum compose ``lsh_candidate_pairs`` + ``jaccard_pairs``
-    (both kept public) over a persisted shingle table instead.
-    Measured at sf0.1: 2.5-2.8 s (persist + verify joins) -> ~1.5 s.
-
-    Re-measured r14 (VERDICT r13 item 5) with the modern shape for the
-    light-shuffle arm (lazy-checkpointed shingle table feeding banding
-    + both verify joins, bucket-expand candidates): values identical at
-    all 3 scales for BOTH hash families, but interleaved A/B ×3 still
-    reads the ride-along FASTER at fixture scale — pairs min 1.05 s vs
-    1.13 s, verified min 1.18 s vs 1.25 s. The 13.8 MB -> ~2 MB band
-    shuffle does not pay for the two extra id-joins until documents are
-    long; deliberately left, the threshold documented above stands.
+    exceed the two verify joins it replaces; at fixture lengths the
+    ride-along is faster than a light band shuffle plus verify joins
+    (``OPTIMIZATION_r14.md`` §5).
     """
     sh = hashed_shingles(df.select(id_col, text_col), text_col, n, hash_fn=hash_fn)
     sig = sh.withColumn("sig", _sig_arrow_udf(num_hashes)(F.col("hshingle")))
@@ -418,13 +316,10 @@ def simhash(
     # lane could overflow into its neighbor — far beyond the fixture
     # and typical corpus documents; callers chunking 100 TB docs that
     # long should pre-truncate. 17 aggregates replace 64.
-    # r14 (guide §5, the r13 pq.py SQL-string pattern): the packed
-    # aggregates and the 64-term signature rebuild used to be ~700
-    # chained py4j Column calls — 1.5-1.7 s of WARM plan-build per
-    # bench rep (tools/time_build.py). The identical integer
-    # expressions emitted as generated SQL build in milliseconds;
-    # values are exact integer ops, bit-identical either way (pinned
-    # by tests/test_dedup.py + the dedup_simhash_pairs oracle).
+    # Generated SQL, not ~700 chained py4j Column calls: the identical
+    # integer expressions build in milliseconds instead of ~1.5 s
+    # (``OPTIMIZATION_r14.md`` §4); bit-identical either way (pinned by
+    # the dedup_simhash_pairs oracle).
     packed_aggs = [
         F.expr(
             "sum("

@@ -107,11 +107,9 @@ def _connected_components_impl(
     universe = sym.select(F.col("s").alias("node"))
     if nodes is not None:
         universe = universe.unionByName(nodes.select(F.col(node_col).alias("node")))
-    # r13: LAZY local checkpoints throughout the loop — the eager form
-    # paid a dedicated materialization job per round on top of the
-    # 1-row convergence probe; lazy marks the plan for truncation and
-    # lets the probe's own action materialize it (one job per round
-    # instead of two, same lineage truncation).
+    # LAZY local checkpoints: the convergence probe's own action
+    # materializes each round, one job per round instead of two, same
+    # lineage truncation (``OPTIMIZATION_r14.md`` §2).
     labels = (
         universe.distinct()
         .withColumn("comp", F.col("node"))
@@ -159,12 +157,3 @@ def _connected_components_impl(
             f"connected_components did not converge in {max_iter} rounds"
         )
     return labels
-
-
-def canonical_members(labels: DataFrame) -> DataFrame:
-    """The one row to KEEP per cluster: the node that is its own label.
-
-    Composes with any (node, comp) labelling; join the complement
-    against the corpus to drop near-duplicates.
-    """
-    return labels.filter(F.col("node") == F.col("comp")).select("node")

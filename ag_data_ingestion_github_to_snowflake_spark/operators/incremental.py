@@ -16,10 +16,9 @@ pipelines maintain joined fact views incrementally instead of
 re-running the nightly join.
 
 ``delta_join_append`` returns ONLY the rows to append; the caller owns
-the storage append (sinks.partitioned_append / merge_into_warehouse),
-keeping the algebra composable with any table format. Deletions/updates
-need keyed MERGE (sinks.merge_into_warehouse) — out of scope here, as
-in most append-only fact pipelines.
+the storage append (e.g. sinks.partitioned_append), keeping the algebra
+composable with any table format. Deletions/updates need a keyed MERGE
+— out of scope here, as in most append-only fact pipelines.
 """
 
 from __future__ import annotations

@@ -170,134 +170,6 @@ def extract_audio_features(
     return df.select(id_col, payload_col).mapInPandas(kernel, AUDIO_FEATURES_SCHEMA)
 
 
-def sample_frames(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    every_n: int = 10,
-    deterministic_fake: bool = False,
-) -> DataFrame:
-    """Video frame-sampling: one output row per sampled frame.
-
-    Real path (default): the payload is a *raw frame stack* — back-to-
-    back binary P6 PPM frames (the uncompressed analogue of an MJPEG
-    stream; compressed containers raise from the codec layer). Each
-    ``every_n``-th frame is split out and its real content hash emitted.
-    The fake path derives a frame count from payload length for
-    plumbing-only tests.
-    """
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame_hash", T.StringType()),
-        ]
-    )
-
-    def _split_ppm_stack(data: bytes) -> list[bytes]:
-        frames = []
-        i = 0
-        while i < len(data):
-            if data[i : i + 2] != b"P6":
-                raise ValueError(f"frame stack corrupt at byte {i}")
-            (w, h, _), raster = codecs._ppm_tokens(data[i:], 3)
-            end = i + raster + w * h * 3
-            frames.append(data[i:end])
-            i = end
-        return frames
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload)
-                if deterministic_fake:
-                    n_frames = max(1, len(data) // 16)
-                    for idx in range(0, n_frames, every_n):
-                        hsh = hashlib.sha256(data + idx.to_bytes(4, "big")).hexdigest()[:16]
-                        rows.append((int(did), idx, hsh))
-                else:
-                    frames = _split_ppm_stack(data)
-                    for idx in range(0, len(frames), every_n):
-                        hsh = hashlib.sha256(frames[idx]).hexdigest()[:16]
-                        rows.append((int(did), idx, hsh))
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame_hash"])
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, schema)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("mean_luma", T.DoubleType()),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame,
-    target_w: int,
-    target_h: int,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Real image resize via mapInPandas: decode (BMP/PPM/PNG, pure-numpy
-    codecs), nearest-neighbor resample to (target_w, target_h) with a
-    single fancy-index gather, re-encode as P6 PPM. Emits the resized
-    payload plus its dimensions and mean luma so downstream feature
-    stages can verify without re-decoding.
-
-    Nearest-neighbor uses the half-pixel center mapping
-    ``src = floor((dst + 0.5) * scale)`` — the standard convention, so
-    an integer downscale picks the geometrically centered sample of
-    each block rather than the top-left corner. Vectorized: one numpy
-    gather per image regardless of size; Arrow batches amortize the
-    Python boundary exactly like the decode kernels.
-    """
-    import numpy as np
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                img = codecs.decode_image(bytes(payload))
-                h, w = img.shape[0], img.shape[1]
-                ys = np.minimum(
-                    ((np.arange(target_h) + 0.5) * (h / target_h)).astype(int), h - 1
-                )
-                xs = np.minimum(
-                    ((np.arange(target_w) + 0.5) * (w / target_w)).astype(int), w - 1
-                )
-                resized = img[ys[:, None], xs[None, :]]
-                # Same integer-Rec.601 luma as codecs.image_features, so
-                # pre/post-resize comparisons of mean_luma are coherent
-                # (plain channel mean diverges on any non-gray image).
-                px = resized.astype(np.int64)
-                luma_sum = int(
-                    px[:, :, 0].sum() * 299
-                    + px[:, :, 1].sum() * 587
-                    + px[:, :, 2].sum() * 114
-                )
-                luma = round(luma_sum / (target_h * target_w * 255000.0), 6)
-                rows.append(
-                    (
-                        int(did),
-                        codecs.encode_ppm(resized),
-                        target_w,
-                        target_h,
-                        luma,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "payload", "width", "height", "mean_luma"]
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, RESIZED_SCHEMA)
-
-
 AHASH_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

@@ -1,6 +1,6 @@
 """Slowly-changing-dimension (Type 2) history construction.
 
-The warehouse-side sibling of ``sources/sinks.py:merge_into_warehouse``
+The warehouse-side sibling of ``pipeline/github.py:latest_snapshot``
 (reference: README.md:285-291 loads dimensions into Snowflake; SCD2 is
 the standard way a warehouse keeps their history): given a CHANGE LOG
 of attribute observations per key, produce versioned dimension rows

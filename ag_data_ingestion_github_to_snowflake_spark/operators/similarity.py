@@ -44,15 +44,6 @@ def _norm(a):
     )
 
 
-def with_cosine(df: DataFrame, left: str, right: str, out: str = "cosine"):
-    """Add cosine similarity between two array columns (JVM fold)."""
-    return df.withColumn(
-        out,
-        _dot(F.col(left), F.col(right))
-        / (_norm(F.col(left)) * _norm(F.col(right))),
-    )
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -674,9 +665,8 @@ def write_ivf_index(
     spark = corpus.sparkSession
     # pandas -> Arrow, NOT createDataFrame(list-of-tuples): the plain-
     # Python path serializes through a Python-worker RDD job with a
-    # measured ~5.7 s fixed overhead PER CALL on this build, even for
-    # 8 rows; the Arrow path is ~0.3 s (r9 profile — this one line was
-    # most of similarity_ivf_persisted's bench cost).
+    # measured ~5.7 s fixed overhead PER CALL, even for 8 rows; the
+    # Arrow path is ~0.3 s.
     cent_pdf = pd.DataFrame(
         {
             "cell": range(len(centroids)),

@@ -26,11 +26,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 BPE_ISH_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def tokenize(df: DataFrame, text_col: str = "text", out: str = "tokens") -> DataFrame:
-    """Whitespace tokenization as an array column."""
-    return df.withColumn(out, F.split(F.col(text_col), "\\s+"))
-
-
 def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Add n_tokens / n_distinct_tokens / avg_token_len columns."""
     toks = F.split(F.col(text_col), "\\s+")

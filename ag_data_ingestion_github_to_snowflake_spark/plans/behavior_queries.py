@@ -21,8 +21,9 @@ from ag_data_ingestion_github_to_snowflake_spark.operators.portable_math import 
 )
 from ag_data_ingestion_github_to_snowflake_spark.plans.registry import register, t
 
-# SPRT constants as precomputed double literals (hardened r12, item 5:
-# no engine libm; repr round-trips to the identical double everywhere).
+# SPRT constants as precomputed double literals (no engine libm; repr
+# round-trips to the identical double everywhere — COVERAGE.md's
+# hash-contract audit).
 _SPRT_L1 = repr(math.log(0.52 / 0.48))
 _SPRT_L0 = repr(math.log(0.48 / 0.52))
 _SPRT_BOUND = repr(math.log(19.0))
@@ -616,7 +617,7 @@ def benford_first_digit_orders(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SCD2 dimension history (warehouse-side sibling of merge_into_warehouse)
+# SCD2 dimension history (warehouse-side sibling of the sink's latest_snapshot)
 # ---------------------------------------------------------------------------
 @register(
     "scd2_customer_history",
@@ -654,9 +655,9 @@ def scd2_customer_history(spark: SparkSession, sf: str) -> DataFrame:
     customer-tier change log (initial tier from the customer snapshot,
     then one observation per order) — ``operators/scd.py``: consecutive
     duplicates open no version, each surviving change opens one, the
-    open-ended row is current. The warehouse-side sibling of the A9
-    load path (``sources/sinks.py:merge_into_warehouse`` keeps the
-    LATEST row; SCD2 keeps them all with validity intervals).
+    open-ended row is current. The warehouse-side sibling of
+    ``pipeline/github.py:latest_snapshot`` (which keeps the LATEST row;
+    SCD2 keeps them all with validity intervals).
 
     One shuffle on the key, two in-partition sorts over the same order
     (exchange reused) — no self-join, output <= input rows at any
@@ -1203,11 +1204,12 @@ def rfm_segmentation_users(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "sprt_sequential_ab",
-    # Hash contract (hardened r12, item 5): the per-observation log
-    # ratios and the +/-ln 19 boundaries are PRECOMPUTED double
-    # literals (the Benford C139 precedent — no engine libm call at
-    # all), the LLR is a fixed two-term sum of exact-integer x literal
-    # products, and cum_llr presents as floor(1e6*s).
+    # Hash contract (COVERAGE.md's hash-contract audit): the
+    # per-observation log ratios and the +/-ln 19 boundaries are
+    # PRECOMPUTED double literals (the Benford C139 precedent — no
+    # engine libm call at all), the LLR is a fixed two-term sum of
+    # exact-integer x literal products, and cum_llr presents as
+    # floor(1e6*s).
     oracle=f"""
     WITH daily AS (
       SELECT CAST(ts AS DATE) AS day,

@@ -237,9 +237,9 @@ def array_ops_embeddings(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "math_funcs_customer",
-    # log_bal uses the portable ln + floor(1e6*x) (hardened r12, item
-    # 5 — libm ln was the only build-sensitive op here; abs/sqrt/floor
-    # are IEEE-exact over the raw input).
+    # log_bal uses the portable ln + floor(1e6*x): libm ln was the only
+    # build-sensitive op here; abs/sqrt/floor are IEEE-exact over the
+    # raw input (COVERAGE.md's hash-contract audit).
     oracle=f"""
     SELECT c_custkey,
            ROUND(abs(c_acctbal), 2) AS abs_bal,
@@ -671,8 +671,8 @@ def variant_extract_events(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Morton (Z-order) codes: the multi-dimensional data-skipping key used
-# by compact_table(zorder_cols=...). The oracle replays the identical
+# Morton (Z-order) codes: the multi-dimensional data-skipping key a
+# range-clustered rewrite sorts by. The oracle replays the identical
 # magic-number bit-spreading in SQL, so every interleaved bit is
 # value-checked.
 # ---------------------------------------------------------------------------
@@ -847,9 +847,9 @@ def hilbert_vs_morton_locality(spark: SparkSession, sf: str) -> DataFrame:
     a self-verifying output); Morton jumps at every quadrant seam, so
     its average step is strictly larger, which at file-layout scale
     means wider min/max bounding boxes and fewer skipped files.
-    zorder_morton_events computes the key compact_table() sorts by;
-    this query is the measured comparison that justifies offering
-    hilbert_index as the alternative.
+    zorder_morton_events computes the Morton key; this query is the
+    measured comparison that justifies offering hilbert_index as the
+    alternative.
 
     Scale shape: the event stream reduces to the bounded 16x16 cell
     grid in one map-side-combined shuffle; both curve indexes are pure
@@ -863,10 +863,9 @@ def hilbert_vs_morton_locality(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     ev = t(spark, sf, "events").filter(F.dayofmonth("ts") <= 16)
-    # r13: measured parallelize_cpu_scan here (interleaved A/B x4):
-    # 0.57-0.75x — a regression; the date-part partial aggregate is
-    # codegen-cheap, so the extra exchange costs more than one-task
-    # scanning. Deliberately left on the raw scan.
+    # No parallelize_cpu_scan: measured 0.57-0.75x, the extra exchange
+    # costs more than the codegen-cheap one-task scan
+    # (``OPTIMIZATION_r13.md`` §2).
     cells = ev.groupBy(
         (F.dayofmonth("ts") - 1).cast("int").alias("cx"),
         F.floor(F.hour("ts") * 2 / 3.0).cast("int").alias("cy"),

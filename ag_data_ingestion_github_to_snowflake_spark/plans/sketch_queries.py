@@ -30,7 +30,7 @@ from ag_data_ingestion_github_to_snowflake_spark.plans.registry import register,
 
 @register(
     "hll_sketch_users_by_type",
-    # DECIDED rows-only (final, r10): Datasketches HLL binary state is
+    # DECIDED rows-only: Datasketches HLL binary state is
     # engine-specific by design; the value of THIS query is the
     # sketch-merge rollup shape. Correctness evidence: oracle-green
     # twin `hll_verified_users_by_type` checks the same per-type
@@ -70,7 +70,7 @@ def hll_sketch_users_by_type(spark: SparkSession, sf: str) -> DataFrame:
 
 @register(
     "kll_quantiles_value",
-    # DECIDED rows-only (final, r10): KLL sketch state is
+    # DECIDED rows-only: KLL sketch state is
     # engine-specific; no SQL twin can replay compaction. Correctness
     # evidence: tests/test_kmv_cms.py/test_sketches.py pin the
     # published epsilon bound against exact percentiles, which are
@@ -279,11 +279,9 @@ def profile_orders_approx(spark: SparkSession, sf: str) -> DataFrame:
     o = t(spark, sf, "orders").select(
         "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
-    # r14 (guide §2.5, the r13 profile_orders_columns treatment): the
-    # 4-way explode + per-row md5 is CPU-bound on a one-task scan at
-    # the fixture's single-row-group layout. Layout-gated round-robin
-    # (no-op when the source splits); interleaved A/B ×4 at sf0.1:
-    # [1.52,1.62,1.79,1.81] s → [1.22,1.23,1.25,1.35] s.
+    # The 4-way explode + per-row md5 is CPU-bound on a one-task scan;
+    # the layout-gated round-robin spreads it (``OPTIMIZATION_r14.md``
+    # §10).
     o = parallelize_cpu_scan(o, spark, sf, "orders")
     pairs = [
         ("o_custkey", F.col("o_custkey").cast("string")),
@@ -348,7 +346,7 @@ def profile_orders_approx(spark: SparkSession, sf: str) -> DataFrame:
     # function of the EMITTED zero_registers column, so consumers apply
     # it losslessly on their side (``operators/hll.py`` docstring: ln()
     # is only 1-ulp-reproducible across engines and cannot sit inside
-    # a bit-exact contract — the r7 ADVICE finding this fixes).
+    # a bit-exact contract).
     return raw.select(
         "col_name",
         "n_rows",
@@ -356,24 +354,6 @@ def profile_orders_approx(spark: SparkSession, sf: str) -> DataFrame:
         F.round("distinct_est_raw", 6).alias("distinct_est_raw"),
         "zero_registers",
     )
-
-
-def count_min_sketch_bytes(df: DataFrame, col: str, eps: float = 0.001) -> bytes:
-    """Build a count-min frequency sketch over ``col`` and return its
-    serialized bytes (Spark's ``CountMinSketch`` wire format).
-
-    CM never undercounts (estimate >= true count, overcount bounded by
-    eps*N with prob. delta) and merges associatively — the
-    heavy-hitter shape when the key space is too large for an exact
-    groupBy. Spark 4.1 exposes only the *builder* in SQL (no
-    ``count_min_sketch_estimate`` point lookup), so consumers read the
-    bytes back through ``org.apache.spark.util.sketch.CountMinSketch``
-    — see ``tests/test_sketches.py`` for the round-trip and the
-    overcount-only contract.
-    """
-    return df.agg(
-        F.count_min_sketch(col, F.lit(eps), F.lit(0.99), F.lit(1)).alias("sk")
-    ).collect()[0].sk
 
 
 # ---------------------------------------------------------------------------

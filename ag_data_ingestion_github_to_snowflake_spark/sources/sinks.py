@@ -1,4 +1,4 @@
-"""Sinks (A6-A9): partitioned append sinks + run-metrics table.
+"""Sinks (A6, A15): partitioned append sink + run-metrics table.
 
 The reference serializes one envelope JSON per run to
 ``s3://bucket/yyyy/mm/dd/...`` (/root/reference/src/
@@ -10,7 +10,7 @@ metadata envelope becomes rows in a separate ``_run_metrics`` table
 
 At 100 TB: date partitioning bounds each file-commit transaction;
 `maxRecordsPerFile` caps file sizes; the sink is append-only and the
-table is deduplicated on read (or compacted) because the upstream
+table is deduplicated on read because the upstream
 offers at-least-once delivery.
 """
 
@@ -51,388 +51,3 @@ def partitioned_append(
 def write_run_metrics(metrics_df: DataFrame, path: str) -> None:
     """A15 metadata envelope -> append-only run-metrics table."""
     metrics_df.write.mode("append").parquet(path)
-
-
-def bronze_cache_write(df: DataFrame, path: str) -> None:
-    """A3/A7: bronze staging layer — the Spark analog of the
-    reference's file-per-id JSON cache (:293-344). Partitionless
-    append; dedup on read via pipeline.github.latest_snapshot."""
-    df.write.mode("append").parquet(path)
-
-
-def merge_into_warehouse(
-    spark,
-    df: DataFrame,
-    path: str,
-    key: str = "id",
-    version_col: str | None = None,
-) -> DataFrame:
-    """A9: idempotent key-merge into the parquet warehouse table — the
-    API shape of the reference's warehouse load step (README.md:285-291,
-    Snowflake ``COPY INTO`` + dedup on load), expressed as a MERGE:
-
-    - rows in ``df`` REPLACE current rows with the same ``key``;
-    - within ``df`` itself, one row per key survives (highest
-      ``version_col`` if given, else an arbitrary-but-deterministic
-      winner), so at-least-once upstream delivery loads cleanly;
-    - re-loading the same batch is a no-op (idempotent).
-
-    Mechanics: survivors = current ⟕anti new (one shuffle on ``key``,
-    broadcast when ``new`` is small), union, write to a staging dir,
-    swap. The directory swap is the local-FS stand-in for an atomic
-    table-format commit (Iceberg/Delta REPLACE) — at warehouse scale
-    the same plan writes through a table format, and the anti-join
-    rewrite is bounded by partition pruning when callers pre-filter
-    ``current`` to affected date partitions.
-
-    Returns the merged table (fresh read from ``path``).
-    """
-    import os
-    import shutil
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F  # noqa: PLC0415 (local to keep module header slim)
-
-    if version_col:
-        w = Window.partitionBy(key).orderBy(F.col(version_col).desc(), F.col(key))
-        new = (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    else:
-        new = df.dropDuplicates([key])
-
-    if os.path.exists(path):
-        current = spark.read.parquet(path)
-        survivors = current.join(new.select(key), on=key, how="left_anti")
-        merged = survivors.unionByName(new)
-    else:
-        merged = new
-
-    staging = f"{path}__staging"
-    merged.write.mode("overwrite").parquet(staging)
-    _atomic_swap(path, staging)
-    return spark.read.parquet(path)
-
-
-def _atomic_swap(path: str, staging: str) -> None:
-    """Replace ``path`` with ``staging`` via rename — the local-FS
-    stand-in for a table-format snapshot commit (readers see the old
-    or the new table, never a mix)."""
-    import os
-    import shutil
-
-    old = f"{path}__old"
-    if os.path.exists(path):
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def compact_table(
-    spark,
-    path: str,
-    target_records_per_file: int = 1_000_000,
-    sort_cols: list[str] | None = None,
-    zorder_cols: tuple[str, str] | None = None,
-    parquet_block_bytes: int | None = None,
-) -> int:
-    """Small-file compaction: rewrite a parquet table into the minimum
-    number of right-sized files, optionally sorted for data-skipping.
-
-    Micro-batch appends (``partitioned_append`` every trigger) are the
-    canonical small-file factory: at 100 TB an hourly stream writing 32
-    shuffle partitions produces ~275k files/year per table, and scan
-    planning starts to cost more than scanning. Compaction is the
-    maintenance half of that contract.
-
-    Mechanics: one full read, then either a round-robin
-    ``repartition(ceil(rows/target))`` (balanced files regardless of
-    input skew) or — when ``sort_cols`` is given — a
-    ``repartitionByRange`` + ``sortWithinPartitions`` on those columns,
-    i.e. a global sort: each output file then covers a TIGHT, disjoint
-    key range and its parquet min/max statistics actually skip (a
-    round-robin shuffle followed by a within-file sort would leave
-    every file spanning the whole key range — zero skipping). Staged
-    write + atomic swap so concurrent readers never observe a
-    half-compacted table. Partition-level compaction at scale = call
-    per date partition, bounding each rewrite transaction.
-
-    ``zorder_cols=(a, b)`` range-sorts by the Morton interleave of the
-    two columns' low 16 bits instead: each file then covers a small
-    bounding BOX in (a, b), so min/max skipping fires for predicates
-    on either column — the public OPTIMIZE-ZORDER technique
-    (``functions/zorder.py``).
-
-    ``parquet_block_bytes`` sizes the parquet row group (the skip
-    granularity): a sorted file with many small row groups lets the
-    reader drop most of the file from the footer stats alone, while one
-    giant row group forces a full read even when the predicate touches
-    1% of the key range. It is also the reader/writer memory unit — at
-    100 TB you pick it to balance skip resolution against per-column
-    buffer memory (default 128 MB; 16-64 MB is the common skip-tuned
-    range).
-
-    Returns the number of output files.
-    """
-    import math
-    import os
-
-    from ag_data_ingestion_github_to_snowflake_spark.functions.zorder import (
-        morton_code,
-    )
-
-    df = spark.read.parquet(path)
-    n_rows = df.count()
-    n_files = max(1, math.ceil(n_rows / target_records_per_file))
-    if zorder_cols:
-        a, b = zorder_cols
-        z = df.withColumn(
-            "_z",
-            morton_code(
-                F.col(a).bitwiseAND(F.lit(65535)).cast("long"),
-                F.col(b).bitwiseAND(F.lit(65535)).cast("long"),
-            ),
-        )
-        out = (
-            z.repartitionByRange(n_files, "_z")
-            .sortWithinPartitions("_z")
-            .drop("_z")
-        )
-    elif sort_cols:
-        out = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
-            *sort_cols
-        )
-    else:
-        out = df.repartition(n_files)
-    staging = f"{path}__compact"
-    writer = out.write.mode("overwrite")
-    if parquet_block_bytes is not None:
-        writer = writer.option("parquet.block.size", parquet_block_bytes)
-    writer.parquet(staging)
-    _atomic_swap(path, staging)
-    return sum(
-        1
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith("_")
-    )
-
-
-def compact_partitions(
-    spark,
-    path: str,
-    only_prefix: str | None = None,
-    target_records_per_file: int = 1_000_000,
-    sort_cols: list[str] | None = None,
-) -> dict[str, int]:
-    """Partition-scoped small-file compaction for hive-layout tables
-    (``year=…/month=…/day=…`` as written by ``partitioned_append``).
-
-    ``compact_table`` rewrites the whole table in one transaction —
-    right for unpartitioned tables, wrong at 100 TB where one day of a
-    year-long table is the only thing fragmented. This variant walks
-    the leaf partition directories and rewrites EACH LEAF independently
-    (read leaf → repartition/sort → staged write → atomic swap), so:
-
-    - each rewrite transaction is bounded by one partition's bytes;
-    - a crash mid-compaction leaves every other partition untouched
-      (the swapped leaf is all-old or all-new, never mixed);
-    - ``only_prefix`` (e.g. ``"year=2024/month=06"``) scopes the pass
-      to the partitions a maintenance job actually owns — the daily
-      cron compacts yesterday, never the archive;
-    - partition columns stay directory-encoded, so pruning and the
-      table schema are unchanged.
-
-    Returns {relative_partition_path: n_output_files}.
-    """
-    import math
-    import os
-
-    leaves: list[str] = []
-    for dirpath, _dirnames, filenames in os.walk(path):
-        if any(f.endswith(".parquet") and not f.startswith("_") for f in filenames):
-            rel = os.path.relpath(dirpath, path)
-            if rel == "." or "__" in rel:  # staging/old dirs never count
-                continue
-            if only_prefix is None or rel.startswith(only_prefix):
-                leaves.append(rel)
-
-    out: dict[str, int] = {}
-    for rel in sorted(leaves):
-        leaf = os.path.join(path, rel)
-        df = spark.read.parquet(leaf)
-        n_rows = df.count()
-        n_files = max(1, math.ceil(n_rows / target_records_per_file))
-        if sort_cols:
-            part = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
-                *sort_cols
-            )
-        else:
-            part = df.repartition(n_files)
-        staging = f"{leaf}__compact"
-        part.write.mode("overwrite").parquet(staging)
-        _atomic_swap(leaf, staging)
-        out[rel] = sum(
-            1
-            for f in os.listdir(leaf)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-    return out
-
-
-def delete_keys_surgical(
-    spark,
-    path: str,
-    keys: list[int],
-    key_col: str,
-) -> dict:
-    """Targeted delete (right-to-be-forgotten shape): remove rows whose
-    ``key_col`` is in ``keys``, rewriting ONLY the parquet files whose
-    footer min/max range can contain a target key — every other file is
-    untouched (bit-identical, no read, no write).
-
-    This is the compliance-delete pattern for an immutable-file
-    warehouse: at 100 TB a delete of a handful of keys must not rewrite
-    the table. Footer statistics (the same min/max the scan planner
-    uses for row-group skipping) select the candidate files; candidates
-    are rewritten in place via write-to-staging + atomic rename, so a
-    reader sees each file before or after, never half. On a sorted /
-    compacted table (``compact_table``) key ranges are disjoint, so the
-    candidate set is minimal — typically one file per key.
-
-    Returns {"files_total", "files_scanned", "files_rewritten",
-    "rows_deleted"} — ``files_scanned`` counts footer-range hits,
-    ``files_rewritten`` counts files actually swapped (a range hit
-    whose rows contain no target key is scanned but not rewritten).
-    """
-    import os
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    # A crash mid-delete can leave *.staging dirs behind; they would
-    # break later recursive reads of the table, so clear them first.
-    for entry in os.listdir(path):
-        if entry.endswith(".staging"):
-            shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
-
-    key_set = set(keys)
-    files = sorted(
-        f for f in os.listdir(path) if f.endswith(".parquet")
-    )
-    candidates = []
-    for f in files:
-        fp = os.path.join(path, f)
-        meta = pq.ParquetFile(fp).metadata
-        if meta.num_row_groups == 0:
-            continue  # empty part file: cannot contain target keys
-        schema_idx = {
-            meta.row_group(0).column(i).path_in_schema: i
-            for i in range(meta.row_group(0).num_columns)
-        }
-        ci = schema_idx[key_col]
-        hit = False
-        for rg in range(meta.num_row_groups):
-            st = meta.row_group(rg).column(ci).statistics
-            if st is None or st.min is None:  # no stats: must assume hit
-                hit = True
-                break
-            if any(st.min <= k <= st.max for k in key_set):
-                hit = True
-                break
-        if hit:
-            candidates.append(f)
-
-    deleted = 0
-    rewritten = 0
-    for f in candidates:
-        fp = os.path.join(path, f)
-        df = spark.read.parquet(fp)
-        keep = df.filter(~F.col(key_col).isin(list(key_set)))
-        n_before = df.count()
-        n_after = keep.count()
-        if n_after == n_before:
-            continue  # stats range hit but no actual target rows
-        staged = fp + ".staging"
-        # one file in, one file out: coalesce(1) keeps the layout
-        keep.coalesce(1).write.mode("overwrite").parquet(staged)
-        part = [
-            p for p in os.listdir(staged) if p.endswith(".parquet")
-        ][0]
-        os.replace(os.path.join(staged, part), fp)
-        # Hadoop's local FS keeps a .crc sidecar per file; the stale
-        # one would fail every future read of the swapped file.
-        crc = os.path.join(path, f".{f}.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-        shutil.rmtree(staged, ignore_errors=True)
-        deleted += n_before - n_after
-        rewritten += 1
-    return {
-        "files_total": len(files),
-        "files_scanned": len(candidates),
-        "files_rewritten": rewritten,
-        "rows_deleted": deleted,
-    }
-
-
-def pruned_point_lookup(
-    spark,
-    path: str,
-    keys: list[int],
-    key_col: str,
-) -> tuple["DataFrame", dict]:
-    """Point lookup over an immutable parquet table reading ONLY the
-    files whose footer min/max range can contain a requested key — the
-    read-side twin of :func:`delete_keys_surgical`'s candidate
-    selection, and the poor-man's secondary index every immutable-file
-    warehouse gets for free from parquet footers.
-
-    Spark's own scan prunes ROW GROUPS once a file is opened; this
-    prunes at the FILE level before the scan is even planned, which at
-    100 TB is the difference between listing+footer-reading a table and
-    opening a million files. On a sorted / compacted table
-    (:func:`compact_table`) key ranges are disjoint and the candidate
-    set is ~one file per key.
-
-    Returns ``(df, stats)`` where ``df`` is the matching rows (the
-    residual ``IN`` filter still applies — footer ranges over-approximate)
-    and ``stats`` = {"files_total", "files_pruned", "files_read"}.
-    """
-    import os
-
-    import pyarrow.parquet as pq
-
-    key_set = sorted(set(keys))
-    files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
-    candidates = []
-    for f in files:
-        fp = os.path.join(path, f)
-        meta = pq.ParquetFile(fp).metadata
-        if meta.num_row_groups == 0:
-            continue
-        names = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
-        idx = names[key_col]
-        hit = False
-        for rg in range(meta.num_row_groups):
-            st = meta.row_group(rg).column(idx).statistics
-            if st is None or st.min is None or st.max is None:
-                hit = True  # no stats: cannot prune this file
-                break
-            if any(st.min <= k <= st.max for k in key_set):
-                hit = True
-                break
-        if hit:
-            candidates.append(fp)
-    stats = {
-        "files_total": len(files),
-        "files_pruned": len(files) - len(candidates),
-        "files_read": len(candidates),
-    }
-    if not candidates:
-        empty = spark.read.parquet(path).limit(0)
-        return empty.filter(F.col(key_col).isin(key_set)), stats
-    df = spark.read.parquet(*candidates).filter(F.col(key_col).isin(key_set))
-    return df, stats

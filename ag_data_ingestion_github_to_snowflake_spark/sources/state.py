@@ -46,7 +46,11 @@ class MemoryWatermark(WatermarkStore):
 @dataclass
 class FileWatermark(WatermarkStore):
     """File-backed watermark (the reference's last_repo_id.txt,
-    :238-267). Atomic via write-temp-then-rename."""
+    :238-267). Atomic via write-temp-then-rename.
+
+    Only a missing file reads as ``default``: a corrupt or empty one
+    raises, because restarting from ``default`` would re-list and
+    re-append every repository already sunk."""
 
     path: str
     default: int = 0
@@ -54,143 +58,18 @@ class FileWatermark(WatermarkStore):
     def get(self) -> int:
         try:
             with open(self.path) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
+                text = f.read()
+        except FileNotFoundError:
             return self.default
+        try:
+            return int(text.strip())
+        except ValueError:
+            raise ValueError(
+                f"corrupt watermark state file {self.path!r}: {text!r}"
+            ) from None
 
     def set(self, value: int) -> None:
         tmp = f"{self.path}.tmp"
         with open(tmp, "w") as f:
             f.write(str(int(value)))
         os.replace(tmp, self.path)
-
-
-@dataclass
-class EnvWatermark(WatermarkStore):
-    """Environment-variable watermark (the reference's env backend,
-    /root/reference/src/extract_github_data.py:176-183,251-258).
-
-    The reference reads LAST_REPO_ID from the process environment and
-    "persists" by exporting the new value — durable only within the
-    process (its scheduled-run harness re-injects it per run). Same
-    semantics here: get() parses the variable, set() writes it back to
-    ``os.environ``. ``environ`` is injectable so tests don't mutate
-    the real process environment.
-    """
-
-    var: str = "LAST_REPO_ID"
-    default: int = 0
-    environ: object = None  # mapping; defaults to os.environ
-
-    def _env(self):
-        return os.environ if self.environ is None else self.environ
-
-    def get(self) -> int:
-        try:
-            raw = self._env().get(self.var)
-            return int(str(raw).strip()) if raw is not None else self.default
-        except ValueError:
-            return self.default
-
-    def set(self, value: int) -> None:
-        self._env()[self.var] = str(int(value))
-
-
-@dataclass
-class KVWatermark(WatermarkStore):
-    """Remote-KV watermark (the reference's S3 / DynamoDB backends,
-    /root/reference/src/extract_github_data.py:164-286) with an
-    injectable client.
-
-    ``client`` is any mapping-shaped object with ``get(key)`` and
-    ``put(key, value)`` taking/returning strings — the exact surface an
-    S3 object store (get_object/put_object on a key) or a DynamoDB
-    item table (GetItem/PutItem on a partition key) exposes. Tests
-    inject a dict-backed fake; a real deployment wraps its boto3 client
-    in these two methods, keeping the engine free of network SDKs.
-
-    Values round-trip as strings (both remote stores are string-typed);
-    a missing key or non-integer value falls back to ``default``,
-    mirroring FileWatermark's corrupt/absent-file behaviour.
-    """
-
-    client: object
-    key: str = "watermark"
-    default: int = 0
-
-    def get(self) -> int:
-        try:
-            raw = self.client.get(self.key)
-            return int(str(raw).strip()) if raw is not None else self.default
-        except (ValueError, KeyError):
-            return self.default
-
-    def set(self, value: int) -> None:
-        self.client.put(self.key, str(int(value)))
-
-
-class S3ObjectKV:
-    """boto3-S3-shaped adapter for :class:`KVWatermark` (the reference's
-    's3' backend, /root/reference/src/extract_github_data.py:196-213 and
-    :269-277).
-
-    ``s3_client`` is injected and only its public boto3 surface is
-    used: ``get_object(Bucket=..., Key=...)`` returning
-    ``{"Body": <stream with .read()>}`` and
-    ``put_object(Bucket=..., Key=..., Body=bytes)``. A missing key
-    (the client's NoSuchKey / any get failure) reads as None so
-    KVWatermark falls back to its default — the reference's
-    start-fresh-from-0 behaviour. No SDK import here: a real
-    deployment passes ``boto3.client("s3")``; tests pass a fake.
-    """
-
-    def __init__(self, s3_client, bucket: str,
-                 prefix: str = "github_extraction_state/"):
-        self.s3 = s3_client
-        self.bucket = bucket
-        self.prefix = prefix
-
-    def get(self, key: str):
-        try:
-            resp = self.s3.get_object(Bucket=self.bucket, Key=self.prefix + key)
-            return resp["Body"].read().decode("utf-8")
-        except Exception:  # NoSuchKey et al.: absent -> default
-            return None
-
-    def put(self, key: str, value: str) -> None:
-        self.s3.put_object(
-            Bucket=self.bucket, Key=self.prefix + key,
-            Body=value.encode("utf-8"),
-        )
-
-
-class DynamoTableKV:
-    """boto3-DynamoDB-shaped adapter for :class:`KVWatermark` (the
-    reference's 'dynamo' backend, extract_github_data.py:215-232 and
-    :279-286).
-
-    ``table`` is an injected boto3 ``dynamodb.Table`` resource; only
-    ``get_item(Key={...})`` -> ``{"Item": {...}}`` and
-    ``put_item(Item={...})`` are used. The item layout mirrors the
-    reference: partition key ``extraction_id`` = the watermark key,
-    value attribute ``last_repo_id``.
-    """
-
-    def __init__(self, table, partition_attr: str = "extraction_id",
-                 value_attr: str = "last_repo_id"):
-        self.table = table
-        self.partition_attr = partition_attr
-        self.value_attr = value_attr
-
-    def get(self, key: str):
-        try:
-            resp = self.table.get_item(Key={self.partition_attr: key})
-        except Exception:
-            return None
-        item = resp.get("Item")
-        return None if item is None else item.get(self.value_attr)
-
-    def put(self, key: str, value: str) -> None:
-        self.table.put_item(
-            Item={self.partition_attr: key, self.value_attr: value}
-        )

@@ -87,78 +87,6 @@ def running_user_totals(events: DataFrame, idle_timeout_ms: int | None = None) -
 
 
 # ---------------------------------------------------------------------------
-# transformWithState port (Spark 4.x arbitrary-state v2)
-# ---------------------------------------------------------------------------
-# Same running-totals semantics on the successor API. What v2 buys at
-# scale over applyInPandasWithState:
-# - typed state PRIMITIVES (value/list/map) instead of one opaque state
-#   tuple — a map-state per key is stored as individual RocksDB
-#   entries, so updating one sub-key doesn't rewrite the whole blob;
-# - schema evolution of state across query restarts;
-# - first-class timers (registerTimer/handleExpiredTimer) decoupled
-#   from the input path.
-# It REQUIRES the RocksDB state store provider
-# (``streams.use_rocksdb_state_store``); the HDFS-heap store does not
-# implement the v2 handle. The Python side of the v2 state protocol
-# additionally needs ``google.protobuf`` at query runtime (the state
-# server speaks protobuf) — absent from this test container, so the
-# end-to-end test is importorskip-gated while the processor kernel
-# itself is unit-tested with a fake handle.
-
-
-def _make_running_totals_processor():
-    """Build the StatefulProcessor class lazily: the import exists only
-    on Spark >= 4.0, and constructing it at module import would bind
-    the engine to the newest API everywhere."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            prev = self._totals.get() if self._totals.exists() else None
-            n, total = prev if prev is not None else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            # raw accumulator in state, rounding only at emit (same
-            # drift rule as the v1 kernel above)
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 6)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return RunningTotalsProcessor()
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running totals via ``transformWithStateInPandas`` —
-    output-identical to :func:`running_user_totals`, which the test
-    asserts (both against the batch aggregate).
-
-    Caller must switch the session to the RocksDB state store first
-    (``streams.use_rocksdb_state_store(spark)``).
-    """
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_make_running_totals_processor(),
-        outputStructType=RUNNING_TOTALS_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )
-
-
-# ---------------------------------------------------------------------------
 # CEP pattern matcher: first view -> click -> purchase chain per user
 # ---------------------------------------------------------------------------
 CEP_OUTPUT_SCHEMA = T.StructType(

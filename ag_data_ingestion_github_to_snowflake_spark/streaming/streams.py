@@ -12,7 +12,8 @@ Structured Streaming:
   last_repo_id resume, :164-286, without the hand-rolled state).
 - B45 rate-limited source: ``maxFilesPerTrigger`` / rate source rows
   per second — the declarative analog of MAX_REQUESTS_PER_RUN.
-- B46-B48 tumbling/sliding/session windows with
+- B46 tumbling windows (the sliding/session B47/B48 twins are
+  registry queries in plans/windows_queries.py) with
 - B49 event-time watermark (late-data drop) and
 - B50 streaming dedup (dropDuplicates within the watermark horizon) —
   the duplicates at-least-once delivery creates (:714) removed in
@@ -46,35 +47,6 @@ def tumbling_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
             "event_type",
             "n",
             "total_value",
-        )
-    )
-
-
-def sliding_counts(events: DataFrame, window: str = "1 hour", slide: str = "15 minutes") -> DataFrame:
-    """B47: sliding event-time window totals."""
-    return (
-        events.groupBy(F.window("ts", window, slide).alias("w"))
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast(DEC6)).cast("double").alias("total_value"),
-        )
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            "n",
-            "total_value",
-        )
-    )
-
-
-def session_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """B48: session windows per user (gap-merged)."""
-    return (
-        events.groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").cast("timestamp_ntz").alias("session_start"),
-            "n_events",
         )
     )
 
@@ -144,49 +116,6 @@ def interval_join(
     )
 
 
-def interval_join_outer(
-    left: DataFrame,
-    right: DataFrame,
-    key: str = "user_id",
-    horizon: str = "30 minutes",
-    delay: str = "10 minutes",
-) -> DataFrame:
-    """LEFT OUTER stream-stream interval join.
-
-    Same keyed time-range pairing as :func:`interval_join`, but a left
-    row with no partner must still be emitted — and in a stream that
-    answer is only knowable once the right-side watermark has passed
-    ``l_ts + horizon`` (no future right row can match anymore). Spark
-    therefore emits matched pairs eagerly and null-padded unmatched
-    rows at state EVICTION, i.e. one-or-more micro-batches later; the
-    test drives that schedule explicitly. State stays bounded by the
-    horizon exactly as in the inner case.
-    """
-    l = with_watermark(left, delay).select(
-        F.col(key).alias("l_key"),
-        F.col("event_id").alias("l_event_id"),
-        F.col("ts").alias("l_ts"),
-    )
-    r = with_watermark(right, delay).select(
-        F.col(key).alias("r_key"),
-        F.col("event_id").alias("r_event_id"),
-        F.col("ts").alias("r_ts"),
-    )
-    return l.join(
-        r,
-        (F.col("l_key") == F.col("r_key"))
-        & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {horizon}")),
-        "leftOuter",
-    ).select(
-        F.col("l_key").alias(key),
-        "l_event_id",
-        F.col("l_ts").cast("timestamp_ntz").alias("l_ts"),
-        "r_event_id",
-        F.col("r_ts").cast("timestamp_ntz").alias("r_ts"),
-    )
-
-
 def stream_events_from_parquet(
     spark,
     source_dir: str,
@@ -222,50 +151,6 @@ def run_available_now(stream_df: DataFrame, checkpoint: str, table_name: str):
         .option("checkpointLocation", checkpoint)
         .format("memory")
         .queryName(table_name)
-        .start()
-    )
-
-
-def stream_upsert_to_warehouse(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint: str,
-    key: str = "event_id",
-    version_col: str | None = None,
-):
-    """Stream -> idempotent warehouse MERGE via ``foreachBatch``: the
-    production sink pattern that turns at-least-once micro-batch
-    delivery into exactly-once AT THE TABLE.
-
-    Each micro-batch runs ``merge_into_warehouse`` (key-dedup + replace,
-    ``sources/sinks.py``): a batch replayed after a crash re-merges the
-    same keys and changes nothing, so the checkpoint (offset commit)
-    and the table (content) cannot drift apart. This is the streaming
-    closure of the reference's at-least-once loop
-    (``/root/reference/src/extract_github_data.py:714`` saves state
-    after each row, so re-runs refetch and re-deliver rows) — the
-    duplicates die in the merge instead of accumulating in the sink.
-
-    foreachBatch receives a BATCH DataFrame per trigger, so the whole
-    batch-side operator library (dedup, validation, merge) applies
-    unchanged; at scale, partition-prune the merge by routing each
-    batch to its affected date partitions.
-
-    Returns the started StreamingQuery; caller awaits termination.
-    """
-    from ag_data_ingestion_github_to_snowflake_spark.sources.sinks import (
-        merge_into_warehouse,
-    )
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        merge_into_warehouse(
-            batch_df.sparkSession, batch_df, path, key=key, version_col=version_col
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
         .start()
     )
 

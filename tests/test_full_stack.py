@@ -1,10 +1,9 @@
 """End-to-end composition smoke: the whole engine surface in one flow.
 
 REST ingest (stub transport) → flatten → validation split → dedupe to
-latest → two-phase-commit warehouse load (Python Data Source writer) →
-idempotent key-merge into the parquet warehouse → sorted compaction →
-profile + expectations — i.e. the reference pipeline
-(extract → S3 stage → Snowflake load → SQL consumption,
+latest → two-phase-commit JSONL stage (Python Data Source writer) →
+profile + expectations over the staged rows — i.e. the reference
+pipeline (extract → S3 stage → SQL consumption,
 ``/root/reference/README.md``) each stage replaced by its Spark-native
 counterpart, proven to hand off to the next.
 """
@@ -23,18 +22,15 @@ from ag_data_ingestion_github_to_snowflake_spark.operators.profile import (
 from ag_data_ingestion_github_to_snowflake_spark.pipeline.github import (
     incremental_extract,
 )
-from ag_data_ingestion_github_to_snowflake_spark.sources.sinks import (
-    compact_table,
-    merge_into_warehouse,
-)
 from ag_data_ingestion_github_to_snowflake_spark.sources.state import MemoryWatermark
+from ag_data_ingestion_github_to_snowflake_spark.sources.stub import StubTransport
 from ag_data_ingestion_github_to_snowflake_spark.sources.warehouse_sink import (
     JsonlWarehouseDataSource,
+    read_warehouse,
 )
-from ag_data_ingestion_github_to_snowflake_spark.sources.stub import StubTransport
 
 
-def test_extract_stage_load_merge_compact_profile(spark, tmp_path):
+def test_extract_stage_profile(spark, tmp_path):
     # -- extract (A1-A15): stubbed REST, 2 pages
     transport = StubTransport(n_repos=60)
     state = MemoryWatermark()
@@ -54,20 +50,9 @@ def test_extract_stage_load_merge_compact_profile(spark, tmp_path):
     manifest = json.load(open(os.path.join(stage_dir, "_SUCCESS")))
     assert manifest["n_rows"] == n_valid
 
-    # -- load (A9): idempotent merge into the parquet warehouse
-    wh = str(tmp_path / "warehouse")
-    merge_into_warehouse(spark, valid, wh, key="id")
-    once = spark.read.parquet(wh).count()
-    merge_into_warehouse(spark, valid, wh, key="id")  # re-load: no-op
-    assert spark.read.parquet(wh).count() == once == n_valid
-
-    # -- maintain: sorted compaction keeps the data, tightens layout
-    n_files = compact_table(spark, wh, target_records_per_file=10_000, sort_cols=["id"])
-    assert n_files == 1
-    assert spark.read.parquet(wh).count() == n_valid
-
-    # -- consume: profile + expectations over the warehouse table
-    tbl = spark.read.parquet(wh)
+    # -- consume: profile + expectations over the staged table
+    tbl = read_warehouse(spark, stage_dir, valid.schema)
+    assert tbl.count() == n_valid
     prof = {r.col_name: r for r in profile_table(tbl, ["id", "stargazers_count"]).collect()}
     assert prof["id"].n_nulls == 0
     assert prof["id"].n_distinct == n_valid

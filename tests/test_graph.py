@@ -2,16 +2,12 @@
 
 Shapes exercised: multi-hop chain (forces >1 propagation round),
 triangle (near-dup clique), isolated node via the ``nodes`` universe,
-two separate components, and the canonical-member selection that turns
-labels into a dedup keep-list.
+and two separate components.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from ag_data_ingestion_github_to_snowflake_spark.operators.graph import (
-    canonical_members,
     connected_components,
 )
 
@@ -46,21 +42,6 @@ def test_isolated_nodes_keep_own_label(spark):
 
 def test_edge_orientation_irrelevant(spark):
     assert _labels(spark, [(5, 3), (3, 4)]) == {3: 3, 4: 3, 5: 3}
-
-
-def test_canonical_members_one_per_component(spark):
-    e = spark.createDataFrame([(1, 2), (2, 3), (8, 9)], "id_a bigint, id_b bigint")
-    n = spark.createDataFrame([(x,) for x in [1, 2, 3, 7, 8, 9]], "node bigint")
-    labels = connected_components(e, nodes=n)
-    keep = sorted(r["node"] for r in canonical_members(labels).collect())
-    assert keep == [1, 7, 8]
-    # keep-list joined back drops exactly the non-canonical duplicates
-    kept_rows = labels.join(
-        canonical_members(labels).withColumnRenamed("node", "k"),
-        F.col("node") == F.col("k"),
-        "left_semi",
-    )
-    assert kept_rows.count() == 3
 
 
 def test_long_chain_converges_logarithmically(spark):

@@ -139,7 +139,7 @@ def test_simhash_identical_docs_distance_zero(spark):
 
 def test_simhash_signature_matches_python_reference(spark):
     """Pin the packed-lane majority vote bit-for-bit against a plain
-    Python reference (the test_pq_cdc convention): the r14 SQL-string
+    Python reference (the test_pq_cdc convention): the SQL-string
     rewrite of the vote must reproduce the exact signature longs, not
     just the pairwise distances. Uses the md5-derived 60-bit hash so
     the reference is computable outside the JVM."""
@@ -407,24 +407,6 @@ def test_decode_image_real_bmp_through_spark(spark):
     assert (row.width, row.height, row.mean_luma) == (5, 3, 0.299)
 
 
-def test_sample_frames_real_ppm_stack(spark):
-    import numpy as np
-
-    from ag_data_ingestion_github_to_snowflake_spark.operators import codecs
-
-    frames = [
-        codecs.encode_ppm(np.full((2, 2, 3), i, dtype=np.uint8)) for i in range(25)
-    ]
-    df = spark.createDataFrame(
-        [(1, bytearray(b"".join(frames)))], "doc_id long, payload binary"
-    )
-    rows = sorted(M.sample_frames(df, every_n=10).collect(), key=lambda r: r.frame_idx)
-    assert [r.frame_idx for r in rows] == [0, 10, 20]
-    import hashlib
-
-    assert rows[1].frame_hash == hashlib.sha256(frames[10]).hexdigest()[:16]
-
-
 def test_audio_features_fake_deterministic(spark):
     df = spark.createDataFrame([Row(doc_id=1, text="x" * 32000)]).withColumn(
         "payload", F.encode("text", "UTF-8")
@@ -435,15 +417,6 @@ def test_audio_features_fake_deterministic(spark):
     assert a.duration_s == 2.0  # 32000 bytes @ 16kHz fake clock
     assert a.sample_rate in (8000, 16000, 22050, 44100)
     assert 0.0 <= a.rms_energy <= 1.0
-
-
-def test_sample_frames_stride(spark):
-    df = spark.createDataFrame([Row(doc_id=1, text="x" * 320)]).withColumn(
-        "payload", F.encode("text", "UTF-8")
-    )
-    rows = M.sample_frames(df, every_n=10, deterministic_fake=True).collect()
-    # 320 bytes -> 20 frames -> indices 0,10
-    assert [r.frame_idx for r in sorted(rows, key=lambda r: r.frame_idx)] == [0, 10]
 
 
 # ---------------------------------------------------------------------------
@@ -702,24 +675,11 @@ def test_delta_join_append_equals_full_join(spark):
     assert got == want and len(want) == 30
 
 
-def test_with_cosine_and_run_metrics_roundtrip(spark, tmp_path):
-    """with_cosine: exact 1.0 on identical vectors, 0.0 on orthogonal;
-    write_run_metrics: append-only envelope accumulates run rows."""
-    from pyspark.sql import functions as F
-
-    from ag_data_ingestion_github_to_snowflake_spark.operators.similarity import (
-        with_cosine,
-    )
+def test_write_run_metrics_appends_rows(spark, tmp_path):
+    """write_run_metrics: the append-only envelope accumulates run rows."""
     from ag_data_ingestion_github_to_snowflake_spark.sources.sinks import (
         write_run_metrics,
     )
-
-    df = spark.createDataFrame(
-        [([1.0, 0.0], [1.0, 0.0]), ([1.0, 0.0], [0.0, 2.0])],
-        "a array<double>, b array<double>",
-    )
-    got = [round(r.cosine, 9) for r in with_cosine(df, "a", "b").collect()]
-    assert got == [1.0, 0.0]
 
     path = str(tmp_path / "metrics")
     m = spark.createDataFrame([(1, 10)], "run int, n int")

@@ -1,109 +1,30 @@
-"""Row-group skipping proof: sorted compaction → tight parquet min/max
-stats → a pushed-down range predicate skips most row groups.
-
-This is the data-skipping contract `compact_table(sort_cols=...)`
-claims (`sources/sinks.py`). The skip decision Spark's parquet reader
-makes is exactly "does the predicate interval intersect the row group's
-[min, max]?" — we count those intersections from the footers with
-pyarrow (public parquet semantics, reader-independent) and assert:
-
-- unsorted layout: every row group spans the whole key range, nothing
-  is skippable;
-- sorted layout at the same row-group size: the same predicate touches
-  a small fraction of row groups;
-- Spark actually pushes the predicate to the scan (`PushedFilters` in
-  the formatted plan), i.e. the stats are *used*, not just present.
+"""Scan-side pruning proofs: the formatted/executed plan shows that a
+predicate, a partition filter, an aggregate or a group-by reaches the
+parquet scan, and AQE coalesces a tiny shuffle at runtime.
 
 Reference grounding: the reference caches raw pages and relies on the
 warehouse for pruning (README.md:285-291); in the Spark engine the
-parquet layout IS the warehouse, so skip-ability is a first-class
-property of the sink.
+parquet layout IS the warehouse, so pushdown is a first-class property
+of the sink.
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
-import os
 
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
-
-from ag_data_ingestion_github_to_snowflake_spark.sources.sinks import compact_table
 
 KEYS = 10_000
 ROWS = 40_000
-BLOCK = 32 * 1024  # tiny row groups so one file holds many
-
-
-def _write_unsorted(spark, path: str) -> None:
-    # hash-scrambled key order: every row group spans ~the full domain
-    df = spark.range(ROWS).select(
-        F.pmod(F.hash(F.col("id")), F.lit(KEYS)).alias("k"),
-        F.col("id").alias("v"),
-    )
-    (
-        df.repartition(1)
-        .write.mode("overwrite")
-        .option("parquet.block.size", BLOCK)
-        .parquet(path)
-    )
-
-
-def _row_groups_matching(path: str, col: str, lo: int, hi: int) -> tuple[int, int]:
-    """(intersecting, total) row groups for predicate lo <= col < hi,
-    judged from footer min/max — the same test a skipping reader runs."""
-    total = match = 0
-    for fname in os.listdir(path):
-        if not fname.endswith(".parquet") or fname.startswith("_"):
-            continue
-        f = pq.ParquetFile(os.path.join(path, fname))
-        idx = f.schema_arrow.names.index(col)
-        md = f.metadata
-        for i in range(md.num_row_groups):
-            st = md.row_group(i).column(idx).statistics
-            total += 1
-            if st.max >= lo and st.min < hi:
-                match += 1
-    return match, total
-
-
-def test_sorted_compaction_makes_rowgroups_skippable(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    _write_unsorted(spark, path)
-
-    lo, hi = 4_000, 4_400  # 4% of the key domain
-
-    match, total = _row_groups_matching(path, "k", lo, hi)
-    assert total >= 5, f"need multiple row groups to prove skipping, got {total}"
-    # scrambled layout: the narrow predicate intersects EVERY row group
-    assert match == total
-
-    n_files = compact_table(
-        spark,
-        path,
-        target_records_per_file=ROWS,  # single file — skipping is intra-file
-        sort_cols=["k"],
-        parquet_block_bytes=BLOCK,
-    )
-    assert n_files == 1
-
-    match, total = _row_groups_matching(path, "k", lo, hi)
-    assert total >= 5
-    # sorted layout: disjoint per-group key ranges, most groups skippable
-    assert match <= max(2, total // 3), (match, total)
-
-    # rewrite preserved the data
-    assert spark.read.parquet(path).count() == ROWS
 
 
 def test_range_predicate_is_pushed_to_scan(spark, tmp_path):
     path = str(tmp_path / "tbl")
-    _write_unsorted(spark, path)
-    compact_table(
-        spark, path, target_records_per_file=ROWS, sort_cols=["k"],
-        parquet_block_bytes=BLOCK,
-    )
+    spark.range(ROWS).select(
+        F.pmod(F.hash(F.col("id")), F.lit(KEYS)).alias("k"),
+        F.col("id").alias("v"),
+    ).write.mode("overwrite").parquet(path)
     df = spark.read.parquet(path).filter((F.col("k") >= 4000) & (F.col("k") < 4400))
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):

@@ -74,32 +74,6 @@ def test_kll_quantiles_bracket_exact(spark):
     assert row.p50 <= row.p90 <= row.p99
 
 
-def test_count_min_overcount_only_contract(spark):
-    """CM sketch built by F.count_min_sketch round-trips through the
-    JVM CountMinSketch reader; estimates never undercount and stay
-    within eps*N of exact."""
-    from ag_data_ingestion_github_to_snowflake_spark.plans.sketch_queries import (
-        count_min_sketch_bytes,
-    )
-
-    ev = load_table(spark, SF, "events")
-    raw = count_min_sketch_bytes(ev, "event_type", eps=0.001)
-    jvm = spark._jvm
-    cms = jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(
-        jvm.java.io.ByteArrayInputStream(bytearray(raw))
-    )
-    exact = {
-        r.event_type: r.n
-        for r in ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    n_total = sum(exact.values())
-    assert cms.totalCount() == n_total
-    for key, true_n in exact.items():
-        est = cms.estimateCount(key)
-        assert est >= true_n  # CM never undercounts
-        assert est <= true_n + 0.001 * n_total + 1  # eps*N overcount bound
-
-
 def test_hll_verified_linear_counting_regime(spark):
     """The from-scratch HLL (operators/hll.py) at fixture cardinality:
     raw estimate is in the linear-counting regime, so the consumer-side

@@ -107,25 +107,6 @@ def test_streaming_dedup_drops_duplicates(spark, tmp_path):
     assert got.distinct().count() == 200
 
 
-def test_watermark_bounds_session_state(spark, events_split_dir, tmp_path):
-    """B48/B49: session windows under a watermark drain to final
-    sessions; total event count is conserved across sessions."""
-    ev = load_table(spark, SF, "events")
-    sdf = S.stream_events_from_parquet(spark, events_split_dir, ev.schema, max_files_per_trigger=2)
-    sessions = S.session_counts(S.with_watermark(sdf, "10 minutes"))
-    q = (
-        sessions.writeStream.outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "cp5"))
-        .format("memory")
-        .queryName("sessions1")
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT * FROM sessions1")
-    assert got.agg(F.sum("n_events")).collect()[0][0] == ev.count()
-
-
 def test_interval_join_horizon_bounds(spark, tmp_path):
     """Stream-stream interval join: only same-user pairs within the
     horizon survive; the streaming run equals the batch twin."""
@@ -234,48 +215,6 @@ def test_late_row_dropped_in_stream_present_in_batch(spark, tmp_path):
     assert stream_n == {"10:00": 2}  # late row dropped past the watermark
 
 
-def test_stream_upsert_to_warehouse_idempotent(spark, tmp_path):
-    """foreachBatch merge sink: duplicate delivery across batches (and
-    across restarts) leaves exactly one row per key in the table."""
-    import shutil
-
-    from ag_data_ingestion_github_to_snowflake_spark.streaming.streams import (
-        stream_events_from_parquet,
-        stream_upsert_to_warehouse,
-    )
-
-    src = str(tmp_path / "src")
-    wh = str(tmp_path / "wh")
-    cp = str(tmp_path / "cp")
-    base = spark.createDataFrame(
-        [(1, "a", 1), (2, "b", 1), (3, "c", 1)], "event_id bigint, v string, ver int"
-    )
-    dup = spark.createDataFrame(
-        [(2, "b2", 2), (4, "d", 1)], "event_id bigint, v string, ver int"
-    )
-    base.coalesce(1).write.mode("append").parquet(src)
-    dup.coalesce(1).write.mode("append").parquet(src)
-
-    schema = spark.read.parquet(src).schema
-    s = stream_events_from_parquet(spark, src, schema, max_files_per_trigger=1)
-    q = stream_upsert_to_warehouse(s, wh, cp, key="event_id", version_col="ver")
-    assert q.awaitTermination(120)
-
-    out = {r["event_id"]: r["v"] for r in spark.read.parquet(wh).collect()}
-    assert out == {1: "a", 2: "b2", 3: "c", 4: "d"}  # key 2 upserted to ver 2
-
-    # replay from scratch (fresh checkpoint, same source): re-merging
-    # the same batches changes nothing
-    shutil.rmtree(cp)
-    q2 = stream_upsert_to_warehouse(
-        stream_events_from_parquet(spark, src, schema), wh, cp, key="event_id",
-        version_col="ver",
-    )
-    assert q2.awaitTermination(120)
-    out2 = {r["event_id"]: r["v"] for r in spark.read.parquet(wh).collect()}
-    assert out2 == out
-
-
 def test_streaming_dedup_rocksdb_state_store(spark, events_split_dir, tmp_path):
     """B50 under the RocksDB state store: same dedup result as the
     default heap-backed provider — the provider changes where state
@@ -316,67 +255,6 @@ def test_stream_static_enrich_equals_batch(spark, events_split_dir, tmp_path):
     )
     got_counts = got.groupBy("tier").count()
     assert sorted(got_counts.collect()) == sorted(batch.collect())
-
-
-def test_interval_join_outer_emits_unmatched_after_horizon(spark, tmp_path):
-    """Left-outer stream-stream join: the matched pair emits eagerly;
-    the unmatched click emits null-padded only after later batches push
-    the watermark past click_ts + horizon (state eviction) — and never
-    emits twice."""
-    import os as _os
-    import time as _time
-
-    src = str(tmp_path / "oj_src")
-    raw = "event_id long, user_id long, event_type string, ts string, value double"
-
-    def write_batch(rows, mtime):
-        (
-            spark.createDataFrame(rows, raw)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-        for f in _os.listdir(src):
-            fp = _os.path.join(src, f)
-            _os.utime(fp, (mtime, mtime)) if _os.path.getmtime(fp) > mtime else None
-
-    base = _time.time() - 1000
-    # b0: one matched click+purchase, one unmatched click (user 2)
-    write_batch(
-        [
-            (1, 1, "click", "2024-01-01 10:00:00", 1.0),
-            (2, 1, "purchase", "2024-01-01 10:10:00", 5.0),
-            (3, 2, "click", "2024-01-01 10:05:00", 1.0),
-        ],
-        base,
-    )
-    # b1: advances both watermarks well past 10:35 + delay
-    write_batch([(8, 9, "click", "2024-01-01 12:00:00", 0.0),
-                 (9, 9, "purchase", "2024-01-01 12:00:00", 0.0)], base + 10)
-    # b2: one more advance so the evicted row is emitted under the new wm
-    write_batch([(10, 9, "click", "2024-01-01 13:00:00", 0.0),
-                 (11, 9, "purchase", "2024-01-01 13:00:00", 0.0)], base + 20)
-
-    ev_schema = spark.read.parquet(src).schema
-    sdf = S.stream_events_from_parquet(spark, src, ev_schema, max_files_per_trigger=1)
-    joined = S.interval_join_outer(
-        sdf.filter(F.col("event_type") == "click"),
-        sdf.filter(F.col("event_type") == "purchase"),
-    )
-    q = S.run_available_now(joined, str(tmp_path / "oj_cp"), "oj_out")
-    assert q.awaitTermination(240)
-
-    got = {
-        (r.l_event_id, r.r_event_id)
-        for r in spark.sql("SELECT l_event_id, r_event_id FROM oj_out").collect()
-    }
-    assert (1, 2) in got            # matched pair
-    assert (3, None) in got         # unmatched click, null-padded at eviction
-    n_unmatched = spark.sql(
-        "SELECT COUNT(*) n FROM oj_out WHERE l_event_id = 3"
-    ).collect()[0].n
-    assert n_unmatched == 1         # emitted exactly once
 
 
 def test_stream_dedup_ingest_curates_growing_corpus(spark, tmp_path):
@@ -558,7 +436,7 @@ def test_multibatch_rollup_runs_eight_batches(spark, tmp_path):
 
 
 def test_crash_mid_drain_restart_recovers_exactly_once(spark, tmp_path):
-    """VERDICT r9 item 4 — the engine twin of the reference's
+    """The engine twin of the reference's
     crash-resume claim (src/extract_github_data.py:820-824): a drain
     killed mid-stream after >=1 committed batch, restarted from the
     same checkpoint, must neither lose nor duplicate rows.

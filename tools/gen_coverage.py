@@ -19,13 +19,13 @@ from ag_data_ingestion_github_to_snowflake_spark.plans.registry import all_specs
 MODULE_EVIDENCE = {
     "A1": ["sources/rest.py:keyset_pages (the one pager: fetch_repo_list + both github_repos readers)", "tests/test_cli.py::test_cli_replayed_page_is_listed_and_looked_up_once", "tests/test_rest_datasource.py"],
     "A2": ["sources/rest.py:enrich_details (mapInPandas)", "tests/test_ingestion.py::test_enrichment_skips_404_and_flattens"],
-    "A3": ["sources/sinks.py:bronze_cache_write"],
-    "A4": ["sources/state.py (File/Env/Memory/KVWatermark)", "tests/test_ingestion.py::test_incremental_extract_resume_from_remote_kv_state"],
+    "A3": ["__main__.py:run (--use-cache seeds the watermark from the sink's max id)", "tests/test_cli.py::test_cli_use_cache_seeds_watermark_from_sink"],
+    "A4": ["sources/state.py (File/MemoryWatermark)", "tests/test_ingestion.py::test_incremental_extract_end_to_end_with_resume", "tests/test_ingestion.py::test_file_watermark_rejects_corrupt_state"],
     "A5": ["sources/rest.py:http_transport", "config.py (token tier)"],
     "A6": ["sources/sinks.py:partitioned_append", "tests/test_ingestion.py::test_partitioned_sink_layout"],
-    "A7": ["sources/sinks.py:bronze_cache_write"],
+    "A7": ["__main__.py:run (--use-cache seeds the watermark from the sink's max id)", "tests/test_cli.py::test_cli_use_cache_seeds_watermark_from_sink"],
     "A8": ["sources/state.py", "pipeline/github.py:incremental_extract (batch commit)"],
-    "A9": ["sources/sinks.py:merge_into_warehouse (idempotent key-merge)", "tests/test_ingestion.py::test_merge_into_warehouse_idempotent_reload"],
+    "A9": ["dropped: the reference only documents its COPY INTO load; the CLI's partitioned parquet sink (A6) is the warehouse"],
     "A10": ["pipeline/github.py:flatten_repos", "tests/test_operators.py::test_flatten_golden"],
     "A11": ["sources/rest.py:list_scan_df budget slice", "sources/rest_datasource.py:_scan (per-shard row caps)", "tests/test_rest_datasource.py::test_budget_capped_scan"],
     "A12": ["pipeline/github.py:valid_predicate", "tests/test_operators.py::test_validation_split_partitions_input"],
@@ -40,8 +40,6 @@ MODULE_EVIDENCE = {
     "B29": ["pipeline/github.py:latest_snapshot (dedupe-to-latest)"],
     "B44": ["streaming/streams.py (incl. interval_join)", "tests/test_streaming.py::test_streaming_checkpoint_resume"],
     "B45": ["streaming/streams.py:stream_events_from_parquet", "tests/test_streaming.py::test_streaming_rate_cap_batches"],
-    "B47": ["streaming/streams.py:sliding_counts"],
-    "B48": ["streaming/streams.py:session_counts", "tests/test_streaming.py::test_watermark_bounds_session_state"],
     "B49": ["streaming/streams.py:with_watermark", "tests/test_streaming.py"],
     "B50": ["streaming/streams.py:dedup_stream", "tests/test_streaming.py::test_streaming_dedup_drops_duplicates"],
     "B51": ["operators/multimodal.py (mapInPandas kernels)"],
