@@ -13,10 +13,13 @@ Mirrors the reference's ``main()`` argparse surface
 
 Spark-first deltas from the reference (documented in SURVEY §1.1):
 the envelope JSON document becomes a flat partitioned table plus a
-``_run_metrics`` table, and the watermark commits once per batch
-AFTER the sink write succeeds (the reference commits per row). A batch
-is one Spark action — the sink write, or a ``noop`` write under
-``--skip-upload`` — and its run counters are observed on that action.
+``_run_metrics`` table. A batch stages both beside the sink and
+publishes them with the new watermark as one commit record
+(``sources/sinks.py``), once per batch where the reference commits per
+row; each run first finishes or drops an earlier run's commit, so a
+crash never lands a batch twice. A batch is one Spark action — the
+staged sink write, or a ``noop`` write under ``--skip-upload`` — and
+its run counters are observed on that action.
 """
 
 from __future__ import annotations
@@ -24,7 +27,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import sys
 
 from ag_data_ingestion_github_to_snowflake_spark.config import EngineConfig
@@ -86,6 +88,9 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
     )
     from ag_data_ingestion_github_to_snowflake_spark.sources.sinks import (
         partitioned_append,
+        publish_batch,
+        roll_forward,
+        stage_path,
         write_run_metrics,
     )
     from ag_data_ingestion_github_to_snowflake_spark.sources.state import (
@@ -124,6 +129,8 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
 
     os.makedirs(os.path.dirname(state_path) or ".", exist_ok=True)
     state = FileWatermark(state_path)
+    # Before anything reads the sink or the watermark.
+    roll_forward(sink_path, state)
     if args.use_cache and os.path.exists(sink_path):
         # A3: bronze cache seed — never re-fetch ids already sunk.
         from pyspark.sql import functions as F
@@ -148,22 +155,18 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
         commit_state=False,  # commit AFTER the sink write below
     )
 
-    sink_existed = os.path.exists(sink_path)
     if skip_upload:
         result.valid.write.format("noop").mode("overwrite").save()
     else:
-        partitioned_append(result.valid, sink_path, ts_col="updated_at")
+        partitioned_append(result.valid, stage_path(sink_path), ts_col="updated_at")
     metrics = result.metrics(test_mode)
     uploaded = not skip_upload and metrics["valid_count"] > 0
     if uploaded:
-        write_run_metrics(metrics_row(spark, metrics), sink_path + "_run_metrics")
-    elif not skip_upload and not sink_existed:
-        # An empty partitioned append leaves a directory with only
-        # _SUCCESS, which spark.read.parquet cannot infer a schema from.
-        shutil.rmtree(sink_path, ignore_errors=True)
-    # Watermark advances only once the batch is durably sunk (or the
-    # run explicitly skipped the sink) — a failed write re-fetches.
-    state.set(result.new_watermark)
+        write_run_metrics(
+            metrics_row(spark, metrics), stage_path(sink_path, "_run_metrics")
+        )
+    # An empty batch stages no parquet file, so it moves none into the sink.
+    publish_batch(sink_path, state, result.new_watermark)
 
     summary = {
         "success": True,

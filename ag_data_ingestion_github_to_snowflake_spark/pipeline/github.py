@@ -1,5 +1,5 @@
 """The reference pipeline, Spark-first: nested-record flatten,
-required-field validation split, run-summary metrics, idempotent
+required-field validation split, run-summary metrics, resumable
 incremental extraction.
 
 Covers SURVEY §2 A10 (flatten), A12/A13 (validation split), A14 (error
@@ -196,9 +196,10 @@ def incremental_extract(
     shuffle, the sink write and the metrics-row write. The watermark
     commits once per batch (not per row as the reference does, :714)
     and only after that action succeeded, so a failed batch is
-    re-fetched by the next run. Idempotency comes from
-    ``latest_snapshot`` on id — the documented at-least-once design
-    (README.md:121-129) made exactly-once at the table level.
+    re-fetched by the next run. ``latest_snapshot`` dedupes on id
+    within the batch only; the CLI lands each batch once by staging it
+    and publishing data, metrics and watermark with one commit record
+    (``sources/sinks.py``).
 
     With ``commit_state`` the batch runs here as a ``noop`` write before
     ``state.set``; later actions on the outputs recompute them. Callers

@@ -238,8 +238,8 @@ def _drain(
     with a bounded key set: the default HDFS-backed store rewrites the
     whole state map per commit, which turns e.g. the 100x session
     drain (9.5M session states) from >600 s into ~77 s under RocksDB
-    (measured, r6 re-run with a right-sized heap; incremental SST
-    writes instead of full-map rewrite).
+    (measured with a right-sized heap; incremental SST writes instead
+    of full-map rewrite).
 
     ``shuffle_partitions`` overrides the default fixture-sized 8 for
     THIS drain (fresh checkpoint each run, so the pin is per-query).
@@ -315,8 +315,8 @@ def streaming_tumbling_events(spark: SparkSession, sf: str) -> DataFrame:
     """Tumbling-window agg executed via Structured Streaming
     (checkpointed micro-batches, AvailableNow drain)."""
     sdf, stage = _staged_events_stream(spark, sf)
-    # r13: state partitions input-derived (floor 2) — see
-    # _adaptive_stream_partitions; commit contention measured.
+    # State partitions input-derived (floor 2): commit contention,
+    # OPTIMIZATION_r13.md §3.
     return _drain(
         S.tumbling_counts(sdf),
         spark,
@@ -355,8 +355,8 @@ def streaming_interval_join_events(spark: SparkSession, sf: str) -> DataFrame:
         sdf.filter(F.col("event_type") == "click"),
         sdf.filter(F.col("event_type") == "purchase"),
     )
-    # r13: state partitions input-derived (floor 2); interval-join
-    # state IS input-bound, so the rows derivation is the right size.
+    # State partitions input-derived (floor 2); interval-join state
+    # IS input-bound, so the rows derivation is the right size.
     return _drain(
         joined,
         spark,
@@ -432,7 +432,7 @@ def streaming_corpus_curation(spark: SparkSession, sf: str) -> DataFrame:
 
 @register(
     "streaming_neardup_curation",
-    # DECIDED rows-only (final, r10): the MinHash family is engine-specific and
+    # Rows-only by design: the MinHash family is engine-specific and
     # LSH recall on sub-1.0 Jaccard pairs is probabilistic, so no SQL
     # twin can pin the exact surviving set. Semantics (fuzzy
     # re-arrivals blocked, fresh content admitted, replay idempotence)
@@ -493,20 +493,20 @@ def streaming_dedup_events(spark: SparkSession, sf: str) -> DataFrame:
     sdf, stage = _staged_events_stream(spark, sf)
     deduped = S.dedup_stream(sdf, ["event_id"], delay="40 days").select("event_id")
     # Knobs MEASURED at 100x (10M dedup states, single AvailableNow
-    # commit, r8): heap/32-part 20.3 s,
+    # commit): heap/32-part 20.3 s,
     # heap/8 29.1 s, RocksDB/32 26.7 s, RocksDB/8 36.9 s, and delay
     # width is cost-neutral (heap/32 with "1 day" = 21.4 s — one
     # commit means the watermark only advances at the end, so eviction
-    # never runs mid-drain). Same shape as the r7 session-drain
+    # never runs mid-drain). Same shape as the session-drain
     # finding: an insert-only single-commit drain never pays the
     # full-map rewrite that makes RocksDB win on multi-commit state,
     # and core-count partitions parallelize the per-event state probe
     # instead of idling 3/4 of the box. A continuous production stream
     # (many commits, state turnover) would flip to rocksdb=True.
     #
-    # r8 measured the small-scale/100x partition trade both ways (32
-    # parts: 100x 31.6 -> 20.8 s but sf0.1 1.11 -> 1.75 s). r13 makes
-    # the count INPUT-DERIVED (_adaptive_stream_partitions): the 100x
+    # The small-scale/100x partition trade cuts both ways (32 parts:
+    # 100x 31.6 -> 20.8 s but sf0.1 1.11 -> 1.75 s), so the count is
+    # INPUT-DERIVED (OPTIMIZATION_r13.md §3): the 100x
     # fixture still gets the measured core-count optimum, the sf0.1
     # bench gets back its 8-partition floor — guide §2, partitioning
     # derived from input size instead of a constant for either scale.
@@ -556,8 +556,8 @@ def streaming_stateful_totals(spark: SparkSession, sf: str) -> DataFrame:
     # Per-row cost here is the Python stateful kernel (Arrow + per-key
     # calls), which scales with data — the fixture-sized default of 8
     # left 3/4 of a 32-core box idle and was the whole 100x gap (49 s
-    # -> scale_curve_100x_all.json after the r8 core-count retune).
-    # r13: partition count now derives from staged rows
+    # -> scale_curve_100x_all.json after the core-count retune).
+    # The partition count derives from staged rows
     # (_adaptive_stream_partitions) so the 100x decade keeps the
     # core-count optimum while the sf0.1 bench stops paying 32 state
     # stores x batches for 100k rows. State itself is one tiny
@@ -618,12 +618,12 @@ def streaming_session_window_events(spark: SparkSession, sf: str) -> DataFrame:
     every real session's end, so the engine emits each finalized
     session EXACTLY ONCE in the closing no-data micro-batch — the
     production heartbeat pattern for watermark-gated emission. The
-    r1-r6 complete-mode drain (the only alternative Spark allows for
+    earlier complete-mode drain (the only alternative Spark allows for
     streaming session aggs) re-emitted the full session state every
     commit and rescanned it from the sink: 55 s / alpha +1.37 at 100x,
     the suite's worst perf floor; append emits each session once, needs
     no dominance-dedup finalization, and measures 35.7 s / alpha +1.16
-    at 100x (scale_curve_100x_all.json, r7). The residual exponent is
+    at 100x (scale_curve_100x_all.json). The residual exponent is
     the per-event gap-merge state machine itself — 19.2M events into
     9.5M session states is near-linear work by construction. The sentinel's own session
     stays in state past the watermark by construction and is filtered
@@ -648,8 +648,8 @@ def streaming_session_window_events(spark: SparkSession, sf: str) -> DataFrame:
     )
     # Knobs MEASURED at 100x (9.5M sessions, 19.2M events; sf10
     # fixture): append/heap/32-part 36.0 s, append/RocksDB/32 46.3 s,
-    # append/RocksDB/64 39.7 s, append/RocksDB/8 51-55 s, r6
-    # complete/RocksDB/8 was 55 s. Append mode flips both r6 choices:
+    # append/RocksDB/64 39.7 s, append/RocksDB/8 51-55 s; the earlier
+    # complete/RocksDB/8 was 55 s. Append mode flips both choices:
     # an AvailableNow drain commits only ~2 batches, so the heap
     # store's full-map-write-per-commit penalty is paid twice total
     # while per-event state access becomes an in-heap hash probe
@@ -659,8 +659,8 @@ def streaming_session_window_events(spark: SparkSession, sf: str) -> DataFrame:
     # multiplying the emission cost. A long-running production stream
     # (thousands of commits, state >> heap) would still choose
     # RocksDB — that trade is the commit count, not the operator.
-    # r13: partition count input-derived (_adaptive_stream_partitions)
-    # — the 100x decade keeps the measured core-count optimum above,
+    # Partition count input-derived (OPTIMIZATION_r13.md §3): the
+    # 100x decade keeps the measured core-count optimum above,
     # sf0.1 returns to the 8-partition floor (guide §2).
     em = _drain(
         agg,
@@ -743,8 +743,8 @@ def streaming_multibatch_rollup(spark: SparkSession, sf: str) -> DataFrame:
             "total_value",
         )
     )
-    # r13: state partitions input-derived (floor 2) — commit
-    # contention; see _adaptive_stream_partitions.
+    # State partitions input-derived (floor 2): commit contention,
+    # OPTIMIZATION_r13.md §3.
     return _drain(
         agg,
         spark,
@@ -811,8 +811,8 @@ def streaming_enriched_rollup(spark: SparkSession, sf: str) -> DataFrame:
             "total_value",
         )
     )
-    # r13: state partitions input-derived (floor 2) — commit
-    # contention; see _adaptive_stream_partitions.
+    # State partitions input-derived (floor 2): commit contention,
+    # OPTIMIZATION_r13.md §3.
     return _drain(
         agg,
         spark,
@@ -1158,7 +1158,8 @@ def streaming_scd2_upsert(spark: SparkSession, sf: str) -> DataFrame:
     (semi-join pull of their open versions + union + per-key window
     over versions-per-key rows); unaffected history is carried by
     reference, and versions are written to a fresh subdir then swapped
-    (the warehouse_sink two-phase pattern) — never an in-place
+    (stage-then-publish, as the CLI's batch commit in
+    ``sources/sinks.py``) — never an in-place
     overwrite of the files being read. Batches are time-sliced, so the
     open-version + new-changes recompute is exactly the global window.
     """
@@ -1360,9 +1361,9 @@ def streaming_cep_funnel(spark: SparkSession, sf: str) -> DataFrame:
         .parquet(stage)
     )
     matches = funnel_cep_matches(sdf, window_us=7 * 86400 * 1_000_000)
-    # r13: input-derived partitions (guide §2) — measured at sf0.1:
-    # 23-30 s at core-count parts vs 7-14 s at 8 (interleaved A/B, 3
-    # reps), because 4 micro-batches x 32 Python-stateful partitions
+    # Input-derived partitions (OPTIMIZATION_r13.md §3) — measured at
+    # sf0.1: 23-30 s at core-count parts vs 7-14 s at 8 (interleaved,
+    # 3 reps), because 4 micro-batches x 32 Python-stateful partitions
     # cannot amortize on 100k rows; the 100x decade still derives the
     # core count it was tuned to.
     drained = _drain(

@@ -27,6 +27,7 @@ real transport is a thin urllib adapter.
 
 from __future__ import annotations
 
+import http.client
 import json
 import time
 import urllib.error
@@ -97,7 +98,9 @@ def http_transport(base_url: str, token: str | None = None) -> Transport:
                 return resp.status, json.loads(resp.read().decode())
         except urllib.error.HTTPError as e:  # 404 etc: row-skip, not crash
             return e.code, None
-        except urllib.error.URLError:  # DNS/timeout/conn-reset: row-skip too
+        # urllib wraps only send errors (URLError, an OSError); a dropped,
+        # truncated, timed-out or non-JSON response raises raw. Row-skip all.
+        except (OSError, http.client.HTTPException, ValueError):
             return 599, None
 
     return call

@@ -1,4 +1,5 @@
-"""Sinks (A6, A15): partitioned append sink + run-metrics table.
+"""Sinks (A6, A15): partitioned append sink, run-metrics table and the
+batch commit that publishes both together with the watermark.
 
 The reference serializes one envelope JSON per run to
 ``s3://bucket/yyyy/mm/dd/...`` (/root/reference/src/
@@ -8,16 +9,29 @@ S3 layout, but readable back with partition pruning — and the run
 metadata envelope becomes rows in a separate ``_run_metrics`` table
 (idiomatic Spark never nests a dataset inside a metadata document).
 
-At 100 TB: date partitioning bounds each file-commit transaction;
-`maxRecordsPerFile` caps file sizes; the sink is append-only and the
-table is deduplicated on read because the upstream
-offers at-least-once delivery.
+A batch lands exactly once. Its files are staged in ``<sink>_pending/``,
+a sibling of the sink, so a ``sink/**/*.parquet`` glob never sees them.
+``publish_batch`` makes one record of every file move plus the new
+watermark visible with ``os.replace``; ``roll_forward`` does the moves
+and sets the watermark. A crash before the record drops the stage and
+the batch is re-fetched; a crash after it is finished by the next run.
+
+At 100 TB: date partitioning bounds each file-commit transaction and
+`maxRecordsPerFile` caps file sizes.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ag_data_ingestion_github_to_snowflake_spark.sources.state import WatermarkStore
+
+COMMIT_RECORD = "_commit.json"
 
 
 def with_date_partitions(df: DataFrame, ts_col: str) -> DataFrame:
@@ -51,3 +65,49 @@ def partitioned_append(
 def write_run_metrics(metrics_df: DataFrame, path: str) -> None:
     """A15 metadata envelope -> append-only run-metrics table."""
     metrics_df.write.mode("append").parquet(path)
+
+
+def _pending(sink: str) -> str:
+    return os.path.abspath(sink) + "_pending"
+
+
+def stage_path(sink: str, suffix: str = "") -> str:
+    """Where a batch stages the files bound for ``sink + suffix``: the
+    pending directory mirrors the sink's parent directory."""
+    return os.path.join(_pending(sink), os.path.basename(os.path.abspath(sink)) + suffix)
+
+
+def publish_batch(sink: str, state: WatermarkStore, watermark: int) -> None:
+    """Commit the staged batch: one record of every file move and the new
+    watermark becomes visible atomically, then ``roll_forward`` runs it."""
+    pending = _pending(sink)
+    parent = os.path.dirname(pending)
+    moves = [
+        (src, os.path.join(parent, os.path.relpath(src, pending)))
+        for root, _, files in os.walk(pending)
+        for src in (os.path.join(root, f) for f in files if f.endswith(".parquet"))
+    ]
+    os.makedirs(pending, exist_ok=True)
+    tmp = os.path.join(pending, COMMIT_RECORD + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump({"watermark": int(watermark), "moves": moves}, f)
+    os.replace(tmp, os.path.join(pending, COMMIT_RECORD))
+    roll_forward(sink, state)
+
+
+def roll_forward(sink: str, state: WatermarkStore) -> None:
+    """Finish a published commit, or drop a stage that was never published.
+    Safe to repeat: a move whose source is gone was done before a crash."""
+    pending = _pending(sink)
+    try:
+        with open(os.path.join(pending, COMMIT_RECORD)) as f:
+            record = json.load(f)
+    except FileNotFoundError:
+        shutil.rmtree(pending, ignore_errors=True)
+        return
+    for src, dst in record["moves"]:
+        if os.path.exists(src):
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.rename(src, dst)
+    state.set(record["watermark"])
+    shutil.rmtree(pending)

@@ -4,10 +4,11 @@ extract_github_data.py:164-286).
 The reference persists a single integer high-watermark to
 file/env/S3/DynamoDB after every row. Spark-first equivalents:
 
-- batch-incremental jobs: a one-row state table (this module) read
-  before the run and atomically replaced after the sink commits —
-  per-batch, not per-row, so the sink must be idempotent on ``id``
-  (MERGE/dropDuplicates), which pipeline.github provides.
+- batch-incremental jobs: a one-integer state file (this module) read
+  before the run and atomically replaced once per batch, not per row.
+  The CLI sets it from the batch's commit record
+  (``sinks.publish_batch``/``roll_forward``), so the watermark moves
+  exactly when the batch's files land in the sink.
 - streaming: Structured Streaming's checkpointLocation subsumes this
   entirely (streaming/ module).
 

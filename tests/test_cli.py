@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from ag_data_ingestion_github_to_snowflake_spark.__main__ import build_parser, run
 
 
@@ -266,3 +268,75 @@ def test_cli_nothing_listed_keeps_watermark_and_writes_nothing(spark, tmp_path):
     assert summary["valid_count"] == summary["invalid_count"] == 0
     assert summary["new_watermark"] == int(state.read_text()) == 300
     assert not os.path.exists(sink) and not os.path.exists(sink + "_run_metrics")
+
+
+class Crash(Exception):
+    pass
+
+
+def _crash_after(fn):
+    def crashing(*args, **kwargs):
+        fn(*args, **kwargs)
+        raise Crash
+
+    return crashing
+
+
+@pytest.mark.parametrize(
+    "point", ["data_write", "metrics_write", "before_first_move", "mid_moves", "state_set"]
+)
+def test_cli_crash_at_any_commit_step_lands_each_batch_once(spark, tmp_path, monkeypatch, point):
+    """A batch crashes at one step of its commit; a clean rerun and one
+    more batch follow. A crash before the commit record re-fetches the
+    batch, one after it is finished by the rerun: either way every id
+    lands once, with one ``_run_metrics`` row per batch."""
+    import os
+
+    from ag_data_ingestion_github_to_snowflake_spark.sources import sinks, state
+
+    monkeypatch.delenv("MAX_REQUESTS_PER_RUN", raising=False)
+    monkeypatch.delenv("GITHUB_TOKEN", raising=False)
+    sink = str(tmp_path / "sink")
+    wm = tmp_path / "wm.txt"
+    pending = sink + "_pending"
+    argv = ["--test-mode", "--n-repos", "300", "--sink", sink, "--state", str(wm)]
+
+    with monkeypatch.context() as m:
+        if point == "data_write":
+            m.setattr(sinks, "partitioned_append", _crash_after(sinks.partitioned_append))
+        elif point == "metrics_write":
+            m.setattr(sinks, "write_run_metrics", _crash_after(sinks.write_run_metrics))
+        elif point == "state_set":
+            m.setattr(state.FileWatermark, "set", _crash_after(lambda *a: None))
+        else:
+            rename, moved = os.rename, []
+            fail_at = 1 if point == "mid_moves" else 0
+
+            def crashing_rename(src, dst):
+                if str(src).startswith(pending):
+                    if len(moved) == fail_at:
+                        raise Crash
+                    moved.append(src)
+                rename(src, dst)
+
+            m.setattr(os, "rename", crashing_rename)
+        with pytest.raises(Crash):
+            run(argv, spark=spark)
+    if point == "mid_moves":
+        staged = [f for _, _, fs in os.walk(pending) for f in fs if f.endswith(".parquet")]
+        assert os.path.exists(sink) and staged
+
+    run(argv, spark=spark)
+    run(argv, spark=spark)
+
+    # Each batch is one list page and 59 lookups; the stub 404s on id % 19
+    # and returns invalid rows on id % 13 and id % 17.
+    committed = point in ("before_first_move", "mid_moves", "state_set")
+    batches = 2 + committed
+    want = [i for i in range(1, 59 * batches + 1) if i % 19 and i % 13 and i % 17]
+    ids = sorted(r.id for r in spark.read.parquet(sink).select("id").collect())
+    assert ids == want
+    last = sorted(r.last_repo_id for r in spark.read.parquet(sink + "_run_metrics").collect())
+    assert last == [59 * (b + 1) for b in range(batches)]
+    assert int(wm.read_text()) == 59 * batches
+    assert not os.path.exists(pending)

@@ -1,17 +1,15 @@
 """End-to-end composition smoke: the whole engine surface in one flow.
 
 REST ingest (stub transport) → flatten → validation split → dedupe to
-latest → two-phase-commit JSONL stage (Python Data Source writer) →
-profile + expectations over the staged rows — i.e. the reference
-pipeline (extract → S3 stage → SQL consumption,
-``/root/reference/README.md``) each stage replaced by its Spark-native
-counterpart, proven to hand off to the next.
+latest → date-partitioned parquet stage (``sinks.partitioned_append``)
+→ profile + expectations over the staged rows read back with
+``spark.read.parquet`` — i.e. the reference pipeline (extract → S3
+stage → SQL consumption, ``/root/reference/README.md``) each stage
+replaced by its Spark-native counterpart, proven to hand off to the
+next.
 """
 
 from __future__ import annotations
-
-import json
-import os
 
 from pyspark.sql import functions as F
 
@@ -22,12 +20,9 @@ from ag_data_ingestion_github_to_snowflake_spark.operators.profile import (
 from ag_data_ingestion_github_to_snowflake_spark.pipeline.github import (
     incremental_extract,
 )
+from ag_data_ingestion_github_to_snowflake_spark.sources.sinks import partitioned_append
 from ag_data_ingestion_github_to_snowflake_spark.sources.state import MemoryWatermark
 from ag_data_ingestion_github_to_snowflake_spark.sources.stub import StubTransport
-from ag_data_ingestion_github_to_snowflake_spark.sources.warehouse_sink import (
-    JsonlWarehouseDataSource,
-    read_warehouse,
-)
 
 
 def test_extract_stage_profile(spark, tmp_path):
@@ -40,19 +35,14 @@ def test_extract_stage_profile(spark, tmp_path):
     assert n_valid > 0
     assert result.new_watermark > 0
 
-    # -- stage (A6): two-phase-commit JSONL load (the S3/stage analog)
-    spark.dataSource.register(JsonlWarehouseDataSource)
+    # -- stage (A6): date-partitioned parquet append (the S3/stage analog)
     stage_dir = str(tmp_path / "stage")
-    os.makedirs(stage_dir)
-    valid.write.format("jsonl_warehouse").option("path", stage_dir).mode(
-        "append"
-    ).save()
-    manifest = json.load(open(os.path.join(stage_dir, "_SUCCESS")))
-    assert manifest["n_rows"] == n_valid
+    partitioned_append(valid, stage_dir, ts_col="updated_at")
 
     # -- consume: profile + expectations over the staged table
-    tbl = read_warehouse(spark, stage_dir, valid.schema)
+    tbl = spark.read.parquet(stage_dir)
     assert tbl.count() == n_valid
+    assert {"year", "month", "day"} <= set(tbl.columns)
     prof = {r.col_name: r for r in profile_table(tbl, ["id", "stargazers_count"]).collect()}
     assert prof["id"].n_nulls == 0
     assert prof["id"].n_distinct == n_valid

@@ -223,3 +223,53 @@ def test_observed_run_metrics_single_pass(spark, tmp_path):
     assert got["valid_count"] == 4
     assert got["invalid_count"] == 1
     assert got["start_repo_id"] == 1 and got["last_repo_id"] == 5
+
+
+def _one_reply_server(reply: bytes | None, hold_s: float = 0.0) -> str:
+    """A 127.0.0.1 server that answers one request with ``reply`` (raw
+    bytes; ``None`` sends nothing), holds the connection ``hold_s``
+    seconds and closes it. Returns its base URL."""
+    import socket
+    import threading
+    import time
+
+    srv = socket.create_server(("127.0.0.1", 0))
+
+    def serve():
+        with srv:
+            conn, _ = srv.accept()
+            with conn:
+                conn.recv(65536)
+                if reply is not None:
+                    conn.sendall(reply)
+                time.sleep(hold_s)
+
+    threading.Thread(target=serve, daemon=True).start()
+    return f"http://127.0.0.1:{srv.getsockname()[1]}"
+
+
+def test_http_transport_maps_broken_responses_to_599(monkeypatch):
+    """A response that is dropped, truncated, not JSON or too slow is a
+    599 row-skip, like a send error; a good reply and an HTTP error
+    keep their status."""
+    import urllib.request
+
+    from ag_data_ingestion_github_to_snowflake_spark.sources import rest
+
+    for var in ("http_proxy", "HTTP_PROXY", "all_proxy", "ALL_PROXY"):
+        monkeypatch.delenv(var, raising=False)
+    urlopen = urllib.request.urlopen
+    monkeypatch.setattr(
+        rest.urllib.request, "urlopen", lambda req, timeout: urlopen(req, timeout=0.5)
+    )
+
+    def status(reply, hold_s=0.0):
+        return rest.http_transport(_one_reply_server(reply, hold_s))("/repos/a/b", {})
+
+    ok = b'HTTP/1.1 200 OK\r\nContent-Length: 8\r\n\r\n{"a": 1}'
+    assert status(ok) == (200, {"a": 1})
+    assert status(b"HTTP/1.1 404 Not Found\r\nContent-Length: 0\r\n\r\n") == (404, None)
+    assert status(None) == (599, None)  # closed without a reply
+    assert status(b'HTTP/1.1 200 OK\r\nContent-Length: 99\r\n\r\n{"a"') == (599, None)
+    assert status(b"HTTP/1.1 200 OK\r\nContent-Length: 9\r\n\r\nnot json!") == (599, None)
+    assert status(None, hold_s=2.0) == (599, None)  # read timeout

@@ -144,17 +144,6 @@ UNREACHED_ALLOWLIST = {
     "streaming.streams.use_rocksdb_state_store": "streaming test harness",
     "sources.rest.RateLimiter": "ROADMAP item 1",
     "sources.rest.HeaderRateLimitGovernor": "ROADMAP item 1",
-    "sources.warehouse_sink.FileCommit": "ROADMAP item 2",
-    "sources.warehouse_sink.JsonlWarehouseDataSource": "ROADMAP item 2",
-    "sources.warehouse_sink.JsonlWarehouseStreamWriter": "ROADMAP item 2",
-    "sources.warehouse_sink.JsonlWarehouseWriter": "ROADMAP item 2",
-    "sources.warehouse_sink._manifest_lock": "ROADMAP item 2",
-    "sources.warehouse_sink._staging_dir": "ROADMAP item 2",
-    "sources.warehouse_sink._write_manifest": "ROADMAP item 2",
-    "sources.warehouse_sink.load_manifest": "ROADMAP item 2",
-    "sources.warehouse_sink.read_warehouse": "ROADMAP item 2",
-    "sources.warehouse_sink.vacuum_warehouse": "ROADMAP item 2",
-    "sources.warehouse_sink.warehouse_changes": "ROADMAP item 2",
 }
 
 

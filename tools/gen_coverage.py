@@ -24,7 +24,7 @@ MODULE_EVIDENCE = {
     "A5": ["sources/rest.py:http_transport", "config.py (token tier)"],
     "A6": ["sources/sinks.py:partitioned_append", "tests/test_ingestion.py::test_partitioned_sink_layout"],
     "A7": ["__main__.py:run (--use-cache seeds the watermark from the sink's max id)", "tests/test_cli.py::test_cli_use_cache_seeds_watermark_from_sink"],
-    "A8": ["sources/state.py", "pipeline/github.py:incremental_extract (batch commit)"],
+    "A8": ["sources/state.py:FileWatermark", "sources/sinks.py:publish_batch + roll_forward (one commit record for data, metrics and watermark)", "tests/test_cli.py::test_cli_crash_at_any_commit_step_lands_each_batch_once"],
     "A9": ["dropped: the reference only documents its COPY INTO load; the CLI's partitioned parquet sink (A6) is the warehouse"],
     "A10": ["pipeline/github.py:flatten_repos", "tests/test_operators.py::test_flatten_golden"],
     "A11": ["sources/rest.py:list_scan_df budget slice", "sources/rest_datasource.py:_scan (per-shard row caps)", "tests/test_rest_datasource.py::test_budget_capped_scan"],
@@ -34,7 +34,7 @@ MODULE_EVIDENCE = {
     "A15": ["pipeline/github.py:observed_run_metrics + ExtractResult.metrics (observed on the sink write)", "tests/test_cli.py::test_cli_run_metrics_row_matches_ground_truth"],
     "A16": [], "A17": [], "A18": [], "A19": [],
     "A20": ["sources/rest.py:HeaderRateLimitGovernor (X-RateLimit parse + reset backoff)", "tests/test_rate_governor.py"],
-    "A21": ["pipeline/github.py:incremental_extract + latest_snapshot", "tests/test_ingestion.py::test_latest_snapshot_idempotent"],
+    "A21": ["pipeline/github.py:incremental_extract", "sources/sinks.py:roll_forward (a rerun finishes a published batch or re-fetches an unpublished one)", "tests/test_cli.py::test_cli_crash_at_any_commit_step_lands_each_batch_once"],
     "A22": ["streaming/streams.py:run_available_now", "sources/rest_datasource.py:GithubReposStreamReader", "tests/test_rest_datasource.py::test_stream_reader_micro_batches_and_resume"],
     "B3": ["sources/sinks.py:partitioned_append", "tests/test_ingestion.py::test_partitioned_sink_layout"],
     "B29": ["pipeline/github.py:latest_snapshot (dedupe-to-latest)"],
