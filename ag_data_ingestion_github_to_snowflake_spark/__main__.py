@@ -83,7 +83,6 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
         metrics_row,
     )
     from ag_data_ingestion_github_to_snowflake_spark.sources.rest import (
-        RestSourceConfig,
         http_transport,
     )
     from ag_data_ingestion_github_to_snowflake_spark.sources.sinks import (
@@ -131,6 +130,7 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
     state = FileWatermark(state_path)
     # Before anything reads the sink or the watermark.
     roll_forward(sink_path, state)
+    since = state.get()
     if args.use_cache and os.path.exists(sink_path):
         # A3: bronze cache seed — never re-fetch ids already sunk.
         from pyspark.sql import functions as F
@@ -138,21 +138,16 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
         cached_max = (
             spark.read.parquet(sink_path).agg(F.max("id")).collect()[0][0]
         )
-        if cached_max is not None and cached_max > state.get():
-            state.set(int(cached_max))
+        if cached_max is not None:
+            since = max(since, int(cached_max))
 
-    rest_cfg = RestSourceConfig(
-        per_page=env_cfg.per_page,
-        max_requests_per_run=env_cfg.max_requests_per_run,
-        detail_partitions=env_cfg.detail_partitions,
-    )
     result = incremental_extract(
         spark,
         transport,
-        state,
-        config=rest_cfg,
+        since,
+        per_page=env_cfg.per_page,
+        max_requests_per_run=env_cfg.max_requests_per_run,
         max_pages=args.max_pages,
-        commit_state=False,  # commit AFTER the sink write below
     )
 
     if skip_upload:

@@ -7,10 +7,9 @@
 | GITHUB_TOKEN             | auth -> 5000 req/h tier      | token |
 | MAX_REQUESTS_PER_RUN     | API budget per run           | max_requests_per_run |
 | REPOS_PER_PAGE           | list page size               | per_page |
-| S3_BUCKET / S3_PREFIX    | sink location                | sink_path |
-| STATE_BACKEND/STATE_PATH | watermark persistence        | state_path |
+| S3_BUCKET                | sink location                | sink_path |
+| STATE_PATH               | watermark persistence        | state_path |
 | TEST_MODE / SKIP_UPLOAD  | dry-run switches             | test_mode / skip_upload |
-| DETAIL_PARTITIONS        | (none)                       | detail_partitions: at most N concurrent enrichment tasks |
 """
 
 from __future__ import annotations
@@ -34,7 +33,6 @@ class EngineConfig:
     state_path: str = "/tmp/ag_spark_state/last_repo_id.txt"
     test_mode: bool = False
     skip_upload: bool = False
-    detail_partitions: int = 8
 
     @classmethod
     def from_env(cls, env: dict | None = None) -> EngineConfig:
@@ -49,5 +47,4 @@ class EngineConfig:
             state_path=e.get("STATE_PATH", "/tmp/ag_spark_state/last_repo_id.txt"),
             test_mode=_bool(e.get("TEST_MODE"), False),
             skip_upload=_bool(e.get("SKIP_UPLOAD"), False),
-            detail_partitions=int(e.get("DETAIL_PARTITIONS", "8")),
         )

@@ -8,7 +8,9 @@ row skip), A15 (run counters), A21 (resume/at-least-once), composed in
 ``extract_repositories`` (/root/reference/src/extract_github_data.py:
 607-762) as one lazily-planned DataFrame pipeline. The run counters
 are ``df.observe`` metrics on that plan: they ride the one action that
-consumes the batch (the sink write) instead of a second pass.
+consumes the batch (the sink write) instead of a second pass. A batch
+is planned from a ``since`` id and never writes the watermark itself:
+the CLI publishes it with the batch (``sinks.publish_batch``).
 """
 
 from __future__ import annotations
@@ -23,12 +25,10 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ag_data_ingestion_github_to_snowflake_spark.sources.rest import (
-    RestSourceConfig,
     Transport,
     enrich_details,
     list_scan_df,
 )
-from ag_data_ingestion_github_to_snowflake_spark.sources.state import WatermarkStore
 
 # The canonical 14-column schema: REQUIRED_FIELDS (reference :53-71)
 # = Snowflake DDL columns (README.md:267-283).
@@ -182,32 +182,25 @@ class ExtractResult:
 def incremental_extract(
     spark: SparkSession,
     transport: Transport,
-    state: WatermarkStore,
-    config: RestSourceConfig | None = None,
+    since: int,
+    per_page: int = 100,
+    max_requests_per_run: int = 60,
     max_pages: int = 1,
-    commit_state: bool = True,
 ) -> ExtractResult:
     """The full reference pipeline as one lazily planned batch (A1-A15, A21).
 
-    state-read -> paginated list scan -> budget limit -> distributed
+    paginated list scan past ``since`` -> budget limit -> distributed
     detail enrichment -> flatten -> dedupe on id -> observed counters
     -> validate split. Nothing runs until an action consumes ``valid``
     or ``invalid``; the CLI's batch is then 3 Spark jobs: the dedupe
-    shuffle, the sink write and the metrics-row write. The watermark
-    commits once per batch (not per row as the reference does, :714)
-    and only after that action succeeded, so a failed batch is
-    re-fetched by the next run. ``latest_snapshot`` dedupes on id
-    within the batch only; the CLI lands each batch once by staging it
-    and publishing data, metrics and watermark with one commit record
-    (``sources/sinks.py``).
-
-    With ``commit_state`` the batch runs here as a ``noop`` write before
-    ``state.set``; later actions on the outputs recompute them. Callers
-    writing to a durable sink pass ``commit_state=False``, write
-    ``valid`` and then commit the watermark themselves.
+    shuffle, the sink write and the metrics-row write. Nothing here
+    moves the watermark: the caller commits ``new_watermark`` once per
+    batch (not per row as the reference does, :714) and only after that
+    action succeeded, so a failed batch is re-fetched by the next run.
+    ``latest_snapshot`` dedupes on id within the batch only; the CLI
+    lands each batch once by staging it and publishing data, metrics
+    and watermark with one commit record (``sources/sinks.py``).
     """
-    config = config or RestSourceConfig()
-    since = state.get()
     pages = 0
 
     def listing(path: str, params: dict):
@@ -215,13 +208,12 @@ def incremental_extract(
         pages += 1
         return transport(path, params)
 
-    list_df, new_wm = list_scan_df(spark, listing, since, config, max_pages)
+    list_df, new_wm = list_scan_df(
+        spark, listing, since, per_page, max_requests_per_run, max_pages
+    )
     lookups = Observation("lookups")
     list_df = list_df.observe(lookups, F.count(F.lit(1)).alias("lookups"))
-    raw = enrich_details(list_df, transport, config)
+    raw = enrich_details(list_df, transport)
     flat, counters = observed_run_metrics(latest_snapshot(flatten_repos(raw), "id", "updated_at"))
     valid, invalid = validation_split(flat)
-    if commit_state:
-        flat.write.format("noop").mode("overwrite").save()
-        state.set(new_wm)
     return ExtractResult(valid, invalid, new_wm, pages, counters, lookups)

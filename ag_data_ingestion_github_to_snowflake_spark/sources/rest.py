@@ -8,15 +8,14 @@ Re-expresses the reference's ingestion operators Spark-first
 - A5 header/auth construction (:351-369)
 - A20 rate-limit governor (:372-391)
 
-Architecture: ``keyset_pages`` is the one keyset pager. The CLI's
-driver-side list scan (``fetch_repo_list``/``list_scan_df``) and both
-``github_repos`` Data Source readers (``rest_datasource``) consume it
-and stop pulling pages at their own bounds. ``list_scan_df`` hands the
-listed rows to Spark as an Arrow table, a JVM ``LocalTableScan`` with
-one slice per core, so no Python task runs before the lookups. The
-*detail enrichment* — one call per row — runs in ``mapInPandas``
-over those slices, coalesced to at most ``detail_partitions`` tasks
-without a shuffle; the ``rows[:budget]`` cap bounds the calls per run.
+Architecture: ``keyset_pages`` is the one keyset pager; the driver-side
+list scan (``fetch_repo_list``/``list_scan_df``) takes its first
+``max_pages`` pages. ``list_scan_df`` hands the listed rows to Spark
+as an Arrow table, a JVM ``LocalTableScan`` with one slice per core, so
+no Python task runs before the lookups. The *detail enrichment* — one
+call per row — runs in ``mapInPandas`` over those slices, coalesced to
+at most ``MAX_LOOKUP_TASKS`` tasks without a shuffle; the
+``rows[:budget]`` cap bounds the calls per run.
 Each Python task has a fixed CPU cost larger than a slice's lookups
 (OPTIMIZATION_r15.md), hence one task per core and no more.
 
@@ -44,6 +43,9 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 # transport: (path, params) -> (status_code, payload_dict_or_list)
 Transport = Callable[[str, dict], tuple[int, object]]
+
+# Each lookup task holds one API stream, so this bounds the concurrent streams.
+MAX_LOOKUP_TASKS = 8
 
 LIST_SCHEMA = T.StructType(
     [
@@ -106,15 +108,6 @@ def http_transport(base_url: str, token: str | None = None) -> Transport:
     return call
 
 
-@dataclass
-class RestSourceConfig:
-    """Mirrors the reference's env-var surface (:78-108)."""
-
-    per_page: int = 100  # REPOS_PER_PAGE (API max)
-    max_requests_per_run: int = 60  # MAX_REQUESTS_PER_RUN
-    detail_partitions: int = 8  # at most N concurrent enrichment tasks
-
-
 def keyset_pages(transport: Transport, since: int, per_page: int) -> Iterator[list[tuple]]:
     """Keyset pagination over ``GET /repositories``: yields each page's
     rows as ``LIST_SCHEMA`` tuples, ids strictly increasing past ``since``.
@@ -163,7 +156,8 @@ def list_scan_df(
     spark: SparkSession,
     transport: Transport,
     since: int,
-    config: RestSourceConfig | None = None,
+    per_page: int,
+    max_requests_per_run: int,
     max_pages: int = 1,
 ) -> tuple[DataFrame, int]:
     """List scan as a DataFrame + new watermark (A1 + A11 budget limit).
@@ -171,11 +165,10 @@ def list_scan_df(
     The rows become an Arrow-backed local relation: it plans as a JVM
     ``LocalTableScan`` split into one slice per core (never more slices
     than rows), so reading it starts no Python worker."""
-    config = config or RestSourceConfig()
-    rows, _ = fetch_repo_list(transport, since, config.per_page, max_pages)
+    rows, _ = fetch_repo_list(transport, since, per_page, max_pages)
     # Budget: reserve one call per list page (conservative if the scan
     # stopped early), the rest are detail-call slots.
-    budget = max(config.max_requests_per_run - max_pages, 0)
+    budget = max(max_requests_per_run - max_pages, 0)
     rows = rows[:budget]
     # The watermark must never advance past rows the budget discarded:
     # an empty batch keeps the caller's watermark unchanged.
@@ -184,15 +177,11 @@ def list_scan_df(
     return spark.createDataFrame(table, LIST_SCHEMA), watermark
 
 
-def enrich_details(
-    list_df: DataFrame,
-    transport: Transport,
-    config: RestSourceConfig | None = None,
-) -> DataFrame:
+def enrich_details(list_df: DataFrame, transport: Transport) -> DataFrame:
     """A2: distributed point-lookup enrichment via mapInPandas.
 
     The list relation's per-core slices are coalesced (narrow, no
-    shuffle) to at most ``detail_partitions`` tasks. Each task drives
+    shuffle) to at most ``MAX_LOOKUP_TASKS`` tasks. Each task drives
     its own transport connection; a failed or 404 lookup yields no row
     (A14 skip semantics). The reference does this loop serially on one
     thread (:677-714); here tasks fetch concurrently and the output is
@@ -200,8 +189,6 @@ def enrich_details(
     (pipeline.github.flatten_repos).
     """
     import pandas as pd  # executor-side import
-
-    config = config or RestSourceConfig()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -238,10 +225,7 @@ def enrich_details(
                 {f.name: pd.Series(dtype="object") for f in RAW_DETAIL_SCHEMA.fields}
             )
 
-    return (
-        list_df.coalesce(config.detail_partitions)
-        .mapInPandas(kernel, RAW_DETAIL_SCHEMA)
-    )
+    return list_df.coalesce(MAX_LOOKUP_TASKS).mapInPandas(kernel, RAW_DETAIL_SCHEMA)
 
 
 @dataclass

@@ -17,7 +17,7 @@ and sets the watermark. A crash before the record drops the stage and
 the batch is re-fetched; a crash after it is finished by the next run.
 
 At 100 TB: date partitioning bounds each file-commit transaction and
-`maxRecordsPerFile` caps file sizes.
+``MAX_RECORDS_PER_FILE`` caps file sizes.
 """
 
 from __future__ import annotations
@@ -29,9 +29,10 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ag_data_ingestion_github_to_snowflake_spark.sources.state import WatermarkStore
+from ag_data_ingestion_github_to_snowflake_spark.sources.state import FileWatermark
 
 COMMIT_RECORD = "_commit.json"
+MAX_RECORDS_PER_FILE = 1_000_000
 
 
 def with_date_partitions(df: DataFrame, ts_col: str) -> DataFrame:
@@ -44,21 +45,14 @@ def with_date_partitions(df: DataFrame, ts_col: str) -> DataFrame:
     )
 
 
-def partitioned_append(
-    df: DataFrame,
-    path: str,
-    ts_col: str = "updated_at",
-    fmt: str = "parquet",
-    max_records_per_file: int = 1_000_000,
-) -> None:
-    """A6: date-partitioned append sink (parquet default, json option)."""
+def partitioned_append(df: DataFrame, path: str, ts_col: str = "updated_at") -> None:
+    """A6: date-partitioned parquet append sink."""
     (
         with_date_partitions(df, ts_col)
         .write.mode("append")
-        .option("maxRecordsPerFile", max_records_per_file)
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
         .partitionBy("year", "month", "day")
-        .format(fmt)
-        .save(path)
+        .parquet(path)
     )
 
 
@@ -77,7 +71,7 @@ def stage_path(sink: str, suffix: str = "") -> str:
     return os.path.join(_pending(sink), os.path.basename(os.path.abspath(sink)) + suffix)
 
 
-def publish_batch(sink: str, state: WatermarkStore, watermark: int) -> None:
+def publish_batch(sink: str, state: FileWatermark, watermark: int) -> None:
     """Commit the staged batch: one record of every file move and the new
     watermark becomes visible atomically, then ``roll_forward`` runs it."""
     pending = _pending(sink)
@@ -95,7 +89,7 @@ def publish_batch(sink: str, state: WatermarkStore, watermark: int) -> None:
     roll_forward(sink, state)
 
 
-def roll_forward(sink: str, state: WatermarkStore) -> None:
+def roll_forward(sink: str, state: FileWatermark) -> None:
     """Finish a published commit, or drop a stage that was never published.
     Safe to repeat: a move whose source is gone was done before a crash."""
     pending = _pending(sink)

@@ -6,15 +6,14 @@ file/env/S3/DynamoDB after every row. Spark-first equivalents:
 
 - batch-incremental jobs: a one-integer state file (this module) read
   before the run and atomically replaced once per batch, not per row.
-  The CLI sets it from the batch's commit record
-  (``sinks.publish_batch``/``roll_forward``), so the watermark moves
-  exactly when the batch's files land in the sink.
+  Only ``sinks.roll_forward`` sets it, from the batch's commit record
+  (``sinks.publish_batch``), so the watermark moves exactly when the
+  batch's files land in the sink.
 - streaming: Structured Streaming's checkpointLocation subsumes this
   entirely (streaming/ module).
 
-Backends: in-memory (tests), local file (the reference's
-``last_repo_id.txt``), and any fsspec-style path via the file backend —
-an S3 object behaves identically through a mounted/therein path.
+The backend is a local file (the reference's ``last_repo_id.txt``); an
+S3 object behaves identically through a mounted path.
 """
 
 from __future__ import annotations
@@ -23,29 +22,8 @@ import os
 from dataclasses import dataclass
 
 
-class WatermarkStore:
-    """Interface: get() -> int watermark; set(int) persists it."""
-
-    def get(self) -> int:
-        raise NotImplementedError
-
-    def set(self, value: int) -> None:
-        raise NotImplementedError
-
-
 @dataclass
-class MemoryWatermark(WatermarkStore):
-    value: int = 0
-
-    def get(self) -> int:
-        return self.value
-
-    def set(self, value: int) -> None:
-        self.value = value
-
-
-@dataclass
-class FileWatermark(WatermarkStore):
+class FileWatermark:
     """File-backed watermark (the reference's last_repo_id.txt,
     :238-267). Atomic via write-temp-then-rename.
 

@@ -155,38 +155,6 @@ def run_available_now(stream_df: DataFrame, checkpoint: str, table_name: str):
     )
 
 
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-
-
-def use_rocksdb_state_store(spark, changelog_checkpointing: bool = True) -> str:
-    """Switch stateful streaming to the RocksDB state store.
-
-    The default HDFS-backed store keeps every key in executor heap —
-    fine for windowed counts at test scale, fatal for 100 TB streaming
-    dedup where the key horizon is billions of entries. RocksDB spills
-    state to local SSD with an off-heap block cache, and changelog
-    checkpointing uploads only per-batch deltas instead of full
-    snapshots, making checkpoint cost O(batch) not O(state).
-
-    Returns the previous provider class so callers (tests) can restore
-    it. The setting is read per-query at stream start; running queries
-    are unaffected.
-    """
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true" if changelog_checkpointing else "false",
-    )
-    return prev
-
-
 def stream_static_enrich(
     stream_df: DataFrame, dim_df: DataFrame, key: str, how: str = "left"
 ) -> DataFrame:

@@ -130,7 +130,6 @@ def test_cli_replayed_page_is_listed_and_looked_up_once(spark, tmp_path, monkeyp
     listed and looked up once, and the watermark is the last distinct id."""
     from ag_data_ingestion_github_to_snowflake_spark.sources import stub
     from ag_data_ingestion_github_to_snowflake_spark.sources.rest import (
-        RestSourceConfig,
         fetch_repo_list,
         list_scan_df,
     )
@@ -141,8 +140,7 @@ def test_cli_replayed_page_is_listed_and_looked_up_once(spark, tmp_path, monkeyp
     rows, wm = fetch_repo_list(tr, 0, per_page=100, max_pages=3)
     assert [r["id"] for r in rows] == list(range(1, 101)) and wm == 100
     assert tr.calls == ["/repositories"] * 2  # page 1 and its replay
-    cfg = RestSourceConfig(per_page=100, max_requests_per_run=1000)
-    df, wm = list_scan_df(spark, tr, since=0, config=cfg, max_pages=3)
+    df, wm = list_scan_df(spark, tr, since=0, per_page=100, max_requests_per_run=1000, max_pages=3)
     assert sorted(r.id for r in df.collect()) == list(range(1, 101)) and wm == 100
 
     monkeypatch.setattr(stub, "StubTransport", replay)
@@ -225,7 +223,6 @@ def test_cli_batch_is_three_jobs_over_a_local_list_scan(spark, tmp_path, monkeyp
     from ag_data_ingestion_github_to_snowflake_spark.pipeline.github import (
         incremental_extract,
     )
-    from ag_data_ingestion_github_to_snowflake_spark.sources.state import MemoryWatermark
     from ag_data_ingestion_github_to_snowflake_spark.sources.stub import StubTransport
 
     monkeypatch.delenv("MAX_REQUESTS_PER_RUN", raising=False)
@@ -244,9 +241,7 @@ def test_cli_batch_is_three_jobs_over_a_local_list_scan(spark, tmp_path, monkeyp
     assert summary["uploaded"] and summary["new_watermark"] == 59
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
 
-    result = incremental_extract(
-        spark, StubTransport(n_repos=300), MemoryWatermark(0), commit_state=False
-    )
+    result = incremental_extract(spark, StubTransport(n_repos=300), 0)
     plan = result.valid._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan
     assert "RoundRobinPartitioning" not in plan

@@ -21,15 +21,13 @@ from ag_data_ingestion_github_to_snowflake_spark.pipeline.github import (
     incremental_extract,
 )
 from ag_data_ingestion_github_to_snowflake_spark.sources.sinks import partitioned_append
-from ag_data_ingestion_github_to_snowflake_spark.sources.state import MemoryWatermark
 from ag_data_ingestion_github_to_snowflake_spark.sources.stub import StubTransport
 
 
 def test_extract_stage_profile(spark, tmp_path):
     # -- extract (A1-A15): stubbed REST, 2 pages
     transport = StubTransport(n_repos=60)
-    state = MemoryWatermark()
-    result = incremental_extract(spark, transport, state, max_pages=2)
+    result = incremental_extract(spark, transport, 0, max_pages=2)
     valid = result.valid
     n_valid = valid.count()
     assert n_valid > 0

@@ -19,27 +19,23 @@ from ag_data_ingestion_github_to_snowflake_spark.pipeline.github import (
 )
 from ag_data_ingestion_github_to_snowflake_spark.sources.rest import (
     RateLimiter,
-    RestSourceConfig,
     enrich_details,
     list_scan_df,
 )
 from ag_data_ingestion_github_to_snowflake_spark.sources.sinks import partitioned_append
-from ag_data_ingestion_github_to_snowflake_spark.sources.state import (
-    FileWatermark,
-    MemoryWatermark,
-)
+from ag_data_ingestion_github_to_snowflake_spark.sources.state import FileWatermark
 from ag_data_ingestion_github_to_snowflake_spark.sources.stub import StubTransport
 
-CFG = RestSourceConfig(per_page=50, max_requests_per_run=1000, detail_partitions=4)
+CFG = dict(per_page=50, max_requests_per_run=1000)
 
 
 def test_list_scan_pagination_and_watermark(spark):
     tr = StubTransport(n_repos=120)
-    df, wm = list_scan_df(spark, tr, since=0, config=CFG, max_pages=2)
+    df, wm = list_scan_df(spark, tr, since=0, **CFG, max_pages=2)
     assert df.count() == 100  # 2 pages x 50
     assert wm == 100
     # resume: next scan starts after the watermark
-    df2, wm2 = list_scan_df(spark, tr, since=wm, config=CFG, max_pages=2)
+    df2, wm2 = list_scan_df(spark, tr, since=wm, **CFG, max_pages=2)
     ids = [r.id for r in df2.select("id").orderBy("id").collect()]
     assert ids[0] == 101 and wm2 == 120
 
@@ -60,8 +56,7 @@ def test_stub_list_pages_near_the_end_of_the_universe():
 
 def test_budget_limit_truncates(spark):
     tr = StubTransport(n_repos=120)
-    cfg = RestSourceConfig(per_page=50, max_requests_per_run=11, detail_partitions=2)
-    df, wm = list_scan_df(spark, tr, since=0, config=cfg, max_pages=1)
+    df, wm = list_scan_df(spark, tr, since=0, per_page=50, max_requests_per_run=11)
     assert df.count() == 10  # budget-1 detail slots (reference :630,:662)
     assert wm == 10  # watermark only advances over fetched rows
 
@@ -71,16 +66,15 @@ def test_exhausted_budget_never_advances_watermark(spark):
     move the watermark past unprocessed rows (rows would be skipped
     forever otherwise)."""
     tr = StubTransport(n_repos=120)
-    cfg = RestSourceConfig(per_page=50, max_requests_per_run=1, detail_partitions=2)
-    df, wm = list_scan_df(spark, tr, since=7, config=cfg, max_pages=1)
+    df, wm = list_scan_df(spark, tr, since=7, per_page=50, max_requests_per_run=1)
     assert df.count() == 0
     assert wm == 7  # unchanged
 
 
 def test_enrichment_skips_404_and_flattens(spark):
     tr = StubTransport(n_repos=60)
-    df, _ = list_scan_df(spark, tr, since=0, config=CFG, max_pages=2)
-    raw = enrich_details(df, tr, CFG)
+    df, _ = list_scan_df(spark, tr, since=0, **CFG, max_pages=2)
+    raw = enrich_details(df, tr)
     flat = flatten_repos(raw)
     rows = {r.id: r for r in flat.collect()}
     assert 19 not in rows and 38 not in rows and 57 not in rows  # 404s skipped
@@ -94,8 +88,8 @@ def test_enrichment_skips_404_and_flattens(spark):
 
 def test_validation_split_counts(spark):
     tr = StubTransport(n_repos=100)
-    df, _ = list_scan_df(spark, tr, since=0, config=CFG, max_pages=2)
-    flat = flatten_repos(enrich_details(df, tr, CFG))
+    df, _ = list_scan_df(spark, tr, since=0, **CFG, max_pages=2)
+    flat = flatten_repos(enrich_details(df, tr))
     valid, invalid = validation_split(flat)
     fetched = [i for i in range(1, 101) if i % 19 != 0]
     bad = [i for i in fetched if i % 13 == 0 or i % 17 == 0]
@@ -108,27 +102,26 @@ def test_validation_split_counts(spark):
 
 def test_latest_snapshot_idempotent(spark):
     tr = StubTransport(n_repos=30)
-    df, _ = list_scan_df(spark, tr, since=0, config=CFG)
-    flat = flatten_repos(enrich_details(df, tr, CFG))
+    df, _ = list_scan_df(spark, tr, since=0, **CFG)
+    flat = flatten_repos(enrich_details(df, tr))
     doubled = flat.unionByName(flat)  # at-least-once refetch
     deduped = latest_snapshot(doubled)
     assert deduped.count() == flat.count()
     assert deduped.select("id").distinct().count() == deduped.count()
 
 
-def test_incremental_extract_end_to_end_with_resume(spark, tmp_path):
+def test_incremental_extract_end_to_end_with_resume(spark):
     tr = StubTransport(n_repos=80)
-    state = FileWatermark(str(tmp_path / "wm.txt"))
-    cfg = RestSourceConfig(per_page=40, max_requests_per_run=1000, detail_partitions=2)
+    cfg = dict(per_page=40, max_requests_per_run=1000)
 
-    r1 = incremental_extract(spark, tr, state, cfg, max_pages=1)
+    r1 = incremental_extract(spark, tr, 0, **cfg)
     assert r1.new_watermark == 40
-    assert state.get() == 40
+    r1.valid.write.format("noop").mode("overwrite").save()  # the batch's action
     m = r1.metrics()
     assert m["total_processed"] == r1.valid.count() + r1.invalid.count()
     assert m["start_repo_id"] >= 1 and m["last_repo_id"] <= 40
 
-    r2 = incremental_extract(spark, tr, state, cfg, max_pages=1)
+    r2 = incremental_extract(spark, tr, r1.new_watermark, **cfg)
     assert r2.new_watermark == 80
     ids2 = {r.id for r in r2.valid.select("id").collect()}
     assert min(ids2) > 40  # resumed past the watermark
@@ -136,8 +129,8 @@ def test_incremental_extract_end_to_end_with_resume(spark, tmp_path):
 
 def test_partitioned_sink_layout(spark, tmp_path):
     tr = StubTransport(n_repos=40)
-    df, _ = list_scan_df(spark, tr, since=0, config=CFG)
-    flat = flatten_repos(enrich_details(df, tr, CFG))
+    df, _ = list_scan_df(spark, tr, since=0, **CFG)
+    flat = flatten_repos(enrich_details(df, tr))
     out = str(tmp_path / "sink")
     partitioned_append(flat, out, ts_col="updated_at")
     years = [d for d in os.listdir(out) if d.startswith("year=")]
@@ -161,13 +154,6 @@ def test_rate_limiter_budget(spark):
     status, payload = wrapped("/repositories", {"since": 0, "per_page": 1})
     assert status == 403 and payload is None
     assert rl.warnings  # low-budget warning fired (<5 remaining)
-
-
-def test_memory_watermark_roundtrip():
-    wm = MemoryWatermark()
-    assert wm.get() == 0
-    wm.set(42)
-    assert wm.get() == 42
 
 
 def test_file_watermark_rejects_corrupt_state(tmp_path):

@@ -215,26 +215,26 @@ def test_late_row_dropped_in_stream_present_in_batch(spark, tmp_path):
     assert stream_n == {"10:00": 2}  # late row dropped past the watermark
 
 
-def test_streaming_dedup_rocksdb_state_store(spark, events_split_dir, tmp_path):
-    """B50 under the RocksDB state store: same dedup result as the
-    default heap-backed provider — the provider changes where state
-    lives (SSD + off-heap), never the semantics."""
+def test_streaming_dedup_rocksdb_state_store(spark, events_split_dir):
+    """B50 under the RocksDB state store, through the registry's drain:
+    same dedup result as the default heap-backed provider — the provider
+    changes where state lives (SSD + off-heap), never the semantics —
+    and the session's provider is restored afterwards."""
+    from ag_data_ingestion_github_to_snowflake_spark.plans.streaming_queries import (
+        _drain as registry_drain,
+    )
+
+    key = "spark.sql.streaming.stateStore.providerClass"
+    before = spark.conf.get(key, None)
     ev = load_table(spark, SF, "events")
-    prev = S.use_rocksdb_state_store(spark)
-    try:
-        sdf = S.stream_events_from_parquet(
-            spark, events_split_dir, ev.schema, max_files_per_trigger=2
-        )
-        got = _drain(
-            spark,
-            S.dedup_stream(sdf.withColumn("ts", F.col("ts").cast("timestamp")), ["user_id"]),
-            str(tmp_path / "cp_rocks"),
-            "dedup_rocks",
-        )
-        # one surviving row per user, exactly the batch-distinct count
-        assert got.count() == ev.select("user_id").distinct().count()
-    finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    sdf = S.stream_events_from_parquet(
+        spark, events_split_dir, ev.schema, max_files_per_trigger=2
+    )
+    plan = S.dedup_stream(sdf.withColumn("ts", F.col("ts").cast("timestamp")), ["user_id"])
+    got = registry_drain(plan, spark, "append", rocksdb=True)
+    # one surviving row per user, exactly the batch-distinct count
+    assert got.count() == ev.select("user_id").distinct().count()
+    assert spark.conf.get(key, None) == before
 
 
 def test_stream_static_enrich_equals_batch(spark, events_split_dir, tmp_path):

@@ -17,17 +17,17 @@ from ag_data_ingestion_github_to_snowflake_spark.plans.registry import all_specs
 # Non-query evidence: operator ids covered by modules/tests rather than
 # (or in addition to) registry entries.
 MODULE_EVIDENCE = {
-    "A1": ["sources/rest.py:keyset_pages (the one pager: fetch_repo_list + both github_repos readers)", "tests/test_cli.py::test_cli_replayed_page_is_listed_and_looked_up_once", "tests/test_rest_datasource.py"],
+    "A1": ["sources/rest.py:keyset_pages (the one pager, taken by fetch_repo_list)", "tests/test_cli.py::test_cli_replayed_page_is_listed_and_looked_up_once", "tests/test_ingestion.py::test_list_scan_pagination_and_watermark"],
     "A2": ["sources/rest.py:enrich_details (mapInPandas)", "tests/test_ingestion.py::test_enrichment_skips_404_and_flattens"],
     "A3": ["__main__.py:run (--use-cache seeds the watermark from the sink's max id)", "tests/test_cli.py::test_cli_use_cache_seeds_watermark_from_sink"],
-    "A4": ["sources/state.py (File/MemoryWatermark)", "tests/test_ingestion.py::test_incremental_extract_end_to_end_with_resume", "tests/test_ingestion.py::test_file_watermark_rejects_corrupt_state"],
+    "A4": ["sources/state.py:FileWatermark", "tests/test_ingestion.py::test_incremental_extract_end_to_end_with_resume", "tests/test_ingestion.py::test_file_watermark_rejects_corrupt_state"],
     "A5": ["sources/rest.py:http_transport", "config.py (token tier)"],
     "A6": ["sources/sinks.py:partitioned_append", "tests/test_ingestion.py::test_partitioned_sink_layout"],
     "A7": ["__main__.py:run (--use-cache seeds the watermark from the sink's max id)", "tests/test_cli.py::test_cli_use_cache_seeds_watermark_from_sink"],
     "A8": ["sources/state.py:FileWatermark", "sources/sinks.py:publish_batch + roll_forward (one commit record for data, metrics and watermark)", "tests/test_cli.py::test_cli_crash_at_any_commit_step_lands_each_batch_once"],
     "A9": ["dropped: the reference only documents its COPY INTO load; the CLI's partitioned parquet sink (A6) is the warehouse"],
     "A10": ["pipeline/github.py:flatten_repos", "tests/test_operators.py::test_flatten_golden"],
-    "A11": ["sources/rest.py:list_scan_df budget slice", "sources/rest_datasource.py:_scan (per-shard row caps)", "tests/test_rest_datasource.py::test_budget_capped_scan"],
+    "A11": ["sources/rest.py:list_scan_df budget slice", "tests/test_ingestion.py::test_budget_limit_truncates", "tests/test_ingestion.py::test_exhausted_budget_never_advances_watermark"],
     "A12": ["pipeline/github.py:valid_predicate", "tests/test_operators.py::test_validation_split_partitions_input"],
     "A13": ["pipeline/github.py:validation_split", "tests/test_ingestion.py::test_validation_split_counts"],
     "A14": ["sources/rest.py:enrich_details 404 branch", "tests/test_ingestion.py::test_enrichment_skips_404_and_flattens"],
@@ -35,7 +35,7 @@ MODULE_EVIDENCE = {
     "A16": [], "A17": [], "A18": [], "A19": [],
     "A20": ["sources/rest.py:HeaderRateLimitGovernor (X-RateLimit parse + reset backoff)", "tests/test_rate_governor.py"],
     "A21": ["pipeline/github.py:incremental_extract", "sources/sinks.py:roll_forward (a rerun finishes a published batch or re-fetches an unpublished one)", "tests/test_cli.py::test_cli_crash_at_any_commit_step_lands_each_batch_once"],
-    "A22": ["streaming/streams.py:run_available_now", "sources/rest_datasource.py:GithubReposStreamReader", "tests/test_rest_datasource.py::test_stream_reader_micro_batches_and_resume"],
+    "A22": ["__main__.py:run (one batch per scheduled firing, resumed from the watermark)", "examples/scheduled-extraction.yml (the reference's hourly cron)", "plans/streaming_queries.py:_drain (the AvailableNow drain of the streaming registry queries)", "tests/test_packaging.py::test_scheduler_example_mirrors_reference_cadence"],
     "B3": ["sources/sinks.py:partitioned_append", "tests/test_ingestion.py::test_partitioned_sink_layout"],
     "B29": ["pipeline/github.py:latest_snapshot (dedupe-to-latest)"],
     "B44": ["streaming/streams.py (incl. interval_join)", "tests/test_streaming.py::test_streaming_checkpoint_resume"],
