@@ -9,6 +9,7 @@ from pyspark.sql.window import Window
 
 from ag_data_ingestion_github_to_snowflake_spark.operators.skew import salted_aggregate
 from ag_data_ingestion_github_to_snowflake_spark.plans.registry import register, t
+from ag_data_ingestion_github_to_snowflake_spark.sources.staging import staged
 
 
 @register(
@@ -201,14 +202,10 @@ def incremental_join_refresh(spark: SparkSession, sf: str) -> DataFrame:
     the joined-fact sibling of ``rollup_incremental_merge``'s
     algebraic rollup.
 
-    Shuffle-floor note (r10): the α ≈ 1.0 exponent is the standing
-    L⋈R join itself — the QUERY recomputes it each run by contract
-    (the oracle is the one-shot join), so the full-fact shuffle is
-    irreducible here. In a deployed view the standing join is a
-    materialized table and only the Δ terms run per refresh; the
-    per-refresh cost is O(|Δ|), which tests/test_rollup_refresh.py
-    pins. No bloom applies: the date split is ~50/50, scale-invariant
-    (see waiting_suppliers for the measured bloom loss on this band).
+    The full-fact shuffle is the standing L⋈R join, which the query
+    recomputes by contract (the oracle is the one-shot join); a
+    deployed view materializes it and pays O(|Δ|) per refresh
+    (tests/test_rollup_refresh.py).
     """
     from ag_data_ingestion_github_to_snowflake_spark.operators.incremental import (
         delta_join_append,
@@ -459,26 +456,19 @@ def partition_grouped_pushdown(spark: SparkSession, sf: str) -> DataFrame:
     group key a partition column and no data column referenced, the
     answer comes from per-partition footer row counts — at 100 TB a
     per-partition rollup costs directory listing + footers, zero data
-    pages. Events are staged partitioned-by-type once per (sf)
-    (reused marker-file pattern); the DSv2 confs are scoped to a
+    pages. Events are staged partitioned-by-type once per fixture
+    (``sources.staging.staged``); the DSv2 confs are scoped to a
     ``newSession()`` clone exactly as in ``metadata_agg_pushdown``.
     Pushdown asserted in ``tests/test_scan_pruning.py``."""
-    import os
-
-    from ag_data_ingestion_github_to_snowflake_spark.catalog import load_table
-    from ag_data_ingestion_github_to_snowflake_spark.sources.staging import (
-        stage_dir,
-        write_marker,
+    stage = staged(
+        "ag_part_events",
+        sf,
+        ["events.parquet"],
+        lambda out: t(spark, sf, "events")
+        .write.partitionBy("event_type")
+        .mode("overwrite")
+        .parquet(out),
     )
-
-    stage = stage_dir("ag_part_events", sf)
-    marker = os.path.join(stage, "_staged")
-    src = os.path.join(sf, "events.parquet")
-    if not os.path.exists(marker) or os.path.getmtime(marker) < os.path.getmtime(src):
-        load_table(spark, sf, "events").write.partitionBy("event_type").mode(
-            "overwrite"
-        ).parquet(stage)
-        write_marker(marker)
     s2 = spark.newSession()
     s2.conf.set("spark.sql.parquet.aggregatePushdown", "true")
     s2.conf.set("spark.sql.sources.useV1SourceList", "")

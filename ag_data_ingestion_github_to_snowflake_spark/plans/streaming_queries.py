@@ -2,11 +2,14 @@
 
 These run REAL Structured Streaming jobs — file source (staged to a
 temp dir: the file stream source lists directories), AvailableNow
-trigger, checkpointed offsets, memory sink — and return the drained
-result. Because AvailableNow processes all available input, the result
-equals the batch plan over the same data, so the tumbling-window entry
-carries the SAME DuckDB oracle as its batch twin: the streaming
-execution path itself is hash-verified against SQL.
+trigger, checkpointed offsets, memory or foreachBatch sink — and return
+the drained result. Because AvailableNow processes all available input,
+the result equals the batch plan over the same data, so the
+tumbling-window entry carries the SAME DuckDB oracle as its batch twin:
+the streaming execution path itself is hash-verified against SQL.
+
+Every staged source goes through ``sources.staging.staged`` and every
+drain through ``_run_available_now``.
 """
 
 from __future__ import annotations
@@ -14,62 +17,58 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.window import Window
 
 from ag_data_ingestion_github_to_snowflake_spark.plans.registry import register, t
-from ag_data_ingestion_github_to_snowflake_spark.sources.staging import (
-    stage_dir,
-    write_marker,
-)
+from ag_data_ingestion_github_to_snowflake_spark.sources.staging import staged
 from ag_data_ingestion_github_to_snowflake_spark.streaming import streams as S
 
 
-def _staged_events_stream(spark: SparkSession, sf: str) -> tuple[DataFrame, str]:
-    """Stage events.parquet into a deterministic temp dir and open it as
-    a stream (the file stream source lists directories).
+def _events_stage(sf: str) -> str:
+    """events.parquet copied into a stage dir: the file stream source
+    lists directories. A directory-style fixture (e.g. the generated
+    sf1.0 scale fixture) is staged as its part files, flat."""
+    src = os.path.join(sf, "events.parquet")
 
-    The staging path is keyed by the sf dir and reused across calls —
-    repeated builds in one session (bench warm-up + timed run + parity
-    tests) must not accumulate /tmp copies.
+    def build(stage: str) -> None:
+        if not os.path.isdir(src):
+            shutil.copy(src, os.path.join(stage, "events.parquet"))
+            return
+        for part in sorted(os.listdir(src)):
+            if part.endswith(".parquet"):
+                shutil.copy(os.path.join(src, part), os.path.join(stage, f"events_{part}"))
+
+    return staged("ag_stream_events", sf, ["events.parquet"], build)
+
+
+def _events_stream(spark: SparkSession, sf: str, stage: str) -> DataFrame:
+    """Open a staged events dir as a stream.
 
     ``ts`` normalization mirrors the batch catalog: a TIMESTAMP(ns)
     file arrives as a raw nanosecond long (under ``nanosAsLong``) and is
     integer-divided to microseconds; a TIMESTAMP(us) file already reads
-    as a timestamp and passes through untouched. Conditional on the
-    observed schema so the stream tracks whichever layout the fixture
-    generator produced.
+    as a timestamp and passes through untouched.
     """
-    src = os.path.join(sf, "events.parquet")
-    stage = stage_dir("ag_stream_events", sf)
-    # `_`-prefixed marker: invisible to the Spark file source (which
-    # skips `_`/`.` files), so it can carry the staleness stamp for
-    # both file- and directory-style fixtures.
-    marker = os.path.join(stage, "_staged")
-    if not os.path.exists(marker) or os.path.getmtime(marker) < os.path.getmtime(src):
-        shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(stage)
-        if os.path.isdir(src):
-            # directory-style fixture (e.g. the generated sf1.0 scale
-            # fixture): stage each part file flat
-            for part in sorted(os.listdir(src)):
-                if part.endswith(".parquet"):
-                    shutil.copy(
-                        os.path.join(src, part), os.path.join(stage, f"events_{part}")
-                    )
-        else:
-            shutil.copy(src, os.path.join(stage, "events.parquet"))
-        write_marker(marker)
-    raw_schema = spark.read.parquet(src).schema
+    raw_schema = spark.read.parquet(os.path.join(sf, "events.parquet")).schema
     sdf = spark.readStream.schema(raw_schema).parquet(stage)
     if isinstance(raw_schema["ts"].dataType, T.LongType):
         sdf = sdf.withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
         )
-    return sdf, stage
+    return sdf
+
+
+def _staged_events_stream(spark: SparkSession, sf: str) -> tuple[DataFrame, str]:
+    """The events table as one stream over its staged copy, plus the
+    stage dir (``_adaptive_stream_partitions`` sizes from it)."""
+    stage = _events_stage(sf)
+    return _events_stream(spark, sf, stage), stage
 
 
 def _staged_events_stream_flushed(
@@ -89,20 +88,12 @@ def _staged_events_stream_flushed(
     import datetime
 
     src = os.path.join(sf, "events.parquet")
-    # Called for its STAGING side effect only (the per-file split of
-    # the source parquet under stage_base); the returned stream is for
-    # the unflushed callers and is deliberately unused here.
-    _, stage_base = _staged_events_stream(spark, sf)
-    stage = stage_dir("ag_stream_events_flush", sf)
-    marker = os.path.join(stage, "_staged")
-    if not os.path.exists(marker) or os.path.getmtime(marker) < os.path.getmtime(src):
-        shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(stage)
-        for part in sorted(os.listdir(stage_base)):
+
+    def build(stage: str) -> None:
+        base = _events_stage(sf)  # hard-link its data files, no second copy
+        for part in sorted(os.listdir(base)):
             if not part.startswith("_"):
-                os.link(
-                    os.path.join(stage_base, part), os.path.join(stage, part)
-                )
+                os.link(os.path.join(base, part), os.path.join(stage, part))
         raw = spark.read.parquet(src)
         qty, unit = flush_delta.split()
         delta = datetime.timedelta(**{unit if unit.endswith("s") else unit + "s": int(qty)})
@@ -128,45 +119,62 @@ def _staged_events_stream_flushed(
                     os.path.join(stage, "zz_flush_sentinel.parquet"),
                 )
         shutil.rmtree(tmp, ignore_errors=True)
-        write_marker(marker)
-    raw_schema = spark.read.parquet(src).schema
-    sdf = spark.readStream.schema(raw_schema).parquet(stage)
-    if isinstance(raw_schema["ts"].dataType, T.LongType):
-        sdf = sdf.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
-        )
-    return sdf, stage
+
+    stage = staged("ag_stream_events_flush", sf, ["events.parquet"], build)
+    return _events_stream(spark, sf, stage), stage
 
 
-def _staged_json_batches(base: str, sf: str, batches) -> str:
-    """Stage DataFrame micro-batches as one JSON file each (ascending
-    mtimes pin the batch order for ``maxFilesPerTrigger=1``), cached
-    behind a ``_staged`` marker like ``_staged_events_stream``.
+def _write_batches(stage: str, frames, fmt: str = "parquet") -> None:
+    """Write each frame as ONE file ``stage/batch_{i}.{fmt}``, with
+    ascending mtimes: the file source orders new files by mtime, so a
+    one-file-per-trigger stream replays the frames in list order."""
+    for i, frame in enumerate(frames):
+        tmp = os.path.join(stage, f"_batch_build{i}")
+        frame.coalesce(1).write.format(fmt).save(tmp)
+        (part,) = [p for p in os.listdir(tmp) if p.startswith("part-")]
+        dest = os.path.join(stage, f"batch_{i}.{fmt}")
+        os.replace(os.path.join(tmp, part), dest)
+        os.utime(dest, (1_000_000_000 + i * 1000,) * 2)
+        shutil.rmtree(tmp)
 
-    The batches are deterministic slices of the source parquet, so the
-    staging (a bounded ``toJSON().collect()`` + file writes) runs ONCE
-    per (fixture, sf) and later builds of the same query — bench
-    warm-up, timed run, parity tests — do pure engine work; only the
-    streaming table/checkpoint dirs are cleared per run (the stream
-    itself must re-execute). Returns the source directory.
-    """
-    src = os.path.join(base, "src")
-    marker = os.path.join(src, "_staged")
-    ref = os.path.join(sf, "documents.parquet")
-    now = os.path.getmtime(ref)
-    if os.path.exists(marker) and os.path.getmtime(marker) >= now:
-        return src
-    shutil.rmtree(src, ignore_errors=True)
-    os.makedirs(src)
-    for i, b in enumerate(batches):
-        rows = b.toJSON().collect()  # batch staging: bounded fixture slice
-        p = os.path.join(src, f"b{i}.json")
-        with open(p, "w") as f:
-            f.write("\n".join(rows))
-        os.utime(p, (now + i * 10, now + i * 10))
-    write_marker(marker)
-    os.utime(marker, (now, now))
-    return src
+
+def _bands(df: DataFrame, key: Column, edges) -> list[DataFrame]:
+    """Slices of ``df`` cut at the ascending ``edges`` of ``key``:
+    ``key < e0``, ``e0 <= key < e1``, ..., ``key >= e_last``."""
+    cuts = [None, *edges, None]
+    slices = []
+    for lo, hi in zip(cuts, cuts[1:]):
+        sl = df if lo is None else df.filter(key >= lo)
+        slices.append(sl if hi is None else sl.filter(key < hi))
+    return slices
+
+
+def _one_file_per_trigger(
+    spark: SparkSession, stage: str, schema=None, fmt: str = "parquet"
+) -> DataFrame:
+    """Stream a ``_write_batches`` stage one file per micro-batch, so
+    each staged batch is one genuine commit. ``schema`` defaults to
+    batch 0's parquet footer."""
+    if schema is None:
+        schema = spark.read.parquet(os.path.join(stage, "batch_0.parquet")).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .format(fmt)
+        .load(stage)
+    )
+
+
+def _split8_stage(spark: SparkSession, sf: str) -> str:
+    """events split into 8 ``_write_batches`` files by a deterministic
+    hash of event_id (NOT round-robin: rerun-stable)."""
+
+    def build(stage: str) -> None:
+        ev = t(spark, sf, "events")  # ns/us-normalized read
+        bucket = F.pmod(F.xxhash64("event_id"), F.lit(8))
+        _write_batches(stage, [ev.filter(bucket == i) for i in range(8)])
+
+    return staged("ag_stream_split8", sf, ["events.parquet"], build)
 
 
 # State-store partition count for the drained registry streams. Every
@@ -212,79 +220,48 @@ def _adaptive_stream_partitions(
     return str(max(floor, min(cores, parts)))
 
 
+_STATE_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 
 
-def _drain(
-    plan: DataFrame,
+def _run_available_now(
+    writer: DataStreamWriter,
     spark: SparkSession,
-    mode: str,
-    rocksdb: bool = False,
     shuffle_partitions: str | None = None,
-) -> DataFrame:
-    """Run the streaming plan to completion and hand back a *detached*
-    result: the memory-sink table is snapshotted via an eager
-    localCheckpoint, then the sink view and the checkpoint dir are torn
-    down — on failure and timeout too — so repeated builds leak neither
-    driver-memory tables nor /tmp dirs (each run still gets a fresh
-    checkpoint — offsets are per-run).
+    rocksdb: bool = False,
+) -> None:
+    """Start ``writer`` (sink already configured) with the AvailableNow
+    trigger — A22's scheduled firing: process what is pending, then
+    stop — on a fresh checkpoint, and wait up to 300 s for it to finish.
 
-    ``rocksdb=True`` scopes the RocksDB state store provider to this
-    drain (the conf is read at query start and pinned in the fresh
-    checkpoint, so restoring it afterwards is safe). Use it for
-    operators whose state cardinality scales with the DATA rather than
-    with a bounded key set: the default HDFS-backed store rewrites the
-    whole state map per commit, which turns e.g. the 100x session
-    drain (9.5M session states) from >600 s into ~77 s under RocksDB
-    (measured with a right-sized heap; incremental SST writes instead
-    of full-map rewrite).
-
-    ``shuffle_partitions`` overrides the default fixture-sized 8 for
-    THIS drain (fresh checkpoint each run, so the pin is per-query).
-    Use the core count for drains whose per-partition work scales with
-    the data — e.g. the Python stateful kernel in
-    ``streaming_stateful_totals``, where 8 partitions left 3/4 of the
-    machine idle and dominated the 100x time."""
+    On every exit, failure and timeout included, the checkpoint dir is
+    removed and the session conf restored. ``shuffle_partitions`` and
+    ``rocksdb`` scope the state-shuffle width and the RocksDB state
+    store to this drain: both are read at query start and pinned in the
+    fresh checkpoint, so restoring them afterwards is safe.
+    """
     cp = tempfile.mkdtemp(prefix="ag_stream_cp_")
-    name = "mem_" + os.path.basename(cp).removeprefix("ag_stream_cp_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        shuffle_partitions or STREAM_SHUFFLE_PARTITIONS,
-    )
+    scoped = {}
+    if shuffle_partitions is not None:
+        scoped["spark.sql.shuffle.partitions"] = shuffle_partitions
     if rocksdb:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-        )
+        scoped[_STATE_PROVIDER] = _ROCKSDB_PROVIDER
+    prev = {k: spark.conf.get(k, None) for k in scoped}
+    for k, v in scoped.items():
+        spark.conf.set(k, v)
     try:
-        q = (
-            plan.writeStream.outputMode(mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", cp)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        finished = q.awaitTermination(300)
-        if not finished:
+        q = writer.trigger(availableNow=True).option("checkpointLocation", cp).start()
+        if not q.awaitTermination(300):
             q.stop()
             raise TimeoutError("streaming drain did not finish within 300s")
-        return spark.table(name).localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if rocksdb:
-            if prev_provider is None:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
             else:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev_provider
-                )
-        spark.catalog.dropTempView(name)
+                spark.conf.set(k, v)
         shutil.rmtree(cp, ignore_errors=True)
         # Unload the state-store providers: every drain has a fresh
         # checkpoint, so they are dead weight whose maintenance slows
@@ -295,6 +272,40 @@ def _drain(
                 spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
             except Exception:
                 pass  # py4j surface moved: stale providers cost time, not correctness
+
+
+def _drain(
+    plan: DataFrame,
+    spark: SparkSession,
+    mode: str,
+    rocksdb: bool = False,
+    shuffle_partitions: str | None = None,
+) -> DataFrame:
+    """Run the streaming plan to completion through a memory sink and
+    hand back a *detached* result: the sink table is snapshotted via an
+    eager localCheckpoint, then its view is dropped — on failure and
+    timeout too — so repeated builds leak no driver-memory tables.
+
+    ``rocksdb=True`` is for operators whose state cardinality scales
+    with the DATA rather than with a bounded key set: the default
+    HDFS-backed store rewrites the whole state map per commit, which
+    turns e.g. the 100x session drain (9.5M session states) from >600 s
+    into ~77 s under RocksDB (incremental SST writes).
+
+    ``shuffle_partitions`` overrides the fixture-sized 8 for THIS drain;
+    callers derive it from the staged input
+    (``_adaptive_stream_partitions``)."""
+    name = f"mem_{uuid.uuid4().hex}"
+    try:
+        _run_available_now(
+            plan.writeStream.outputMode(mode).format("memory").queryName(name),
+            spark,
+            shuffle_partitions or STREAM_SHUFFLE_PARTITIONS,
+            rocksdb,
+        )
+        return spark.table(name).localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 @register(
@@ -365,6 +376,19 @@ def streaming_interval_join_events(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _curated_ids(spark: SparkSession, stage: str, ingest) -> DataFrame:
+    """Drain the staged JSON batches through ``ingest`` (a foreachBatch
+    curation writer over a standing table) into a per-run table, and
+    return the surviving doc ids, detached; the table is removed."""
+    table = tempfile.mkdtemp(prefix="ag_stream_table_")
+    try:
+        sdf = _one_file_per_trigger(spark, stage, "doc_id long, text string", "json")
+        _run_available_now(ingest(sdf, table), spark)
+        return spark.read.parquet(table).select("doc_id").localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(table, ignore_errors=True)
+
+
 @register(
     "streaming_corpus_curation",
     # Arrival order is pinned (one file per id-range batch, ascending
@@ -395,39 +419,24 @@ def streaming_corpus_curation(spark: SparkSession, sf: str) -> DataFrame:
     which is the hash-checked SQL twin: the foreachBatch execution
     path itself is oracle-verified.
     """
-    docs = spark.read.parquet(os.path.join(sf, "documents.parquet")).filter(
-        F.col("doc_id") < 300
-    ).select("doc_id", "text")
-    corpus = docs.unionByName(
-        docs.select((F.col("doc_id") + 500000).alias("doc_id"), "text")
-    )
-    base = stage_dir("ag_stream_cur", sf)
-    table = os.path.join(base, "table")
-    cp = os.path.join(base, "cp")
-    for d in (table, cp):
-        shutil.rmtree(d, ignore_errors=True)
-    # one file per batch, ascending mtimes: primaries (two ranges),
-    # then the mirror re-arrivals
-    src = _staged_json_batches(
-        base,
-        sf,
-        [
+
+    def build(stage: str) -> None:
+        docs = t(spark, sf, "documents").filter(F.col("doc_id") < 300).select(
+            "doc_id", "text"
+        )
+        corpus = docs.unionByName(
+            docs.select((F.col("doc_id") + 500000).alias("doc_id"), "text")
+        )
+        # primaries (two ranges), then the mirror re-arrivals
+        batches = [
             corpus.filter(F.col("doc_id") < 150),
             corpus.filter((F.col("doc_id") >= 150) & (F.col("doc_id") < 500000)),
             corpus.filter(F.col("doc_id") >= 500000),
-        ],
-    )
-    sdf = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    q = S.stream_dedup_ingest(sdf, table, cp)
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise TimeoutError("streaming curation did not finish within 300s")
-    return spark.read.parquet(table).select("doc_id").localCheckpoint(eager=True)
+        ]
+        _write_batches(stage, batches, "json")
+
+    stage = staged("ag_stream_cur", sf, ["documents.parquet"], build)
+    return _curated_ids(spark, stage, S.stream_dedup_ingest)
 
 
 @register(
@@ -449,34 +458,19 @@ def streaming_neardup_curation(spark: SparkSession, sf: str) -> DataFrame:
     ``stream_neardup_ingest`` LSH-probes each batch against the
     standing corpus index, so the mutated tier is (near-)entirely
     dropped while fresh docs land."""
-    docs = spark.read.parquet(os.path.join(sf, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    originals = docs.filter(F.col("doc_id") < 100)
-    fresh = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 150))
-    mutated = originals.select(
-        (F.col("doc_id") + 500000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zqxtoken")).alias("text"),
-    )
-    base = stage_dir("ag_stream_nd", sf)
-    table = os.path.join(base, "table")
-    cp = os.path.join(base, "cp")
-    for d in (table, cp):
-        shutil.rmtree(d, ignore_errors=True)
-    src = _staged_json_batches(
-        base, sf, [originals, fresh.unionByName(mutated)]
-    )
-    sdf = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    q = S.stream_neardup_ingest(sdf, table, cp)
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise TimeoutError("streaming near-dup curation did not finish within 300s")
-    return spark.read.parquet(table).select("doc_id").localCheckpoint(eager=True)
+
+    def build(stage: str) -> None:
+        docs = t(spark, sf, "documents").select("doc_id", "text")
+        originals = docs.filter(F.col("doc_id") < 100)
+        fresh = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 150))
+        mutated = originals.select(
+            (F.col("doc_id") + 500000).alias("doc_id"),
+            F.concat(F.col("text"), F.lit(" zqxtoken")).alias("text"),
+        )
+        _write_batches(stage, [originals, fresh.unionByName(mutated)], "json")
+
+    stage = staged("ag_stream_nd", sf, ["documents.parquet"], build)
+    return _curated_ids(spark, stage, S.stream_neardup_ingest)
 
 
 @register(
@@ -697,36 +691,8 @@ def streaming_multibatch_rollup(spark: SparkSession, sf: str) -> DataFrame:
     semantics under test at the aggregation level: state carries
     across commits, late rows in later files merge into earlier days.
     """
-    src = os.path.join(sf, "events.parquet")
-    stage = stage_dir("ag_stream_split8", sf)
-    marker = os.path.join(stage, "_staged")
-    if not os.path.exists(marker) or os.path.getmtime(marker) < os.path.getmtime(src):
-        shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(stage)
-        from ag_data_ingestion_github_to_snowflake_spark.catalog import load_table
-
-        ev = load_table(spark, sf, "events")  # ns/us-normalized read
-        # deterministic 8-way hash split (NOT round-robin: rerun-stable)
-        ev.withColumn("_b", F.pmod(F.xxhash64("event_id"), F.lit(8))).repartition(
-            8, "_b"
-        ).write.partitionBy("_b").mode("overwrite").parquet(stage + "_tmp")
-        for i in range(8):
-            part_dir = os.path.join(stage + "_tmp", f"_b={i}")
-            parts = [p for p in os.listdir(part_dir) if p.endswith(".parquet")]
-            assert len(parts) == 1, parts
-            shutil.copy(
-                os.path.join(part_dir, parts[0]),
-                os.path.join(stage, f"batch_{i}.parquet"),
-            )
-        shutil.rmtree(stage + "_tmp", ignore_errors=True)
-        write_marker(marker)
-    schema = spark.read.parquet(os.path.join(stage, "batch_0.parquet")).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .drop("_b")
-    )
+    stage = _split8_stage(spark, sf)
+    sdf = _one_file_per_trigger(spark, stage)
     agg = (
         sdf.groupBy(
             F.window(F.col("ts").cast("timestamp"), "1 day").alias("w"),
@@ -886,35 +852,8 @@ def streaming_drift_monitor(spark: SparkSession, sf: str) -> DataFrame:
     affordable side: the raw stream is touched once, the monitor
     re-reads only the tiny state table each evaluation.
     """
-    src = os.path.join(sf, "events.parquet")
-    stage = stage_dir("ag_stream_split8", sf)
-    marker = os.path.join(stage, "_staged")
-    if not os.path.exists(marker) or os.path.getmtime(marker) < os.path.getmtime(src):
-        shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(stage)
-        from ag_data_ingestion_github_to_snowflake_spark.catalog import load_table
-
-        ev = load_table(spark, sf, "events")
-        ev.withColumn("_b", F.pmod(F.xxhash64("event_id"), F.lit(8))).repartition(
-            8, "_b"
-        ).write.partitionBy("_b").mode("overwrite").parquet(stage + "_tmp")
-        for i in range(8):
-            part_dir = os.path.join(stage + "_tmp", f"_b={i}")
-            parts = [p for p in os.listdir(part_dir) if p.endswith(".parquet")]
-            assert len(parts) == 1, parts
-            shutil.copy(
-                os.path.join(part_dir, parts[0]),
-                os.path.join(stage, f"batch_{i}.parquet"),
-            )
-        shutil.rmtree(stage + "_tmp", ignore_errors=True)
-        write_marker(marker)
-    schema = spark.read.parquet(os.path.join(stage, "batch_0.parquet")).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .drop("_b")
-    )
+    stage = _split8_stage(spark, sf)
+    sdf = _one_file_per_trigger(spark, stage)
     hourly = (
         sdf.groupBy(
             F.window(F.col("ts").cast("timestamp"), "1 hour").alias("w"),
@@ -1015,39 +954,21 @@ def streaming_dlq_ingest(spark: SparkSession, sf: str) -> DataFrame:
     aggregate BOTH materialized tables and must hash-match the
     seeding rule computed from the clean fixture.
     """
-    docs = t(spark, sf, "documents").filter(F.col("doc_id") < 500)
-    base = stage_dir("ag_stream_dlq", sf)
-    src = os.path.join(base, "src")
-    main_tbl = os.path.join(base, "main")
-    dlq_tbl = os.path.join(base, "dlq")
-    cp = os.path.join(base, "cp")
-    marker = os.path.join(src, "_staged")
-    ref = os.path.join(sf, "documents.parquet")
-    if not os.path.exists(marker) or os.path.getmtime(marker) < os.path.getmtime(
-        ref if not os.path.isdir(ref) else os.path.join(ref, os.listdir(ref)[0])
-    ):
-        shutil.rmtree(src, ignore_errors=True)
-        os.makedirs(src)
+
+    def build(stage: str) -> None:
+        docs = t(spark, sf, "documents").filter(F.col("doc_id") < 500)
         line = F.to_json(F.struct("doc_id", "lang", "n_chars"))
-        staged = docs.select(
+        seeded = docs.select(
             F.col("doc_id"),
             F.when(F.col("doc_id") % 13 == 0, F.substring(line, 1, 10))
             .otherwise(line)
             .alias("value"),
         )
         # two deterministic halves -> two genuine micro-batches
-        for i, half in enumerate(
-            (staged.filter(F.col("doc_id") % 2 == i) for i in range(2))
-        ):
-            rows = [r["value"] for r in half.select("value").collect()]
-            p = os.path.join(src, f"b{i}.jsonl")
-            with open(p, "w") as fh:
-                fh.write("\n".join(rows))
-            os.utime(p, (1_700_000_000 + i * 10,) * 2)
-        write_marker(marker)
-    for d in (main_tbl, dlq_tbl, cp):
-        shutil.rmtree(d, ignore_errors=True)
+        halves = [seeded.filter(F.col("doc_id") % 2 == i).select("value") for i in range(2)]
+        _write_batches(stage, halves, "text")
 
+    stage = staged("ag_stream_dlq", sf, ["documents.parquet"], build)
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -1055,13 +976,9 @@ def streaming_dlq_ingest(spark: SparkSession, sf: str) -> DataFrame:
             T.StructField("n_chars", T.LongType()),
         ]
     )
-    sdf = (
-        spark.readStream.schema(
-            T.StructType([T.StructField("value", T.StringType())])
-        )
-        .option("maxFilesPerTrigger", 1)
-        .text(src)
-    )
+    out = tempfile.mkdtemp(prefix="ag_stream_dlq_")
+    main_tbl = os.path.join(out, "main")
+    dlq_tbl = os.path.join(out, "dlq")
 
     def route(batch_df: DataFrame, batch_id: int) -> None:
         parsed = batch_df.select(
@@ -1080,29 +997,29 @@ def streaming_dlq_ingest(spark: SparkSession, sf: str) -> DataFrame:
         valid.write.mode("append").parquet(main_tbl)
         bad.write.mode("append").parquet(dlq_tbl)
 
-    q = (
-        sdf.writeStream.foreachBatch(route)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", cp)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming DLQ ingest did not finish within 300s")
-    main = spark.read.parquet(main_tbl)
-    dlq = spark.read.parquet(dlq_tbl)
-    return (
-        main.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_main"),
-            F.sum("n_chars").cast("bigint").alias("main_chars"),
+    lines = T.StructType([T.StructField("value", T.StringType())])
+    try:
+        _run_available_now(
+            _one_file_per_trigger(spark, stage, lines, "text").writeStream.foreachBatch(route),
+            spark,
         )
-        .crossJoin(
-            F.broadcast(
-                dlq.agg(F.count(F.lit(1)).cast("bigint").alias("n_dlq"))
+        main = spark.read.parquet(main_tbl)
+        dlq = spark.read.parquet(dlq_tbl)
+        return (
+            main.agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_main"),
+                F.sum("n_chars").cast("bigint").alias("main_chars"),
             )
+            .crossJoin(
+                F.broadcast(
+                    dlq.agg(F.count(F.lit(1)).cast("bigint").alias("n_dlq"))
+                )
+            )
+            .select("n_main", "n_dlq", "main_chars")
+            .localCheckpoint(eager=True)
         )
-        .select("n_main", "n_dlq", "main_chars")
-    )
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1163,46 +1080,25 @@ def streaming_scd2_upsert(spark: SparkSession, sf: str) -> DataFrame:
     overwrite of the files being read. Batches are time-sliced, so the
     open-version + new-changes recompute is exactly the global window.
     """
-    orders = t(spark, sf, "orders")
-    customer = t(spark, sf, "customer")
-    changes = orders.filter(F.col("o_custkey") < 300).select(
-        F.col("o_custkey").alias("custkey"),
-        F.col("o_orderdate").alias("ts"),
-        F.col("o_orderpriority").alias("tier"),
-        F.col("o_orderkey").cast("bigint").alias("seq"),
-    )
-    seed = customer.filter(F.col("c_custkey") < 300).select(
+    seed = t(spark, sf, "customer").filter(F.col("c_custkey") < 300).select(
         F.col("c_custkey").alias("custkey"),
         F.lit("1990-01-01 00:00:00").cast("timestamp").alias("ts"),
         F.col("c_mktsegment").alias("tier"),
         F.lit(0).cast("bigint").alias("seq"),
     )
-    # stage 4 TIME-SLICED change files (slice = o_orderdate year band,
-    # so every key's observations arrive in event-time order across
-    # batches); mtimes ascend so the file source replays them in order
-    src = os.path.join(sf, "orders.parquet")
-    stage = stage_dir("ag_scd2_slices", sf)
-    marker = os.path.join(stage, "_staged")
-    if not os.path.exists(marker) or os.path.getmtime(marker) < os.path.getmtime(src):
-        shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(stage)
-        bands = [(None, 1996), (1996, 1998), (1998, 2000), (2000, None)]
-        for i, (lo, hi) in enumerate(bands):
-            sl = changes
-            if lo is not None:
-                sl = sl.filter(F.year("ts") >= lo)
-            if hi is not None:
-                sl = sl.filter(F.year("ts") < hi)
-            sl.coalesce(1).write.mode("overwrite").parquet(stage + f"_tmp{i}")
-            part = [
-                p for p in os.listdir(stage + f"_tmp{i}") if p.endswith(".parquet")
-            ][0]
-            dest = os.path.join(stage, f"batch_{i}.parquet")
-            shutil.copy(os.path.join(stage + f"_tmp{i}", part), dest)
-            os.utime(dest, (1_000_000_000 + i * 1000, 1_000_000_000 + i * 1000))
-            shutil.rmtree(stage + f"_tmp{i}", ignore_errors=True)
-        write_marker(marker)
-    hist_root = tempfile.mkdtemp(prefix="ag_scd2_hist_")
+
+    def build(stage: str) -> None:
+        changes = t(spark, sf, "orders").filter(F.col("o_custkey") < 300).select(
+            F.col("o_custkey").alias("custkey"),
+            F.col("o_orderdate").alias("ts"),
+            F.col("o_orderpriority").alias("tier"),
+            F.col("o_orderkey").cast("bigint").alias("seq"),
+        )
+        # 4 TIME-SLICED change batches (o_orderdate year bands), so every
+        # key's observations arrive in event-time order across batches
+        _write_batches(stage, _bands(changes, F.year("ts"), (1996, 1998, 2000)))
+
+    stage = staged("ag_scd2_slices", sf, ["orders.parquet"], build)
     from ag_data_ingestion_github_to_snowflake_spark.operators.scd import (
         scd2_from_changes,
     )
@@ -1261,32 +1157,22 @@ def streaming_scd2_upsert(spark: SparkSession, sf: str) -> DataFrame:
             os.path.join(hist_root, f"v{bid + 1}")
         )
 
-    schema = spark.read.parquet(os.path.join(stage, "batch_0.parquet")).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    cp = tempfile.mkdtemp(prefix="ag_scd2_cp_")
-    q = (
-        sdf.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", cp)
-        .start()
-    )
-    q.awaitTermination()
-    final = max(
-        (d for d in os.listdir(hist_root) if d.startswith("v")),
-        key=lambda d: int(d[1:]),
-    )
-    out = (
-        spark.read.parquet(os.path.join(hist_root, final))
-        .select("custkey", "tier", "valid_from", "valid_to", "is_current")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(hist_root, ignore_errors=True)
-    shutil.rmtree(cp, ignore_errors=True)
-    return out
+    hist_root = tempfile.mkdtemp(prefix="ag_scd2_hist_")
+    try:
+        _run_available_now(
+            _one_file_per_trigger(spark, stage).writeStream.foreachBatch(merge), spark
+        )
+        final = max(
+            (d for d in os.listdir(hist_root) if d.startswith("v")),
+            key=lambda d: int(d[1:]),
+        )
+        return (
+            spark.read.parquet(os.path.join(hist_root, final))
+            .select("custkey", "tier", "valid_from", "valid_to", "is_current")
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        shutil.rmtree(hist_root, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1323,43 +1209,18 @@ def streaming_cep_funnel(spark: SparkSession, sf: str) -> DataFrame:
         funnel_cep_matches,
     )
 
-    src = os.path.join(sf, "events.parquet")
-    stage = stage_dir("ag_cep_slices", sf)
-    marker = os.path.join(stage, "_staged")
-    if not os.path.exists(marker) or os.path.getmtime(marker) < os.path.getmtime(src):
-        shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(stage)
-        from ag_data_ingestion_github_to_snowflake_spark.catalog import load_table
-
-        ev = load_table(spark, sf, "events").select(
+    def build(stage: str) -> None:
+        ev = t(spark, sf, "events").select(
             "user_id",
             "event_id",
             "event_type",
             F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
         )
-        bands = [(None, 9), (9, 16), (16, 24), (24, None)]
-        for i, (lo, hi) in enumerate(bands):
-            day = F.dayofmonth(F.timestamp_micros(F.col("ts_us")))
-            sl = ev
-            if lo is not None:
-                sl = sl.filter(day >= lo)
-            if hi is not None:
-                sl = sl.filter(day < hi)
-            sl.coalesce(1).write.mode("overwrite").parquet(stage + f"_tmp{i}")
-            part = [
-                p for p in os.listdir(stage + f"_tmp{i}") if p.endswith(".parquet")
-            ][0]
-            dest = os.path.join(stage, f"batch_{i}.parquet")
-            shutil.copy(os.path.join(stage + f"_tmp{i}", part), dest)
-            os.utime(dest, (1_000_000_000 + i * 1000, 1_000_000_000 + i * 1000))
-            shutil.rmtree(stage + f"_tmp{i}", ignore_errors=True)
-        write_marker(marker)
-    schema = spark.read.parquet(os.path.join(stage, "batch_0.parquet")).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+        day = F.dayofmonth(F.timestamp_micros(F.col("ts_us")))
+        _write_batches(stage, _bands(ev, day, (9, 16, 24)))
+
+    stage = staged("ag_cep_slices", sf, ["events.parquet"], build)
+    sdf = _one_file_per_trigger(spark, stage)
     matches = funnel_cep_matches(sdf, window_us=7 * 86400 * 1_000_000)
     # Input-derived partitions (OPTIMIZATION_r13.md §3) — measured at
     # sf0.1: 23-30 s at core-count parts vs 7-14 s at 8 (interleaved,

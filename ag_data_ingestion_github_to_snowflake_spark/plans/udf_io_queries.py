@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 from collections.abc import Iterator
 
 import pandas as pd
@@ -23,6 +22,7 @@ from pyspark.sql.window import Window
 
 from ag_data_ingestion_github_to_snowflake_spark.catalog import parallelize_cpu_scan
 from ag_data_ingestion_github_to_snowflake_spark.plans.registry import register, t
+from ag_data_ingestion_github_to_snowflake_spark.sources.staging import stage_dir, staged
 
 ZSCORE_SCHEMA = T.StructType(
     [
@@ -140,9 +140,7 @@ def json_sink_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     ev = t(spark, sf, "events")
     # Deterministic per-SF staging path (mode=overwrite): repeated
     # builds reuse it instead of leaking a fresh mkdtemp each time.
-    out = os.path.join(
-        tempfile.gettempdir(), f"ag_json_sink_{os.path.basename(sf.rstrip('/'))}"
-    )
+    out = stage_dir("ag_json_sink", sf)
     (
         ev.withColumn("year", F.date_format("ts", "yyyy"))
         .withColumn("month", F.date_format("ts", "MM"))
@@ -198,19 +196,17 @@ def corrupt_json_quarantine(spark: SparkSession, sf: str) -> DataFrame:
     side, verified against the seeding rule computed from the clean
     fixture."""
     docs = t(spark, sf, "documents").filter(F.col("doc_id") < 500)
-    out = os.path.join(
-        tempfile.gettempdir(), f"ag_badjson_{os.path.basename(sf.rstrip('/'))}"
-    )
+    out = stage_dir("ag_badjson", sf)
     # Stage: serialize each row to a JSON line, truncating every 13th
     # to its first 10 chars (guaranteed malformed: the object never
     # closes). substring is 1-based.
     line = F.to_json(F.struct("doc_id", "lang", "n_chars"))
-    staged = docs.select(
+    seeded = docs.select(
         F.when(F.col("doc_id") % 13 == 0, F.substring(line, 1, 10))
         .otherwise(line)
         .alias("value")
     )
-    staged.write.mode("overwrite").text(out)
+    seeded.write.mode("overwrite").text(out)
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -283,10 +279,8 @@ def profile_orders_columns(spark: SparkSession, sf: str) -> DataFrame:
         profile_table,
     )
 
-    # r13: the 4-way distinct expansion makes the partial aggregate
-    # the cost, and a single-row-group scan runs it on one task
-    # (wp_tail: 3 tasks, 3.7 s exec). Column pruning drops below the
-    # round-robin exchange, so only the 4 profiled columns shuffle.
+    # The 4-way distinct expansion is CPU-bound; spread the one-task
+    # scan across cores (OPTIMIZATION_r13.md §2).
     orders = parallelize_cpu_scan(
         t(spark, sf, "orders"), spark, sf, "orders"
     )
@@ -359,9 +353,7 @@ def csv_sink_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     decimal for order-independence.
     """
     cust = t(spark, sf, "customer")
-    out = os.path.join(
-        tempfile.gettempdir(), f"ag_csv_sink_{os.path.basename(sf.rstrip('/'))}"
-    )
+    out = stage_dir("ag_csv_sink", sf)
     cust.write.mode("overwrite").option("header", True).csv(out)
     schema = T.StructType(
         [
@@ -401,9 +393,7 @@ def orc_sink_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     orders = t(spark, sf, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    out = os.path.join(
-        tempfile.gettempdir(), f"ag_orc_sink_{os.path.basename(sf.rstrip('/'))}"
-    )
+    out = stage_dir("ag_orc_sink", sf)
     orders.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     return back.groupBy("o_orderpriority").agg(
@@ -442,9 +432,7 @@ def schema_evolution_merge(spark: SparkSession, sf: str) -> DataFrame:
     ReadSchema must be checked against the UNION of file footers, not
     the first file)."""
     o = t(spark, sf, "orders")
-    out = os.path.join(
-        tempfile.gettempdir(), f"ag_schema_evo_{os.path.basename(sf.rstrip('/'))}"
-    )
+    out = stage_dir("ag_schema_evo", sf)
     b1 = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_custkey")
     b2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -788,27 +776,20 @@ def parquet_bloom_pointlookup(spark: SparkSession, sf: str) -> DataFrame:
     (PushedFilters in the explain), where the reader consults the
     bloom per group.
 
-    Staging follows the stage_dir + atomic-marker convention; the
-    bloom options are write-path only, so the read side is a plain
+    The bloom options are write-path only, so the read side is a plain
     parquet scan any engine could run.
     """
-    from ag_data_ingestion_github_to_snowflake_spark.sources.staging import (
-        stage_dir,
-        write_marker,
+    out = staged(
+        "ag_bloom_events",
+        sf,
+        ["events.parquet"],
+        lambda stage: t(spark, sf, "events")
+        .write.mode("overwrite")
+        .option("parquet.bloom.filter.enabled#user_id", "true")
+        .option("parquet.bloom.filter.expected.ndv#user_id", "100000")
+        .option("parquet.block.size", str(4 * 1024 * 1024))
+        .parquet(stage),
     )
-
-    ev = t(spark, sf, "events")
-    out = stage_dir("ag_bloom_events", sf)
-    marker = os.path.join(out, "_STAGED_OK")
-    if not os.path.exists(marker):
-        (
-            ev.write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#user_id", "true")
-            .option("parquet.bloom.filter.expected.ndv#user_id", "100000")
-            .option("parquet.block.size", str(4 * 1024 * 1024))
-            .parquet(out)
-        )
-        write_marker(marker)
     back = spark.read.parquet(out)
     return (
         back.filter(F.col("user_id") == 42)
@@ -857,22 +838,16 @@ def small_file_compaction(spark: SparkSession, sf: str) -> DataFrame:
     table — a compaction that loses or duplicates a row is worse
     than no compaction.
     """
-    from ag_data_ingestion_github_to_snowflake_spark.sources.staging import (
-        stage_dir,
-        write_marker,
+    frag = staged(
+        "ag_compact",
+        sf,
+        ["events.parquet"],
+        lambda stage: t(spark, sf, "events")
+        .repartition(64, F.col("event_id"))
+        .write.mode("overwrite")
+        .parquet(stage),
     )
-
-    ev = t(spark, sf, "events")
-    base = stage_dir("ag_compact", sf)
-    frag = os.path.join(base, "fragments")
-    marker = os.path.join(frag, "_staged")
-    if not os.path.exists(marker):
-        shutil.rmtree(frag, ignore_errors=True)
-        ev.repartition(64, F.col("event_id")).write.mode("overwrite").parquet(
-            frag
-        )
-        write_marker(marker)
-    compact = os.path.join(base, "compacted")
+    compact = stage_dir("ag_compacted", sf)
     shutil.rmtree(compact, ignore_errors=True)
     frags = spark.read.parquet(frag)
     frags.repartitionByRange(8, F.col("ts")).write.mode("overwrite").parquet(
@@ -933,37 +908,27 @@ def partition_evolution_union(spark: SparkSession, sf: str) -> DataFrame:
     the one-shot SQL over the ORIGINAL table — evolution is a layout
     fact, not a data fact.
     """
-    from ag_data_ingestion_github_to_snowflake_spark.sources.staging import (
-        stage_dir,
-        write_marker,
-    )
 
-    ev = t(spark, sf, "events")
-    base = stage_dir("ag_part_evo", sf)
-    old = os.path.join(base, "daily")
-    new = os.path.join(base, "hourly")
-    marker = os.path.join(base, "_staged")
-    if not os.path.exists(marker):
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(new, ignore_errors=True)
+    def build(stage: str) -> None:
+        ev = t(spark, sf, "events")
         cut = F.lit("2024-01-16").cast("timestamp")
         (
             ev.filter(F.col("ts") < cut)
             .withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
-            .write.mode("overwrite")
-            .partitionBy("dt")
-            .parquet(old)
+            .write.partitionBy("dt")
+            .parquet(os.path.join(stage, "daily"))
         )
         (
             ev.filter(F.col("ts") >= cut)
             .withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
             .withColumn("hr", F.date_format("ts", "HH"))
-            .write.mode("overwrite")
-            .partitionBy("dt", "hr")
-            .parquet(new)
+            .write.partitionBy("dt", "hr")
+            .parquet(os.path.join(stage, "hourly"))
         )
-        os.makedirs(base, exist_ok=True)
-        write_marker(marker)
+
+    base = staged("ag_part_evo", sf, ["events.parquet"], build)
+    old = os.path.join(base, "daily")
+    new = os.path.join(base, "hourly")
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     facade = (
         spark.read.parquet(old).select(*cols)

@@ -1,28 +1,27 @@
-"""Shared fixture-staging helpers: collision-free temp dirs + atomic
-staleness markers.
+"""Fixture staging: one gate decides whether a staged copy is fresh.
 
-Several queries stage derived copies of a fixture table (partitioned
-rewrite, streaming source directory, JSON micro-batches) in a temp dir
-reused across calls. Two requirements the naive pattern missed:
+Several queries stage a derived copy of fixture tables (partitioned
+rewrite, streaming source directory, micro-batch files) in a temp dir
+reused across builds. ``staged`` is the only gate, and its one
+freshness rule is: the copy is reused iff its ``_staged`` marker is at
+least as new as every source path, and as every file under a source
+that is a directory. A fixture rewritten in place therefore restages
+on the next build; an unchanged one never does.
 
-- The dir key must include the WHOLE dataset path, not just its
-  basename — two roots ending in ``sf0.01`` would otherwise collide on
-  the same stage and silently serve each other's data.
-- The marker that declares "staging finished" must appear atomically
-  (write temp + rename), so a concurrent reader never observes the
-  marker before the write completes mid-sequence.
-
-Concurrent stagers of the SAME dataset may still both rebuild
-(last-rename wins — the content is identical, so either outcome is
-correct); the atomic marker only guarantees a reader never trusts a
-half-staged dir.
+- The dir key includes the WHOLE dataset path (``stage_dir``): two
+  roots ending in ``sf0.01`` never share a stage.
+- The marker appears atomically (write temp + rename) after the build,
+  so an interrupted build is never trusted. Two processes staging the
+  same dataset at the same moment are not coordinated.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import tempfile
+from collections.abc import Callable, Iterable
 
 
 def stage_dir(prefix: str, sf: str) -> str:
@@ -52,3 +51,37 @@ def write_marker(marker: str, text: str = "staged\n") -> None:
         except OSError:
             pass
         raise
+
+
+def _newest_mtime(path: str) -> float:
+    """mtime of ``path``, or of the newest file under it if it is a dir."""
+    newest = os.path.getmtime(path)
+    for root, _, files in os.walk(path):
+        for name in files:
+            newest = max(newest, os.path.getmtime(os.path.join(root, name)))
+    return newest
+
+
+def staged(
+    prefix: str, sf: str, sources: Iterable[str], build: Callable[[str], None]
+) -> str:
+    """Return ``stage_dir(prefix, sf)`` holding a fresh staged copy.
+
+    ``sources`` are the fixture paths (relative to ``sf``) the copy is
+    derived from. If the ``_staged`` marker is older than any of them,
+    or missing, the stage is emptied, ``build(stage)`` writes the copy
+    and the marker is written last. Spark's file sources skip
+    ``_``-prefixed files, so the marker never reads as data."""
+    stage = stage_dir(prefix, sf)
+    marker = os.path.join(stage, "_staged")
+    newest = max(_newest_mtime(os.path.join(sf, s)) for s in sources)
+    try:
+        if os.path.getmtime(marker) >= newest:
+            return stage
+    except OSError:
+        pass  # no marker: never staged, or staging did not finish
+    shutil.rmtree(stage, ignore_errors=True)
+    os.makedirs(stage)
+    build(stage)
+    write_marker(marker)
+    return stage

@@ -10,8 +10,9 @@ Structured Streaming:
   with ``Trigger.AvailableNow`` and ``checkpointLocation`` — restart
   resumes exactly where the last batch committed (the reference's
   last_repo_id resume, :164-286, without the hand-rolled state).
-- B45 rate-limited source: ``maxFilesPerTrigger`` / rate source rows
-  per second — the declarative analog of MAX_REQUESTS_PER_RUN.
+- B45 rate-limited source: ``maxFilesPerTrigger`` (the registry's
+  ``plans/streaming_queries.py:_one_file_per_trigger``) — the
+  declarative analog of MAX_REQUESTS_PER_RUN.
 - B46 tumbling windows (the sliding/session B47/B48 twins are
   registry queries in plans/windows_queries.py) with
 - B49 event-time watermark (late-data drop) and
@@ -30,6 +31,7 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 DEC6 = "decimal(18,6)"
 
@@ -116,45 +118,6 @@ def interval_join(
     )
 
 
-def stream_events_from_parquet(
-    spark,
-    source_dir: str,
-    schema,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """B44/B45: incremental file source with per-trigger rate cap.
-
-    ``maxFilesPerTrigger`` is the declarative MAX_REQUESTS_PER_RUN: it
-    bounds each micro-batch, and the checkpoint advances only after a
-    batch commits — the reference's watermark loop with transactional
-    offsets.
-    """
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-
-
-def run_available_now(stream_df: DataFrame, checkpoint: str, table_name: str):
-    """Drain all available input in rate-capped micro-batches, then
-    stop (Trigger.AvailableNow) — the reference's scheduled run
-    semantics (A22): each firing processes what's pending and exits.
-
-    Returns the StreamingQuery; caller awaits termination. Results
-    land in an in-memory table ``table_name`` (tests) — swap the sink
-    for parquet/kafka in production.
-    """
-    return (
-        stream_df.writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .format("memory")
-        .queryName(table_name)
-        .start()
-    )
-
-
 def stream_static_enrich(
     stream_df: DataFrame, dim_df: DataFrame, key: str, how: str = "left"
 ) -> DataFrame:
@@ -172,10 +135,9 @@ def stream_static_enrich(
 def stream_dedup_ingest(
     stream_df: DataFrame,
     path: str,
-    checkpoint: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-):
+) -> DataStreamWriter:
     """Streaming corpus curation: content-dedup every micro-batch
     against the STANDING corpus before appending — the continuously-
     growing-corpus closure of ``incremental_dedup_new_batch``.
@@ -198,7 +160,8 @@ def stream_dedup_ingest(
     corpus table (dictionary-friendly); bucket it by digest to make
     the anti-join shuffle-free.
 
-    Returns the started StreamingQuery; caller awaits termination.
+    Returns the configured writer; the caller picks trigger and
+    checkpoint and starts it.
     """
     from pyspark.sql.window import Window
 
@@ -224,25 +187,19 @@ def stream_dedup_ingest(
             fresh = fresh.join(standing, "digest", "left_anti")
         fresh.write.mode("append").parquet(path)
 
-    return (
-        stream_df.writeStream.foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    return stream_df.writeStream.foreachBatch(ingest)
 
 
 def stream_neardup_ingest(
     stream_df: DataFrame,
     path: str,
-    checkpoint: str,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-):
+) -> DataStreamWriter:
     """Streaming NEAR-dup corpus curation: every micro-batch is
     near-dedup'ed within itself AND against the standing corpus via
     MinHash-LSH bands before appending — the fuzzy closure of
@@ -275,7 +232,8 @@ def stream_neardup_ingest(
     Jaccard, and always pass — compose with exact digest dedup for
     those.
 
-    Returns the started StreamingQuery; caller awaits termination.
+    Returns the configured writer; the caller picks trigger and
+    checkpoint and starts it.
     """
     from ag_data_ingestion_github_to_snowflake_spark.operators.dedup import (
         _band_hashes,
@@ -334,9 +292,4 @@ def stream_neardup_ingest(
             survivors = indexed
         survivors.write.mode("append").parquet(path)
 
-    return (
-        stream_df.writeStream.foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    return stream_df.writeStream.foreachBatch(ingest)

@@ -201,8 +201,6 @@ def test_coverage_evidence_exists():
 # so does an entry here that gains a caller — the list only shrinks.
 UNREACHED_ALLOWLIST = {
     "operators.dedup.minhash_signatures": "reference twin of the Arrow MinHash kernel",
-    "streaming.streams.stream_events_from_parquet": "streaming test harness",
-    "streaming.streams.run_available_now": "streaming test harness",
     "sources.rest.RateLimiter": "ROADMAP item 1",
     "sources.rest.HeaderRateLimitGovernor": "ROADMAP item 1",
 }

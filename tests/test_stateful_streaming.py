@@ -6,10 +6,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ag_data_ingestion_github_to_snowflake_spark.catalog import load_table
-from ag_data_ingestion_github_to_snowflake_spark.streaming import streams as S
 from ag_data_ingestion_github_to_snowflake_spark.streaming.stateful import (
     running_user_totals,
 )
+from tests.conftest import stream_events_from_parquet
 
 SF = "/root/testdata/sf0.001"
 
@@ -25,7 +25,7 @@ def test_running_totals_match_batch_aggregate(spark, tmp_path):
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        sdf = S.stream_events_from_parquet(spark, src, ev.schema, max_files_per_trigger=1)
+        sdf = stream_events_from_parquet(spark, src, ev.schema, max_files_per_trigger=1)
         out = running_user_totals(sdf.select("user_id", "value"))
         q = (
             out.writeStream.outputMode("update")

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ag_data_ingestion_github_to_snowflake_spark.catalog import load_table
 from ag_data_ingestion_github_to_snowflake_spark.streaming import streams as S
+from tests.conftest import run_available_now, start_available_now, stream_events_from_parquet
 
 SF = "/root/testdata/sf0.001"
 
@@ -26,7 +27,7 @@ def events_split_dir(spark, tmp_path_factory):
 
 
 def _drain(spark, stream_df, checkpoint, name):
-    q = S.run_available_now(stream_df, checkpoint, name)
+    q = run_available_now(stream_df, checkpoint, name)
     q.awaitTermination(120)
     return spark.sql(f"SELECT * FROM {name}")
 
@@ -36,7 +37,7 @@ def test_streaming_tumbling_equals_batch(spark, events_split_dir, tmp_path):
     ev = load_table(spark, SF, "events")
     batch = S.tumbling_counts(ev)
 
-    sdf = S.stream_events_from_parquet(spark, events_split_dir, ev.schema, max_files_per_trigger=2)
+    sdf = stream_events_from_parquet(spark, events_split_dir, ev.schema, max_files_per_trigger=2)
     # complete-mode agg over availableNow: use watermark+append via
     # sorted windows; simpler: run aggregation in update-less complete
     # mode through foreachBatch-free memory sink requires complete mode.
@@ -62,7 +63,7 @@ def test_streaming_checkpoint_resume(spark, events_split_dir, tmp_path):
     out = str(tmp_path / "out2")
 
     def run_once():
-        sdf = S.stream_events_from_parquet(spark, events_split_dir, ev.schema)
+        sdf = stream_events_from_parquet(spark, events_split_dir, ev.schema)
         q = (
             sdf.select("event_id")
             .writeStream.outputMode("append")
@@ -86,8 +87,8 @@ def test_streaming_checkpoint_resume(spark, events_split_dir, tmp_path):
 def test_streaming_rate_cap_batches(spark, events_split_dir, tmp_path):
     """B45: maxFilesPerTrigger=1 over 4 files -> 4 micro-batches."""
     ev = load_table(spark, SF, "events")
-    sdf = S.stream_events_from_parquet(spark, events_split_dir, ev.schema, max_files_per_trigger=1)
-    q = S.run_available_now(sdf.select("event_id"), str(tmp_path / "cp3"), "rated")
+    sdf = stream_events_from_parquet(spark, events_split_dir, ev.schema, max_files_per_trigger=1)
+    q = run_available_now(sdf.select("event_id"), str(tmp_path / "cp3"), "rated")
     q.awaitTermination(120)
     batches = [p["batchId"] for p in q.recentProgress]
     assert len([b for b in batches if b is not None]) >= 4
@@ -100,7 +101,7 @@ def test_streaming_dedup_drops_duplicates(spark, tmp_path):
     ev.write.mode("overwrite").parquet(src)
     ev.write.mode("append").parquet(src)  # duplicate every row
 
-    sdf = S.stream_events_from_parquet(spark, src, ev.schema, max_files_per_trigger=100)
+    sdf = stream_events_from_parquet(spark, src, ev.schema, max_files_per_trigger=100)
     deduped = S.dedup_stream(sdf, ["event_id"], delay="1 hour")
     got = _drain(spark, deduped.select("event_id"), str(tmp_path / "cp4"), "dedup1")
     assert got.count() == 200
@@ -132,12 +133,12 @@ def test_interval_join_horizon_bounds(spark, tmp_path):
     )
     assert [(r.l_event_id, r.r_event_id) for r in batch.collect()] == [(1, 2)]
 
-    sdf = S.stream_events_from_parquet(spark, src, ev.schema)
+    sdf = stream_events_from_parquet(spark, src, ev.schema)
     stream = S.interval_join(
         sdf.filter(F.col("event_type") == "click"),
         sdf.filter(F.col("event_type") == "purchase"),
     )
-    q = S.run_available_now(stream, str(tmp_path / "ij_cp"), "ij_out")
+    q = run_available_now(stream, str(tmp_path / "ij_cp"), "ij_out")
     q.awaitTermination(120)
     got = spark.sql("SELECT l_event_id, r_event_id FROM ij_out").collect()
     assert [(r.l_event_id, r.r_event_id) for r in got] == [(1, 2)]
@@ -196,7 +197,7 @@ def test_late_row_dropped_in_stream_present_in_batch(spark, tmp_path):
     }
     assert batch_n == {"10:00": 3}  # batch sees the late row
 
-    sdf = S.stream_events_from_parquet(spark, src, files.schema, max_files_per_trigger=1)
+    sdf = stream_events_from_parquet(spark, src, files.schema, max_files_per_trigger=1)
     agg = S.tumbling_counts(S.with_watermark(sdf, "10 minutes"))
     q = (
         agg.writeStream.outputMode("append")
@@ -227,7 +228,7 @@ def test_streaming_dedup_rocksdb_state_store(spark, events_split_dir):
     key = "spark.sql.streaming.stateStore.providerClass"
     before = spark.conf.get(key, None)
     ev = load_table(spark, SF, "events")
-    sdf = S.stream_events_from_parquet(
+    sdf = stream_events_from_parquet(
         spark, events_split_dir, ev.schema, max_files_per_trigger=2
     )
     plan = S.dedup_stream(sdf.withColumn("ts", F.col("ts").cast("timestamp")), ["user_id"])
@@ -246,7 +247,7 @@ def test_stream_static_enrich_equals_batch(spark, events_split_dir, tmp_path):
     )
     batch = ev.join(dim, "user_id", "left").groupBy("tier").count()
 
-    sdf = S.stream_events_from_parquet(spark, events_split_dir, ev.schema, max_files_per_trigger=2)
+    sdf = stream_events_from_parquet(spark, events_split_dir, ev.schema, max_files_per_trigger=2)
     got = _drain(
         spark,
         S.stream_static_enrich(sdf, dim, "user_id"),
@@ -289,7 +290,7 @@ def test_stream_dedup_ingest_curates_growing_corpus(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(src)
     )
-    q = S.stream_dedup_ingest(sdf, table, str(tmp_path / "cur_cp"))
+    q = start_available_now(S.stream_dedup_ingest(sdf, table), str(tmp_path / "cur_cp"))
     assert q.awaitTermination(120)
     out = spark.read.parquet(table).select("doc_id", "text").collect()
     assert sorted((r.text, r.doc_id) for r in out) == [
@@ -334,7 +335,7 @@ def test_stream_neardup_ingest_blocks_fuzzy_rearrivals(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(src)
     )
-    q = S.stream_neardup_ingest(sdf, table, str(tmp_path / "nd_cp"))
+    q = start_available_now(S.stream_neardup_ingest(sdf, table), str(tmp_path / "nd_cp"))
     assert q.awaitTermination(120)
     out = spark.read.parquet(table)
     assert set(out.columns) >= {"doc_id", "text", "hshingle", "bands"}
@@ -371,7 +372,7 @@ def test_stream_neardup_ingest_replay_idempotent(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .json(src)
         )
-        q = S.stream_neardup_ingest(sdf, table, str(tmp_path / cp))
+        q = start_available_now(S.stream_neardup_ingest(sdf, table), str(tmp_path / cp))
         assert q.awaitTermination(120)
 
     drain("rp_cp1")
@@ -466,7 +467,7 @@ def test_crash_mid_drain_restart_recovers_exactly_once(spark, tmp_path):
         return sink
 
     def drain(fail_at):
-        sdf = S.stream_events_from_parquet(
+        sdf = stream_events_from_parquet(
             spark, src, ev.schema, max_files_per_trigger=1
         )
         q = (
@@ -504,18 +505,26 @@ def test_crash_mid_drain_restart_recovers_exactly_once(spark, tmp_path):
     assert got.exceptAll(ev).count() == 0 and ev.exceptAll(got).count() == 0
 
 
-def test_failed_drain_leaves_no_checkpoint_dir_or_memory_table(spark):
+def test_failed_drain_leaves_no_checkpoint_dir_or_memory_table(spark, monkeypatch):
     """A drain whose query raises still tears down its checkpoint dir
-    and its memory-sink view."""
+    and its memory-sink view; a foreachBatch drain whose batch function
+    raises (the SCD2 upsert's merge) stops its query and removes its
+    checkpoint and per-run history dirs too."""
     import glob
     import tempfile
 
     from pyspark.sql.types import LongType
 
+    from ag_data_ingestion_github_to_snowflake_spark.operators import scd
     from ag_data_ingestion_github_to_snowflake_spark.plans import streaming_queries as SQ
+    from ag_data_ingestion_github_to_snowflake_spark.plans.registry import all_specs
 
     def cps():
-        return set(glob.glob(os.path.join(tempfile.gettempdir(), "ag_stream_cp_*")))
+        return {
+            p
+            for pattern in ("ag_stream_cp_*", "ag_scd2_cp_*", "ag_scd2_hist_*")
+            for p in glob.glob(os.path.join(tempfile.gettempdir(), pattern))
+        }
 
     def mem_tables():
         return {t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")}
@@ -530,3 +539,12 @@ def test_failed_drain_leaves_no_checkpoint_dir_or_memory_table(spark):
         SQ._drain(sdf.select(boom("event_id").alias("x")), spark, "append")
     assert cps() - cps0 == set()
     assert mem_tables() - mem0 == set()
+
+    def merge_boom(*args, **kwargs):
+        raise ValueError("merge boom")
+
+    monkeypatch.setattr(scd, "scd2_from_changes", merge_boom)
+    with pytest.raises(Exception, match="merge boom"):
+        all_specs()["streaming_scd2_upsert"].build(spark, SF)
+    assert not spark.streams.active
+    assert cps() - cps0 == set()

@@ -35,11 +35,11 @@ MODULE_EVIDENCE = {
     "A16": [], "A17": [], "A18": [], "A19": [],
     "A20": ["sources/rest.py:HeaderRateLimitGovernor (X-RateLimit parse + reset backoff)", "tests/test_rate_governor.py"],
     "A21": ["pipeline/github.py:incremental_extract", "sources/sinks.py:roll_forward (a rerun finishes a published batch or re-fetches an unpublished one)", "tests/test_cli.py::test_cli_crash_at_any_commit_step_lands_each_batch_once"],
-    "A22": ["__main__.py:run (one batch per scheduled firing, resumed from the watermark)", "examples/scheduled-extraction.yml (the reference's hourly cron)", "plans/streaming_queries.py:_drain (the AvailableNow drain of the streaming registry queries)", "tests/test_packaging.py::test_scheduler_example_mirrors_reference_cadence"],
+    "A22": ["__main__.py:run (one batch per scheduled firing, resumed from the watermark)", "examples/scheduled-extraction.yml (the reference's hourly cron)", "plans/streaming_queries.py:_run_available_now + _drain (the one AvailableNow drain of the streaming registry queries)", "tests/test_packaging.py::test_scheduler_example_mirrors_reference_cadence"],
     "B3": ["sources/sinks.py:partitioned_append", "tests/test_ingestion.py::test_partitioned_sink_layout"],
     "B29": ["pipeline/github.py:latest_snapshot (dedupe-to-latest)"],
     "B44": ["streaming/streams.py (incl. interval_join)", "tests/test_streaming.py::test_streaming_checkpoint_resume"],
-    "B45": ["streaming/streams.py:stream_events_from_parquet", "tests/test_streaming.py::test_streaming_rate_cap_batches"],
+    "B45": ["plans/streaming_queries.py:_one_file_per_trigger", "tests/test_streaming.py::test_streaming_rate_cap_batches"],
     "B49": ["streaming/streams.py:with_watermark", "tests/test_streaming.py"],
     "B50": ["streaming/streams.py:dedup_stream", "tests/test_streaming.py::test_streaming_dedup_drops_duplicates"],
     "B51": ["operators/multimodal.py (mapInPandas kernels)"],
