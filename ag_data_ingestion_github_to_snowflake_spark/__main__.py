@@ -19,7 +19,9 @@ publishes them with the new watermark as one commit record
 row; each run first finishes or drops an earlier run's commit, so a
 crash never lands a batch twice. A batch is one Spark action — the
 staged sink write, or a ``noop`` write under ``--skip-upload`` — and
-its run counters are observed on that action.
+its run counters are observed on that action. A list page or lookup
+that still fails after its retries (``sources/rest.py``) raises out of
+the batch before its commit, so the next run re-fetches the batch.
 """
 
 from __future__ import annotations
@@ -114,67 +116,69 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
 
         spark = get_spark()
 
-    print("GitHub Data Extraction - Two-Step Process (Spark)", file=sys.stderr)
-    print(
-        f"  sink={sink_path} state={state_path} test_mode={test_mode} "
-        f"use_cache={args.use_cache} skip_upload={skip_upload}",
-        file=sys.stderr,
-    )
-
-    if test_mode:
-        transport = StubTransport(n_repos=args.n_repos)
-    else:  # pragma: no cover - network path, exercised via stub in tests
-        transport = http_transport(args.base_url, env_cfg.token)
-
-    os.makedirs(os.path.dirname(state_path) or ".", exist_ok=True)
-    state = FileWatermark(state_path)
-    # Before anything reads the sink or the watermark.
-    roll_forward(sink_path, state)
-    since = state.get()
-    if args.use_cache and os.path.exists(sink_path):
-        # A3: bronze cache seed — never re-fetch ids already sunk.
-        from pyspark.sql import functions as F
-
-        cached_max = (
-            spark.read.parquet(sink_path).agg(F.max("id")).collect()[0][0]
+    try:
+        print("GitHub Data Extraction - Two-Step Process (Spark)", file=sys.stderr)
+        print(
+            f"  sink={sink_path} state={state_path} test_mode={test_mode} "
+            f"use_cache={args.use_cache} skip_upload={skip_upload}",
+            file=sys.stderr,
         )
-        if cached_max is not None:
-            since = max(since, int(cached_max))
 
-    result = incremental_extract(
-        spark,
-        transport,
-        since,
-        per_page=env_cfg.per_page,
-        max_requests_per_run=env_cfg.max_requests_per_run,
-        max_pages=args.max_pages,
-    )
+        if test_mode:
+            transport = StubTransport(n_repos=args.n_repos)
+        else:  # pragma: no cover - network path, exercised via stub in tests
+            transport = http_transport(args.base_url, env_cfg.token)
 
-    if skip_upload:
-        result.valid.write.format("noop").mode("overwrite").save()
-    else:
-        partitioned_append(result.valid, stage_path(sink_path), ts_col="updated_at")
-    metrics = result.metrics(test_mode)
-    uploaded = not skip_upload and metrics["valid_count"] > 0
-    if uploaded:
-        write_run_metrics(
-            metrics_row(spark, metrics), stage_path(sink_path, "_run_metrics")
+        os.makedirs(os.path.dirname(state_path) or ".", exist_ok=True)
+        state = FileWatermark(state_path)
+        # Before anything reads the sink or the watermark.
+        roll_forward(sink_path, state)
+        since = state.get()
+        if args.use_cache and os.path.exists(sink_path):
+            # A3: bronze cache seed — never re-fetch ids already sunk.
+            from pyspark.sql import functions as F
+
+            cached_max = (
+                spark.read.parquet(sink_path).agg(F.max("id")).collect()[0][0]
+            )
+            if cached_max is not None:
+                since = max(since, int(cached_max))
+
+        result = incremental_extract(
+            spark,
+            transport,
+            since,
+            per_page=env_cfg.per_page,
+            max_requests_per_run=env_cfg.max_requests_per_run,
+            max_pages=args.max_pages,
         )
-    # An empty batch stages no parquet file, so it moves none into the sink.
-    publish_batch(sink_path, state, result.new_watermark)
 
-    summary = {
-        "success": True,
-        "valid_count": metrics["valid_count"],
-        "invalid_count": metrics["invalid_count"],
-        "new_watermark": result.new_watermark,
-        "uploaded": uploaded,
-        "sink_path": sink_path if not skip_upload else None,
-        "test_mode": test_mode,
-    }
-    print(json.dumps(summary))
-    if own_session:
-        spark.stop()
+        if skip_upload:
+            result.valid.write.format("noop").mode("overwrite").save()
+        else:
+            partitioned_append(result.valid, stage_path(sink_path), ts_col="updated_at")
+        metrics = result.metrics(test_mode)
+        uploaded = not skip_upload and metrics["valid_count"] > 0
+        if uploaded:
+            write_run_metrics(
+                metrics_row(spark, metrics), stage_path(sink_path, "_run_metrics")
+            )
+        # An empty batch stages no parquet file, so it moves none into the sink.
+        publish_batch(sink_path, state, result.new_watermark)
+
+        summary = {
+            "success": True,
+            "valid_count": metrics["valid_count"],
+            "invalid_count": metrics["invalid_count"],
+            "new_watermark": result.new_watermark,
+            "uploaded": uploaded,
+            "sink_path": sink_path if not skip_upload else None,
+            "test_mode": test_mode,
+        }
+        print(json.dumps(summary))
+    finally:
+        if own_session:
+            spark.stop()
     return summary
 
 

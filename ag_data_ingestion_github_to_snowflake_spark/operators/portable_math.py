@@ -1,4 +1,4 @@
-"""Portable transcendentals: bit-identical ln/exp/log10/pow across engines.
+"""Portable transcendentals: bit-identical ln/exp/log10 across engines.
 
 Why this exists (VERDICT r11 item 5): libm's ``ln``/``exp``/``pow`` are
 NOT required to be correctly rounded by IEEE 754, so their results can
@@ -25,8 +25,7 @@ Algorithms (classical range-reduction, public-domain math):
 - ``exp(x)``: ``t = exp(x/4096)`` by the 13-term Taylor Horner
   (|x/4096| <= 0.174 over exp's entire non-over/underflowing domain),
   then square ``t`` twelve times.
-- ``log10(x) = ln(x) * (1/ln 10)`` and ``pow(a,b) = exp(b*ln(a))``
-  with literal constants.
+- ``log10(x) = ln(x) * (1/ln 10)`` with a literal constant.
 
 Accuracy: the 4096x error amplification of the reduction bounds the
 absolute error of ``ln`` at ~3e-12 and the relative error of ``exp``
@@ -57,10 +56,8 @@ __all__ = [
     "portable_ln_sql",
     "portable_exp_sql",
     "portable_log10_sql",
-    "portable_pow_sql",
     "floor_e6_sql",
     "floor_e6",
-    "floor_e9_sql",
     "ordered_sum",
     "ordered_sum_sql",
     "LN10_INV",
@@ -136,19 +133,6 @@ def portable_log10_sql(arg: str, dialect: str, prefix: str = "pl10") -> str:
     return f"({portable_ln_sql(arg, dialect, prefix)} * {LN10_INV})"
 
 
-def portable_pow_sql(
-    base: str, expo: str, dialect: str, prefix: str = "ppw"
-) -> str:
-    """SQL text computing pow(base, expo) = exp(expo * ln(base)).
-
-    Requires base > 0 (same contract as portable_ln).
-    """
-    ln_b = portable_ln_sql(base, dialect, prefix=f"{prefix}l")
-    return portable_exp_sql(
-        f"(CAST({expo} AS DOUBLE) * {ln_b})", dialect, prefix=f"{prefix}e"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Hash-contract companions: floor-1e6 quantization and the ordered fold
 # ---------------------------------------------------------------------------
@@ -168,14 +152,6 @@ def floor_e6(col):
     from pyspark.sql import functions as F
 
     return F.floor(F.lit(1000000.0) * col).cast("bigint")
-
-
-def floor_e9_sql(arg: str) -> str:
-    """``CAST(floor(1e9 * x) AS BIGINT)`` — the per-TERM quantizer for
-    order-free integer sums (quantize each portable-ln/exp term to an
-    exact 1e-9 grain, then plain BIGINT SUM instead of an ordered
-    fold). Works verbatim in both dialects."""
-    return f"CAST(floor(1000000000.0 * ({arg})) AS BIGINT)"
 
 
 def ordered_sum(term, *keys):

@@ -1,12 +1,23 @@
 """Paginated REST source (GitHub-repos-shaped) with injectable transport.
 
 Re-expresses the reference's ingestion operators Spark-first
-(/root/reference/src/extract_github_data.py):
+(the reference's ``src/extract_github_data.py``):
 
 - A1 paginated list scan (``GET /repositories?since&per_page``, :394-435)
 - A2 point-lookup detail enrichment (``GET /repos/{owner}/{repo}``, :438-491)
 - A5 header/auth construction (:351-369)
-- A20 rate-limit governor (:372-391)
+- A20 rate limits (:372-391): ``http_transport`` retries a transient
+  call (429, 5xx, 599, or a 403 with ``Retry-After`` or
+  ``X-RateLimit-Remaining: 0``) up to ``RETRY_ATTEMPTS`` times. It waits
+  ``Retry-After``, else until ``X-RateLimit-Reset``, else an exponential
+  backoff (``_retry_wait_s``), and stops once a wait exceeds
+  ``MAX_RETRY_WAIT_S``. A rate-limited 403 that still fails returns 429.
+
+Failure policy (A14): a lookup whose final status is in ``GONE`` yields
+no row; any other failed lookup, and any failed list page, raises. The
+raise fails the batch's one action before its commit, so the watermark
+stays put and the next run lists the batch again: a transient failure
+never drops a repository.
 
 Architecture: ``keyset_pages`` is the one keyset pager; the driver-side
 list scan (``fetch_repo_list``/``list_scan_df``) takes its first
@@ -33,7 +44,6 @@ import urllib.error
 import urllib.parse
 import urllib.request
 from collections.abc import Callable, Iterator
-from dataclasses import dataclass, field
 from itertools import islice
 
 import pyarrow as pa
@@ -46,6 +56,14 @@ Transport = Callable[[str, dict], tuple[int, object]]
 
 # Each lookup task holds one API stream, so this bounds the concurrent streams.
 MAX_LOOKUP_TASKS = 8
+
+# Tries per call, the first included, while its status is transient.
+RETRY_ATTEMPTS = 4
+# The reference's own back-off. A longer wait (an hour-long rate-limit
+# reset) fails the call instead of parking a Spark task.
+MAX_RETRY_WAIT_S = 60.0
+# Final lookup statuses that mean the repository is gone: skip its row.
+GONE = frozenset({403, 404, 410, 451})
 
 LIST_SCHEMA = T.StructType(
     [
@@ -84,11 +102,55 @@ RAW_DETAIL_SCHEMA = T.StructType(
 )
 
 
+def _number(value) -> float | None:
+    """A header's value as finite, non-negative seconds or count, else None."""
+    try:
+        number = float(value)
+    except (TypeError, ValueError):
+        return None
+    return number if 0.0 <= number < float("inf") else None
+
+
+def _transient(status: int, headers: dict) -> bool:
+    """A call worth retrying: rate-limited (429, or a 403 carrying the
+    rate-limit headers), a server error, or no usable response (599)."""
+    h = {str(k).lower(): v for k, v in (headers or {}).items()}
+    return (
+        status == 429
+        or 500 <= status <= 599
+        or (status == 403 and ("retry-after" in h or _number(h.get("x-ratelimit-remaining")) == 0))
+    )
+
+
+def _retry_wait_s(status: int, headers: dict, attempt: int, now: float) -> float | None:
+    """Seconds to wait before retrying a call that ended ``status`` with
+    ``headers`` (names in any case) on its ``attempt``-th try (0-based),
+    or ``None`` when it must not be retried: it is not ``_transient``,
+    or the wait would exceed ``MAX_RETRY_WAIT_S``.
+
+    The wait is ``Retry-After``; else, when ``X-RateLimit-Remaining`` is
+    0, the time until ``X-RateLimit-Reset`` (epoch seconds), never less
+    than the backoff so a reset already past does not retry at once;
+    else the exponential backoff ``2 ** attempt``."""
+    h = {str(k).lower(): v for k, v in (headers or {}).items()}
+    if not _transient(status, h):
+        return None
+    backoff = 2.0**attempt
+    wait = _number(h.get("retry-after"))
+    if wait is None:
+        reset = _number(h.get("x-ratelimit-reset"))
+        spent = _number(h.get("x-ratelimit-remaining")) == 0
+        wait = max(reset - now, backoff) if spent and reset is not None else backoff
+    return wait if wait <= MAX_RETRY_WAIT_S else None
+
+
 def http_transport(base_url: str, token: str | None = None) -> Transport:
     """Real-network transport (urllib). Headers mirror the reference's
-    ``get_api_headers`` (:351-369): token switches the rate tier."""
+    ``get_api_headers`` (:351-369): token switches the rate tier. A
+    transient call is retried per ``_retry_wait_s``; the returned status
+    is the last try's, a rate-limited 403 reported as 429."""
 
-    def call(path: str, params: dict) -> tuple[int, object]:
+    def send(path: str, params: dict) -> tuple[int, object, dict]:
         query = urllib.parse.urlencode(params)
         url = f"{base_url}{path}" + (f"?{query}" if query else "")
         req = urllib.request.Request(url)
@@ -97,13 +159,24 @@ def http_transport(base_url: str, token: str | None = None) -> Transport:
             req.add_header("Authorization", f"Bearer {token}")
         try:
             with urllib.request.urlopen(req, timeout=30) as resp:
-                return resp.status, json.loads(resp.read().decode())
-        except urllib.error.HTTPError as e:  # 404 etc: row-skip, not crash
-            return e.code, None
+                return resp.status, json.loads(resp.read().decode()), dict(resp.headers)
+        except urllib.error.HTTPError as e:
+            return e.code, None, dict(e.headers or {})
         # urllib wraps only send errors (URLError, an OSError); a dropped,
-        # truncated, timed-out or non-JSON response raises raw. Row-skip all.
+        # truncated, timed-out or non-JSON response raises raw. All are 599.
         except (OSError, http.client.HTTPException, ValueError):
-            return 599, None
+            return 599, None, {}
+
+    def call(path: str, params: dict) -> tuple[int, object]:
+        for attempt in range(RETRY_ATTEMPTS):
+            status, payload, headers = send(path, params)
+            wait = _retry_wait_s(status, headers, attempt, time.time())
+            if wait is None or attempt == RETRY_ATTEMPTS - 1:
+                break
+            time.sleep(wait)
+        if status == 403 and _transient(status, headers):
+            status = 429  # rate-limited, not forbidden: the lookup must not skip
+        return status, payload
 
     return call
 
@@ -113,14 +186,17 @@ def keyset_pages(transport: Transport, since: int, per_page: int) -> Iterator[li
     rows as ``LIST_SCHEMA`` tuples, ids strictly increasing past ``since``.
 
     Ids ``<= cursor`` (replayed or stale rows) are dropped. The scan
-    stops on a non-200 or empty response, on a page that does not
-    advance the cursor and after a short page. Callers apply their own
+    stops on an empty response, on a page that does not advance the
+    cursor and after a short page; a non-200 page raises, so a failed
+    scan is never reported as an empty one. Callers apply their own
     bounds by no longer iterating, so no page past them is requested.
     """
     cursor = since
     while True:
         status, payload = transport("/repositories", {"since": cursor, "per_page": per_page})
-        if status != 200 or not payload:
+        if status != 200:
+            raise RuntimeError(f"list page since={cursor} ended with status {status}")
+        if not payload:
             return
         page = []
         for r in payload:
@@ -182,9 +258,10 @@ def enrich_details(list_df: DataFrame, transport: Transport) -> DataFrame:
 
     The list relation's per-core slices are coalesced (narrow, no
     shuffle) to at most ``MAX_LOOKUP_TASKS`` tasks. Each task drives
-    its own transport connection; a failed or 404 lookup yields no row
-    (A14 skip semantics). The reference does this loop serially on one
-    thread (:677-714); here tasks fetch concurrently and the output is
+    its own transport connection. A lookup ending in a ``GONE`` status
+    yields no row (A14 skip semantics); any other non-200 raises, which
+    fails the batch before its commit (module docstring). The reference
+    does this loop serially on one thread (:677-714); here tasks fetch concurrently and the output is
     the *nested raw* record, flattening happens downstream
     (pipeline.github.flatten_repos).
     """
@@ -197,8 +274,12 @@ def enrich_details(list_df: DataFrame, transport: Transport) -> DataFrame:
                 status, payload = transport(
                     f"/repos/{row['owner_login']}/{row['name']}", {}
                 )
+                if status in GONE:
+                    continue  # the repository is gone: row-skip (:480-491)
                 if status != 200 or payload is None:
-                    continue  # 404 / error row-skip (:480-491)
+                    raise RuntimeError(
+                        f"lookup of repository id {row['id']} ended with status {status}"
+                    )
                 p = payload
                 owner = p.get("owner") or {}
                 out.append(
@@ -226,112 +307,3 @@ def enrich_details(list_df: DataFrame, transport: Transport) -> DataFrame:
             )
 
     return list_df.coalesce(MAX_LOOKUP_TASKS).mapInPandas(kernel, RAW_DETAIL_SCHEMA)
-
-
-@dataclass
-class RateLimiter:
-    """A20 token-budget governor (DRIVER-SIDE ONLY).
-
-    Counts calls against a deterministic per-run budget. This object is
-    plain Python state: if its ``wrap``-ed transport is shipped inside a
-    mapInPandas closure, cloudpickle copies it per task and each
-    partition counts independently — the budget silently becomes
-    budget × partitions. Distributed enforcement therefore comes from
-    the structural ``rows[:budget]`` cap in ``list_scan_df`` (each
-    surviving row costs exactly one detail call); use this class only
-    for driver-side call loops, and ``HeaderRateLimitGovernor`` for the
-    server-reported X-RateLimit protocol."""
-
-    budget: int
-    used: int = 0
-    warn_threshold: int = 5
-    warnings: list[str] = field(default_factory=list)
-
-    def acquire(self) -> bool:
-        if self.used >= self.budget:
-            return False
-        self.used += 1
-        remaining = self.budget - self.used
-        if remaining < self.warn_threshold:
-            self.warnings.append(f"rate budget low: {remaining} remaining")
-        return True
-
-    def wrap(self, transport: Transport) -> Transport:
-        def call(path: str, params: dict) -> tuple[int, object]:
-            if not self.acquire():
-                return 403, None  # budget exhausted ≡ rate-limited
-            return transport(path, params)
-
-        return call
-
-
-# transport variant that also exposes response headers:
-# (path, params) -> (status, payload, headers)
-HeaderTransport = Callable[[str, dict], tuple[int, object, dict]]
-
-
-@dataclass
-class HeaderRateLimitGovernor:
-    """A20 header-driven rate-limit governor (driver-side call loops).
-
-    Mirrors the reference's ``check_rate_limit`` behaviour
-    (/root/reference/src/extract_github_data.py:372-391) against the
-    public ``X-RateLimit-Remaining`` / ``X-RateLimit-Reset`` protocol:
-
-    - after every response, parse the remaining-quota and reset-epoch
-      headers (case-insensitively; absent headers leave state unchanged);
-    - warn once the server-reported remaining drops below
-      ``warn_threshold`` (reference warns below 5);
-    - before the next call after quota exhaustion, back off until the
-      server's reset time (never less than ``min_backoff_s``, the
-      reference's fixed 60 s sleep), using an injectable clock/sleeper
-      so tests drive the schedule deterministically.
-    """
-
-    clock: Callable[[], float] = time.time
-    sleeper: Callable[[float], None] = time.sleep
-    warn_threshold: int = 5
-    min_backoff_s: float = 60.0
-    remaining: int | None = None
-    reset_at: float | None = None
-    warnings: list[str] = field(default_factory=list)
-    backoffs: list[float] = field(default_factory=list)
-
-    def observe(self, headers: dict) -> None:
-        """Ingest X-RateLimit-* headers from one response."""
-        lowered = {str(k).lower(): v for k, v in (headers or {}).items()}
-        if "x-ratelimit-remaining" in lowered:
-            self.remaining = int(lowered["x-ratelimit-remaining"])
-            if self.remaining < self.warn_threshold:
-                self.warnings.append(
-                    f"rate limit low: {self.remaining} requests remaining"
-                )
-        if "x-ratelimit-reset" in lowered:
-            self.reset_at = float(lowered["x-ratelimit-reset"])
-
-    def before_call(self) -> None:
-        """Block (via the injected sleeper) if the server said we're out."""
-        if self.remaining is not None and self.remaining <= 0:
-            now = self.clock()
-            wait = self.min_backoff_s
-            if self.reset_at is not None:
-                wait = max(self.reset_at - now, self.min_backoff_s)
-            self.backoffs.append(wait)
-            self.sleeper(wait)
-            # After sleeping through the reset we assume a fresh window;
-            # the next observe() re-syncs with the server's real count.
-            self.remaining = None
-            self.reset_at = None
-
-    def wrap(self, transport: HeaderTransport) -> Transport:
-        """Governed transport: backoff-gate each call, observe headers,
-        and return the plain (status, payload) shape downstream code
-        expects."""
-
-        def call(path: str, params: dict) -> tuple[int, object]:
-            self.before_call()
-            status, payload, headers = transport(path, params)
-            self.observe(headers)
-            return status, payload
-
-        return call

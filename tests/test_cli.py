@@ -335,3 +335,86 @@ def test_cli_crash_at_any_commit_step_lands_each_batch_once(spark, tmp_path, mon
     assert last == [59 * (b + 1) for b in range(batches)]
     assert int(wm.read_text()) == 59 * batches
     assert not os.path.exists(pending)
+
+
+def _faulty_stub(status: int, fault: str):
+    """A stub server whose lookups of ids % 7 == 0 (``fault="lookup"``)
+    or whose list pages (``fault="list_page"``) answer ``status``."""
+    from ag_data_ingestion_github_to_snowflake_spark.sources.stub import StubTransport
+
+    class Faulty(StubTransport):
+        def __call__(self, path, params):
+            if fault == "list_page" and path == "/repositories":
+                return status, None
+            if fault == "lookup" and path.startswith("/repos/") and int(path.rsplit("-", 1)[1]) % 7 == 0:
+                return status, None
+            return super().__call__(path, params)
+
+    return Faulty
+
+
+@pytest.mark.parametrize("fault", ["lookup", "list_page"])
+def test_cli_transient_failure_fails_the_batch_and_loses_no_repository(
+    spark, tmp_path, monkeypatch, fault
+):
+    """One clean batch, then a batch whose lookups of id % 7 (or whose
+    list page) still answer 503 after the transport's retries: the run
+    raises and publishes nothing, so the next run finds the sink, the
+    ``_run_metrics`` rows and the watermark as the clean batch left them
+    and lists the failed batch again. Every id lands exactly once."""
+    import os
+
+    from ag_data_ingestion_github_to_snowflake_spark.sources import stub
+    from ag_data_ingestion_github_to_snowflake_spark.sources.sinks import roll_forward
+    from ag_data_ingestion_github_to_snowflake_spark.sources.state import FileWatermark
+
+    monkeypatch.delenv("MAX_REQUESTS_PER_RUN", raising=False)
+    monkeypatch.delenv("GITHUB_TOKEN", raising=False)
+    sink = str(tmp_path / "sink")
+    wm = tmp_path / "wm.txt"
+    argv = ["--test-mode", "--n-repos", "300", "--sink", sink, "--state", str(wm)]
+
+    def committed():
+        ids = sorted(r.id for r in spark.read.parquet(sink).select("id").collect())
+        metrics = sorted(tuple(r) for r in spark.read.parquet(sink + "_run_metrics").drop("extraction_date").collect())
+        return ids, metrics, wm.read_text()
+
+    run(argv, spark=spark)
+    before = committed()
+    with monkeypatch.context() as m:
+        m.setattr(stub, "StubTransport", _faulty_stub(503, fault))
+        with pytest.raises(Exception, match="status 503"):
+            run(argv, spark=spark)
+    roll_forward(sink, FileWatermark(str(wm)))
+    assert committed() == before
+    assert not os.path.exists(sink + "_pending")
+
+    run(argv, spark=spark)
+    run(argv, spark=spark)
+    # Each batch is one list page and 59 lookups; the stub 404s on id % 19
+    # and returns invalid rows on id % 13 and id % 17.
+    want = [i for i in range(1, 59 * 3 + 1) if i % 19 and i % 13 and i % 17]
+    assert committed()[0] == want
+    last = sorted(r.last_repo_id for r in spark.read.parquet(sink + "_run_metrics").collect())
+    assert last == [59, 118, 177]
+    assert int(wm.read_text()) == 177
+
+
+@pytest.mark.parametrize("gone", [403, 410, 451])
+def test_cli_gone_lookups_are_skipped_and_the_watermark_advances(spark, tmp_path, monkeypatch, gone):
+    """A repository whose lookup ends forbidden, gone or unavailable for
+    legal reasons yields no row, as a 404 does (the stub's id % 19); the
+    batch still commits and moves the watermark past it."""
+    from ag_data_ingestion_github_to_snowflake_spark.sources import stub
+
+    monkeypatch.delenv("MAX_REQUESTS_PER_RUN", raising=False)
+    monkeypatch.delenv("GITHUB_TOKEN", raising=False)
+    monkeypatch.setattr(stub, "StubTransport", _faulty_stub(gone, "lookup"))
+    sink = str(tmp_path / "sink")
+    wm = tmp_path / "wm.txt"
+    summary = run(
+        ["--test-mode", "--n-repos", "300", "--sink", sink, "--state", str(wm)], spark=spark
+    )
+    assert summary["new_watermark"] == int(wm.read_text()) == 59
+    ids = sorted(r.id for r in spark.read.parquet(sink).select("id").collect())
+    assert ids == [i for i in range(1, 60) if i % 7 and i % 19 and i % 13 and i % 17]

@@ -1,11 +1,13 @@
 """Ingestion-layer tests with a stubbed REST transport (SURVEY §5.5):
 pagination, resume-from-watermark, 404-skip, validation split,
-idempotent dedup, partitioned sink layout, rate budget.
+idempotent dedup, partitioned sink layout, the HTTP transport's retries.
 """
 
 from __future__ import annotations
 
 import os
+import time
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,7 +20,6 @@ from ag_data_ingestion_github_to_snowflake_spark.pipeline.github import (
     validation_split,
 )
 from ag_data_ingestion_github_to_snowflake_spark.sources.rest import (
-    RateLimiter,
     enrich_details,
     list_scan_df,
 )
@@ -144,18 +145,6 @@ def test_partitioned_sink_layout(spark, tmp_path):
     assert 0 < one_day.count() < flat.count()
 
 
-def test_rate_limiter_budget(spark):
-    tr = StubTransport(n_repos=50)
-    rl = RateLimiter(budget=5)
-    wrapped = rl.wrap(tr)
-    for _ in range(5):
-        status, _ = wrapped("/repositories", {"since": 0, "per_page": 1})
-        assert status == 200
-    status, payload = wrapped("/repositories", {"since": 0, "per_page": 1})
-    assert status == 403 and payload is None
-    assert rl.warnings  # low-budget warning fired (<5 remaining)
-
-
 def test_file_watermark_rejects_corrupt_state(tmp_path):
     """Only a missing state file reads as the default; a corrupt or
     empty one must stop the run instead of re-listing from id 0."""
@@ -211,33 +200,34 @@ def test_observed_run_metrics_single_pass(spark, tmp_path):
     assert got["start_repo_id"] == 1 and got["last_repo_id"] == 5
 
 
-def _one_reply_server(reply: bytes | None, hold_s: float = 0.0) -> str:
-    """A 127.0.0.1 server that answers one request with ``reply`` (raw
-    bytes; ``None`` sends nothing), holds the connection ``hold_s``
-    seconds and closes it. Returns its base URL."""
+def _reply_server(*replies: bytes | None, hold_s: float = 0.0) -> str:
+    """A 127.0.0.1 server that answers its n-th connection with
+    ``replies[n]`` (raw bytes; ``None`` sends nothing), holds it
+    ``hold_s`` seconds and closes it; after the last reply it stops
+    listening, so a further call is refused. Returns its base URL."""
     import socket
     import threading
-    import time
 
     srv = socket.create_server(("127.0.0.1", 0))
 
     def serve():
         with srv:
-            conn, _ = srv.accept()
-            with conn:
-                conn.recv(65536)
-                if reply is not None:
-                    conn.sendall(reply)
-                time.sleep(hold_s)
+            for reply in replies:
+                conn, _ = srv.accept()
+                with conn:
+                    conn.recv(65536)
+                    if reply is not None:
+                        conn.sendall(reply)
+                    time.sleep(hold_s)
 
     threading.Thread(target=serve, daemon=True).start()
     return f"http://127.0.0.1:{srv.getsockname()[1]}"
 
 
-def test_http_transport_maps_broken_responses_to_599(monkeypatch):
-    """A response that is dropped, truncated, not JSON or too slow is a
-    599 row-skip, like a send error; a good reply and an HTTP error
-    keep their status."""
+def _loopback_transport(monkeypatch) -> list[float]:
+    """Give ``rest.http_transport`` a 0.5 s timeout and no proxy for the
+    loopback servers; its retry sleeps are recorded in the returned list
+    instead of slept."""
     import urllib.request
 
     from ag_data_ingestion_github_to_snowflake_spark.sources import rest
@@ -248,14 +238,77 @@ def test_http_transport_maps_broken_responses_to_599(monkeypatch):
     monkeypatch.setattr(
         rest.urllib.request, "urlopen", lambda req, timeout: urlopen(req, timeout=0.5)
     )
+    # Replace rest's view of ``time`` only: patching ``time.sleep`` itself
+    # would also stop the sleeps of the session's background threads.
+    waits: list[float] = []
+    monkeypatch.setattr(rest, "time", SimpleNamespace(time=time.time, sleep=waits.append))
+    return waits
+
+
+OK = b'HTTP/1.1 200 OK\r\nContent-Length: 8\r\n\r\n{"a": 1}'
+SPENT_403 = b"HTTP/1.1 403 Forbidden\r\nX-RateLimit-Remaining: 0\r\nContent-Length: 0\r\n\r\n"
+
+
+def test_http_transport_maps_broken_responses_to_599(monkeypatch):
+    """A response that is dropped, truncated, not JSON or too slow is a
+    599, like a send error, once the retries run out; a good reply and
+    an HTTP error keep their status and are not retried."""
+    from ag_data_ingestion_github_to_snowflake_spark.sources import rest
+
+    waits = _loopback_transport(monkeypatch)
 
     def status(reply, hold_s=0.0):
-        return rest.http_transport(_one_reply_server(reply, hold_s))("/repos/a/b", {})
+        waits.clear()
+        return rest.http_transport(_reply_server(reply, hold_s=hold_s))("/repos/a/b", {})
 
-    ok = b'HTTP/1.1 200 OK\r\nContent-Length: 8\r\n\r\n{"a": 1}'
-    assert status(ok) == (200, {"a": 1})
+    assert status(OK) == (200, {"a": 1}) and waits == []
     assert status(b"HTTP/1.1 404 Not Found\r\nContent-Length: 0\r\n\r\n") == (404, None)
-    assert status(None) == (599, None)  # closed without a reply
-    assert status(b'HTTP/1.1 200 OK\r\nContent-Length: 99\r\n\r\n{"a"') == (599, None)
-    assert status(b"HTTP/1.1 200 OK\r\nContent-Length: 9\r\n\r\nnot json!") == (599, None)
-    assert status(None, hold_s=2.0) == (599, None)  # read timeout
+    assert waits == []
+    for reply, hold_s in (
+        (None, 0.0),  # closed without a reply
+        (b'HTTP/1.1 200 OK\r\nContent-Length: 99\r\n\r\n{"a"', 0.0),
+        (b"HTTP/1.1 200 OK\r\nContent-Length: 9\r\n\r\nnot json!", 0.0),
+        (None, 2.0),  # read timeout
+    ):
+        assert status(reply, hold_s) == (599, None), reply
+        assert waits == [1.0, 2.0, 4.0]  # then every retry is refused
+
+
+def test_http_transport_retries_transient_calls_until_they_succeed(monkeypatch):
+    """A 503, a 429 with ``Retry-After`` and a 403 with a spent quota
+    are each retried after their wait, and the 200 that follows is
+    returned. A rate-limited 403 that never clears reads as 429; a plain
+    403, or a wait above the cap, is not retried."""
+    from ag_data_ingestion_github_to_snowflake_spark.sources import rest
+
+    waits = _loopback_transport(monkeypatch)
+
+    def call(*replies):
+        waits.clear()
+        return rest.http_transport(_reply_server(*replies))("/repos/a/b", {})
+
+    assert call(
+        b"HTTP/1.1 503 Service Unavailable\r\nContent-Length: 0\r\n\r\n",
+        b"HTTP/1.1 429 Too Many Requests\r\nRetry-After: 1\r\nContent-Length: 0\r\n\r\n",
+        SPENT_403,
+        OK,
+    ) == (200, {"a": 1})
+    assert waits == [1.0, 1.0, 4.0]
+    assert call(*[SPENT_403] * rest.RETRY_ATTEMPTS) == (429, None)
+    assert waits == [1.0, 2.0, 4.0]
+    assert call(b"HTTP/1.1 403 Forbidden\r\nContent-Length: 0\r\n\r\n") == (403, None)
+    assert waits == []
+    hour = b"HTTP/1.1 429 Too Many Requests\r\nRetry-After: 3600\r\nContent-Length: 0\r\n\r\n"
+    assert call(hour) == (429, None) and waits == []
+
+
+@pytest.mark.parametrize("status", [401, 503])
+def test_failed_list_page_raises_instead_of_ending_the_scan(status):
+    """A list page that fails is an error, not an empty scan."""
+    from ag_data_ingestion_github_to_snowflake_spark.sources.rest import fetch_repo_list
+
+    def transport(path, params):
+        return status, None
+
+    with pytest.raises(RuntimeError, match=f"status {status}"):
+        fetch_repo_list(transport, 0)

@@ -9,7 +9,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ag_data_ingestion_github_to_snowflake_spark.config import EngineConfig
-from ag_data_ingestion_github_to_snowflake_spark.sources.rest import RateLimiter
+from ag_data_ingestion_github_to_snowflake_spark.sources.rest import MAX_RETRY_WAIT_S, _retry_wait_s
 from ag_data_ingestion_github_to_snowflake_spark.sources.state import FileWatermark
 from ag_data_ingestion_github_to_snowflake_spark.sources.stub import StubTransport
 
@@ -26,17 +26,20 @@ def test_file_watermark_roundtrip(value):
     assert wm.get() == value
 
 
-@given(st.integers(min_value=1, max_value=200), st.integers(min_value=0, max_value=300))
-@settings(max_examples=30, deadline=None)
-def test_rate_limiter_never_exceeds_budget(budget, attempts):
-    tr = StubTransport(n_repos=5)
-    rl = RateLimiter(budget=budget)
-    wrapped = rl.wrap(tr)
-    ok = sum(
-        1 for _ in range(attempts) if wrapped("/repositories", {"since": 0, "per_page": 1})[0] == 200
-    )
-    assert ok == min(budget, attempts)
-    assert rl.used <= budget
+@given(
+    st.integers(min_value=100, max_value=599),
+    st.dictionaries(
+        st.sampled_from(["Retry-After", "x-ratelimit-remaining", "X-RateLimit-Reset"]),
+        st.one_of(st.integers(-10, 10**10).map(str), st.sampled_from(["", "nan", "inf", "-1e9", "soon"])),
+    ),
+    st.integers(min_value=0, max_value=10),
+    st.floats(min_value=0, max_value=1e10),
+)
+@settings(max_examples=200, deadline=None)
+def test_retry_wait_is_a_sleepable_bounded_wait(status, headers, attempt, now):
+    """Whatever the headers say, a retry waits between 0 s and the cap."""
+    wait = _retry_wait_s(status, headers, attempt, now)
+    assert wait is None or 0.0 <= wait <= MAX_RETRY_WAIT_S
 
 
 @given(

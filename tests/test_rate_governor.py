@@ -1,107 +1,72 @@
-"""HeaderRateLimitGovernor (A20): X-RateLimit header parsing, low-quota
-warnings, and reset-time backoff — driven entirely through an injectable
-clock/sleeper and a header-emitting stub transport, mirroring the
-reference's check_rate_limit behaviour
-(/root/reference/src/extract_github_data.py:372-391)."""
+"""A20 rate limits: ``rest._retry_wait_s``, the wait ``http_transport``
+sleeps before retrying a transient call, read from literal response
+headers and a fixed clock. Mirrors the reference's ``check_rate_limit``
+(``src/extract_github_data.py:372-391``), which backs off until the
+server's ``X-RateLimit-Reset``; the loop itself is driven end to end in
+``tests/test_ingestion.py``."""
 
 from __future__ import annotations
 
 from ag_data_ingestion_github_to_snowflake_spark.sources.rest import (
-    HeaderRateLimitGovernor,
+    MAX_RETRY_WAIT_S,
+    _retry_wait_s,
 )
 
-
-class HeaderStub:
-    """Serves a fixed quota window; each response reports remaining and
-    the epoch at which the window resets."""
-
-    def __init__(self, quota: int, reset_at: float):
-        self.quota = quota
-        self.reset_at = reset_at
-        self.calls = 0
-
-    def __call__(self, path: str, params: dict):
-        self.calls += 1
-        remaining = max(self.quota - self.calls, 0)
-        headers = {
-            "X-RateLimit-Remaining": str(remaining),
-            "X-RateLimit-Reset": str(self.reset_at),
-        }
-        return 200, {"ok": self.calls}, headers
+NOW = 1000.0
+SPENT = {"X-RateLimit-Remaining": "0"}
 
 
-def make_governor(start: float = 1000.0, **kw):
-    state = {"now": start}
-    sleeps: list[float] = []
-
-    def clock() -> float:
-        return state["now"]
-
-    def sleeper(s: float) -> None:
-        sleeps.append(s)
-        state["now"] += s
-
-    gov = HeaderRateLimitGovernor(clock=clock, sleeper=sleeper, **kw)
-    return gov, state, sleeps
+def test_headers_are_read_case_insensitively():
+    for headers in (
+        {"x-ratelimit-remaining": "0", "X-RATELIMIT-RESET": "1030"},
+        {"X-RateLimit-Remaining": "0", "x-ratelimit-reset": "1030"},
+    ):
+        assert _retry_wait_s(403, headers, 0, NOW) == 30.0
+    assert _retry_wait_s(429, {"RETRY-AFTER": "7"}, 0, NOW) == 7.0
+    assert _retry_wait_s(403, {"retry-after": "7"}, 0, NOW) == 7.0
 
 
-def test_observe_parses_headers_case_insensitively():
-    gov, _, _ = make_governor()
-    gov.observe({"x-ratelimit-remaining": "42", "X-RATELIMIT-RESET": "1234.5"})
-    assert gov.remaining == 42
-    assert gov.reset_at == 1234.5
-    gov.observe({})  # absent headers leave state unchanged
-    assert gov.remaining == 42
+def test_absent_headers_back_off_exponentially():
+    assert [_retry_wait_s(503, {}, attempt, NOW) for attempt in range(3)] == [1.0, 2.0, 4.0]
+    assert _retry_wait_s(599, {}, 1, NOW) == 2.0
+    assert _retry_wait_s(429, {}, 2, NOW) == 4.0
 
 
-def test_warns_below_threshold():
-    gov, _, _ = make_governor()
-    for remaining in (10, 5, 4, 2):
-        gov.observe({"X-RateLimit-Remaining": str(remaining)})
-    assert gov.warnings == [
-        "rate limit low: 4 requests remaining",
-        "rate limit low: 2 requests remaining",
-    ]
+def test_only_transient_calls_are_retried():
+    """A 403 without rate-limit headers is forbidden, not rate-limited,
+    and the gone and success statuses are final."""
+    for status, headers in (
+        (200, {}),
+        (403, {}),
+        (403, {"X-RateLimit-Remaining": "12", "X-RateLimit-Reset": "1030"}),
+        (404, {}),
+        (410, {}),
+        (451, {}),
+    ):
+        assert _retry_wait_s(status, headers, 0, NOW) is None, status
+
+
+def test_retry_after_takes_precedence():
+    headers = {**SPENT, "Retry-After": "5", "X-RateLimit-Reset": "1040"}
+    assert _retry_wait_s(403, headers, 0, NOW) == 5.0
+    assert _retry_wait_s(429, headers, 3, NOW) == 5.0  # below the backoff too
 
 
 def test_backoff_waits_until_server_reset():
-    gov, state, sleeps = make_governor(start=1000.0)
-    gov.observe({"X-RateLimit-Remaining": "0", "X-RateLimit-Reset": "1300"})
-    gov.before_call()
-    assert sleeps == [300.0]
-    assert state["now"] == 1300.0
-    # state cleared: next call proceeds without sleeping again
-    gov.before_call()
-    assert sleeps == [300.0]
+    assert _retry_wait_s(403, {**SPENT, "X-RateLimit-Reset": "1045.5"}, 0, NOW) == 45.5
+    assert _retry_wait_s(429, {**SPENT, "X-RateLimit-Reset": "1045.5"}, 0, NOW) == 45.5
 
 
 def test_backoff_floor_is_min_backoff():
-    """Reset already passed (or unknown) still sleeps the reference's
-    minimum 60 s."""
-    gov, _, sleeps = make_governor(start=5000.0)
-    gov.observe({"X-RateLimit-Remaining": "0", "X-RateLimit-Reset": "4000"})
-    gov.before_call()
-    assert sleeps == [60.0]
-    gov.observe({"X-RateLimit-Remaining": "0"})  # no reset header
-    gov.before_call()
-    assert sleeps == [60.0, 60.0]
+    """A reset already past, or absent, still waits the backoff: the
+    call is never retried at once."""
+    assert _retry_wait_s(403, {**SPENT, "X-RateLimit-Reset": "400"}, 2, NOW) == 4.0
+    assert _retry_wait_s(403, SPENT, 1, NOW) == 2.0
+    assert _retry_wait_s(429, {"Retry-After": "soon"}, 0, NOW) == 1.0  # unreadable
 
 
-def test_wrapped_transport_schedule_end_to_end():
-    """Exhaust a 3-call window, see exactly one backoff to the reset
-    time, then keep calling in the fresh window."""
-    gov, state, sleeps = make_governor(start=100.0)
-    stub = HeaderStub(quota=3, reset_at=700.0)
-    governed = gov.wrap(stub)
-
-    for i in range(1, 4):
-        status, payload = governed("/repositories", {})
-        assert status == 200 and payload == {"ok": i}
-    assert gov.remaining == 0
-    assert sleeps == []  # backoff happens before the NEXT call, not eagerly
-
-    governed("/repositories", {})
-    assert sleeps == [600.0]  # 700 - 100
-    assert state["now"] == 700.0
-    assert stub.calls == 4
-    assert any("0 requests remaining" in w for w in gov.warnings)
+def test_wait_above_the_cap_gives_up():
+    assert _retry_wait_s(403, {**SPENT, "X-RateLimit-Reset": "4600"}, 0, NOW) is None  # an hour
+    assert _retry_wait_s(429, {"Retry-After": str(MAX_RETRY_WAIT_S + 1)}, 0, NOW) is None
+    assert _retry_wait_s(429, {"Retry-After": str(MAX_RETRY_WAIT_S)}, 0, NOW) == MAX_RETRY_WAIT_S
+    assert _retry_wait_s(503, {}, 6, NOW) is None  # a 64 s backoff
