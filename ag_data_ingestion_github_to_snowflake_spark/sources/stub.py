@@ -7,6 +7,11 @@ Lives in the package (not tests/) because the CLI's ``--test-mode``
 
 from __future__ import annotations
 
+from datetime import date, timedelta
+
+# ``updated_at`` spreads over 5,000 days from here, as a real
+# ``/repositories`` page spans years of activity.
+UPDATED_EPOCH = date(2010, 1, 1)
 
 class StubTransport:
     """Synthesizes a repo universe of ``n_repos`` records.
@@ -16,6 +21,9 @@ class StubTransport:
     - id % 17 == 0 -> null language   (allowed nullable? no: reject,
       matching the reference's strict all-fields rule)
     - id % 19 == 0 -> detail lookup 404s (row skipped)
+    - ``updated_at`` falls on day ``id * 7919 % 5000`` after
+      ``UPDATED_EPOCH`` (consecutive ids land on distinct days) and
+      ``created_at`` ``id % 365`` days before it
     """
 
     def __init__(self, n_repos: int = 300):
@@ -31,6 +39,8 @@ class StubTransport:
         }
 
     def _detail_row(self, rid: int) -> dict:
+        updated = UPDATED_EPOCH + timedelta(days=rid * 7919 % 5000)
+        created = updated - timedelta(days=rid % 365)
         return {
             "id": rid,
             "name": f"repo-{rid}",
@@ -39,8 +49,8 @@ class StubTransport:
             "description": None if rid % 13 == 0 else f"description {rid}",
             "stargazers_count": (rid * 37) % 5000,
             "language": None if rid % 17 == 0 else ["Python", "Rust", "Go"][rid % 3],
-            "created_at": f"2020-01-{(rid % 28) + 1:02d}T00:00:00Z",
-            "updated_at": f"2024-06-{(rid % 28) + 1:02d}T12:30:00Z",
+            "created_at": f"{created}T00:00:00Z",
+            "updated_at": f"{updated}T12:30:00Z",
             "owner": {
                 "login": f"owner{rid % 7}",
                 "id": 1000 + rid % 7,
