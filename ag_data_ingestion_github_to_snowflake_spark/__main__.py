@@ -12,16 +12,19 @@ Mirrors the reference's ``main()`` argparse surface
                     sink write (the reference's S3-upload skip).
 
 Spark-first deltas from the reference (documented in SURVEY §1.1):
-the envelope JSON document becomes a flat partitioned table plus a
-``_run_metrics`` table. A batch stages both beside the sink and
-publishes them with the new watermark as one commit record
-(``sources/sinks.py``), once per batch where the reference commits per
-row; each run first finishes or drops an earlier run's commit, so a
-crash never lands a batch twice. A batch is one Spark action — the
-staged sink write, or a ``noop`` write under ``--skip-upload`` — and
-its run counters are observed on that action. A list page or lookup
-that still fails after its retries (``sources/rest.py``) raises out of
-the batch before its commit, so the next run re-fetches the batch.
+the envelope JSON document becomes a flat table plus a ``_run_metrics``
+table. The batch's one timestamp keys both: it is the sink's
+``year/month/day`` partition, as the reference's ``yyyy/mm/dd/`` key is
+the run's date, and the metrics row's ``extraction_date``. A batch
+stages both beside the sink and publishes them with the new watermark
+as one commit record (``sources/sinks.py``), once per batch where the
+reference commits per row; each run first finishes or drops an earlier
+run's commit, so a crash never lands a batch twice. A batch is one
+Spark action — the staged sink write, or a ``noop`` write under
+``--skip-upload`` — and its run counters are observed on that action.
+A list page or lookup that still fails after its retries
+(``sources/rest.py``) raises out of the batch before its commit, so the
+next run re-fetches the batch.
 """
 
 from __future__ import annotations
@@ -156,7 +159,7 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
         if skip_upload:
             result.valid.write.format("noop").mode("overwrite").save()
         else:
-            partitioned_append(result.valid, stage_path(sink_path), ts_col="updated_at")
+            partitioned_append(result.valid, stage_path(sink_path), result.extracted_at)
         metrics = result.metrics(test_mode)
         uploaded = not skip_upload and metrics["valid_count"] > 0
         if uploaded:

@@ -32,7 +32,7 @@ from pyspark.sql.window import Window
 def scd2_from_changes(
     changes: DataFrame,
     key: str,
-    ts_col: str,
+    time_col: str,
     attr_cols: list[str],
     tiebreak: str | Column | None = None,
 ) -> DataFrame:
@@ -44,7 +44,7 @@ def scd2_from_changes(
     disagree, the LAST in tiebreak order wins the instant (the earlier
     one opens a zero-length version that the consumer may filter).
     """
-    order = [F.col(ts_col).asc()]
+    order = [F.col(time_col).asc()]
     if tiebreak is not None:
         order.append(
             F.col(tiebreak).asc() if isinstance(tiebreak, str) else tiebreak
@@ -58,8 +58,8 @@ def scd2_from_changes(
     )
     w2 = Window.partitionBy(key).orderBy(*order)
     return (
-        marked.withColumn("valid_from", F.col(ts_col))
-        .withColumn("valid_to", F.lead(ts_col).over(w2))
+        marked.withColumn("valid_from", F.col(time_col))
+        .withColumn("valid_to", F.lead(time_col).over(w2))
         .withColumn("is_current", F.col("valid_to").isNull())
         .drop("_prev")
     )

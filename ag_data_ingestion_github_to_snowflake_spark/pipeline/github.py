@@ -157,7 +157,9 @@ def observed_run_metrics(flat: DataFrame):
 @dataclass
 class ExtractResult:
     """One batch. ``valid`` and ``invalid`` share one observed plan: the
-    first action over either fills ``counters`` and ``lookups``."""
+    first action over either fills ``counters`` and ``lookups``.
+    ``extracted_at`` is the batch's one timestamp: its metrics row's
+    ``extraction_date`` and its sink partition."""
 
     valid: DataFrame
     invalid: DataFrame
@@ -165,6 +167,7 @@ class ExtractResult:
     list_pages: int
     counters: Observation
     lookups: Observation
+    extracted_at: datetime
 
     def metrics(self, test_mode: bool = False) -> dict:
         """The ``_run_metrics`` row, once the batch's action has run:
@@ -175,7 +178,7 @@ class ExtractResult:
             "api_calls": self.list_pages + self.lookups.get["lookups"],
             "cache_hits": 0,
             "test_mode": test_mode,
-            "extraction_date": datetime.now(),
+            "extraction_date": self.extracted_at,
         }
 
 
@@ -201,6 +204,7 @@ def incremental_extract(
     lands each batch once by staging it and publishing data, metrics
     and watermark with one commit record (``sources/sinks.py``).
     """
+    extracted_at = datetime.now()
     pages = 0
 
     def listing(path: str, params: dict):
@@ -216,4 +220,4 @@ def incremental_extract(
     raw = enrich_details(list_df, transport)
     flat, counters = observed_run_metrics(latest_snapshot(flatten_repos(raw), "id", "updated_at"))
     valid, invalid = validation_split(flat)
-    return ExtractResult(valid, invalid, new_wm, pages, counters, lookups)
+    return ExtractResult(valid, invalid, new_wm, pages, counters, lookups, extracted_at)

@@ -1135,7 +1135,7 @@ def streaming_scd2_upsert(spark: SparkSession, sf: str) -> DataFrame:
             recomputed = scd2_from_changes(
                 open_vers.unionByName(obs),
                 key="custkey",
-                ts_col="ts",
+                time_col="ts",
                 attr_cols=["tier"],
                 tiebreak="seq",
             ).select(
@@ -1149,7 +1149,7 @@ def streaming_scd2_upsert(spark: SparkSession, sf: str) -> DataFrame:
             new_hist = carried.unionByName(recomputed)
         else:
             new_hist = scd2_from_changes(
-                obs, key="custkey", ts_col="ts", attr_cols=["tier"], tiebreak="seq"
+                obs, key="custkey", time_col="ts", attr_cols=["tier"], tiebreak="seq"
             ).select(
                 "custkey", "tier", "valid_from", "valid_to", "is_current", "seq"
             )

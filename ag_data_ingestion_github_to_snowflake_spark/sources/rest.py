@@ -13,11 +13,12 @@ Re-expresses the reference's ingestion operators Spark-first
   backoff (``_retry_wait_s``), and stops once a wait exceeds
   ``MAX_RETRY_WAIT_S``. A rate-limited 403 that still fails returns 429.
 
-Failure policy (A14): a lookup whose final status is in ``GONE`` yields
-no row; any other failed lookup, and any failed list page, raises. The
-raise fails the batch's one action before its commit, so the watermark
-stays put and the next run lists the batch again: a transient failure
-never drops a repository.
+Failure policy (A14): a lookup whose final status is in ``GONE``, or
+whose payload carries another repository's id, yields no row; any other
+failed lookup, and any failed list page, raises. The raise fails the
+batch's one action before its commit, so the watermark stays put and
+the next run lists the batch again: a transient failure never drops a
+repository.
 
 Architecture: ``keyset_pages`` is the one keyset pager; the driver-side
 list scan (``fetch_repo_list``/``list_scan_df``) takes its first
@@ -259,7 +260,9 @@ def enrich_details(list_df: DataFrame, transport: Transport) -> DataFrame:
     The list relation's per-core slices are coalesced (narrow, no
     shuffle) to at most ``MAX_LOOKUP_TASKS`` tasks. Each task drives
     its own transport connection. A lookup ending in a ``GONE`` status
-    yields no row (A14 skip semantics); any other non-200 raises, which
+    yields no row (A14 skip semantics), and so does one that answers for
+    another repository (the name now belongs to a different id, which
+    lies outside the listed range); any other non-200 raises, which
     fails the batch before its commit (module docstring). The reference
     does this loop serially on one thread (:677-714); here tasks fetch concurrently and the output is
     the *nested raw* record, flattening happens downstream
@@ -281,6 +284,8 @@ def enrich_details(list_df: DataFrame, transport: Transport) -> DataFrame:
                         f"lookup of repository id {row['id']} ended with status {status}"
                     )
                 p = payload
+                if p.get("id") != row["id"]:
+                    continue  # the name now answers for another repository
                 owner = p.get("owner") or {}
                 out.append(
                     {

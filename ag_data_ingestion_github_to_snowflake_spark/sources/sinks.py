@@ -2,12 +2,15 @@
 batch commit that publishes both together with the watermark.
 
 The reference serializes one envelope JSON per run to
-``s3://bucket/yyyy/mm/dd/...`` (/root/reference/src/
-extract_github_data.py:554-600). Spark-first: the repositories are a
-flat table written with ``partitionBy(year, month, day)`` — the same
-S3 layout, but readable back with partition pruning — and the run
-metadata envelope becomes rows in a separate ``_run_metrics`` table
-(idiomatic Spark never nests a dataset inside a metadata document).
+``s3://bucket/yyyy/mm/dd/github_repos_{ts}.json`` (its
+``src/extract_github_data.py:554-600``): the key is the run's date.
+Spark-first: the repositories are a flat table written with
+``partitionBy(year, month, day)`` on the batch's run date, so one batch
+lands as one directory and a date-scoped load of a day reads the
+batches that landed that day. The run metadata envelope becomes rows
+in a separate ``_run_metrics`` table whose ``extraction_date`` is the
+same timestamp (idiomatic Spark never nests a dataset inside a
+metadata document).
 
 A batch lands exactly once. Its files are staged in ``<sink>_pending/``,
 a sibling of the sink, so a ``sink/**/*.parquet`` glob never sees them.
@@ -16,8 +19,9 @@ watermark visible with ``os.replace``; ``roll_forward`` does the moves
 and sets the watermark. A crash before the record drops the stage and
 the batch is re-fetched; a crash after it is finished by the next run.
 
-At 100 TB: date partitioning bounds each file-commit transaction and
-``MAX_RECORDS_PER_FILE`` caps file sizes.
+At 100 TB: the file count grows with batches, not with the distinct
+update days inside each batch, and ``MAX_RECORDS_PER_FILE`` caps file
+sizes.
 """
 
 from __future__ import annotations
@@ -25,6 +29,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from datetime import datetime
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -35,20 +40,16 @@ COMMIT_RECORD = "_commit.json"
 MAX_RECORDS_PER_FILE = 1_000_000
 
 
-def with_date_partitions(df: DataFrame, ts_col: str) -> DataFrame:
-    """Derive year/month/day partition columns from a timestamp column
-    (the reference's strftime %Y/%m/%d key layout, :572-578)."""
-    return (
-        df.withColumn("year", F.date_format(ts_col, "yyyy"))
-        .withColumn("month", F.date_format(ts_col, "MM"))
-        .withColumn("day", F.date_format(ts_col, "dd"))
-    )
-
-
-def partitioned_append(df: DataFrame, path: str, ts_col: str = "updated_at") -> None:
-    """A6: date-partitioned parquet append sink."""
+def partitioned_append(df: DataFrame, path: str, at: datetime) -> None:
+    """A6: parquet append under the batch's run date ``at`` (the
+    reference's strftime %Y/%m/%d key, :572-578). The partition values
+    are literals, so the planned sort on them is eliminated and the write
+    keeps the input's partitioning: one file per write task, and no
+    file at all for an empty batch."""
     (
-        with_date_partitions(df, ts_col)
+        df.withColumn("year", F.lit(at.strftime("%Y")))
+        .withColumn("month", F.lit(at.strftime("%m")))
+        .withColumn("day", F.lit(at.strftime("%d")))
         .write.mode("append")
         .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
         .partitionBy("year", "month", "day")

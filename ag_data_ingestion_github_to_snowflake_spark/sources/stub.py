@@ -9,9 +9,8 @@ from __future__ import annotations
 
 from datetime import date, timedelta
 
-# ``updated_at`` spreads over 5,000 days from here, as a real
-# ``/repositories`` page spans years of activity.
 UPDATED_EPOCH = date(2010, 1, 1)
+
 
 class StubTransport:
     """Synthesizes a repo universe of ``n_repos`` records.
@@ -22,8 +21,9 @@ class StubTransport:
       matching the reference's strict all-fields rule)
     - id % 19 == 0 -> detail lookup 404s (row skipped)
     - ``updated_at`` falls on day ``id * 7919 % 5000`` after
-      ``UPDATED_EPOCH`` (consecutive ids land on distinct days) and
-      ``created_at`` ``id % 365`` days before it
+      ``UPDATED_EPOCH``, so consecutive ids land on distinct days, as a
+      real ``/repositories`` page spans years of activity;
+      ``created_at`` falls ``id % 365`` days before it
     """
 
     def __init__(self, n_repos: int = 300):

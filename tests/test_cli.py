@@ -418,3 +418,70 @@ def test_cli_gone_lookups_are_skipped_and_the_watermark_advances(spark, tmp_path
     assert summary["new_watermark"] == int(wm.read_text()) == 59
     ids = sorted(r.id for r in spark.read.parquet(sink).select("id").collect())
     assert ids == [i for i in range(1, 60) if i % 7 and i % 19 and i % 13 and i % 17]
+
+
+def test_cli_batch_lands_as_one_file_under_its_run_date(spark, tmp_path, monkeypatch):
+    """Two 20-page batches over the stub, whose listed ids fall on
+    distinct ``updated_at`` days: each batch adds exactly one parquet
+    file to the sink, in the partition of its ``_run_metrics`` row's
+    ``extraction_date``."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    monkeypatch.setenv("MAX_REQUESTS_PER_RUN", "100000")
+    sink = str(tmp_path / "sink")
+    argv = ["--test-mode", "--max-pages", "20", "--n-repos", "4000", "--sink", sink,
+            "--state", str(tmp_path / "wm.txt")]
+
+    def sink_files():
+        return {
+            os.path.relpath(os.path.join(d, f), sink)
+            for d, _, fs in os.walk(sink)
+            for f in fs
+            if f.endswith(".parquet")
+        }
+
+    landed = set()
+    for batch in (1, 2):
+        summary = run(argv, spark=spark)
+        assert summary["uploaded"] and summary["new_watermark"] == 2000 * batch
+        (added,) = sink_files() - landed
+        landed.add(added)
+        m = max(spark.read.parquet(sink + "_run_metrics").collect(), key=lambda r: r.last_repo_id)
+        assert m.last_repo_id > 2000 * (batch - 1)
+        assert os.path.dirname(added) == m.extraction_date.strftime("year=%Y/month=%m/day=%d")
+    back = spark.read.parquet(sink)
+    assert back.select(F.to_date("updated_at")).distinct().count() > 1000
+
+
+def test_cli_lookup_answering_for_another_repository_is_skipped(spark, tmp_path, monkeypatch):
+    """A lookup whose name now belongs to another repository yields no
+    row, as a gone one does. Here ids % 11 answer with the record of id
+    + 59, a repository of the next batch: no sink id lies outside its
+    batch's listed range, and none lands in two batches."""
+    from ag_data_ingestion_github_to_snowflake_spark.sources import stub
+    from ag_data_ingestion_github_to_snowflake_spark.sources.stub import StubTransport
+
+    class Renamed(StubTransport):
+        def __call__(self, path, params):
+            status, payload = super().__call__(path, params)
+            if path.startswith("/repos/") and status == 200 and payload["id"] % 11 == 0:
+                return status, self._detail_row(payload["id"] + 59)
+            return status, payload
+
+    monkeypatch.delenv("MAX_REQUESTS_PER_RUN", raising=False)
+    monkeypatch.delenv("GITHUB_TOKEN", raising=False)
+    monkeypatch.setattr(stub, "StubTransport", Renamed)
+    sink = str(tmp_path / "sink")
+    argv = ["--test-mode", "--n-repos", "300", "--sink", sink, "--state", str(tmp_path / "wm.txt")]
+    run(argv, spark=spark)
+    run(argv, spark=spark)
+    # Each batch is one list page and 59 lookups; the stub 404s on id % 19
+    # and returns invalid rows on id % 13 and id % 17.
+    ids = [r.id for r in spark.read.parquet(sink).select("id").collect()]
+    assert sorted(ids) == [i for i in range(1, 119) if i % 11 and i % 19 and i % 13 and i % 17]
+    ranges = sorted(
+        (r.start_repo_id, r.last_repo_id) for r in spark.read.parquet(sink + "_run_metrics").collect()
+    )
+    assert ranges == [(1, 59), (60, 118)]

@@ -33,9 +33,9 @@ def test_extract_stage_profile(spark, tmp_path):
     assert n_valid > 0
     assert result.new_watermark > 0
 
-    # -- stage (A6): date-partitioned parquet append (the S3/stage analog)
+    # -- stage (A6): parquet append under the batch's run date (the S3/stage analog)
     stage_dir = str(tmp_path / "stage")
-    partitioned_append(valid, stage_dir, ts_col="updated_at")
+    partitioned_append(valid, stage_dir, result.extracted_at)
 
     # -- consume: profile + expectations over the staged table
     tbl = spark.read.parquet(stage_dir)

@@ -131,20 +131,20 @@ def test_incremental_extract_end_to_end_with_resume(spark):
 
 
 def test_partitioned_sink_layout(spark, tmp_path):
+    """A batch lands under its run date ``at``, not under its rows'
+    ``updated_at`` days: one ``year=/month=/day=`` directory holding one
+    file, and a filter on that date reads every row back."""
     tr = StubTransport(n_repos=40)
-    df, _ = list_scan_df(spark, tr, since=0, **CFG)
-    flat = flatten_repos(enrich_details(df, tr))
+    valid = incremental_extract(spark, tr, 0, **CFG).valid
+    assert valid.select(F.to_date("updated_at")).distinct().count() > 1
     out = str(tmp_path / "sink")
-    partitioned_append(flat, out, ts_col="updated_at")
-    updated = [r.updated_at for r in flat.select("updated_at").collect()]
-    years = {d for d in os.listdir(out) if d.startswith("year=")}
-    assert years == {f"year={u:%Y}" for u in updated}
+    at = datetime(2026, 3, 7, 9, 15)
+    partitioned_append(valid, out, at)
+    dirs = [os.path.relpath(d, out) for d, _, fs in os.walk(out) for f in fs if f.endswith(".parquet")]
+    assert dirs == [os.path.join("year=2026", "month=03", "day=07")]
     back = spark.read.parquet(out)
-    assert back.count() == flat.count()
-    # partition pruning applies: day filter reads a subset
-    u = updated[0]
-    one_day = back.filter((F.col("year") == u.year) & (F.col("month") == u.month) & (F.col("day") == u.day))
-    assert 0 < one_day.count() < flat.count()
+    on_date = back.filter((F.col("year") == 2026) & (F.col("month") == 3) & (F.col("day") == 7))
+    assert on_date.count() == back.count() == valid.count() > 0
 
 
 def test_file_watermark_rejects_corrupt_state(tmp_path):
