@@ -208,14 +208,11 @@ def distributed_sweep_max_concurrency(
 ) -> DataFrame:
     """Sweep-line max concurrency with PARALLEL running sums.
 
-    The one-window sweep (``plans/temporal_queries.py:
-    concurrent_intervals_sweep``) is algorithmically optimal but its
-    running sum partitions only on ``group_col`` — with a handful of
-    groups the whole timeline of a group lands on ONE task, capping
-    parallelism at n_groups no matter the cluster size (measured: the
-    registry's second-worst 100x exponent, alpha +1.66, because 12M
-    boundary points sort on 5 tasks). This is the two-level
-    prefix-sum decomposition that removes the wall:
+    A one-window sweep partitions its running sum only on
+    ``group_col``, so a group's whole timeline lands on one task and
+    parallelism is capped at n_groups (OPTIMIZATION_r15.md, "One plan
+    per answer"). This is the two-level prefix-sum decomposition that
+    removes the wall:
 
     1. chunk each group's timeline into fixed ``bucket_width`` ranges
        (time-ordered by construction, so chunks are independent);

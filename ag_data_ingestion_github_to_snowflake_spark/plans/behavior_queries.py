@@ -619,9 +619,7 @@ def benford_first_digit_orders(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # SCD2 dimension history (warehouse-side sibling of the sink's latest_snapshot)
 # ---------------------------------------------------------------------------
-@register(
-    "scd2_customer_history",
-    oracle="""
+SCD2_CUSTOMER_HISTORY_ORACLE = """
     WITH changes AS (
       SELECT c_custkey AS custkey,
              TIMESTAMP '1990-01-01 00:00:00' AS ts,
@@ -646,7 +644,12 @@ def benford_first_digit_orders(spark: SparkSession, sf: str) -> DataFrame:
            LEAD(ts) OVER (PARTITION BY custkey ORDER BY ts, seq) IS NULL
              AS is_current
     FROM vers
-    """,
+"""
+
+
+@register(
+    "scd2_customer_history",
+    oracle=SCD2_CUSTOMER_HISTORY_ORACLE,
     survey_ids=("B29", "B30", "B27"),
     description="SCD2 dimension history from a change log (valid_from/valid_to/is_current)",
 )

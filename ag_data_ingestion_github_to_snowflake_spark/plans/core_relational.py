@@ -1007,9 +1007,9 @@ def fk_integrity_audit(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
-    "gini_revenue_concentration",
-    oracle="""
+# Each oracle is shared by a single-task global-order carrier and its
+# range-partition rank twin below (same answer, different plan).
+GINI_REVENUE_ORACLE = """
     WITH rev AS (
         SELECT o_custkey AS k,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS x
@@ -1024,7 +1024,34 @@ def fk_integrity_audit(spark: SparkSession, sf: str) -> DataFrame:
              / (count(*) * CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE))
              - (count(*) + 1.0) / count(*) AS gini
     FROM ranked
-    """,
+"""
+
+DECILE_LIFT_ORACLE = """
+    WITH scored AS (
+        SELECT c.c_custkey,
+               CAST(c.c_acctbal AS DECIMAL(18,2)) AS score,
+               CASE WHEN EXISTS (SELECT 1 FROM orders o
+                                 WHERE o.o_custkey = c.c_custkey)
+                    THEN 1 ELSE 0 END AS converted
+        FROM customer c
+    ),
+    deciles AS (
+        SELECT NTILE(10) OVER (ORDER BY score, c_custkey) AS decile,
+               score, converted
+        FROM scored
+    )
+    SELECT decile,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(score) AS DOUBLE) / count(*) AS mean_score,
+           CAST(SUM(converted) AS BIGINT) AS n_converted,
+           CAST(SUM(converted) AS DOUBLE) / count(*) AS conv_rate
+    FROM deciles GROUP BY decile
+"""
+
+
+@register(
+    "gini_revenue_concentration",
+    oracle=GINI_REVENUE_ORACLE,
     survey_ids=("B16", "B18", "B29"),
     description="Gini coefficient of per-customer revenue: rank-weighted exact-decimal sums",
 )
@@ -1069,27 +1096,7 @@ def gini_revenue_concentration(spark: SparkSession, sf: str) -> DataFrame:
 
 @register(
     "decile_lift_acctbal",
-    oracle="""
-    WITH scored AS (
-        SELECT c.c_custkey,
-               CAST(c.c_acctbal AS DECIMAL(18,2)) AS score,
-               CASE WHEN EXISTS (SELECT 1 FROM orders o
-                                 WHERE o.o_custkey = c.c_custkey)
-                    THEN 1 ELSE 0 END AS converted
-        FROM customer c
-    ),
-    deciles AS (
-        SELECT NTILE(10) OVER (ORDER BY score, c_custkey) AS decile,
-               score, converted
-        FROM scored
-    )
-    SELECT decile,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(score) AS DOUBLE) / count(*) AS mean_score,
-           CAST(SUM(converted) AS BIGINT) AS n_converted,
-           CAST(SUM(converted) AS DOUBLE) / count(*) AS conv_rate
-    FROM deciles GROUP BY decile
-    """,
+    oracle=DECILE_LIFT_ORACLE,
     survey_ids=("B13", "B16", "B29"),
     description="decile lift table: conversion rate by account-balance decile (ntile with unique tiebreak)",
 )
@@ -1136,22 +1143,7 @@ def decile_lift_acctbal(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "gini_revenue_distributed",
-    oracle="""
-    WITH rev AS (
-        SELECT o_custkey AS k,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS x
-        FROM orders GROUP BY o_custkey
-    ),
-    ranked AS (
-        SELECT x, ROW_NUMBER() OVER (ORDER BY x, k) AS i FROM rev
-    )
-    SELECT CAST(count(*) AS BIGINT) AS n_customers,
-           CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE) AS total_rev,
-           2.0 * CAST(SUM(CAST(i AS DECIMAL(38,2)) * CAST(x AS DECIMAL(18,2))) AS DOUBLE)
-             / (count(*) * CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE))
-             - (count(*) + 1.0) / count(*) AS gini
-    FROM ranked
-    """,
+    oracle=GINI_REVENUE_ORACLE,
     survey_ids=("B16", "B18", "B29"),
     description="Gini via range-partition two-phase rank: no single-task global sort",
 )
@@ -1196,27 +1188,7 @@ def gini_revenue_distributed(spark: SparkSession, sf: str) -> DataFrame:
 
 @register(
     "decile_lift_distributed",
-    oracle="""
-    WITH scored AS (
-        SELECT c.c_custkey,
-               CAST(c.c_acctbal AS DECIMAL(18,2)) AS score,
-               CASE WHEN EXISTS (SELECT 1 FROM orders o
-                                 WHERE o.o_custkey = c.c_custkey)
-                    THEN 1 ELSE 0 END AS converted
-        FROM customer c
-    ),
-    deciles AS (
-        SELECT NTILE(10) OVER (ORDER BY score, c_custkey) AS decile,
-               score, converted
-        FROM scored
-    )
-    SELECT decile,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(score) AS DOUBLE) / count(*) AS mean_score,
-           CAST(SUM(converted) AS BIGINT) AS n_converted,
-           CAST(SUM(converted) AS DOUBLE) / count(*) AS conv_rate
-    FROM deciles GROUP BY decile
-    """,
+    oracle=DECILE_LIFT_ORACLE,
     survey_ids=("B13", "B16", "B29"),
     description="decile lift via range-partition rank + closed-form NTILE cut",
 )

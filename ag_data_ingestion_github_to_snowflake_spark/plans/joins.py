@@ -156,67 +156,39 @@ def join_anti_customers_without_orders(spark: SparkSession, sf: str) -> DataFram
 # ---------------------------------------------------------------------------
 # B14 theta / non-equi join (equi key + range condition)
 # ---------------------------------------------------------------------------
-@register(
-    "join_theta_acctbal",
-    oracle="""
+THETA_ACCTBAL_ORACLE = """
     SELECT s.s_suppkey AS suppkey,
            count(*) AS n_richer_customers
     FROM supplier s
     JOIN customer c
       ON s.s_nationkey = c.c_nationkey AND c.c_acctbal > s.s_acctbal
     GROUP BY s.s_suppkey
-    """,
-    survey_ids=("B14",),
-    naive_twin_of="theta_join_rank_rewrite",
-)
-def join_theta_acctbal(spark: SparkSession, sf: str) -> DataFrame:
-    """Equi+inequality join: same-nation customers richer than supplier.
-
-    The equi component keeps this a hash join with a residual predicate
-    (never a cartesian product) — the scale-safe way to write theta
-    joins when any equi key exists.
-
-    NAIVE MEASURED-CONTRAST CARRIER: residual-predicate pair
-    enumeration is quadratic in per-nation density (alpha +1.71 at
-    100x in scale_curve_100x_all.json). On real data USE
-    ``theta_join_rank_rewrite`` below — the oracle-identical
-    O(n log n) sort-rank rewrite (0.94 s vs 16.5 s at 100x).
-    """
-    s = t(spark, sf, "supplier")
-    c = t(spark, sf, "customer")
-    return (
-        s.join(c, (s.s_nationkey == c.c_nationkey) & (c.c_acctbal > s.s_acctbal))
-        .groupBy(F.col("s_suppkey").alias("suppkey"))
-        .agg(F.count("*").alias("n_richer_customers"))
-    )
+"""
 
 
 @register(
     "theta_join_rank_rewrite",
-    # Identical oracle to join_theta_acctbal: same answer, different
-    # algorithm — the point of the twin.
-    oracle="""
-    SELECT s.s_suppkey AS suppkey,
-           count(*) AS n_richer_customers
-    FROM supplier s
-    JOIN customer c
-      ON s.s_nationkey = c.c_nationkey AND c.c_acctbal > s.s_acctbal
-    GROUP BY s.s_suppkey
-    """,
+    oracle=THETA_ACCTBAL_ORACLE,
     survey_ids=("B14", "B31"),
     description="Theta-join count via rank arithmetic: O(n log n) twin of join_theta_acctbal",
 )
+@register(
+    "join_theta_acctbal",
+    oracle=THETA_ACCTBAL_ORACLE,
+    survey_ids=("B14",),
+    description="Equi+inequality join: same-nation customers richer than supplier.",
+)
 def theta_join_rank_rewrite(spark: SparkSession, sf: str) -> DataFrame:
-    """The scale path for COUNTING theta-join matches: joined pairs in
-    ``join_theta_acctbal`` grow as |S|x|C| within each of 25 fixed
-    nations (the 100x sweep measured it the registry's worst exponent,
-    alpha +1.73 over two decades), but the COUNT per supplier needs no
-    pair materialization. Union both tables tagged, one window over
-    (nation ORDER BY acctbal) with a RANGE frame — peers included, so
-    the running customer count at a supplier row is exactly
-    #{c_acctbal <= s_acctbal} — and subtract from the nation's
-    customer total. One shuffle + sort, output |S| rows, no pair
-    blowup. Suppliers with zero richer customers are filtered to match
+    """Equi+inequality join: same-nation customers richer than each
+    supplier, counted without materialising the pairs. A join on
+    nation with a residual ``c_acctbal > s_acctbal`` enumerates |S|x|C|
+    pairs within each of 25 fixed nations, so it grows quadratically
+    (OPTIMIZATION_r15.md, "One plan per answer"). Instead, union both
+    tables tagged, one window over (nation ORDER BY acctbal) with a
+    RANGE frame — peers included, so the running customer count at a
+    supplier row is exactly #{c_acctbal <= s_acctbal} — and subtract
+    from the nation's customer total. One shuffle + sort, output |S|
+    rows. Suppliers with zero richer customers are filtered to match
     the inner-join contract.
     """
     s = t(spark, sf, "supplier").select(

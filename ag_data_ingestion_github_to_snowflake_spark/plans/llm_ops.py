@@ -249,9 +249,7 @@ def jaccard_adjacent_docs(spark: SparkSession, sf: str) -> DataFrame:
 # B55 similarity search: brute-force cosine top-k (oracle: explicit
 # double arithmetic — list_cosine_similarity computes in float32)
 # ---------------------------------------------------------------------------
-@register(
-    "similarity_topk_cosine",
-    oracle="""
+SIMILARITY_TOPK_COSINE_ORACLE = """
     WITH q AS (SELECT vec_id AS query_id, embedding AS q_vec FROM embeddings WHERE vec_id < 10),
     scored AS (
       SELECT q.query_id,
@@ -270,7 +268,12 @@ def jaccard_adjacent_docs(spark: SparkSession, sf: str) -> DataFrame:
                                    ORDER BY cosine DESC, neighbor_id ASC) AS rnk
       FROM scored
     ) WHERE rnk <= 5
-    """,
+"""
+
+
+@register(
+    "similarity_topk_cosine",
+    oracle=SIMILARITY_TOPK_COSINE_ORACLE,
     survey_ids=("B55", "B41", "B43"),
 )
 def similarity_topk_cosine(spark: SparkSession, sf: str) -> DataFrame:
@@ -457,26 +460,7 @@ def _ivf_query(spark: SparkSession, sf: str, nprobe: int) -> DataFrame:
     # top-k and the exact-cosine SQL oracle applies. This hash-verifies
     # the whole IVF machinery: training, assignment, probing, cell join
     # and ranking.
-    oracle="""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS q_vec FROM embeddings WHERE vec_id < 10),
-    scored AS (
-      SELECT q.query_id,
-             c.vec_id AS neighbor_id,
-             ROUND(
-               list_sum(list_transform(list_zip(q.q_vec, c.embedding),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(q.q_vec,  v -> CAST(v AS DOUBLE)*CAST(v AS DOUBLE))))
-                * sqrt(list_sum(list_transform(c.embedding, v -> CAST(v AS DOUBLE)*CAST(v AS DOUBLE))))),
-             6) AS cosine
-      FROM embeddings c, q
-      WHERE q.query_id <> c.vec_id
-    )
-    SELECT query_id, neighbor_id, cosine, rnk FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, neighbor_id ASC) AS rnk
-      FROM scored
-    ) WHERE rnk <= 5
-    """,
+    oracle=SIMILARITY_TOPK_COSINE_ORACLE,
     survey_ids=("B55",),
 )
 def similarity_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -511,26 +495,7 @@ def similarity_ivf_probed(spark: SparkSession, sf: str) -> DataFrame:
     # cell of the PERSISTED index provably equals brute force, so the
     # exact-cosine oracle hash-verifies the whole build/write/read/
     # search round-trip, including the partitioned cell layout.
-    oracle="""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS q_vec FROM embeddings WHERE vec_id < 10),
-    scored AS (
-      SELECT q.query_id,
-             c.vec_id AS neighbor_id,
-             ROUND(
-               list_sum(list_transform(list_zip(q.q_vec, c.embedding),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(q.q_vec,  v -> CAST(v AS DOUBLE)*CAST(v AS DOUBLE))))
-                * sqrt(list_sum(list_transform(c.embedding, v -> CAST(v AS DOUBLE)*CAST(v AS DOUBLE))))),
-             6) AS cosine
-      FROM embeddings c, q
-      WHERE q.query_id <> c.vec_id
-    )
-    SELECT query_id, neighbor_id, cosine, rnk FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, neighbor_id ASC) AS rnk
-      FROM scored
-    ) WHERE rnk <= 5
-    """,
+    oracle=SIMILARITY_TOPK_COSINE_ORACLE,
     survey_ids=("B55", "B3"),
     description="IVF index persisted as a cell-partitioned table, reloaded, searched",
 )
@@ -1470,9 +1435,7 @@ def tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
 # so even the "approximate" scores hash-match an oracle that re-derives
 # the same codes in SQL.
 # ---------------------------------------------------------------------------
-@register(
-    "similarity_topk_quantized",
-    oracle="""
+SIMILARITY_TOPK_QUANTIZED_ORACLE = """
     WITH wide AS (
       SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
       FROM embeddings
@@ -1503,7 +1466,12 @@ def tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
                                    ORDER BY cosine DESC, neighbor_id ASC) AS rnk
       FROM scored
     ) WHERE rnk <= 5
-    """,
+"""
+
+
+@register(
+    "similarity_topk_quantized",
+    oracle=SIMILARITY_TOPK_QUANTIZED_ORACLE,
     survey_ids=("B55", "B41", "B43"),
     description="Cosine top-5 over the int8-quantized corpus (asymmetric distance)",
 )
@@ -1525,38 +1493,7 @@ def similarity_topk_quantized(spark: SparkSession, sf: str) -> DataFrame:
     # int8-requantizing SQL oracle (same as similarity_topk_quantized)
     # hash-verifies training + assignment + probing + the asymmetric
     # int8 scoring in one go.
-    oracle="""
-    WITH wide AS (
-      SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-      FROM embeddings
-    ),
-    deq AS (
-      SELECT vec_id,
-             [CAST(floor(x / scale + 0.5) AS INT) * scale FOR x IN v] AS cv
-      FROM (
-        SELECT vec_id, v,
-               GREATEST(list_max([abs(x) FOR x IN v]), 1e-12) / 127.0 AS scale
-        FROM wide
-      )
-    ),
-    q AS (SELECT vec_id AS query_id, v AS q_vec FROM wide WHERE vec_id < 10),
-    scored AS (
-      SELECT q.query_id, c.vec_id AS neighbor_id,
-             ROUND(
-               list_sum(list_transform(list_zip(q.q_vec, c.cv),
-                        x -> x[1] * x[2]))
-               / (sqrt(list_sum(list_transform(q.q_vec, y -> y*y)))
-                * sqrt(list_sum(list_transform(c.cv, y -> y*y)))),
-             6) AS cosine
-      FROM deq c, q
-      WHERE q.query_id <> c.vec_id
-    )
-    SELECT query_id, neighbor_id, cosine, rnk FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, neighbor_id ASC) AS rnk
-      FROM scored
-    ) WHERE rnk <= 5
-    """,
+    oracle=SIMILARITY_TOPK_QUANTIZED_ORACLE,
     survey_ids=("B55", "B41", "B43"),
     description="IVF cells over int8 codes (FAISS IVF,SQ8 shape) at full probe",
 )
@@ -1694,16 +1631,19 @@ def per_domain_cap(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
-    "incremental_dedup_new_batch",
-    oracle="""
+INCREMENTAL_DEDUP_ORACLE = """
     WITH corpus AS (SELECT sha256(text) AS h FROM documents WHERE doc_id % 10 <> 7),
     batch AS (SELECT doc_id, source, sha256(text) AS h
               FROM documents WHERE doc_id % 10 = 7)
     SELECT b.doc_id, b.source FROM batch b
     WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE c.h = b.h)
       AND b.doc_id = (SELECT MIN(b2.doc_id) FROM batch b2 WHERE b2.h = b.h)
-    """,
+"""
+
+
+@register(
+    "incremental_dedup_new_batch",
+    oracle=INCREMENTAL_DEDUP_ORACLE,
     survey_ids=("B53", "B13", "B26"),
     description="Incremental corpus update: new batch anti-joined against the corpus hash set",
 )
@@ -1733,14 +1673,7 @@ def incremental_dedup_new_batch(spark: SparkSession, sf: str) -> DataFrame:
 
 @register(
     "incremental_dedup_bloom",
-    oracle="""
-    WITH corpus AS (SELECT sha256(text) AS h FROM documents WHERE doc_id % 10 <> 7),
-    batch AS (SELECT doc_id, source, sha256(text) AS h
-              FROM documents WHERE doc_id % 10 = 7)
-    SELECT b.doc_id, b.source FROM batch b
-    WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE c.h = b.h)
-      AND b.doc_id = (SELECT MIN(b2.doc_id) FROM batch b2 WHERE b2.h = b.h)
-    """,
+    oracle=INCREMENTAL_DEDUP_ORACLE,
     survey_ids=("B53", "B13", "B26"),
     description="bloom-pruned incremental dedup: only bloom-positive rows enter the anti-join shuffle",
 )

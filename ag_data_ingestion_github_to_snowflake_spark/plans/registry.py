@@ -32,15 +32,6 @@ class QuerySpec:
     oracle: str | None  # ANSI SQL for DuckDB; None => rows-only check
     survey_ids: tuple[str, ...] = field(default_factory=tuple)
     description: str = ""
-    # Set on deliberately NAIVE pedagogical carriers whose 100x scaling
-    # is super-linear by construction: names the oracle-identical
-    # distributed rewrite that is the actual scale path. Surfaced in
-    # COVERAGE.md and the scale-curve report so no consumer mistakes
-    # the carrier for the recommended plan; guarded by
-    # tests/test_scale_guard.py (every measured alpha>1.3 query must
-    # carry this tag, and the named twin must exist with the same
-    # oracle).
-    naive_twin_of: str | None = None
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
@@ -51,7 +42,6 @@ def register(
     oracle: str | None,
     survey_ids: tuple[str, ...] = (),
     description: str = "",
-    naive_twin_of: str | None = None,
 ) -> Callable[[Callable[[SparkSession, str], DataFrame]], Callable]:
     def deco(fn: Callable[[SparkSession, str], DataFrame]) -> Callable:
         doc_first_line = (fn.__doc__ or "").strip().splitlines()[0] if fn.__doc__ else ""
@@ -61,44 +51,23 @@ def register(
             oracle=oracle,
             survey_ids=survey_ids,
             description=description or doc_first_line,
-            naive_twin_of=naive_twin_of,
         )
         return fn
 
     return deco
 
 
-# The correctness driver records at most the FIRST 50 entries of
-# ``queries()``. This list pins an explicit order (guarded by
-# tests/test_registry_priority.py): the current window UNION the
-# cumulative ledger (CORRECTNESS_r*.json) must cover every SURVEY.md
-# §2 operator id carried by the registry.
-#
-# ROTATION (round 14): same ledger-closing policy as r13 (VERDICT r12
-# items 1 + 3 precedent). Slots: (a) the 5 corpus-stats names born in
-# the r13 partial-BUILD commit and never driver-checked; (b)
-# kaplan_meier_survival — its oracle was restated this round as a
-# recursive CTE (list-HOF-free, VERDICT r13 item 1; values verified
-# identical at 3 scales) and it is the 3-round red the rewrite must
-# clear IN THE DRIVER; (c) every contract whose execution path this
-# round touched (simhash SQL-string vote, pagerank lazy checkpoints,
-# profile_orders_approx repartition, cep kernel interior, the biggest
-# cached-plan-flag movers) — values pinned identical locally, driver
-# re-check anyway; (d) stalest greens — last driver-checked r06/r07 —
-# so the oldest evidence in the cumulative ledger keeps advancing.
-# All 50 slots are oracle-bearing. Local parity
-# (tests/test_oracle_parity.py) covers the rotated-out tail with the
-# identical compare.
+# The external correctness check records at most the FIRST 50 entries
+# of ``queries()``, so this order is its window. The window plus the
+# cumulative ledger (CORRECTNESS_r*.json) must cover every SURVEY.md §2
+# operator id the registry carries (tests/test_registry_priority.py).
 _PRIORITY: tuple[str, ...] = (
-    # -- (a) never driver-checked (r13-born corpus stats) --
     "g2_keyness_by_source",
     "burrows_delta_sources",
     "chunked_ttr_docs",
     "oov_rate_by_source",
     "doclen_lognormal_fit",
-    # -- (b) 3-round red; oracle restated as recursive CTE this round --
     "kaplan_meier_survival",
-    # -- (c) r14-touched execution paths --
     "dedup_simhash_pairs",
     "pagerank_link_graph",
     "profile_orders_approx",
@@ -107,7 +76,6 @@ _PRIORITY: tuple[str, ...] = (
     "clustering_coefficient_nodes",
     "dau_mau_stickiness",
     "dedup_minhash_verified",
-    # -- (d) stalest greens: last driver-checked r06/r07 --
     "autocorrelation_lag1_events",
     "bitwise_funcs_events",
     "bpe_apply_tokenize",

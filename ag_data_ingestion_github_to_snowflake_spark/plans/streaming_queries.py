@@ -25,7 +25,13 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.window import Window
 
+from ag_data_ingestion_github_to_snowflake_spark.plans.behavior_queries import (
+    SCD2_CUSTOMER_HISTORY_ORACLE,
+)
 from ag_data_ingestion_github_to_snowflake_spark.plans.registry import register, t
+from ag_data_ingestion_github_to_snowflake_spark.plans.temporal_queries import (
+    CEP_FUNNEL_ORACLE,
+)
 from ag_data_ingestion_github_to_snowflake_spark.sources.staging import staged
 from ag_data_ingestion_github_to_snowflake_spark.streaming import streams as S
 
@@ -308,18 +314,24 @@ def _drain(
         spark.catalog.dropTempView(name)
 
 
-@register(
-    "streaming_tumbling_events",
-    # Same oracle as the batch twin: AvailableNow drains everything, so
-    # the streaming result must hash-match the SQL aggregation.
-    oracle="""
+# Shared with windows_queries.tumbling_window_events. It lives here
+# because this module registers first: importing windows_queries from
+# here would move its queries ahead in the registry order.
+TUMBLING_EVENTS_ORACLE = """
     SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
            event_type,
            count(*) AS n,
            CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
     FROM events
     GROUP BY 1, 2
-    """,
+"""
+
+
+@register(
+    "streaming_tumbling_events",
+    # Same oracle as the batch twin: AvailableNow drains everything, so
+    # the streaming result must hash-match the SQL aggregation.
+    oracle=TUMBLING_EVENTS_ORACLE,
     survey_ids=("B44", "B46", "A22"),
 )
 def streaming_tumbling_events(spark: SparkSession, sf: str) -> DataFrame:
@@ -1032,32 +1044,7 @@ def streaming_dlq_ingest(spark: SparkSession, sf: str) -> DataFrame:
     # micro-batch upserts must land the exact history the one-shot
     # window build produces — the incremental MERGE path itself is
     # hash-verified, not just smoke-tested.
-    oracle="""
-    WITH changes AS (
-      SELECT c_custkey AS custkey,
-             TIMESTAMP '1990-01-01 00:00:00' AS ts,
-             c_mktsegment AS tier,
-             CAST(0 AS BIGINT) AS seq
-      FROM customer WHERE c_custkey < 300
-      UNION ALL
-      SELECT o_custkey, o_orderdate, o_orderpriority, o_orderkey
-      FROM orders WHERE o_custkey < 300
-    ),
-    marked AS (
-      SELECT *, LAG(tier) OVER (PARTITION BY custkey ORDER BY ts, seq) AS prev
-      FROM changes
-    ),
-    vers AS (
-      SELECT custkey, ts, tier, seq FROM marked
-      WHERE prev IS DISTINCT FROM tier
-    )
-    SELECT custkey, tier,
-           ts AS valid_from,
-           LEAD(ts) OVER (PARTITION BY custkey ORDER BY ts, seq) AS valid_to,
-           LEAD(ts) OVER (PARTITION BY custkey ORDER BY ts, seq) IS NULL
-             AS is_current
-    FROM vers
-    """,
+    oracle=SCD2_CUSTOMER_HISTORY_ORACLE,
     survey_ids=("B44", "B29", "B13"),
     description="Streaming SCD2: foreachBatch upserts across 4 micro-batches equal the batch build",
 )
@@ -1182,7 +1169,7 @@ def streaming_scd2_upsert(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "streaming_cep_funnel",
-    oracle=None,  # set below to share the batch twin's oracle verbatim
+    oracle=CEP_FUNNEL_ORACLE,
     survey_ids=("B52", "B44", "B30"),
     description="Streaming CEP (applyInPandasWithState): first funnel chain per user across 4 micro-batches",
 )
@@ -1239,15 +1226,3 @@ def streaming_cep_funnel(spark: SparkSession, sf: str) -> DataFrame:
         F.timestamp_micros(F.col("tc_us")).alias("tc"),
         F.timestamp_micros(F.col("tp_us")).alias("tp"),
     )
-
-
-# share the batch twin's oracle verbatim (single source of truth)
-from ag_data_ingestion_github_to_snowflake_spark.plans.temporal_queries import (  # noqa: E402
-    CEP_FUNNEL_ORACLE as _CEP_ORACLE,
-)
-from ag_data_ingestion_github_to_snowflake_spark.plans.registry import _REGISTRY  # noqa: E402
-import dataclasses  # noqa: E402
-
-_REGISTRY["streaming_cep_funnel"] = dataclasses.replace(
-    _REGISTRY["streaming_cep_funnel"], oracle=_CEP_ORACLE
-)

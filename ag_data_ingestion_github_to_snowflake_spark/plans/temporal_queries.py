@@ -208,9 +208,10 @@ def scd2_event_type_intervals(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
-    "concurrent_intervals_sweep",
-    oracle="""
+# ROWS (not RANGE) frame: tied boundary instants accumulate one row at a
+# time, so every prefix value is deterministic and a same-instant peak
+# is not hidden.
+CONCURRENT_INTERVALS_ORACLE = """
     WITH pts AS (
         SELECT event_type, epoch_us(ts) AS t, 1 AS delta FROM events
         UNION ALL
@@ -227,98 +228,32 @@ def scd2_event_type_intervals(spark: SparkSession, sf: str) -> DataFrame:
     )
     SELECT event_type, CAST(MAX(conc) AS BIGINT) AS max_concurrent
     FROM runs GROUP BY event_type
-    """,
-    survey_ids=("B30", "B31"),
-    description="sweep-line max-concurrency: +1/-1 boundary points, running sum, max per group",
-    naive_twin_of="concurrent_intervals_distributed",
-)
-def concurrent_intervals_sweep(spark: SparkSession, sf: str) -> DataFrame:
-    """Max concurrent intervals per event type (sweep-line): each event
-    spans [ts, ts + value seconds); explode into +1 start / -1 end
-    boundary points, running-sum in boundary order (ends sort before
-    starts at the same instant, so touching intervals don't count as
-    overlapping), take the per-group max. The classic interval-
-    concurrency operator (peak sessions online, max parallel jobs).
-
-    Scale shape: 2 boundary rows per interval, ONE shuffle on the
-    group key for the window sort, partial-agg max on top — no
-    interval self-join (the naive overlap-count pairs every
-    overlapping interval: quadratic in peak concurrency).
-
-    MEASURED-CONTRAST CARRIER: with only a handful of event types the
-    per-group window sort concentrates in few tasks (alpha +1.57 at
-    100x). On real data USE ``concurrent_intervals_distributed`` —
-    the oracle-identical two-level prefix-sum twin whose every stage
-    stays parallel regardless of group cardinality.
-
-    ROWS (not the default RANGE) frame so tied boundary instants
-    accumulate one row at a time: identical deltas within a tie group
-    make every prefix value deterministic, and RANGE would hide a
-    same-instant peak. Epoch-microsecond arithmetic keeps both engines
-    integer-exact.
-    """
-    ev = t(spark, sf, "events").select(
-        "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("start_us"),
-        (
-            F.unix_micros(F.col("ts").cast("timestamp"))
-            + F.col("value").cast("int").cast("bigint") * F.lit(1000000)
-        ).alias("end_us"),
-    )
-    pts = ev.select(
-        "event_type", F.col("start_us").alias("t"), F.lit(1).alias("delta")
-    ).unionByName(
-        ev.select(
-            "event_type", F.col("end_us").alias("t"), F.lit(-1).alias("delta")
-        )
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("t", "delta")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        pts.withColumn("conc", F.sum("delta").over(w))
-        .groupBy("event_type")
-        .agg(F.max("conc").cast("bigint").alias("max_concurrent"))
-    )
+"""
 
 
 @register(
     "concurrent_intervals_distributed",
-    # Same oracle as concurrent_intervals_sweep: identical answer via
-    # the two-level decomposition — that equality is the point.
-    oracle="""
-    WITH pts AS (
-        SELECT event_type, epoch_us(ts) AS t, 1 AS delta FROM events
-        UNION ALL
-        SELECT event_type,
-               epoch_us(ts) + CAST(value AS INT) * 1000000 AS t,
-               -1 AS delta
-        FROM events
-    ),
-    runs AS (
-        SELECT event_type,
-               SUM(delta) OVER (PARTITION BY event_type ORDER BY t, delta
-                                ROWS UNBOUNDED PRECEDING) AS conc
-        FROM pts
-    )
-    SELECT event_type, CAST(MAX(conc) AS BIGINT) AS max_concurrent
-    FROM runs GROUP BY event_type
-    """,
+    oracle=CONCURRENT_INTERVALS_ORACLE,
     survey_ids=("B30", "B31"),
     description="Two-level prefix-sum sweep: parallel max-concurrency, no per-group task wall",
 )
+@register(
+    "concurrent_intervals_sweep",
+    oracle=CONCURRENT_INTERVALS_ORACLE,
+    survey_ids=("B30", "B31"),
+    description="sweep-line max-concurrency: +1/-1 boundary points, running sum, max per group",
+)
 def concurrent_intervals_distributed(spark: SparkSession, sf: str) -> DataFrame:
-    """The scale twin of ``concurrent_intervals_sweep``: the one-window
-    sweep's running sum lands each event_type's FULL timeline on one
-    task (parallelism = n_groups; measured alpha +1.66 at 100x with 5
-    groups), while this version chunks the timeline into day buckets,
-    computes local running sums in parallel, prefix-sums the tiny
-    per-chunk totals, and takes max(chunk offset + local max) — exact
-    same answer (``operators/temporal.py:
-    distributed_sweep_max_concurrency``), parallel across
-    groups x days instead of groups.
+    """Max concurrent intervals per event type (sweep-line): each event
+    spans [ts, ts + value seconds); explode into +1 start / -1 end
+    boundary points and take the max running sum in boundary order
+    (ends sort before starts at the same instant, so touching intervals
+    don't count as overlapping). One window per event type would land
+    each type's whole timeline on one task, so parallelism would be
+    n_groups (OPTIMIZATION_r15.md, "One plan per answer"); instead
+    ``operators/temporal.py:distributed_sweep_max_concurrency`` sums
+    day chunks in parallel and prefix-sums the per-chunk totals.
+    Epoch-microsecond arithmetic keeps both engines integer-exact.
     """
     ev = t(spark, sf, "events").select(
         "event_type",
@@ -400,13 +335,11 @@ def ewma_events_daily(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
-    "autocorrelation_lag1_events",
-    # Native corr() accumulates doubles in aggregation order; both
-    # sides compute the five moments over the lag-paired series as
-    # EXACT decimal sums and assemble Pearson r in scalar double math
-    # (the stats_corr_quantity_price convention).
-    oracle="""
+# Native corr() accumulates doubles in aggregation order; both sides
+# compute the five moments over the lag-paired series as EXACT decimal
+# sums and assemble Pearson r in scalar double math (the
+# stats_corr_quantity_price convention).
+AUTOCORRELATION_LAG1_ORACLE = """
     WITH lagged AS (
       SELECT event_type,
              CAST(value AS DECIMAL(18,6)) AS y,
@@ -431,94 +364,31 @@ def ewma_events_daily(spark: SparkSession, sf: str) -> DataFrame:
                  / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)), 6)
              AS autocorr_lag1
     FROM m
-    """,
-    survey_ids=("B30", "B23", "B16"),
-    description="Lag-1 autocorrelation of event values per type (exact-moment Pearson)",
-    naive_twin_of="autocorrelation_lag1_distributed",
-)
-def autocorrelation_lag1_events(spark: SparkSession, sf: str) -> DataFrame:
-    """Serial correlation of the per-type event-value series — the
-    time-series diagnostic behind seasonality/trend checks. One lag
-    window + one aggregation, both on the event_type key (AQE reuses
-    the exchange); moments are exact decimal sums so the assembled r
-    is engine-identical at round-6.
-
-    MEASURED-CONTRAST CARRIER: the per-type lag window concentrates
-    each type's full series in one task (alpha +1.36 at 100x). On
-    real data USE ``autocorrelation_lag1_distributed`` — the
-    oracle-identical bucketed-lag twin (operators/temporal.py:
-    bucketed_lag_pairs) with no per-group global sort."""
-    from pyspark.sql import Window
-
-    ev = t(spark, sf, "events")
-    y = F.col("value").cast("decimal(18,6)")
-    w = Window.partitionBy("event_type").orderBy("ts", "event_id")
-    lagged = ev.select(
-        "event_type", y.alias("y"), F.lag(y).over(w).alias("yprev")
-    ).filter(F.col("yprev").isNotNull())
-    m = lagged.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("yprev").cast("double").alias("sx"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum(F.col("yprev") * F.col("yprev")).cast("double").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("double").alias("syy"),
-        F.sum(F.col("yprev") * F.col("y")).cast("double").alias("sxy"),
-    )
-    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    sxx, syy, sxy = F.col("sxx"), F.col("syy"), F.col("sxy")
-    return m.select(
-        "event_type",
-        n.cast("bigint").alias("n_pairs"),
-        F.round(
-            (n * sxy - sx * sy)
-            / (F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy)),
-            6,
-        ).alias("autocorr_lag1"),
-    )
+"""
 
 
 @register(
     "autocorrelation_lag1_distributed",
-    # Same oracle as autocorrelation_lag1_events: the distributed
-    # pairing must produce the identical pair set, hence identical
-    # moments and identical Pearson r.
-    oracle="""
-    WITH lagged AS (
-      SELECT event_type,
-             CAST(value AS DECIMAL(18,6)) AS y,
-             LAG(CAST(value AS DECIMAL(18,6))) OVER (
-               PARTITION BY event_type ORDER BY ts, event_id) AS yprev
-      FROM events
-    ),
-    m AS (
-      SELECT event_type,
-             CAST(COUNT(*) AS DOUBLE) AS n,
-             CAST(SUM(yprev) AS DOUBLE) AS sx,
-             CAST(SUM(y) AS DOUBLE) AS sy,
-             CAST(SUM(yprev * yprev) AS DOUBLE) AS sxx,
-             CAST(SUM(y * y) AS DOUBLE) AS syy,
-             CAST(SUM(yprev * y) AS DOUBLE) AS sxy
-      FROM lagged WHERE yprev IS NOT NULL
-      GROUP BY event_type
-    )
-    SELECT event_type,
-           CAST(n AS BIGINT) AS n_pairs,
-           ROUND((n * sxy - sx * sy)
-                 / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)), 6)
-             AS autocorr_lag1
-    FROM m
-    """,
+    oracle=AUTOCORRELATION_LAG1_ORACLE,
     survey_ids=("B30", "B23", "B16"),
     description="Lag-1 autocorrelation via day-bucketed parallel lag (window-wall-free twin)",
 )
+@register(
+    "autocorrelation_lag1_events",
+    oracle=AUTOCORRELATION_LAG1_ORACLE,
+    survey_ids=("B30", "B23", "B16"),
+    description="Lag-1 autocorrelation of event values per type (exact-moment Pearson)",
+)
 def autocorrelation_lag1_distributed(spark: SparkSession, sf: str) -> DataFrame:
-    """The scale path for ``autocorrelation_lag1_events``: per-type LAG
-    caps parallelism at the type cardinality (5 here — the
-    low-cardinality window wall, +1.36 at 100x), so the lag pairs are
-    built chunked — within-(type, day) lags in parallel, the one pair
-    each day boundary severs restored from a tiny per-bucket
+    """Serial correlation of the per-type event-value series — the
+    time-series diagnostic behind seasonality/trend checks. A LAG
+    window per type would cap parallelism at the type cardinality (5
+    here; OPTIMIZATION_r15.md, "One plan per answer"), so the lag pairs
+    are built within (type, day) buckets in parallel and the one pair
+    each day boundary severs is restored from a tiny per-bucket
     first/last table (``operators/temporal.py:bucketed_lag_pairs``).
-    Identical pair set, identical oracle."""
+    The moments are exact decimal sums, so the assembled r is
+    engine-identical."""
     ev = t(spark, sf, "events")
     pairs = bucketed_lag_pairs(
         ev.select(

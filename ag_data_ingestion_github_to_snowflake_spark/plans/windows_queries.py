@@ -20,6 +20,9 @@ from pyspark.sql.window import Window
 
 from ag_data_ingestion_github_to_snowflake_spark.functions.exact import DEC6
 from ag_data_ingestion_github_to_snowflake_spark.plans.registry import register, t
+from ag_data_ingestion_github_to_snowflake_spark.plans.streaming_queries import (
+    TUMBLING_EVENTS_ORACLE,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -143,14 +146,7 @@ def window_moving_avg_events(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "tumbling_window_events",
-    oracle="""
-    SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
-           event_type,
-           count(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-    FROM events
-    GROUP BY 1, 2
-    """,
+    oracle=TUMBLING_EVENTS_ORACLE,
     survey_ids=("B46",),
 )
 def tumbling_window_events(spark: SparkSession, sf: str) -> DataFrame:

@@ -360,12 +360,9 @@ def main() -> None:
     # +-8% band.
     full["lane_probes"] = lane_probes
     full["query_probe_idx"] = query_probe_idx
-    # Deliberately-naive measured-contrast carriers and their
-    # oracle-identical distributed rewrites: read the carrier's
-    # timing as pedagogy, the twin's as the engine's scale path.
-    full["naive_carriers"] = {
-        n: s.naive_twin_of for n, s in specs.items() if s.naive_twin_of
-    }
+    # Always empty since no registry name runs a naive plan; kept
+    # because bench JSON keys are an external contract.
+    full["naive_carriers"] = {}
     full_line = json.dumps(full)
     try:
         here = Path(__file__).resolve().parent

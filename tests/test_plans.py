@@ -78,11 +78,13 @@ def test_topk_uses_take_ordered(spark):
 
 
 def test_theta_join_not_cartesian(spark):
-    """Equi+inequality join must stay a hash/sort-merge join with a
-    residual condition, never a cartesian/BNL product."""
-    df = all_specs()["join_theta_acctbal"].build(spark, SF)
+    """Equi+inequality join (user_id plus a ts range) must stay a
+    hash/sort-merge join with a residual condition, never a
+    cartesian/BNL product."""
+    df = all_specs()["multi_touch_attribution"].build(spark, SF)
     plan = plan_of(df)
     assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_semi_anti_join_operators(spark):

@@ -1,18 +1,9 @@
-"""Guard the naive-carrier contract (VERDICT r7 item 3).
+"""Guard the registry's 100x scaling.
 
-A handful of registry queries are DELIBERATELY naive formulations kept
-as measured contrast against an oracle-identical distributed rewrite.
-The contract has three legs:
-
-1. Every query whose measured 100x exponent exceeds ALPHA_NAIVE in
-   ``scale_curve_100x_all.json`` must carry ``naive_twin_of`` — a
-   super-linear query without the tag is an unmitigated bottleneck and
-   must be fixed or tagged.
-2. Every ``naive_twin_of`` target must exist in the registry and carry
-   the IDENTICAL oracle SQL — "same answer, different algorithm" is the
-   point of the twin, and a drifting oracle would silently break it.
-3. The twin itself must measure (sub-)linear — a "scale path" that is
-   also super-linear is no path at all.
+1. No query's measured 100x exponent in ``scale_curve_100x_all.json``
+   may exceed ALPHA_MAX; a query above it must be re-planned.
+2. Each retired naive name serves its scale path's build function and
+   oracle (OPTIMIZATION_r15.md, "One plan per answer").
 
 No Spark session needed: this reads the registry and the persisted
 scale-curve artifact only.
@@ -28,17 +19,12 @@ from ag_data_ingestion_github_to_snowflake_spark.plans.registry import all_specs
 ROOT = Path(__file__).resolve().parent.parent
 CURVE = ROOT / "scale_curve_100x_all.json"
 
-# Super-linear threshold matching the judge's reading of the 100x curve
-# (alpha 1.0 = linear in data volume; super-linear = the query does
-# asymptotically more work per row as data grows). r9 lowered the gate
-# 1.3 -> 1.25 (VERDICT r8 item 4) after re-planning the worst
-# just-under-the-wire query (join_null_safe_priority, was +1.28 via a
-# ~5-key skewed <=> join shuffle; aggregate-first rewrite measures
-# +0.04) so borderline skew-by-construction plans no longer slip by.
-ALPHA_NAIVE = 1.25
-# The twin may be modestly super-linear only through measurement noise /
-# fixed-overhead crossover, never genuinely quadratic.
-ALPHA_TWIN_MAX = 1.3
+# alpha = log10(t_100x / t_sf0.1): the sf0.1 fixture against its 100x
+# replication, so time linear in data volume reads 2.0 (BASELINE.md).
+# Fixed costs dominate the small side (pricing_summary reads 1.45 s ->
+# 5.06 s, alpha 0.54). 1.25 allows at most about 18x the time for 100x
+# the data.
+ALPHA_MAX = 1.25
 
 
 def _alphas() -> dict[str, float]:
@@ -52,62 +38,22 @@ def _alphas() -> dict[str, float]:
     }
 
 
-def test_every_superlinear_query_is_a_tagged_naive_carrier():
+def test_no_query_exceeds_the_100x_exponent_gate():
     specs = all_specs()
-    alphas = _alphas()
-    untagged = [
+    over = [
         f"{name} (alpha={alpha:+.2f})"
-        for name, alpha in alphas.items()
-        if alpha > ALPHA_NAIVE
-        and name in specs
-        and specs[name].naive_twin_of is None
+        for name, alpha in _alphas().items()
+        if alpha > ALPHA_MAX and name in specs
     ]
-    assert not untagged, (
-        "super-linear queries without a naive_twin_of tag (fix the plan "
-        f"or declare the distributed twin): {untagged}"
-    )
+    assert not over, f"queries above the 100x exponent gate (re-plan them): {over}"
 
 
-def test_naive_twins_exist_with_identical_oracle():
+def test_retired_naive_names_serve_their_scale_path():
     specs = all_specs()
-    for name, spec in specs.items():
-        if spec.naive_twin_of is None:
-            continue
-        twin = specs.get(spec.naive_twin_of)
-        assert twin is not None, (
-            f"{name}: naive_twin_of={spec.naive_twin_of!r} not in registry"
-        )
-        assert spec.oracle is not None and twin.oracle is not None, (
-            f"{name}/{twin.name}: the carrier contract requires BOTH "
-            "sides oracle-checked (same answer is the point)"
-        )
-        norm = lambda s: " ".join(s.split())  # noqa: E731
-        assert norm(spec.oracle) == norm(twin.oracle), (
-            f"{name} and twin {twin.name} have drifted oracles"
-        )
-        assert twin.naive_twin_of is None, (
-            f"{twin.name}: a scale-path twin must not itself be tagged naive"
-        )
-
-
-def test_scale_path_twins_measure_linear():
-    specs = all_specs()
-    alphas = _alphas()
-    bad = [
-        f"{spec.naive_twin_of} (alpha={alphas[spec.naive_twin_of]:+.2f})"
-        for spec in specs.values()
-        if spec.naive_twin_of and alphas.get(spec.naive_twin_of, 0) > ALPHA_TWIN_MAX
-    ]
-    assert not bad, f"declared scale-path twins measure super-linear: {bad}"
-
-
-def test_known_carriers_are_tagged():
-    """The three r7-verdict carriers stay tagged (regression pin)."""
-    specs = all_specs()
-    expected = {
+    for retired, twin in {
         "join_theta_acctbal": "theta_join_rank_rewrite",
         "concurrent_intervals_sweep": "concurrent_intervals_distributed",
         "autocorrelation_lag1_events": "autocorrelation_lag1_distributed",
-    }
-    got = {n: s.naive_twin_of for n, s in specs.items() if s.naive_twin_of}
-    assert got == expected, got
+    }.items():
+        assert specs[retired].build is specs[twin].build, retired
+        assert specs[retired].oracle is specs[twin].oracle, retired

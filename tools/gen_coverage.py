@@ -4,7 +4,6 @@ modules, and tests that implement/verify it."""
 from __future__ import annotations
 
 import re
-import subprocess
 import sys
 from collections import defaultdict
 from pathlib import Path
@@ -164,23 +163,6 @@ def main() -> None:
         f"**Totals:** {len(specs)} registry queries, {n_or} oracle-verified, "
         f"{len(specs) - n_or} rows-only; uncovered ids: {', '.join(missing) or 'none'}."
     )
-    naive = {n: s.naive_twin_of for n, s in specs.items() if s.naive_twin_of}
-    if naive:
-        lines.append("")
-        lines.append("## Naive measured-contrast carriers")
-        lines.append("")
-        lines.append(
-            "These queries are DELIBERATELY naive formulations kept as"
-            " measured contrast against their oracle-identical distributed"
-            " rewrite (the `naive_twin_of` registry attribute; guarded by"
-            " `tests/test_scale_guard.py` — every measured super-linear"
-            " query must carry the tag). On real data use the twin."
-        )
-        lines.append("")
-        lines.append("| naive carrier | scale-path twin (identical oracle) |")
-        lines.append("|---|---|")
-        for n, twin in sorted(naive.items()):
-            lines.append(f"| `{n}` | `{twin}` |")
     lines.extend(HARDENING_SECTION)
     lines.extend(R12_SUMMARY)
     lines.extend(driver_ledger(specs))

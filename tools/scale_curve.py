@@ -82,16 +82,9 @@ def main() -> None:
         spark.catalog.clearCache()  # drop persist() residue between queries
         alpha = math.log10(times["t_big"] / times["t_small"])
         out[name] = {**times, "alpha": round(alpha, 3)}
-        # A deliberately-naive carrier records which rewrite is the
-        # actual scale path, so a super-linear alpha here is read as
-        # measured contrast, not an unmitigated bottleneck.
-        twin = specs[name].naive_twin_of
-        if twin:
-            out[name]["naive_twin_of"] = twin
-        tag = f"  NAIVE CARRIER (use {twin})" if twin else ""
         print(
             f"{name:36s} {times['t_small']:7.3f}s -> "
-            f"{times['t_big']:8.3f}s  alpha={alpha:+.3f}{tag}"
+            f"{times['t_big']:8.3f}s  alpha={alpha:+.3f}"
         )
 
     dest_env = os.environ.get("SPARK_GRAFT_SCALE_OUT")
