@@ -41,7 +41,6 @@ def connected_components(
     nodes: DataFrame | None = None,
     node_col: str = "node",
     max_iter: int = 25,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Label every node with the minimum node id of its component.
 
@@ -52,46 +51,10 @@ def connected_components(
 
     Driver involvement per round is ONE 1-row aggregate (the
     convergence probe) — bounded, like ``train_ivf_centroids``'s
-    k x dim collect; all per-node state stays distributed.
-
-    ``shuffle_partitions`` pins the exchange width for the loop's
-    jobs (saved/restored around the call): the iterative shape pays
-    per-round scheduling for EVERY shuffle task whether or not it has
-    data, so a small label table under the session's default width
-    spends more time launching empty tasks than propagating labels
-    (32→8 partitions halves the fixture-scale wall clock). Size it to
-    the node-table volume: None keeps the session setting, which is
-    the right call at warehouse scale.
-
-    CONCURRENCY CAVEAT: pinning mutates ``spark.sql.shuffle.partitions``
-    session-wide for the duration of the call (saved/restored in a
-    try/finally). Any query running concurrently on the same
-    SparkSession inherits the narrowed width, and two concurrent
-    pinned calls can clobber each other's save/restore. Pass
-    ``shuffle_partitions=None`` (the default) when the session is
-    shared; pin only from a dedicated session or a single-threaded
-    driver loop.
+    k x dim collect; all per-node state stays distributed. Exchange
+    width is the session's: AQE coalesces a small label table's
+    shuffles (OPTIMIZATION_r15.md §5).
     """
-    spark = edges.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        return _connected_components_impl(
-            edges, src, dst, nodes, node_col, max_iter
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-
-def _connected_components_impl(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    nodes: DataFrame | None,
-    node_col: str,
-    max_iter: int,
-) -> DataFrame:
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     # The edge table feeds EVERY round's neighbor join: materialize it
     # once (an upstream LSH pair pipeline would otherwise re-execute

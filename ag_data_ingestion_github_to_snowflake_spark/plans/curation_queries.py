@@ -127,9 +127,6 @@ def leakage_safe_split_clusters(spark: SparkSession, sf: str) -> DataFrame:
         dst="id_b",
         nodes=corpus,
         node_col="vec_id",
-        # few-hundred-node label table: width 8 beats launching 32
-        # near-empty tasks per round (see connected_components doc)
-        shuffle_partitions=8,
     ).select(F.col("node").alias("vec_id"), "comp")
     return labels.withColumn(
         "split",
@@ -651,7 +648,6 @@ def split_leakage_audit(spark: SparkSession, sf: str) -> DataFrame:
         dst="id_b",
         nodes=corpus,
         node_col="vec_id",
-        shuffle_partitions=8,
     ).select(F.col("node").alias("vec_id"), "comp")
     assigned = labels.select(
         "vec_id",

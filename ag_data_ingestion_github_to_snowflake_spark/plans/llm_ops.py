@@ -1013,9 +1013,6 @@ def dedup_cluster_canonical(spark: SparkSession, sf: str) -> DataFrame:
         dst="id_b",
         nodes=corpus,
         node_col="vec_id",
-        # few-hundred-node label table: width 8 beats launching 32
-        # near-empty tasks per round (see connected_components doc)
-        shuffle_partitions=8,
     )
     return labels.select(F.col("node").alias("vec_id"), "comp")
 

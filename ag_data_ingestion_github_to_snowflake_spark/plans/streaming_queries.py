@@ -19,6 +19,7 @@ import shutil
 import tempfile
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -72,7 +73,7 @@ def _events_stream(spark: SparkSession, sf: str, stage: str) -> DataFrame:
 
 def _staged_events_stream(spark: SparkSession, sf: str) -> tuple[DataFrame, str]:
     """The events table as one stream over its staged copy, plus the
-    stage dir (``_adaptive_stream_partitions`` sizes from it)."""
+    stage dir (``_drain`` sizes its state partitions from it)."""
     stage = _events_stage(sf)
     return _events_stream(spark, sf, stage), stage
 
@@ -183,47 +184,30 @@ def _split8_stage(spark: SparkSession, sf: str) -> str:
     return staged("ag_stream_split8", sf, ["events.parquet"], build)
 
 
-# State-store partition count for the drained registry streams. Every
-# stateful operator instantiates one state store PER shuffle partition
-# PER micro-batch; at the fixture volumes the per-store fixed cost
-# dominates (32 -> 8 partitions cuts the stream-stream interval join
-# from ~12s to ~3s at sf0.1 while results are partition-invariant). A
-# real deployment sizes this to cores x state volume — the shuffle
-# partition count is pinned into the CHECKPOINT on first run, so it is
-# a per-query knob, not a global one.
-STREAM_SHUFFLE_PARTITIONS = "8"
+# Rows of staged input per state-shuffle partition (OPTIMIZATION_r15.md §5).
 STREAM_ROWS_PER_PART = 50_000
 
 
-def _adaptive_stream_partitions(
-    spark: SparkSession, stage: str, floor: int = 2
-) -> str:
-    """State-shuffle partition count derived from the staged input size:
-    ``clamp(staged_rows / STREAM_ROWS_PER_PART, floor, defaultParallelism)``.
+def state_partitions(n_rows: int, cores: int) -> int:
+    """State-shuffle width of a drain over ``n_rows`` staged rows:
+    ``clamp(ceil(n_rows / STREAM_ROWS_PER_PART), 2, cores)``.
 
-    State-store commits contend super-linearly in the partition count
-    when state is small, while large state needs core-count
-    parallelism. JVM aggregation drains keep ``floor=2`` (their
-    fixture-scale cost is the per-partition commit); Python-stateful
-    kernels pass ``floor=8`` (their cost is per-row Python work).
-    Results are partition-invariant. Evidence: OPTIMIZATION_r13.md §3.
+    Every stateful operator opens one state store per shuffle partition
+    per micro-batch, so at small state the width is fixed cost (store
+    commits, and for the Python-stateful kernels one Python task each);
+    large state needs core-count parallelism. Results are
+    partition-invariant. Evidence: OPTIMIZATION_r15.md §5.
     """
-    n_rows = 0
-    try:
-        import pyarrow.parquet as pq
+    return max(2, min(cores, -(-n_rows // STREAM_ROWS_PER_PART)))
 
-        for part in sorted(os.listdir(stage)):
-            if part.endswith(".parquet") and not part.startswith("_"):
-                n_rows += pq.ParquetFile(os.path.join(stage, part)).metadata.num_rows
-    except Exception:
-        n_rows = 0
-    cores = spark.sparkContext.defaultParallelism
-    if n_rows <= 0:
-        # Unknown layout: the fixture-sized default, not core count —
-        # core-count partitions regress 2-4x when state is small.
-        return STREAM_SHUFFLE_PARTITIONS
-    parts = (n_rows + STREAM_ROWS_PER_PART - 1) // STREAM_ROWS_PER_PART
-    return str(max(floor, min(cores, parts)))
+
+def _staged_rows(stage: str) -> int:
+    """Row count of the parquet files in ``stage``, from their footers."""
+    return sum(
+        pq.ParquetFile(os.path.join(stage, part)).metadata.num_rows
+        for part in os.listdir(stage)
+        if part.endswith(".parquet") and not part.startswith("_")
+    )
 
 
 _STATE_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
@@ -284,29 +268,29 @@ def _drain(
     plan: DataFrame,
     spark: SparkSession,
     mode: str,
+    stage: str,
     rocksdb: bool = False,
-    shuffle_partitions: str | None = None,
 ) -> DataFrame:
     """Run the streaming plan to completion through a memory sink and
     hand back a *detached* result: the sink table is snapshotted via an
     eager localCheckpoint, then its view is dropped — on failure and
     timeout too — so repeated builds leak no driver-memory tables.
 
-    ``rocksdb=True`` is for operators whose state cardinality scales
-    with the DATA rather than with a bounded key set: the default
-    HDFS-backed store rewrites the whole state map per commit, which
-    turns e.g. the 100x session drain (9.5M session states) from >600 s
-    into ~77 s under RocksDB (incremental SST writes).
+    The state-shuffle width is ``state_partitions`` of the rows staged
+    in ``stage``, the parquet dir the plan streams from.
 
-    ``shuffle_partitions`` overrides the fixture-sized 8 for THIS drain;
-    callers derive it from the staged input
-    (``_adaptive_stream_partitions``)."""
+    ``rocksdb=True`` is for state that scales with the DATA and is
+    committed many times: the default HDFS-backed store rewrites the
+    whole state map per commit, RocksDB writes incremental SSTs. A
+    drain of one or two commits keeps the heap store (the dedup and
+    session-window drains measure why)."""
+    width = state_partitions(_staged_rows(stage), spark.sparkContext.defaultParallelism)
     name = f"mem_{uuid.uuid4().hex}"
     try:
         _run_available_now(
             plan.writeStream.outputMode(mode).format("memory").queryName(name),
             spark,
-            shuffle_partitions or STREAM_SHUFFLE_PARTITIONS,
+            str(width),
             rocksdb,
         )
         return spark.table(name).localCheckpoint(eager=True)
@@ -338,14 +322,7 @@ def streaming_tumbling_events(spark: SparkSession, sf: str) -> DataFrame:
     """Tumbling-window agg executed via Structured Streaming
     (checkpointed micro-batches, AvailableNow drain)."""
     sdf, stage = _staged_events_stream(spark, sf)
-    # State partitions input-derived (floor 2): commit contention,
-    # OPTIMIZATION_r13.md §3.
-    return _drain(
-        S.tumbling_counts(sdf),
-        spark,
-        "complete",
-        shuffle_partitions=_adaptive_stream_partitions(spark, stage),
-    )
+    return _drain(S.tumbling_counts(sdf), spark, "complete", stage)
 
 
 @register(
@@ -378,14 +355,7 @@ def streaming_interval_join_events(spark: SparkSession, sf: str) -> DataFrame:
         sdf.filter(F.col("event_type") == "click"),
         sdf.filter(F.col("event_type") == "purchase"),
     )
-    # State partitions input-derived (floor 2); interval-join state
-    # IS input-bound, so the rows derivation is the right size.
-    return _drain(
-        joined,
-        spark,
-        "append",
-        shuffle_partitions=_adaptive_stream_partitions(spark, stage),
-    )
+    return _drain(joined, spark, "append", stage)
 
 
 def _curated_ids(spark: SparkSession, stage: str, ingest) -> DataFrame:
@@ -508,20 +478,9 @@ def streaming_dedup_events(spark: SparkSession, sf: str) -> DataFrame:
     # full-map rewrite that makes RocksDB win on multi-commit state,
     # and core-count partitions parallelize the per-event state probe
     # instead of idling 3/4 of the box. A continuous production stream
-    # (many commits, state turnover) would flip to rocksdb=True.
-    #
-    # The small-scale/100x partition trade cuts both ways (32 parts:
-    # 100x 31.6 -> 20.8 s but sf0.1 1.11 -> 1.75 s), so the count is
-    # INPUT-DERIVED (OPTIMIZATION_r13.md §3): the 100x
-    # fixture still gets the measured core-count optimum, the sf0.1
-    # bench gets back its 8-partition floor — guide §2, partitioning
-    # derived from input size instead of a constant for either scale.
-    return _drain(
-        deduped,
-        spark,
-        "append",
-        shuffle_partitions=_adaptive_stream_partitions(spark, stage),
-    )
+    # (many commits, state turnover) would flip to rocksdb=True. Width:
+    # ``state_partitions``, OPTIMIZATION_r15.md §5.
+    return _drain(deduped, spark, "append", stage)
 
 
 @register(
@@ -559,23 +518,10 @@ def streaming_stateful_totals(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     sdf, stage = _staged_events_stream(spark, sf)
-    # Per-row cost here is the Python stateful kernel (Arrow + per-key
-    # calls), which scales with data — the fixture-sized default of 8
-    # left 3/4 of a 32-core box idle and was the whole 100x gap (49 s
-    # -> scale_curve_100x_all.json after the core-count retune).
-    # The partition count derives from staged rows
-    # (_adaptive_stream_partitions) so the 100x decade keeps the
-    # core-count optimum while the sf0.1 bench stops paying 32 state
-    # stores x batches for 100k rows. State itself is one tiny
-    # accumulator per user, so the store provider barely matters;
-    # RocksDB is still used as the production-shaped choice.
-    updates = _drain(
-        running_user_totals(sdf),
-        spark,
-        "update",
-        rocksdb=True,
-        shuffle_partitions=_adaptive_stream_partitions(spark, stage, floor=8),
-    )
+    # State is one tiny accumulator per user, so the store provider
+    # barely matters; RocksDB is the production-shaped choice. Width:
+    # ``state_partitions``, OPTIMIZATION_r15.md §5.
+    updates = _drain(running_user_totals(sdf), spark, "update", stage, rocksdb=True)
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
         updates.withColumn("rn", F.row_number().over(w))
@@ -665,16 +611,8 @@ def streaming_session_window_events(spark: SparkSession, sf: str) -> DataFrame:
     # multiplying the emission cost. A long-running production stream
     # (thousands of commits, state >> heap) would still choose
     # RocksDB — that trade is the commit count, not the operator.
-    # Partition count input-derived (OPTIMIZATION_r13.md §3): the
-    # 100x decade keeps the measured core-count optimum above,
-    # sf0.1 returns to the 8-partition floor (guide §2).
-    em = _drain(
-        agg,
-        spark,
-        "append",
-        rocksdb=False,
-        shuffle_partitions=_adaptive_stream_partitions(spark, stage),
-    )
+    # Width: ``state_partitions``, OPTIMIZATION_r15.md §5.
+    em = _drain(agg, spark, "append", stage)
     return em.filter(F.col("user_id") >= 0)
 
 
@@ -721,14 +659,7 @@ def streaming_multibatch_rollup(spark: SparkSession, sf: str) -> DataFrame:
             "total_value",
         )
     )
-    # State partitions input-derived (floor 2): commit contention,
-    # OPTIMIZATION_r13.md §3.
-    return _drain(
-        agg,
-        spark,
-        "complete",
-        shuffle_partitions=_adaptive_stream_partitions(spark, stage),
-    )
+    return _drain(agg, spark, "complete", stage)
 
 
 @register(
@@ -789,14 +720,7 @@ def streaming_enriched_rollup(spark: SparkSession, sf: str) -> DataFrame:
             "total_value",
         )
     )
-    # State partitions input-derived (floor 2): commit contention,
-    # OPTIMIZATION_r13.md §3.
-    return _drain(
-        agg,
-        spark,
-        "complete",
-        shuffle_partitions=_adaptive_stream_partitions(spark, stage),
-    )
+    return _drain(agg, spark, "complete", stage)
 
 
 # ---------------------------------------------------------------------------
@@ -874,12 +798,7 @@ def streaming_drift_monitor(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
         .select(F.col("w.start").alias("h"), "event_type", "n")
     )
-    state = _drain(
-        hourly,
-        spark,
-        "complete",
-        shuffle_partitions=_adaptive_stream_partitions(spark, stage),
-    )
+    state = _drain(hourly, spark, "complete", stage)
 
     # batch finish over the (tiny) state table: hour-midpoint split,
     # contingency chi-square — the drift_chi2_events algebra.
@@ -1209,17 +1128,8 @@ def streaming_cep_funnel(spark: SparkSession, sf: str) -> DataFrame:
     stage = staged("ag_cep_slices", sf, ["events.parquet"], build)
     sdf = _one_file_per_trigger(spark, stage)
     matches = funnel_cep_matches(sdf, window_us=7 * 86400 * 1_000_000)
-    # Input-derived partitions (OPTIMIZATION_r13.md §3) — measured at
-    # sf0.1: 23-30 s at core-count parts vs 7-14 s at 8 (interleaved,
-    # 3 reps), because 4 micro-batches x 32 Python-stateful partitions
-    # cannot amortize on 100k rows; the 100x decade still derives the
-    # core count it was tuned to.
-    drained = _drain(
-        matches,
-        spark,
-        "append",
-        shuffle_partitions=_adaptive_stream_partitions(spark, stage, floor=8),
-    )
+    # One Python task per state partition per trigger: OPTIMIZATION_r15.md §5.
+    drained = _drain(matches, spark, "append", stage)
     return drained.select(
         "user_id",
         F.timestamp_micros(F.col("tv_us")).alias("tv"),

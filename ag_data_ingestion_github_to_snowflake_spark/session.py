@@ -10,8 +10,10 @@ Scale notes (100 TB design):
   post-shuffle partition coalescing are the main levers that make the
   same logical plans survive a 1000-executor cluster.
 - ``spark.sql.shuffle.partitions`` is a *default*; AQE coalesces down.
-  On a real cluster set it to ~2-3x total cores; locally 32 matches
-  the local[32] harness.
+  On a real cluster set it to ~2-3x total cores.
+- Locally the master is ``local[<cores this process may run on>]`` and
+  the driver heap half of physical memory, at most 16g;
+  ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` override both.
 - Arrow enabled for every pandas-UDF boundary (the slow-path escape
   hatch used by dedup/similarity/multimodal operators).
 - UTC session timezone: fixtures carry timestamp columns and the DuckDB
@@ -25,7 +27,13 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def _default_driver_mem() -> str:
+    """Half of physical memory, capped at 16g."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(half_mb, 16 * 1024)}m"
 
 
 def get_spark(app_name: str = "ag-data-ingestion-spark", master: str | None = None) -> SparkSession:
@@ -58,9 +66,13 @@ def get_spark(app_name: str = "ag-data-ingestion-spark", master: str | None = No
         # Single-JVM local mode: driver heap IS executor heap. 8g was
         # measured GC-thrashing the 100x streaming drains (the complete-
         # mode memory sink holds millions of rows; same run varied
-        # 65 s <-> 344 s); 16g removes the thrash with 8x headroom on
-        # the 128 GiB dev box. Real clusters size executors per SF.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # 65 s <-> 344 s); 16g removes the thrash on a 128 GiB host,
+        # and half of memory keeps a small host out of swap. Real
+        # clusters size executors per SF.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
     )
     if master is not None:
         builder = builder.master(master)

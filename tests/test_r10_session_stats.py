@@ -1,4 +1,4 @@
-"""Independent-reference checks for the r10 finance/ML-prep additions.
+"""Independent-reference checks for the finance and ML-prep statistics.
 
 Parity (Spark == DuckDB) cannot catch a bug SHARED by both sides'
 formulations, so each test recomputes the statistic from raw fixture

@@ -1,4 +1,4 @@
-"""Edge-case regressions for the r11 fixes (ADVICE r10).
+"""Edge-case regressions for the corpus statistics on tiny corpora.
 
 `heaps_law_fit`'s checkpoint cut is `floor(k*(mdoc+1)/10 - 1)`: on a
 corpus with fewer than ~10 documents the early cuts are NEGATIVE

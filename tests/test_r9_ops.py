@@ -1,7 +1,7 @@
-"""Semantics tests for the r9 operator additions, on inputs small
-enough to verify by hand or against a naive twin: CDC last-writer
-rules, spatial blocking completeness, OHLC vs the window form,
-HLL-overlap accuracy, attribution credit conservation, AUC extremes.
+"""Semantics tests for operator rules, on inputs small enough to
+verify by hand or against a naive twin: CDC last-writer rules, spatial
+blocking completeness, OHLC vs the window form, HLL-overlap accuracy,
+attribution credit conservation, AUC extremes.
 (Oracle parity pins fixture-level equality; these pin the RULES.)
 """
 
@@ -230,7 +230,7 @@ def test_auc_rank_identity_extremes(spark):
 def test_asof_join_rejects_reserved_column_names(spark):
     """The as-of union plan owns _ts/_side/_payload/_matched and the
     in-payload _rts; inputs carrying them must be rejected up front
-    (silent collision produced ambiguous getField results before r9)."""
+    (a silent collision yields ambiguous getField results)."""
     from ag_data_ingestion_github_to_snowflake_spark.operators.temporal import asof_join
 
     left = spark.createDataFrame(

@@ -220,22 +220,39 @@ def test_streaming_dedup_rocksdb_state_store(spark, events_split_dir):
     """B50 under the RocksDB state store, through the registry's drain:
     same dedup result as the default heap-backed provider — the provider
     changes where state lives (SSD + off-heap), never the semantics —
-    and the session's provider is restored afterwards."""
+    and the session's provider and shuffle width are restored afterwards."""
     from ag_data_ingestion_github_to_snowflake_spark.plans.streaming_queries import (
         _drain as registry_drain,
     )
 
     key = "spark.sql.streaming.stateStore.providerClass"
     before = spark.conf.get(key, None)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
     ev = load_table(spark, SF, "events")
     sdf = stream_events_from_parquet(
         spark, events_split_dir, ev.schema, max_files_per_trigger=2
     )
     plan = S.dedup_stream(sdf.withColumn("ts", F.col("ts").cast("timestamp")), ["user_id"])
-    got = registry_drain(plan, spark, "append", rocksdb=True)
+    got = registry_drain(plan, spark, "append", events_split_dir, rocksdb=True)
     # one surviving row per user, exactly the batch-distinct count
     assert got.count() == ev.select("user_id").distinct().count()
     assert spark.conf.get(key, None) == before
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+
+
+def test_state_partitions_clamps_to_two_and_cores_and_rounds_up():
+    """The drains' state width: ceil(rows / STREAM_ROWS_PER_PART),
+    clamped to [2, cores]."""
+    from ag_data_ingestion_github_to_snowflake_spark.plans.streaming_queries import (
+        STREAM_ROWS_PER_PART as per_part,
+        state_partitions,
+    )
+
+    assert state_partitions(0, 8) == 2
+    assert state_partitions(per_part, 8) == 2
+    assert state_partitions(3 * per_part, 8) == 3
+    assert state_partitions(3 * per_part + 1, 8) == 4
+    assert state_partitions(100 * per_part, 8) == 8
 
 
 def test_stream_static_enrich_equals_batch(spark, events_split_dir, tmp_path):
@@ -534,9 +551,9 @@ def test_failed_drain_leaves_no_checkpoint_dir_or_memory_table(spark, monkeypatc
         raise ValueError("boom")
 
     cps0, mem0 = cps(), mem_tables()
-    sdf, _ = SQ._staged_events_stream(spark, SF)
+    sdf, stage = SQ._staged_events_stream(spark, SF)
     with pytest.raises(Exception, match="boom"):
-        SQ._drain(sdf.select(boom("event_id").alias("x")), spark, "append")
+        SQ._drain(sdf.select(boom("event_id").alias("x")), spark, "append", stage)
     assert cps() - cps0 == set()
     assert mem_tables() - mem0 == set()
 
