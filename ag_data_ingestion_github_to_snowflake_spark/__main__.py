@@ -20,8 +20,11 @@ stages both beside the sink and publishes them with the new watermark
 as one commit record (``sources/sinks.py``), once per batch where the
 reference commits per row; each run first finishes or drops an earlier
 run's commit, so a crash never lands a batch twice. A batch is one
-Spark action — the staged sink write, or a ``noop`` write under
-``--skip-upload`` — and its run counters are observed on that action.
+Spark job — the staged sink write, or a ``noop`` write under
+``--skip-upload`` — and its run counters are observed on that job. Its
+one Python task looks the listed repositories up serially, as the API
+budget, not parallelism, bounds a batch; its metrics row is written on
+the driver without a job.
 A list page or lookup that still fails after its retries
 (``sources/rest.py``) raises out of the batch before its commit, so the
 next run re-fetches the batch.
@@ -85,7 +88,6 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
     """
     from ag_data_ingestion_github_to_snowflake_spark.pipeline.github import (
         incremental_extract,
-        metrics_row,
     )
     from ag_data_ingestion_github_to_snowflake_spark.sources.rest import (
         http_transport,
@@ -163,9 +165,7 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
         metrics = result.metrics(test_mode)
         uploaded = not skip_upload and metrics["valid_count"] > 0
         if uploaded:
-            write_run_metrics(
-                metrics_row(spark, metrics), stage_path(sink_path, "_run_metrics")
-            )
+            write_run_metrics(metrics, stage_path(sink_path, "_run_metrics"))
         # An empty batch stages no parquet file, so it moves none into the sink.
         publish_batch(sink_path, state, result.new_watermark)
 

@@ -1,8 +1,9 @@
 """Slowly-changing-dimension (Type 2) history construction.
 
-The warehouse-side sibling of ``pipeline/github.py:latest_snapshot``
-(reference: README.md:285-291 loads dimensions into Snowflake; SCD2 is
-the standard way a warehouse keeps their history): given a CHANGE LOG
+The history-keeping sibling of dedupe-to-latest
+(``plans/curation_queries.py:argmax_order_per_segment``; reference:
+README.md:285-291 loads dimensions into Snowflake; SCD2 is the
+standard way a warehouse keeps their history): given a CHANGE LOG
 of attribute observations per key, produce versioned dimension rows
 with ``valid_from`` / ``valid_to`` / ``is_current``.
 

@@ -21,8 +21,6 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from ag_data_ingestion_github_to_snowflake_spark.sources.rest import (
     Transport,
@@ -99,39 +97,6 @@ def validation_split(df: DataFrame, columns: tuple[str, ...] = REQUIRED_FIELDS) 
     return df.filter(pred), with_missing_fields(df.filter(~pred), columns)
 
 
-def latest_snapshot(df: DataFrame, key: str = "id", order_col: str = "updated_at") -> DataFrame:
-    """Dedupe-to-latest per key (B29 pattern): at-least-once upstream
-    delivery means repeated extractions accumulate; keep the newest."""
-    w = Window.partitionBy(key).orderBy(F.desc(order_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-    )
-
-
-# The ``_run_metrics`` table's columns and types.
-RUN_METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("total_processed", T.LongType()),
-        T.StructField("valid_count", T.LongType()),
-        T.StructField("invalid_count", T.LongType()),
-        T.StructField("start_repo_id", T.LongType()),
-        T.StructField("last_repo_id", T.LongType()),
-        T.StructField("api_calls", T.IntegerType()),
-        T.StructField("cache_hits", T.IntegerType()),
-        T.StructField("test_mode", T.BooleanType()),
-        T.StructField("extraction_date", T.TimestampType()),
-    ]
-)
-
-
-def metrics_row(spark: SparkSession, metrics: dict) -> DataFrame:
-    """``metrics`` as one ``_run_metrics`` row, built in the JVM so
-    writing it needs no Python worker."""
-    return spark.range(1).select(
-        *[F.lit(metrics[f.name]).cast(f.dataType).alias(f.name) for f in RUN_METRICS_SCHEMA.fields]
-    )
-
-
 def observed_run_metrics(flat: DataFrame):
     """A15 run counters (processed/valid/invalid + id range; reference
     :730-742) as an ``Observation`` on ``flat``: the first action that
@@ -192,17 +157,19 @@ def incremental_extract(
 ) -> ExtractResult:
     """The full reference pipeline as one lazily planned batch (A1-A15, A21).
 
-    paginated list scan past ``since`` -> budget limit -> distributed
-    detail enrichment -> flatten -> dedupe on id -> observed counters
-    -> validate split. Nothing runs until an action consumes ``valid``
-    or ``invalid``; the CLI's batch is then 3 Spark jobs: the dedupe
-    shuffle, the sink write and the metrics-row write. Nothing here
-    moves the watermark: the caller commits ``new_watermark`` once per
-    batch (not per row as the reference does, :714) and only after that
-    action succeeded, so a failed batch is re-fetched by the next run.
-    ``latest_snapshot`` dedupes on id within the batch only; the CLI
-    lands each batch once by staging it and publishing data, metrics
-    and watermark with one commit record (``sources/sinks.py``).
+    paginated list scan past ``since`` -> budget limit -> serial detail
+    enrichment in one task -> flatten -> observed counters -> validate
+    split. Nothing runs until an action consumes ``valid`` or
+    ``invalid``; the CLI's batch is then one Spark job with one Python
+    task, since the API budget, not parallelism, bounds a batch. The
+    batch's ids need no dedupe: ``keyset_pages`` lists each id once,
+    each listed id is looked up once and a payload for another id is
+    dropped. Nothing here moves the watermark: the caller commits
+    ``new_watermark`` once per batch (not per row as the reference does,
+    :714) and only after that action succeeded, so a failed batch is
+    re-fetched by the next run. The CLI lands each batch once by staging
+    it and publishing data, metrics and watermark with one commit record
+    (``sources/sinks.py``).
     """
     extracted_at = datetime.now()
     pages = 0
@@ -218,6 +185,6 @@ def incremental_extract(
     lookups = Observation("lookups")
     list_df = list_df.observe(lookups, F.count(F.lit(1)).alias("lookups"))
     raw = enrich_details(list_df, transport)
-    flat, counters = observed_run_metrics(latest_snapshot(flatten_repos(raw), "id", "updated_at"))
+    flat, counters = observed_run_metrics(flatten_repos(raw))
     valid, invalid = validation_split(flat)
     return ExtractResult(valid, invalid, new_wm, pages, counters, lookups, extracted_at)

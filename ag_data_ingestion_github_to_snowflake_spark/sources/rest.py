@@ -25,11 +25,11 @@ list scan (``fetch_repo_list``/``list_scan_df``) takes its first
 ``max_pages`` pages. ``list_scan_df`` hands the listed rows to Spark
 as an Arrow table, a JVM ``LocalTableScan`` with one slice per core, so
 no Python task runs before the lookups. The *detail enrichment* — one
-call per row — runs in ``mapInPandas`` over those slices, coalesced to
-at most ``MAX_LOOKUP_TASKS`` tasks without a shuffle; the
-``rows[:budget]`` cap bounds the calls per run.
-Each Python task has a fixed CPU cost larger than a slice's lookups
-(OPTIMIZATION_r15.md), hence one task per core and no more.
+call per row — runs serially in one ``mapInPandas`` task, the slices
+coalesced to one without a shuffle; the ``rows[:budget]`` cap bounds
+the calls per run. One task because the API budget, not the stream
+count, bounds a batch, and each Python task has a fixed CPU cost
+larger than its lookups (OPTIMIZATION_r16.md §1).
 
 The transport is injectable (callable) so tests replay canned JSON
 (the reference's cache-file format, :293-344) without any network; the
@@ -54,9 +54,6 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 # transport: (path, params) -> (status_code, payload_dict_or_list)
 Transport = Callable[[str, dict], tuple[int, object]]
-
-# Each lookup task holds one API stream, so this bounds the concurrent streams.
-MAX_LOOKUP_TASKS = 8
 
 # Tries per call, the first included, while its status is transient.
 RETRY_ATTEMPTS = 4
@@ -255,17 +252,18 @@ def list_scan_df(
 
 
 def enrich_details(list_df: DataFrame, transport: Transport) -> DataFrame:
-    """A2: distributed point-lookup enrichment via mapInPandas.
+    """A2: point-lookup enrichment in one ``mapInPandas`` task.
 
     The list relation's per-core slices are coalesced (narrow, no
-    shuffle) to at most ``MAX_LOOKUP_TASKS`` tasks. Each task drives
-    its own transport connection. A lookup ending in a ``GONE`` status
-    yields no row (A14 skip semantics), and so does one that answers for
-    another repository (the name now belongs to a different id, which
-    lies outside the listed range); any other non-200 raises, which
-    fails the batch before its commit (module docstring). The reference
-    does this loop serially on one thread (:677-714); here tasks fetch concurrently and the output is
-    the *nested raw* record, flattening happens downstream
+    shuffle) to one task, which looks the rows up serially over one
+    transport, as the reference does on one thread (:677-714): the API
+    budget bounds a batch, and GitHub asks for serial requests per
+    token. A lookup ending in a ``GONE`` status yields no row (A14 skip
+    semantics), and so does one that answers for another repository
+    (the name now belongs to a different id, which lies outside the
+    listed range); any other non-200 raises, which fails the batch
+    before its commit (module docstring). The output is the *nested
+    raw* record, flattening happens downstream
     (pipeline.github.flatten_repos).
     """
     import pandas as pd  # executor-side import
@@ -311,4 +309,4 @@ def enrich_details(list_df: DataFrame, transport: Transport) -> DataFrame:
                 {f.name: pd.Series(dtype="object") for f in RAW_DETAIL_SCHEMA.fields}
             )
 
-    return list_df.coalesce(MAX_LOOKUP_TASKS).mapInPandas(kernel, RAW_DETAIL_SCHEMA)
+    return list_df.coalesce(1).mapInPandas(kernel, RAW_DETAIL_SCHEMA)

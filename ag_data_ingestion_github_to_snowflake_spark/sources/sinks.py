@@ -10,7 +10,10 @@ lands as one directory and a date-scoped load of a day reads the
 batches that landed that day. The run metadata envelope becomes rows
 in a separate ``_run_metrics`` table whose ``extraction_date`` is the
 same timestamp (idiomatic Spark never nests a dataset inside a
-metadata document).
+metadata document). A batch's data is one Spark job: its serial lookup
+task also writes its one file. Its one metrics row is written by
+pyarrow on the driver, as a Spark job for one row cost over a quarter
+of the data write's time (OPTIMIZATION_r16.md §1).
 
 A batch lands exactly once. Its files are staged in ``<sink>_pending/``,
 a sibling of the sink, so a ``sink/**/*.parquet`` glob never sees them.
@@ -29,15 +32,35 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from datetime import datetime
+import uuid
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ag_data_ingestion_github_to_snowflake_spark.sources.state import FileWatermark
 
 COMMIT_RECORD = "_commit.json"
 MAX_RECORDS_PER_FILE = 1_000_000
+
+# The ``_run_metrics`` table's columns and types.
+RUN_METRICS_SCHEMA = T.StructType(
+    [
+        T.StructField("total_processed", T.LongType()),
+        T.StructField("valid_count", T.LongType()),
+        T.StructField("invalid_count", T.LongType()),
+        T.StructField("start_repo_id", T.LongType()),
+        T.StructField("last_repo_id", T.LongType()),
+        T.StructField("api_calls", T.IntegerType()),
+        T.StructField("cache_hits", T.IntegerType()),
+        T.StructField("test_mode", T.BooleanType()),
+        T.StructField("extraction_date", T.TimestampType()),
+    ]
+)
 
 
 def partitioned_append(df: DataFrame, path: str, at: datetime) -> None:
@@ -57,9 +80,17 @@ def partitioned_append(df: DataFrame, path: str, at: datetime) -> None:
     )
 
 
-def write_run_metrics(metrics_df: DataFrame, path: str) -> None:
-    """A15 metadata envelope -> append-only run-metrics table."""
-    metrics_df.write.mode("append").parquet(path)
+def write_run_metrics(metrics: dict, path: str) -> None:
+    """A15 metadata envelope: append ``metrics`` to the run-metrics table
+    at ``path`` as one ``part-<uuid>.parquet`` file, written by pyarrow
+    on the driver so no Spark job runs for one row. A naive
+    ``extraction_date`` is local time, as Spark reads one, but pyarrow
+    (16.1) stores any datetime's wall clock as UTC, dropping its offset,
+    so the value is converted to UTC first."""
+    row = {**metrics, "extraction_date": metrics["extraction_date"].astimezone(timezone.utc)}
+    table = pa.Table.from_pylist([row], schema=to_arrow_schema(RUN_METRICS_SCHEMA))
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(table, os.path.join(path, f"part-{uuid.uuid4()}.parquet"))
 
 
 def _pending(sink: str) -> str:

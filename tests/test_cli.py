@@ -215,20 +215,45 @@ def test_cli_empty_batch_leaves_no_sink_and_next_batch_lands(spark, tmp_path):
     assert cached["valid_count"] == 0 and cached["new_watermark"] == 60
 
 
-def test_cli_batch_is_three_jobs_over_a_local_list_scan(spark, tmp_path, monkeypatch):
-    """A CLI batch is the enrichment → dedupe shuffle, the sink write and
-    the metrics-row write. The listed rows reach the lookup kernel from a
-    JVM ``LocalTableScan`` through a narrow coalesce: no Python list
-    stage and no round-robin shuffle."""
+def _plan_nodes(plan):
+    """``plan`` and every node below it, through adaptive wrappers."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def test_cli_batch_is_one_job_with_one_lookup_task_over_a_local_list_scan(
+    spark, tmp_path, monkeypatch
+):
+    """A CLI batch is one Spark job, the sink write; the metrics row is
+    written without one. The listed rows reach the lookup kernel from a
+    JVM ``LocalTableScan`` through a narrow coalesce to one partition:
+    no Python list stage, no round-robin shuffle and no exchange."""
     from ag_data_ingestion_github_to_snowflake_spark.pipeline.github import (
         incremental_extract,
     )
+    from ag_data_ingestion_github_to_snowflake_spark.sources import sinks
     from ag_data_ingestion_github_to_snowflake_spark.sources.stub import StubTransport
 
     monkeypatch.delenv("MAX_REQUESTS_PER_RUN", raising=False)
     monkeypatch.delenv("GITHUB_TOKEN", raising=False)
     sc = spark.sparkContext
     group = f"cli-batch-shape-{tmp_path.name}"
+    metrics_group = group + "-metrics"
+    write_run_metrics, metrics_writes = sinks.write_run_metrics, []
+
+    def in_own_group(*args):
+        sc.setJobGroup(metrics_group, "metrics row")
+        try:
+            write_run_metrics(*args)
+        finally:
+            sc.setJobGroup(group, "one CLI batch")
+        metrics_writes.append(args)
+
+    monkeypatch.setattr(sinks, "write_run_metrics", in_own_group)
     sc.setJobGroup(group, "one CLI batch")
     try:
         summary = run(
@@ -239,12 +264,19 @@ def test_cli_batch_is_three_jobs_over_a_local_list_scan(spark, tmp_path, monkeyp
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert summary["uploaded"] and summary["new_watermark"] == 59
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert len(metrics_writes) == 1
+    assert sc.statusTracker().getJobIdsForGroup(metrics_group) == []
 
     result = incremental_extract(spark, StubTransport(n_repos=300), 0)
-    plan = result.valid._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in plan
-    assert "RoundRobinPartitioning" not in plan
+    plan = result.valid._jdf.queryExecution().executedPlan()
+    nodes = list(_plan_nodes(plan))
+    names = [n.nodeName() for n in nodes]
+    assert "LocalTableScan" in names
+    assert not any("Exchange" in name for name in names), names
+    assert "RoundRobinPartitioning" not in plan.toString()
+    (lookup,) = [n for n in nodes if n.nodeName() == "MapInPandas"]
+    assert lookup.children().apply(0).outputPartitioning().numPartitions() == 1
 
 
 def test_cli_nothing_listed_keeps_watermark_and_writes_nothing(spark, tmp_path):
@@ -453,6 +485,42 @@ def test_cli_batch_lands_as_one_file_under_its_run_date(spark, tmp_path, monkeyp
         assert os.path.dirname(added) == m.extraction_date.strftime("year=%Y/month=%m/day=%d")
     back = spark.read.parquet(sink)
     assert back.select(F.to_date("updated_at")).distinct().count() > 1000
+
+
+@pytest.mark.parametrize("zone", ["LOC-14", "LOC+12"])
+def test_cli_extraction_date_names_the_partition_off_utc(spark, tmp_path, monkeypatch, zone):
+    """With the driver's local zone 14 hours ahead of UTC or 12 behind
+    (POSIX ``TZ`` signs are inverted), the batch's ``_run_metrics`` row
+    reads back as the local instant the batch ran at, and that instant
+    names the partition its one data file landed in."""
+    import os
+    import time
+    from datetime import datetime
+
+    monkeypatch.delenv("MAX_REQUESTS_PER_RUN", raising=False)
+    monkeypatch.delenv("GITHUB_TOKEN", raising=False)
+    sink = str(tmp_path / "sink")
+    argv = ["--test-mode", "--n-repos", "300", "--sink", sink, "--state", str(tmp_path / "wm.txt")]
+    before_tz = os.environ.get("TZ")
+    os.environ["TZ"] = zone
+    time.tzset()
+    try:
+        before = datetime.now()
+        summary = run(argv, spark=spark)
+        after = datetime.now()
+        (m,) = spark.read.parquet(sink + "_run_metrics").collect()
+    finally:
+        if before_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = before_tz
+        time.tzset()
+    assert summary["uploaded"]
+    assert before <= m.extraction_date <= after
+    (added,) = [
+        os.path.relpath(d, sink) for d, _, fs in os.walk(sink) for f in fs if f.endswith(".parquet")
+    ]
+    assert added == m.extraction_date.strftime("year=%Y/month=%m/day=%d")
 
 
 def test_cli_lookup_answering_for_another_repository_is_skipped(spark, tmp_path, monkeypatch):

@@ -1,7 +1,7 @@
 """End-to-end composition smoke: the whole engine surface in one flow.
 
-REST ingest (stub transport) → flatten → validation split → dedupe to
-latest → date-partitioned parquet stage (``sinks.partitioned_append``)
+REST ingest (stub transport) → flatten → validation split →
+date-partitioned parquet stage (``sinks.partitioned_append``)
 → profile + expectations over the staged rows read back with
 ``spark.read.parquet`` — i.e. the reference pipeline (extract → S3
 stage → SQL consumption, ``/root/reference/README.md``) each stage

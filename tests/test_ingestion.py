@@ -1,6 +1,6 @@
 """Ingestion-layer tests with a stubbed REST transport (SURVEY §5.5):
 pagination, resume-from-watermark, 404-skip, validation split,
-idempotent dedup, partitioned sink layout, the HTTP transport's retries.
+partitioned sink layout, the HTTP transport's retries.
 """
 
 from __future__ import annotations
@@ -17,7 +17,6 @@ from ag_data_ingestion_github_to_snowflake_spark.pipeline.github import (
     REQUIRED_FIELDS,
     flatten_repos,
     incremental_extract,
-    latest_snapshot,
     validation_split,
 )
 from ag_data_ingestion_github_to_snowflake_spark.sources.rest import (
@@ -101,16 +100,6 @@ def test_validation_split_counts(spark):
     miss = {r.id: r.missing_fields for r in invalid.collect()}
     assert miss[13] == ["description"]
     assert miss[17] == ["language"]
-
-
-def test_latest_snapshot_idempotent(spark):
-    tr = StubTransport(n_repos=30)
-    df, _ = list_scan_df(spark, tr, since=0, **CFG)
-    flat = flatten_repos(enrich_details(df, tr))
-    doubled = flat.unionByName(flat)  # at-least-once refetch
-    deduped = latest_snapshot(doubled)
-    assert deduped.count() == flat.count()
-    assert deduped.select("id").distinct().count() == deduped.count()
 
 
 def test_incremental_extract_end_to_end_with_resume(spark):

@@ -16,7 +16,6 @@ from ag_data_ingestion_github_to_snowflake_spark.operators import similarity as 
 from ag_data_ingestion_github_to_snowflake_spark.operators import text as X
 from ag_data_ingestion_github_to_snowflake_spark.pipeline.github import (
     flatten_repos,
-    latest_snapshot,
     validation_split,
 )
 from ag_data_ingestion_github_to_snowflake_spark.sources.rest import RAW_DETAIL_SCHEMA
@@ -82,14 +81,6 @@ def test_validation_split_partitions_input(spark):
     assert missing[6] == {
         "owner_login", "owner_id", "owner_type", "owner_avatar_url", "owner_url",
     }
-
-
-def test_latest_snapshot_keeps_newest(spark):
-    old = raw_repo(1, updated_at="2024-01-01T00:00:00Z", stargazers_count=1)
-    new = raw_repo(1, updated_at="2024-06-01T00:00:00Z", stargazers_count=9)
-    df = flatten_repos(spark.createDataFrame([old, new], RAW_DETAIL_SCHEMA))
-    got = latest_snapshot(df).collect()
-    assert len(got) == 1 and got[0].stargazers_count == 9
 
 
 # ---------------------------------------------------------------------------
@@ -676,17 +667,38 @@ def test_delta_join_append_equals_full_join(spark):
 
 
 def test_write_run_metrics_appends_rows(spark, tmp_path):
-    """write_run_metrics: the append-only envelope accumulates run rows."""
+    """write_run_metrics: each call appends one row file that Spark reads
+    back with the table's schema and the same naive local timestamp."""
+    import re
+    from datetime import datetime
+
     from ag_data_ingestion_github_to_snowflake_spark.sources.sinks import (
+        RUN_METRICS_SCHEMA,
         write_run_metrics,
     )
 
     path = str(tmp_path / "metrics")
-    m = spark.createDataFrame([(1, 10)], "run int, n int")
-    write_run_metrics(m, path)
-    write_run_metrics(m.select(F.lit(2).alias("run"), F.lit(20).alias("n")), path)
-    rows = sorted((r.run, r.n) for r in spark.read.parquet(path).collect())
-    assert rows == [(1, 10), (2, 20)]
+    runs = [
+        {
+            "total_processed": 10 * run,
+            "valid_count": 9 * run,
+            "invalid_count": run,
+            "start_repo_id": 100 * run + 1,
+            "last_repo_id": 100 * run + 59,
+            "api_calls": 60,
+            "cache_hits": 0,
+            "test_mode": run == 1,
+            "extraction_date": datetime(2024, 3, run, 23, 30, 15, 123456),
+        }
+        for run in (1, 2)
+    ]
+    for m in runs:
+        write_run_metrics(m, path)
+    back = spark.read.parquet(path)
+    assert back.schema == RUN_METRICS_SCHEMA
+    assert sorted((r.asDict() for r in back.collect()), key=lambda r: r["start_repo_id"]) == runs
+    files = [f.name for f in (tmp_path / "metrics").iterdir()]
+    assert len(files) == 2 and all(re.fullmatch(r"part-[0-9a-f-]{36}\.parquet", f) for f in files)
 
 
 def test_distributed_sweep_equals_single_sweep_adversarial(spark):

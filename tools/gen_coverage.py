@@ -17,7 +17,7 @@ from ag_data_ingestion_github_to_snowflake_spark.plans.registry import all_specs
 # (or in addition to) registry entries.
 MODULE_EVIDENCE = {
     "A1": ["sources/rest.py:keyset_pages (the one pager, taken by fetch_repo_list)", "tests/test_cli.py::test_cli_replayed_page_is_listed_and_looked_up_once", "tests/test_ingestion.py::test_list_scan_pagination_and_watermark"],
-    "A2": ["sources/rest.py:enrich_details (mapInPandas)", "tests/test_ingestion.py::test_enrichment_skips_404_and_flattens"],
+    "A2": ["sources/rest.py:enrich_details (one mapInPandas task, serial lookups)", "tests/test_ingestion.py::test_enrichment_skips_404_and_flattens", "tests/test_cli.py::test_cli_batch_is_one_job_with_one_lookup_task_over_a_local_list_scan"],
     "A3": ["__main__.py:run (--use-cache seeds the watermark from the sink's max id)", "tests/test_cli.py::test_cli_use_cache_seeds_watermark_from_sink"],
     "A4": ["sources/state.py:FileWatermark", "tests/test_ingestion.py::test_incremental_extract_end_to_end_with_resume", "tests/test_ingestion.py::test_file_watermark_rejects_corrupt_state"],
     "A5": ["sources/rest.py:http_transport", "config.py (token tier)"],
@@ -30,13 +30,13 @@ MODULE_EVIDENCE = {
     "A12": ["pipeline/github.py:valid_predicate", "tests/test_operators.py::test_validation_split_partitions_input"],
     "A13": ["pipeline/github.py:validation_split", "tests/test_ingestion.py::test_validation_split_counts"],
     "A14": ["sources/rest.py:enrich_details (GONE lookups and lookups answering for another id skip, any other failure fails the batch)", "tests/test_ingestion.py::test_enrichment_skips_404_and_flattens", "tests/test_cli.py::test_cli_lookup_answering_for_another_repository_is_skipped", "tests/test_cli.py::test_cli_gone_lookups_are_skipped_and_the_watermark_advances", "tests/test_cli.py::test_cli_transient_failure_fails_the_batch_and_loses_no_repository"],
-    "A15": ["pipeline/github.py:observed_run_metrics + ExtractResult.metrics (observed on the sink write)", "tests/test_cli.py::test_cli_run_metrics_row_matches_ground_truth"],
+    "A15": ["pipeline/github.py:observed_run_metrics + ExtractResult.metrics (observed on the sink write)", "sources/sinks.py:write_run_metrics (one row written by pyarrow on the driver)", "tests/test_cli.py::test_cli_run_metrics_row_matches_ground_truth", "tests/test_cli.py::test_cli_extraction_date_names_the_partition_off_utc"],
     "A16": [], "A17": [], "A18": [], "A19": [],
     "A20": ["sources/rest.py:http_transport + _retry_wait_s (retry on 429/5xx/599 and rate-limited 403: Retry-After, X-RateLimit-Reset, exponential backoff, 60 s cap)", "tests/test_rate_governor.py", "tests/test_ingestion.py::test_http_transport_retries_transient_calls_until_they_succeed"],
     "A21": ["pipeline/github.py:incremental_extract", "sources/sinks.py:roll_forward (a rerun finishes a published batch or re-fetches an unpublished one)", "tests/test_cli.py::test_cli_crash_at_any_commit_step_lands_each_batch_once"],
     "A22": ["__main__.py:run (one batch per scheduled firing, resumed from the watermark)", "examples/scheduled-extraction.yml (the reference's hourly cron)", "plans/streaming_queries.py:_run_available_now + _drain (the one AvailableNow drain of the streaming registry queries)", "tests/test_packaging.py::test_scheduler_example_mirrors_reference_cadence"],
     "B3": ["sources/sinks.py:partitioned_append (partitioned by the batch's run date)", "tests/test_ingestion.py::test_partitioned_sink_layout"],
-    "B29": ["pipeline/github.py:latest_snapshot (dedupe-to-latest)"],
+    "B29": ["plans/curation_queries.py:argmax_order_per_segment (dedupe-to-latest as one max_by aggregation)"],
     "B44": ["streaming/streams.py (incl. interval_join)", "tests/test_streaming.py::test_streaming_checkpoint_resume"],
     "B45": ["plans/streaming_queries.py:_one_file_per_trigger", "tests/test_streaming.py::test_streaming_rate_cap_batches"],
     "B49": ["streaming/streams.py:with_watermark", "tests/test_streaming.py"],
