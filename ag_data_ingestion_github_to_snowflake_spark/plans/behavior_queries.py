@@ -617,7 +617,7 @@ def benford_first_digit_orders(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SCD2 dimension history (warehouse-side sibling of the sink's latest_snapshot)
+# SCD2 dimension history (all versions; argmax_order_per_segment keeps the top one)
 # ---------------------------------------------------------------------------
 SCD2_CUSTOMER_HISTORY_ORACLE = """
     WITH changes AS (
@@ -658,9 +658,9 @@ def scd2_customer_history(spark: SparkSession, sf: str) -> DataFrame:
     customer-tier change log (initial tier from the customer snapshot,
     then one observation per order) — ``operators/scd.py``: consecutive
     duplicates open no version, each surviving change opens one, the
-    open-ended row is current. The warehouse-side sibling of
-    ``pipeline/github.py:latest_snapshot`` (which keeps the LATEST row;
-    SCD2 keeps them all with validity intervals).
+    open-ended row is current. The sibling of
+    ``plans/curation_queries.py:argmax_order_per_segment`` (which keeps
+    one row per key; SCD2 keeps them all with validity intervals).
 
     One shuffle on the key, two in-partition sorts over the same order
     (exchange reused) — no self-join, output <= input rows at any

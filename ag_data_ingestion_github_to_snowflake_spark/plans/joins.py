@@ -14,8 +14,6 @@ bucketed on orderkey to eliminate the shuffle entirely.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -396,24 +394,11 @@ def bucketed_join_colocated(spark: SparkSession, sf: str) -> DataFrame:
         bucketed_pair,
     )
 
-    tag = os.path.basename(sf.rstrip("/")).replace(".", "_")
-    li = t(spark, sf, "lineitem").select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    orders = t(spark, sf, "orders").select("o_orderkey", "o_orderpriority")
-    src_mtime = max(
-        os.path.getmtime(os.path.join(sf, "lineitem.parquet")),
-        os.path.getmtime(os.path.join(sf, "orders.parquet")),
-    )
     bli, bord = bucketed_pair(
         spark,
-        li,
-        "l_orderkey",
-        orders,
-        "o_orderkey",
-        tag=f"join_{tag}",
-        src_mtime=src_mtime,
-        src_id=os.path.abspath(sf),
+        sf,
+        ("lineitem", "l_orderkey", ["l_extendedprice", "l_discount"]),
+        ("orders", "o_orderkey", ["o_orderpriority"]),
     )
     return (
         bli.join(bord, bli["l_orderkey"] == bord["o_orderkey"])

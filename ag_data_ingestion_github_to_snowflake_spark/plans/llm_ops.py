@@ -25,6 +25,7 @@ from ag_data_ingestion_github_to_snowflake_spark.operators.portable_math import 
 )
 from ag_data_ingestion_github_to_snowflake_spark.catalog import parallelize_cpu_scan
 from ag_data_ingestion_github_to_snowflake_spark.plans.registry import register, t
+from ag_data_ingestion_github_to_snowflake_spark.sources.staging import scratch_dir
 
 
 # ---------------------------------------------------------------------------
@@ -415,33 +416,6 @@ def similarity_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _ivf_stage(tag: str, sf: str) -> str:
-    """Collision-free scratch dir for a rebuilt-per-call IVF index.
-
-    Keyed by dataset path (stage_dir convention) AND pid: the index is
-    rmtree'd + rewritten on every build, so unlike the read-mostly
-    fixture stages a concurrent pytest + bench pair on the same
-    fixture would race one process's rmtree/write against the other's
-    lazy read. Per-pid dirs make that impossible; an atexit purge
-    reclaims them (deferred cleanup because the returned DataFrame
-    reads the index lazily, after the builder returns).
-    """
-    import atexit
-    import os
-    import shutil
-
-    from ag_data_ingestion_github_to_snowflake_spark.sources.staging import stage_dir
-
-    path = f"{stage_dir(tag, sf)}_pid{os.getpid()}"
-    if path not in _IVF_STAGES:
-        _IVF_STAGES.add(path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
-
-
-_IVF_STAGES: set[str] = set()
-
-
 def _ivf_query(spark: SparkSession, sf: str, nprobe: int) -> DataFrame:
     emb = t(spark, sf, "embeddings")
     cents = S.train_ivf_centroids(
@@ -506,14 +480,11 @@ def similarity_ivf_persisted(spark: SparkSession, sf: str) -> DataFrame:
     ``operators/similarity.py:write_ivf_index/read_ivf_index/
     ivf_index_topk``. The partitioned layout means a probed search
     lists only nprobe cell directories at any corpus size."""
-    import shutil
-
     emb = t(spark, sf, "embeddings")
     cents = S.train_ivf_centroids(
         emb, n_cells=8, iters=2, sample_fraction=0.25, max_train=1024
     )
-    idx = _ivf_stage("ag_ivf_idx", sf)
-    shutil.rmtree(idx, ignore_errors=True)
+    idx = scratch_dir("ag_ivf_idx", sf)
     S.write_ivf_index(emb, cents, idx)
     cents2, assigned = S.read_ivf_index(spark, idx)
     return S.ivf_index_topk(
@@ -549,12 +520,9 @@ def similarity_ivf_trained(spark: SparkSession, sf: str) -> DataFrame:
     write is one assignment pass + partitioned write; the probed
     search lists nprobe cell directories; the exact side broadcasts
     the 20-query batch. Output: (query_id, recall_at_5)."""
-    import shutil
-
     emb = t(spark, sf, "embeddings")
     cents = S.train_ivf_centroids(emb, n_cells=8, iters=3, max_train=1024)
-    idx = _ivf_stage("ag_ivf_trained", sf)
-    shutil.rmtree(idx, ignore_errors=True)
+    idx = scratch_dir("ag_ivf_trained", sf)
     S.write_ivf_index(emb, cents, idx)
     cents2, assigned = S.read_ivf_index(spark, idx)
     queries = emb.filter(F.col("vec_id") < 20)

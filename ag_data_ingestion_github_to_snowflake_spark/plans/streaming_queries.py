@@ -33,7 +33,7 @@ from ag_data_ingestion_github_to_snowflake_spark.plans.registry import register,
 from ag_data_ingestion_github_to_snowflake_spark.plans.temporal_queries import (
     CEP_FUNNEL_ORACLE,
 )
-from ag_data_ingestion_github_to_snowflake_spark.sources.staging import staged
+from ag_data_ingestion_github_to_snowflake_spark.sources.staging import scratch_root, staged
 from ag_data_ingestion_github_to_snowflake_spark.streaming import streams as S
 
 
@@ -232,7 +232,7 @@ def _run_available_now(
     store to this drain: both are read at query start and pinned in the
     fresh checkpoint, so restoring them afterwards is safe.
     """
-    cp = tempfile.mkdtemp(prefix="ag_stream_cp_")
+    cp = tempfile.mkdtemp(prefix="ag_stream_cp_", dir=scratch_root())
     scoped = {}
     if shuffle_partitions is not None:
         scoped["spark.sql.shuffle.partitions"] = shuffle_partitions
@@ -362,7 +362,7 @@ def _curated_ids(spark: SparkSession, stage: str, ingest) -> DataFrame:
     """Drain the staged JSON batches through ``ingest`` (a foreachBatch
     curation writer over a standing table) into a per-run table, and
     return the surviving doc ids, detached; the table is removed."""
-    table = tempfile.mkdtemp(prefix="ag_stream_table_")
+    table = tempfile.mkdtemp(prefix="ag_stream_table_", dir=scratch_root())
     try:
         sdf = _one_file_per_trigger(spark, stage, "doc_id long, text string", "json")
         _run_available_now(ingest(sdf, table), spark)
@@ -907,7 +907,7 @@ def streaming_dlq_ingest(spark: SparkSession, sf: str) -> DataFrame:
             T.StructField("n_chars", T.LongType()),
         ]
     )
-    out = tempfile.mkdtemp(prefix="ag_stream_dlq_")
+    out = tempfile.mkdtemp(prefix="ag_stream_dlq_", dir=scratch_root())
     main_tbl = os.path.join(out, "main")
     dlq_tbl = os.path.join(out, "dlq")
 
@@ -1063,7 +1063,7 @@ def streaming_scd2_upsert(spark: SparkSession, sf: str) -> DataFrame:
             os.path.join(hist_root, f"v{bid + 1}")
         )
 
-    hist_root = tempfile.mkdtemp(prefix="ag_scd2_hist_")
+    hist_root = tempfile.mkdtemp(prefix="ag_scd2_hist_", dir=scratch_root())
     try:
         _run_available_now(
             _one_file_per_trigger(spark, stage).writeStream.foreachBatch(merge), spark

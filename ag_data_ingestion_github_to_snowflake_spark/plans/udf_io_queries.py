@@ -11,7 +11,6 @@
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Iterator
 
 import pandas as pd
@@ -22,7 +21,7 @@ from pyspark.sql.window import Window
 
 from ag_data_ingestion_github_to_snowflake_spark.catalog import parallelize_cpu_scan
 from ag_data_ingestion_github_to_snowflake_spark.plans.registry import register, t
-from ag_data_ingestion_github_to_snowflake_spark.sources.staging import stage_dir, staged
+from ag_data_ingestion_github_to_snowflake_spark.sources.staging import scratch_dir, staged
 
 ZSCORE_SCHEMA = T.StructType(
     [
@@ -138,9 +137,7 @@ def json_sink_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     key scheme (src/extract_github_data.py:572-578).
     """
     ev = t(spark, sf, "events")
-    # Deterministic per-SF staging path (mode=overwrite): repeated
-    # builds reuse it instead of leaking a fresh mkdtemp each time.
-    out = stage_dir("ag_json_sink", sf)
+    out = scratch_dir("ag_json_sink", sf)
     (
         ev.withColumn("year", F.date_format("ts", "yyyy"))
         .withColumn("month", F.date_format("ts", "MM"))
@@ -196,7 +193,7 @@ def corrupt_json_quarantine(spark: SparkSession, sf: str) -> DataFrame:
     side, verified against the seeding rule computed from the clean
     fixture."""
     docs = t(spark, sf, "documents").filter(F.col("doc_id") < 500)
-    out = stage_dir("ag_badjson", sf)
+    out = scratch_dir("ag_badjson", sf)
     # Stage: serialize each row to a JSON line, truncating every 13th
     # to its first 10 chars (guaranteed malformed: the object never
     # closes). substring is 1-based.
@@ -353,7 +350,7 @@ def csv_sink_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     decimal for order-independence.
     """
     cust = t(spark, sf, "customer")
-    out = stage_dir("ag_csv_sink", sf)
+    out = scratch_dir("ag_csv_sink", sf)
     cust.write.mode("overwrite").option("header", True).csv(out)
     schema = T.StructType(
         [
@@ -393,7 +390,7 @@ def orc_sink_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     orders = t(spark, sf, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    out = stage_dir("ag_orc_sink", sf)
+    out = scratch_dir("ag_orc_sink", sf)
     orders.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     return back.groupBy("o_orderpriority").agg(
@@ -432,7 +429,7 @@ def schema_evolution_merge(spark: SparkSession, sf: str) -> DataFrame:
     ReadSchema must be checked against the UNION of file footers, not
     the first file)."""
     o = t(spark, sf, "orders")
-    out = stage_dir("ag_schema_evo", sf)
+    out = scratch_dir("ag_schema_evo", sf)
     b1 = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_custkey")
     b2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -847,8 +844,7 @@ def small_file_compaction(spark: SparkSession, sf: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(stage),
     )
-    compact = stage_dir("ag_compacted", sf)
-    shutil.rmtree(compact, ignore_errors=True)
+    compact = scratch_dir("ag_compacted", sf)
     frags = spark.read.parquet(frag)
     frags.repartitionByRange(8, F.col("ts")).write.mode("overwrite").parquet(
         compact

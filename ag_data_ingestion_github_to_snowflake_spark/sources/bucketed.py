@@ -9,10 +9,10 @@ write time and amortized over every subsequent join, which is how
 warehouse fact tables are actually laid out (Hive/Spark bucketing,
 Iceberg bucket partition transforms).
 
-``write_bucketed`` registers an EXTERNAL datasource table (explicit
-``path``) so nothing depends on the session's warehouse directory —
-the driver's bare session has no configured warehouse and must not
-write to its cwd.
+The layout is a ``staged`` copy of the fixture table, registered as an
+EXTERNAL datasource table (explicit ``path``) so nothing depends on the
+session's warehouse directory — a bare session has no configured
+warehouse and must not write to its cwd.
 
 The reference stages everything as flat JSON (no layout control at
 all: src/extract_github_data.py writes one array per page); bucketing
@@ -21,12 +21,20 @@ is net-new scale capability.
 
 from __future__ import annotations
 
+import json
 import os
-import tempfile
+import re
+from collections.abc import Sequence
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
-from ag_data_ingestion_github_to_snowflake_spark.sources.staging import write_marker
+from ag_data_ingestion_github_to_snowflake_spark.catalog import load_table
+from ag_data_ingestion_github_to_snowflake_spark.sources.staging import staged
+
+# (fixture table, bucket key, other columns to keep)
+Side = tuple[str, str, Sequence[str]]
 
 
 def write_bucketed(
@@ -51,85 +59,52 @@ def write_bucketed(
     )
 
 
-def _ensure_bucketed(
-    spark: SparkSession,
-    df: DataFrame,
-    table: str,
-    key: str,
-    buckets: int,
-    path: str,
-    src_mtime: float | None,
-    fingerprint_extra: str = "",
-) -> DataFrame:
-    """Stage ``df`` as a bucketed external table, reusing an existing
-    layout when it is newer than ``src_mtime``, so the layout shuffle is
-    paid once rather than on every build. A fresh session that finds a
-    fresh layout re-registers the catalog entry with CREATE TABLE ...
-    CLUSTERED BY ... LOCATION — no data rewrite — so the bucket metadata
-    the planner needs survives session churn.
+def _register(spark: SparkSession, table: str, key: str, buckets: int, path: str) -> None:
+    """Register an existing layout without rewriting it. The columns come
+    from the Spark schema in the staged files' parquet footer, so the
+    table always declares the schema its files were written with."""
+    part = next(f for f in sorted(os.listdir(path)) if f.endswith(".parquet"))
+    meta = pq.read_schema(os.path.join(path, part)).metadata
+    schema = T.StructType.fromJson(
+        json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
+    )
+    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
+    spark.sql(
+        f"CREATE TABLE {table} ({cols}) USING PARQUET "
+        f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) INTO {buckets} BUCKETS "
+        f"LOCATION '{path}'"
+    )
 
-    Reuse also requires the marker's fingerprint (source identity +
-    projected schema + bucket spec) to match: an mtime-only marker under
-    a basename-tagged temp path could serve stale parquet when two sf
-    dirs share a basename, or when the caller's projection changed in
-    code — the re-register branch would then declare the current schema
-    over old files and read missing columns as NULLs."""
-    marker = os.path.join(path, "_staged")
-    fingerprint = (
-        f"{fingerprint_extra}|{df.schema.simpleString()}|{key}|{buckets}\n"
-    )
-    marker_fingerprint = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            marker_fingerprint = f.read()
-    fresh = (
-        src_mtime is not None
-        and marker_fingerprint == fingerprint
-        and os.path.getmtime(marker) >= src_mtime
-    )
-    if not fresh:
-        write_bucketed(df, table, key, buckets, path)
-        write_marker(marker, fingerprint)
-        return spark.table(table)
+
+def _bucketed(spark: SparkSession, sf: str, side: Side, buckets: int) -> DataFrame:
+    """Stage one side bucketed on its key and return its catalog table.
+    The stage prefix names the table, bucket count, key and columns, so
+    a different bucket spec or projection never reuses this layout."""
+    src, key, cols = side
+    prefix = "_".join(["ag_bkt", src, f"{buckets}x{key}", *cols])
+
+    def build(stage: str) -> None:
+        df = load_table(spark, sf, src).select(key, *cols)
+        write_bucketed(df, _table_name(stage), key, buckets, stage)
+
+    stage = staged(prefix, sf, [f"{src}.parquet"], build)
+    table = _table_name(stage)
     if not spark.catalog.tableExists(table):
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-        )
-        spark.sql(
-            f"CREATE TABLE {table} ({cols}) USING PARQUET "
-            f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) INTO {buckets} BUCKETS "
-            f"LOCATION '{path}'"
-        )
+        _register(spark, table, key, buckets, stage)
     return spark.table(table)
 
 
+def _table_name(stage: str) -> str:
+    """Catalog name of a staged layout: its dir name as an identifier."""
+    return re.sub(r"\W", "_", os.path.basename(stage))
+
+
 def bucketed_pair(
-    spark: SparkSession,
-    left: DataFrame,
-    left_key: str,
-    right: DataFrame,
-    right_key: str,
-    tag: str,
-    buckets: int = 8,
-    src_mtime: float | None = None,
-    src_id: str = "",
+    spark: SparkSession, sf: str, left: Side, right: Side, buckets: int = 8
 ) -> tuple[DataFrame, DataFrame]:
-    """Stage both sides as co-bucketed tables (same bucket count, join
-    key as bucket key) and return the catalog-backed frames whose scans
-    carry the bucket partitioning. ``tag`` namespaces the tables/paths
-    so different fixture scales never collide. ``src_mtime`` (the max
-    mtime of the source files) enables layout reuse across builds —
-    omit it to force a rewrite every call. ``src_id`` (e.g. the FULL
-    source dir path) disambiguates tag collisions in the reuse
-    fingerprint."""
-    base = os.path.join(tempfile.gettempdir(), f"ag_bucketed_{tag}")
-    lt, rt = f"ag_bkt_left_{tag}", f"ag_bkt_right_{tag}"
-    bl = _ensure_bucketed(
-        spark, left, lt, left_key, buckets, os.path.join(base, lt),
-        src_mtime, fingerprint_extra=src_id,
-    )
-    br = _ensure_bucketed(
-        spark, right, rt, right_key, buckets, os.path.join(base, rt),
-        src_mtime, fingerprint_extra=src_id,
-    )
-    return bl, br
+    """Stage both sides of a join as co-bucketed tables (same bucket
+    count, join key as bucket key) and return the catalog-backed frames
+    whose scans carry the bucket partitioning. Each layout is written
+    once per fixture and reused until its source table is rewritten; a
+    fresh session re-registers it from the files, with no rewrite."""
+    return _bucketed(spark, sf, left, buckets), _bucketed(spark, sf, right, buckets)

@@ -1,22 +1,28 @@
-"""Fixture staging: one gate decides whether a staged copy is fresh.
+"""Scratch paths: every temp dir the package creates lives under one
+root, ``{tmp}/spark_graft``, with one of two lifetimes.
 
-Several queries stage a derived copy of fixture tables (partitioned
-rewrite, streaming source directory, micro-batch files) in a temp dir
-reused across builds. ``staged`` is the only gate, and its one
-freshness rule is: the copy is reused iff its ``_staged`` marker is at
-least as new as every source path, and as every file under a source
-that is a directory. A fixture rewritten in place therefore restages
-on the next build; an unchanged one never does.
+- ``staged`` keeps a derived copy of fixture tables (partitioned
+  rewrite, streaming source directory, bucketed layout) and reuses it
+  across builds and processes. Its one freshness rule: the copy is
+  reused iff its ``_staged`` marker is at least as new as every source
+  path, and as every file under a source that is a directory. A
+  fixture rewritten in place therefore restages on the next build; an
+  unchanged one never does. The marker appears atomically (write temp
+  + rename) after the build, so an interrupted build is never trusted.
+  Two processes staging the same dataset at the same moment are not
+  coordinated.
+- ``scratch_dir`` is a per-build output that each build rewrites. It is
+  unique to the process, so a concurrent process never rewrites it
+  under a lazy read, and it is removed when the process exits.
 
-- The dir key includes the WHOLE dataset path (``stage_dir``): two
-  roots ending in ``sf0.01`` never share a stage.
-- The marker appears atomically (write temp + rename) after the build,
-  so an interrupted build is never trusted. Two processes staging the
-  same dataset at the same moment are not coordinated.
+Both key the dir by the WHOLE dataset path (``stage_dir``): two roots
+ending in ``sf0.01`` never share one. Try/finally temp dirs are made
+with ``tempfile.mkdtemp(dir=scratch_root())``.
 """
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
 import shutil
@@ -24,18 +30,24 @@ import tempfile
 from collections.abc import Callable, Iterable
 
 
+def scratch_root() -> str:
+    """``{tmp}/spark_graft``, created on first use. Read per call, so a
+    ``TMPDIR`` pinned before the first temp-file call holds it."""
+    root = os.path.join(tempfile.gettempdir(), "spark_graft")
+    os.makedirs(root, exist_ok=True)
+    return root
+
+
 def stage_dir(prefix: str, sf: str) -> str:
-    """Deterministic per-dataset temp dir: ``{tmp}/{prefix}_{base}_{h8}``
+    """Deterministic per-dataset dir: ``{root}/{prefix}_{base}_{h8}``
     where ``h8`` is 8 hex chars of the absolute normalized path — the
     basename keeps it readable, the hash makes it collision-free."""
     norm = os.path.abspath(os.path.normpath(sf))
     h8 = hashlib.sha256(norm.encode()).hexdigest()[:8]
-    return os.path.join(
-        tempfile.gettempdir(), f"{prefix}_{os.path.basename(norm)}_{h8}"
-    )
+    return os.path.join(scratch_root(), f"{prefix}_{os.path.basename(norm)}_{h8}")
 
 
-def write_marker(marker: str, text: str = "staged\n") -> None:
+def _write_marker(marker: str) -> None:
     """Write the staleness marker atomically: temp file in the same
     directory, then ``os.replace`` (atomic on POSIX)."""
     fd, tmp = tempfile.mkstemp(
@@ -43,7 +55,7 @@ def write_marker(marker: str, text: str = "staged\n") -> None:
     )
     try:
         with os.fdopen(fd, "w") as fh:
-            fh.write(text)
+            fh.write("staged\n")
         os.replace(tmp, marker)
     except BaseException:
         try:
@@ -83,5 +95,21 @@ def staged(
     shutil.rmtree(stage, ignore_errors=True)
     os.makedirs(stage)
     build(stage)
-    write_marker(marker)
+    _write_marker(marker)
     return stage
+
+
+_SCRATCH: set[str] = set()
+
+
+def scratch_dir(prefix: str, sf: str) -> str:
+    """Return an absent path ``{stage_dir(prefix, sf)}_pid{pid}`` for a
+    build to write its output to; whatever an earlier build of this
+    process left there is removed first. The dir is removed at process
+    exit, not by the caller: the returned DataFrame reads it lazily."""
+    path = f"{stage_dir(prefix, sf)}_pid{os.getpid()}"
+    if path not in _SCRATCH:
+        _SCRATCH.add(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    shutil.rmtree(path, ignore_errors=True)
+    return path

@@ -43,12 +43,11 @@ HEADLINE = [
     "shipping_priority_top10",
 ]
 
-# Arrow-UDF-heavy headliners (r10, VERDICT r9 item 2): these four swung
-# +-25% run-to-run against FLAT calibrations across the r9 closing runs
-# (spread 9.31-11.80s) — the noise lives in the Python-worker/Arrow
-# lane (worker spawn, Arrow IPC buffers, numpy thread pools), which
-# neither the CPU nor the I/O calibration exercises. They get an extra
-# rep (min-of-3) and a dedicated Arrow calibration plan below.
+# Arrow-UDF-heavy headliners swing +-25% run to run against flat
+# calibrations: the noise lives in the Python-worker/Arrow lane (worker
+# spawn, Arrow IPC buffers, numpy thread pools), which neither the CPU
+# nor the I/O calibration exercises. They get an extra rep (min-of-3)
+# and a dedicated Arrow calibration plan below.
 UDF_HEAVY = {
     "dedup_minhash_pairs",
     "similarity_topk_cosine",
@@ -58,28 +57,26 @@ UDF_HEAVY = {
 
 
 def _staging_state(t0: float) -> dict[str, list[str]]:
-    """Classify every mtime-cached staged layout (bucketed tables,
-    stream batch dirs, partitioned rewrites — all live under
-    ``{tmp}/ag_*`` behind a ``_staged`` marker, the repo convention) as
+    """Classify every staged layout (``sources.staging.staged``: one dir
+    per stage under the scratch root, behind a ``_staged`` marker) as
     ``rebuilt`` (marker written during THIS run) or ``warm`` (reused
-    from a previous build). VERDICT r13 item 6: disclosure only — a
-    staged layout's one-time shuffle is the point of e.g. bucketing,
-    but the bench line must say whether staging work is inside the
-    clock so a cold->warm flip can never masquerade as a plan win."""
+    from a previous build). Disclosure only: the bench line must say
+    whether staging work is inside the clock so a cold->warm flip can
+    never masquerade as a plan win."""
     import glob
-    import tempfile
+
+    from ag_data_ingestion_github_to_snowflake_spark.sources.staging import (
+        scratch_root,
+    )
 
     warm, rebuilt = [], []
-    tmp = tempfile.gettempdir()
-    for pat in ("ag_*/_staged", "ag_*/*/_staged"):
-        for marker in glob.glob(os.path.join(tmp, pat)):
-            name = os.path.relpath(os.path.dirname(marker), tmp)
-            try:
-                (rebuilt if os.path.getmtime(marker) >= t0 else warm).append(
-                    name
-                )
-            except OSError:
-                pass
+    root = scratch_root()
+    for marker in glob.glob(os.path.join(root, "*", "_staged")):
+        name = os.path.relpath(os.path.dirname(marker), root)
+        try:
+            (rebuilt if os.path.getmtime(marker) >= t0 else warm).append(name)
+        except OSError:
+            pass
     return {"warm": sorted(warm), "rebuilt": sorted(rebuilt)}
 
 
@@ -120,7 +117,7 @@ def main() -> None:
     # run. Its round-over-round movement measures MACHINE drift (page
     # cache, thermal, co-tenant load), so a bench line where every query
     # moved +15% AND calibration moved +15% reads as environment, not
-    # regressions (the r7 snapshot was exactly this ambiguity). The plan
+    # regressions. The plan
     # is a 32-partition range aggregate: pure whole-stage-codegen CPU,
     # no I/O, ~1s on this box.
     def _calibrate() -> float:
@@ -136,12 +133,11 @@ def main() -> None:
 
     calibration = _calibrate()
 
-    # I/O calibration (r9): the CPU plan above cannot see PAGE-CACHE
-    # drift — the r9 closing runs showed every headline query +5-15%
-    # with calibration_sec flat, because the fixture's cache residency
-    # changed (test marathons churn it), not the CPU. A fixed
-    # fixture-read plan separates the two: if queries move WITH
-    # calibration_io_sec but not calibration_sec, it's cache state.
+    # I/O calibration: the CPU plan above cannot see PAGE-CACHE drift
+    # (every query +5-15% with calibration_sec flat when test runs churn
+    # the fixture's cache residency). A fixed fixture-read plan
+    # separates the two: if queries move WITH calibration_io_sec but
+    # not calibration_sec, it's cache state.
     def _calibrate_io() -> float:
         best = None
         for _ in range(2):
@@ -155,7 +151,7 @@ def main() -> None:
 
     calibration_io = _calibrate_io()
 
-    # Arrow-lane calibration (r10): a fixed pandas-UDF plan over the
+    # Arrow-lane calibration: a fixed pandas-UDF plan over the
     # embeddings fixture. The UDF-heavy headliners swing +-25% against
     # flat CPU/IO calibrations because their cost is Python-worker +
     # Arrow-IPC time, a third independent drift axis (worker reuse,
@@ -183,13 +179,12 @@ def main() -> None:
 
     calibration_arrow = _calibrate_arrow()
 
-    # Shuffle+IO calibration (r11, VERDICT r10 item 3): the CPU lane is
-    # blind to disk/JVM/co-process contention — the r10 driver run read
-    # +16.6% headline against a FLAT calibration_sec while same-tree
-    # closing runs hours earlier measured 0.66-0.69x. This lane is a
-    # fixed 32->64-partition exchange over the lineitem fixture: it
-    # exercises shuffle-write spill files, shuffle-fetch, and the disk
-    # lane the real queries live in. If queries move WITH
+    # Shuffle+IO calibration: the CPU lane is blind to disk/JVM/
+    # co-process contention (a +16.6% headline once read against a FLAT
+    # calibration_sec). This lane is a fixed 32->64-partition exchange
+    # over the lineitem fixture: it exercises shuffle-write spill files,
+    # shuffle-fetch, and the disk lane the real queries live in. If
+    # queries move WITH
     # calibration_shuffle_sec but not calibration_sec, the drift is
     # environment (disk/page-cache/co-tenant), not plans.
     def _calibrate_shuffle() -> float:
@@ -210,11 +205,10 @@ def main() -> None:
 
     calibration_shuffle = _calibrate_shuffle()
 
-    # Per-query lane stamping (r12, VERDICT r11 item 7): the run-level
-    # lanes say "this RUN was contended" but cannot mark WHICH entries
-    # a co-tenant burst hit — the r11 driver's one-shot pass ran the
-    # UDF/similarity queries 2-3x the closing pair while neighbors were
-    # normal. A cheap two-lane probe (CPU ~0.2s + shuffle ~0.4s) runs
+    # Per-query lane stamping: the run-level lanes say "this RUN was
+    # contended" but cannot mark WHICH entries a co-tenant burst hit
+    # (one pass ran the UDF/similarity queries at 2-3x while neighbors
+    # were normal). A cheap two-lane probe (CPU ~0.2s + shuffle ~0.4s) runs
     # every PROBE_EVERY queries; each query is stamped with its
     # segment's probe index, and the probe series goes into the full
     # JSON/BENCHLOG so any reader can mechanically flag entries whose
@@ -244,11 +238,10 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    # Noise control (r6 headline, extended r8 per VERDICT r7 item 2):
-    # single-shot timings on this box vary about +-8% run-to-run (page
-    # cache, GC, task-scheduling jitter) and up to +-30% on outliers
-    # (r7 caught semdedup_embeddings at 8.65s vs a 3.4-4.5s band), which
-    # round-over-round reads as phantom regressions. Headline queries
+    # Noise control: single-shot timings on this box vary about +-8%
+    # run-to-run (page cache, GC, task-scheduling jitter) and up to
+    # +-30% on outliers (semdedup_embeddings once read 8.65s against a
+    # 3.4-4.5s band), which reads as phantom regressions. Headline queries
     # are always min-of-2; any full-set query whose FIRST rep exceeds
     # EXPENSIVE_SEC gets an adaptive second rep, so the top-expensive
     # tail (the queries that dominate full_total and the judge's
@@ -268,8 +261,7 @@ def main() -> None:
             # that persist() intermediates would otherwise hit rep 1's
             # cache via CacheManager plan-matching on rep 2, so min-of-N
             # would time a zero-build-cost run that no real execution
-            # sees (caught r11: a persisted plan's min-of-2 read 0.63s
-            # vs 2.3s honest).
+            # sees (a persisted plan's min-of-2 read 0.63s vs 2.3s).
             spark.catalog.clearCache()
             start = time.perf_counter()
             try:
@@ -291,7 +283,7 @@ def main() -> None:
                 break
         if best is not None:
             timings[name] = round(best, 3)
-        # ADVICE r10: several plans persist() intermediates that only the
+        # Several plans persist() intermediates that only the
         # executing session can release (build() is lazy, so it cannot
         # unpersist its own result). Dropping the cache between queries
         # bounds the session's block-manager footprint across the
@@ -307,11 +299,8 @@ def main() -> None:
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
-        # Methodology stamp (r7, VERDICT r6 item 6): headline timings
-        # switched to min-of-2 in r6; r8 extended min-of-2 to any
-        # full-set query whose first rep exceeds 2s, and added the
-        # fixed calibration plan. Round-over-round deltas need the line
-        # to say which clock produced it.
+        # Which clock produced the timings: deltas between runs are
+        # only comparable under the same methodology.
         "methodology": (
             "single_shot"
             if single_shot
@@ -323,8 +312,8 @@ def main() -> None:
         "calibration_arrow_sec": calibration_arrow,
         "calibration_shuffle_sec": calibration_shuffle,
         "queries": headline,
-        # VERDICT r13 item 6: which staged layouts this run REUSED vs
-        # REBUILT (markers newer than run start). Note min-of-N also
+        # Which staged layouts this run REUSED vs REBUILT (markers
+        # newer than run start). Note min-of-N also
         # means a layout rebuilt in rep 1 is warm by rep 2; "rebuilt"
         # here says the staging cost was paid somewhere inside this
         # run, "warm" that it predates the run entirely. The PRINTED
@@ -344,16 +333,16 @@ def main() -> None:
     if errors:
         out["errors"] = errors
     # The PRINTED line stays compact (headline map only, ~1 KB): the
-    # driver's BENCH artifact keeps a byte-bounded stdout tail, and the
-    # 252-entry per-query map inline overflowed it in r7 and r8
-    # ("parsed": null). The full per-query map, the naive-carrier tags,
-    # and the compact summary all go to repo-side files instead.
+    # BENCH artifact keeps a byte-bounded stdout tail, which
+    # the full per-query map inline overflowed. The full per-query map,
+    # the naive-carrier tags, and the compact summary all go to
+    # repo-side files instead.
     line = json.dumps(out)
     print(line)
     full = dict(out)
     full["queries_full"] = timings
     full["staging"] = staging  # both lists verbatim (names)
-    # r12 item 7: the probe series + each query's segment index. A
+    # The probe series + each query's segment index. A
     # reader flags entry q as contended when
     # lane_probes[query_probe_idx[q]] deviates from the run median of
     # its lane (or from the following probe) beyond the documented

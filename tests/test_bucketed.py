@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from ag_data_ingestion_github_to_snowflake_spark.catalog import load_table
 from ag_data_ingestion_github_to_snowflake_spark.sources.bucketed import (
     bucketed_pair,
+    write_bucketed,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -17,14 +18,11 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def pair(spark):
-    li = load_table(spark, SF, "lineitem").select(
-        "l_orderkey", "l_extendedprice"
-    )
-    orders = load_table(spark, SF, "orders").select(
-        "o_orderkey", "o_orderpriority"
-    )
     return bucketed_pair(
-        spark, li, "l_orderkey", orders, "o_orderkey", tag="test_sf0_001"
+        spark,
+        SF,
+        ("lineitem", "l_orderkey", ["l_extendedprice"]),
+        ("orders", "o_orderkey", ["o_orderpriority"]),
     )
 
 
@@ -80,15 +78,16 @@ def test_bucketed_join_matches_plain_join(spark, pair):
     assert got == want
 
 
-def test_write_bucketed_is_rerunnable(spark):
-    """Overwrite semantics: staging the same tag twice must not fail
-    or duplicate rows (the registry query re-stages per run)."""
+def test_write_bucketed_is_rerunnable(spark, tmp_path):
+    """Overwrite semantics: writing the same table to the same path
+    twice (a restage after the fixture changed) must not fail or
+    duplicate rows."""
     orders = load_table(spark, SF, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
-    li = load_table(spark, SF, "lineitem").select("l_orderkey")
     for _ in range(2):
-        _, bord = bucketed_pair(
-            spark, li, "l_orderkey", orders, "o_orderkey", tag="test_rerun"
-        )
-    assert bord.count() == orders.count()
+        write_bucketed(orders, "test_rerun", "o_orderkey", 8, str(tmp_path / "t"))
+    try:
+        assert spark.table("test_rerun").count() == orders.count()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS test_rerun")

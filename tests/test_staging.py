@@ -1,20 +1,26 @@
-"""The one staging gate (``sources.staging.staged``): a staged registry
-query reuses its stage while the fixture is unchanged, and restages
-when a source table is rewritten in place."""
+"""The scratch root (``sources.staging``): a staged registry query
+reuses its stage while the fixture is unchanged and restages when a
+source table is rewritten in place; a per-build scratch dir belongs to
+one process and is gone when it exits."""
 
 from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
-import tempfile
+import subprocess
+import sys
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
 from ag_data_ingestion_github_to_snowflake_spark.plans.registry import all_specs
-from ag_data_ingestion_github_to_snowflake_spark.sources.staging import stage_dir
+from ag_data_ingestion_github_to_snowflake_spark.sources.staging import (
+    scratch_root,
+    stage_dir,
+)
 from tests.conftest import SF_SMOKE
 from tests.oracle_harness import compare, duckdb_connect, frame_fingerprint
 
@@ -22,6 +28,7 @@ from tests.oracle_harness import compare, duckdb_connect, frame_fingerprint
 # one query per gate (the session drain covers the flushed events stage,
 # the multibatch rollup the 8-way split)
 STAGED = {
+    "bucketed_join_colocated": "lineitem",
     "streaming_tumbling_events": "events",
     "streaming_session_window_events": "events",
     "streaming_multibatch_rollup": "events",
@@ -47,7 +54,13 @@ def _copy_fixture(dest: str) -> str:
 def _scratch_dirs(sf: str) -> list[str]:
     """Every ``stage_dir(prefix, sf)`` that exists, whatever the prefix."""
     suffix = os.path.basename(stage_dir("", sf))
-    return glob.glob(os.path.join(tempfile.gettempdir(), f"ag_*{suffix}"))
+    return glob.glob(os.path.join(scratch_root(), f"ag_*{suffix}"))
+
+
+def _bucketed_tables(spark, sf: str) -> list[str]:
+    """Catalog tables registered over the bucketed stages of ``sf``."""
+    suffix = re.sub(r"\W", "_", os.path.basename(stage_dir("", sf)))
+    return [t.name for t in spark.catalog.listTables() if t.name.endswith(suffix)]
 
 
 def _stage_files(sf: str) -> dict[str, int]:
@@ -75,9 +88,11 @@ def _rewrite_in_place(path: str) -> None:
 
 
 @pytest.fixture
-def fixture_copy(tmp_path):
+def fixture_copy(spark, tmp_path):
     sf = _copy_fixture(str(tmp_path / "sf_copy"))
     yield sf
+    for name in _bucketed_tables(spark, sf):
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
     for d in _scratch_dirs(sf):
         shutil.rmtree(d, ignore_errors=True)
 
@@ -111,3 +126,74 @@ def test_stage_is_reused_until_the_fixture_is_rewritten(spark, fixture_copy, tmp
     finally:
         for d in _scratch_dirs(fresh):
             shutil.rmtree(d, ignore_errors=True)
+
+
+def test_bucketed_stage_is_registered_from_its_files_on_a_fresh_catalog(spark, fixture_copy):
+    """A session whose catalog lacks the tables reuses the staged layout:
+    it registers both tables from the files, rewrites nothing, and the
+    join still reads both sides with no Exchange."""
+    spec = all_specs()["bucketed_join_colocated"]
+    spec.build(spark, fixture_copy).collect()
+    first = _stage_files(fixture_copy)
+    tables = _bucketed_tables(spark, fixture_copy)
+    assert len(tables) == 2, tables
+    for name in tables:
+        spark.sql(f"DROP TABLE {name}")
+
+    # the tiny fixture would broadcast, which hides the property
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        got = spec.build(spark, fixture_copy)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        con = duckdb_connect(fixture_copy)
+        try:
+            result = compare("bucketed_join_colocated", got, con, spec.oracle)
+        finally:
+            con.close()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert _stage_files(fixture_copy) == first, "reuse rewrote a staged file"
+    assert sorted(_bucketed_tables(spark, fixture_copy)) == sorted(tables)
+    assert "SortMergeJoin" in plan, plan
+    assert "Exchange" not in plan.split("SortMergeJoin", 1)[1], plan
+    assert result.match, result.detail
+
+
+# Asks for a scratch dir, fills it, reports it and waits for stdin to close.
+_SCRATCH_CHILD = """
+import os, sys
+from ag_data_ingestion_github_to_snowflake_spark.sources.staging import scratch_dir
+path = scratch_dir("ag_json_sink", sys.argv[1])
+os.makedirs(path)
+open(os.path.join(path, "part-0.json"), "w").close()
+print(path, flush=True)
+sys.stdin.read()
+"""
+
+
+def test_scratch_dir_is_per_process_and_removed_at_exit(tmp_path):
+    """Two live processes asking for the same (prefix, dataset) get
+    different dirs, so neither rewrites the other's output under a lazy
+    read; each dir is gone once its process exits."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sf = str(tmp_path / "sf0.01")
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", _SCRATCH_CHILD, sf],
+            cwd=root,
+            stdin=subprocess.PIPE,
+            stdout=subprocess.PIPE,
+            text=True,
+        )
+        for _ in range(2)
+    ]
+    try:
+        paths = [p.stdout.readline().strip() for p in procs]
+        assert all(paths) and paths[0] != paths[1], paths
+        assert all(os.path.isdir(p) for p in paths)
+    finally:
+        for p in procs:
+            p.communicate(timeout=60)
+    assert [p.returncode for p in procs] == [0, 0]
+    assert not any(os.path.exists(p) for p in paths), paths

@@ -528,19 +528,19 @@ def test_failed_drain_leaves_no_checkpoint_dir_or_memory_table(spark, monkeypatc
     raises (the SCD2 upsert's merge) stops its query and removes its
     checkpoint and per-run history dirs too."""
     import glob
-    import tempfile
 
     from pyspark.sql.types import LongType
 
     from ag_data_ingestion_github_to_snowflake_spark.operators import scd
     from ag_data_ingestion_github_to_snowflake_spark.plans import streaming_queries as SQ
     from ag_data_ingestion_github_to_snowflake_spark.plans.registry import all_specs
+    from ag_data_ingestion_github_to_snowflake_spark.sources.staging import scratch_root
 
     def cps():
         return {
             p
             for pattern in ("ag_stream_cp_*", "ag_scd2_cp_*", "ag_scd2_hist_*")
-            for p in glob.glob(os.path.join(tempfile.gettempdir(), pattern))
+            for p in glob.glob(os.path.join(scratch_root(), pattern))
         }
 
     def mem_tables():
