@@ -228,7 +228,7 @@ def count_distinct_customers(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "approx_distinct_users",
-    # DECIDED rows-only (final, r10): HLL++ estimates are
+    # Rows-only: HLL++ estimates are
     # engine-specific by design — no SQL engine reproduces Spark's
     # register layout. Correctness evidence lives in the oracle-green
     # twin `hll_verified_users_by_type` (same rollup, estimate checked
@@ -560,10 +560,7 @@ def pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
     scale-safe aggregate shape. Decimal-exact sums for oracle parity.
     """
     li = t(spark, sf, "lineitem").filter(F.col("l_shipdate") <= F.lit("2001-09-01").cast("timestamp_ntz"))
-    # r13: same single-row-group bottleneck as the moment family — the
-    # five decimal partial sums ran on ONE scan task; prune to the five
-    # live columns, then layout-gated repartition (no-op when the
-    # source splits; guide §2.5).
+    # Spread the five decimal partial sums off one scan task (OPTIMIZATION_r13.md §5).
     li = parallelize_cpu_scan(
         li.select(
             "l_returnflag", "l_linestatus", "l_quantity",
@@ -592,7 +589,7 @@ def pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 def _moment_scan(spark: SparkSession, sf: str, *cols: str) -> DataFrame:
     """lineitem pruned to the moment columns, repartitioned only when
-    the source layout cannot split the scan (r13, guide §2.5): the
+    the source layout cannot split the scan (OPTIMIZATION_r13.md §2): the
     exact-decimal moment sums are the cost of this query family and a
     single-row-group fixture file runs the partial aggregate on ONE
     task. No-op at production row-group counts."""
@@ -868,7 +865,7 @@ def setops_all_variants(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "approx_percentiles_nchars",
-    # DECIDED rows-only (final, r10): percentile_approx's GK-sketch
+    # Rows-only: percentile_approx's GK-sketch
     # internals are engine-specific, so no SQL twin can replay the
     # estimate. Correctness evidence: the EXACT twin
     # `percentiles_nchars` is oracle-green on the same grouping, and
@@ -1007,8 +1004,8 @@ def fk_integrity_audit(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# Each oracle is shared by a single-task global-order carrier and its
-# range-partition rank twin below (same answer, different plan).
+# Each oracle serves two registry names from one range-partition rank
+# builder below.
 GINI_REVENUE_ORACLE = """
     WITH rev AS (
         SELECT o_custkey AS k,
@@ -1050,12 +1047,18 @@ DECILE_LIFT_ORACLE = """
 
 
 @register(
+    "gini_revenue_distributed",
+    oracle=GINI_REVENUE_ORACLE,
+    survey_ids=("B16", "B18", "B29"),
+    description="Gini via range-partition two-phase rank: no single-task global sort",
+)
+@register(
     "gini_revenue_concentration",
     oracle=GINI_REVENUE_ORACLE,
     survey_ids=("B16", "B18", "B29"),
     description="Gini coefficient of per-customer revenue: rank-weighted exact-decimal sums",
 )
-def gini_revenue_concentration(spark: SparkSession, sf: str) -> DataFrame:
+def gini_revenue_distributed(spark: SparkSession, sf: str) -> DataFrame:
     """Revenue-concentration Gini over customers (0 = equal, 1 = one
     customer is all revenue) via the rank formula
     G = 2*sum(i*x_i)/(n*sum(x)) - (n+1)/n over ascending-sorted
@@ -1063,99 +1066,10 @@ def gini_revenue_concentration(spark: SparkSession, sf: str) -> DataFrame:
     accumulation order (Spark partial aggregation vs DuckDB serial)
     cannot perturb the doubles; only the final ratio is IEEE.
 
-    Scale shape: one shuffle for per-key revenue, then a GLOBAL-ORDER
-    WINDOW for ranks — a single-task sort kept deliberately as the
-    measured-contrast naive carrier. USE ``gini_revenue_distributed``
-    (same oracle, range-partition two-phase rank, every stage parallel)
-    on real data.
-    """
-    rev = (
-        t(spark, sf, "orders")
-        .groupBy(F.col("o_custkey").alias("k"))
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("decimal(18,2)")
-            .alias("x")
-        )
-    )
-    ranked = rev.select(
-        "x", F.row_number().over(Window.orderBy("x", "k")).alias("i")
-    )
-    n = F.count("*")
-    total = F.sum(F.col("x").cast("decimal(18,2)"))
-    weighted = F.sum(F.col("i").cast("decimal(38,2)") * F.col("x").cast("decimal(18,2)"))
-    return ranked.agg(
-        n.cast("bigint").alias("n_customers"),
-        total.cast("double").alias("total_rev"),
-        (
-            F.lit(2.0) * weighted.cast("double") / (n * total.cast("double"))
-            - (n + F.lit(1.0)) / n
-        ).alias("gini"),
-    )
-
-
-@register(
-    "decile_lift_acctbal",
-    oracle=DECILE_LIFT_ORACLE,
-    survey_ids=("B13", "B16", "B29"),
-    description="decile lift table: conversion rate by account-balance decile (ntile with unique tiebreak)",
-)
-def decile_lift_acctbal(spark: SparkSession, sf: str) -> DataFrame:
-    """Model-eval-style decile lift: customers ranked into 10 equal
-    buckets by account balance (score), per-decile conversion rate
-    (converted = has at least one order). NTILE over a total order
-    with a unique tiebreak key so both engines cut the deciles at
-    identical rows; the score mean goes through exact decimal sums.
-
-    Scale shape: one semi-join for the label, then a GLOBAL-ORDER
-    NTILE — a single-task sort kept deliberately as the
-    measured-contrast naive carrier. USE ``decile_lift_distributed``
-    (same oracle, range-partition rank + closed-form NTILE cut) on
-    real data.
-    """
-    c = t(spark, sf, "customer")
-    o = t(spark, sf, "orders").select("o_custkey").distinct()
-    scored = c.join(
-        o, c.c_custkey == o.o_custkey, "left"
-    ).select(
-        "c_custkey",
-        F.col("c_acctbal").cast("decimal(18,2)").alias("score"),
-        F.when(F.col("o_custkey").isNull(), 0).otherwise(1).alias("converted"),
-    )
-    deciles = scored.select(
-        F.ntile(10).over(Window.orderBy("score", "c_custkey")).alias("decile"),
-        "score",
-        "converted",
-    )
-    return deciles.groupBy("decile").agg(
-        F.count("*").cast("bigint").alias("n"),
-        (F.sum("score").cast("double") / F.count("*")).alias("mean_score"),
-        F.sum("converted").cast("bigint").alias("n_converted"),
-        (F.sum("converted").cast("double") / F.count("*")).alias("conv_rate"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Distributed-rank twins: Gini + decile lift without a single-task sort
-# (same oracles as the naive carriers; rank comes from the
-# operators/ids.py range-partition two-phase rank instead of a
-# global-order Window, so no partition ever holds the full table)
-# ---------------------------------------------------------------------------
-@register(
-    "gini_revenue_distributed",
-    oracle=GINI_REVENUE_ORACLE,
-    survey_ids=("B16", "B18", "B29"),
-    description="Gini via range-partition two-phase rank: no single-task global sort",
-)
-def gini_revenue_distributed(spark: SparkSession, sf: str) -> DataFrame:
-    """Oracle-identical twin of ``gini_revenue_concentration`` with the
-    rank assigned by ``operators/ids.py:assign_sequential_ids`` — a
-    sampled range exchange, per-partition local row_number, and a
-    broadcast prefix-sum of per-partition counts (one row per
-    partition to the driver). Equal (x, k) keys cannot split across
-    range partitions and (x, k) is unique, so the rank is bit-identical
-    to the single-partition ROW_NUMBER the oracle computes — while
-    every stage stays parallel at 100 TB.
+    The rank comes from ``operators/ids.py:assign_sequential_ids`` (one
+    range exchange, ids from per-partition counts), not a global-order
+    window: (x, k) is unique, so it equals the single-partition
+    ROW_NUMBER the oracle computes while every stage stays parallel.
     """
     from ag_data_ingestion_github_to_snowflake_spark.operators.ids import (
         assign_sequential_ids,
@@ -1170,9 +1084,8 @@ def gini_revenue_distributed(spark: SparkSession, sf: str) -> DataFrame:
             .alias("x")
         )
     )
-    ranked = assign_sequential_ids(rev, ["x", "k"], out_col="i0").select(
-        "x", (F.col("i0") + F.lit(1)).alias("i")
-    )
+    ranked, _ = assign_sequential_ids(rev, ["x", "k"], out_col="i0")
+    ranked = ranked.select("x", (F.col("i0") + F.lit(1)).alias("i"))
     n = F.count("*")
     total = F.sum(F.col("x").cast("decimal(18,2)"))
     weighted = F.sum(F.col("i").cast("decimal(38,2)") * F.col("x").cast("decimal(18,2)"))
@@ -1192,19 +1105,30 @@ def gini_revenue_distributed(spark: SparkSession, sf: str) -> DataFrame:
     survey_ids=("B13", "B16", "B29"),
     description="decile lift via range-partition rank + closed-form NTILE cut",
 )
+@register(
+    "decile_lift_acctbal",
+    oracle=DECILE_LIFT_ORACLE,
+    survey_ids=("B13", "B16", "B29"),
+    description="decile lift table: conversion rate by account-balance decile (ntile with unique tiebreak)",
+)
 def decile_lift_distributed(spark: SparkSession, sf: str) -> DataFrame:
-    """Oracle-identical twin of ``decile_lift_acctbal``: the global
-    NTILE(10) is replaced by the range-partition rank
-    (``operators/ids.py``) plus the closed-form NTILE bucket function —
-    with n rows and q = n div 10, r = n mod 10, the first r buckets
-    hold q+1 rows — applied map-side to the 0-based rank z:
+    """Model-eval-style decile lift: customers ranked into 10 equal
+    buckets by account balance (score), per-decile conversion rate
+    (converted = has at least one order); the score mean goes through
+    exact decimal sums.
+
+    NTILE(10) over (score, c_custkey) — a total order with a unique
+    tiebreak — is the range-partition rank (``operators/ids.py``) plus
+    the closed-form NTILE bucket function: with n rows and
+    q = n div 10, r = n mod 10, the first r buckets hold q+1 rows, so
+    the 0-based rank z falls in
 
         bucket(z) = z div (q+1) + 1              if z <  r*(q+1)
                     r + (z - r*(q+1)) div q + 1   otherwise
 
-    which reproduces SQL NTILE exactly (same row-to-bucket cut as the
-    single-partition window) with no single-task sort. n arrives via a
-    broadcast 1-row count, so the whole plan stays parallel.
+    which reproduces SQL NTILE exactly with no single-task sort. n is
+    the row count the rank step already summed on the driver, so it
+    enters the plan as a literal.
     """
     from ag_data_ingestion_github_to_snowflake_spark.operators.ids import (
         assign_sequential_ids,
@@ -1219,20 +1143,19 @@ def decile_lift_distributed(spark: SparkSession, sf: str) -> DataFrame:
         F.col("c_acctbal").cast("decimal(18,2)").alias("score"),
         F.when(F.col("o_custkey").isNull(), 0).otherwise(1).alias("converted"),
     )
-    ranked = assign_sequential_ids(scored, ["score", "c_custkey"], out_col="z")
-    n_row = F.broadcast(ranked.agg(F.count(F.lit(1)).alias("_n")))
-    q = F.floor(F.col("_n") / 10)
-    r = F.col("_n") % 10
+    ranked, n = assign_sequential_ids(scored, ["score", "c_custkey"], out_col="z")
+    q, r = divmod(n, 10)
+    cut = r * (q + 1)
     z = F.col("z")
+    # q is 0 only when n < 10, and then every z < cut.
     decile = (
-        F.when(z < r * (q + 1), F.floor(z / (q + 1)) + 1)
-        .otherwise(r + F.floor((z - r * (q + 1)) / q) + 1)
+        F.when(z < cut, F.floor(z / (q + 1)) + 1)
+        .otherwise(r + F.floor((z - cut) / max(q, 1)) + 1)
         .cast("int")
         .alias("decile")
     )
     return (
-        ranked.join(n_row)
-        .select(decile, "score", "converted")
+        ranked.select(decile, "score", "converted")
         .groupBy("decile")
         .agg(
             F.count("*").cast("bigint").alias("n"),
@@ -1464,10 +1387,7 @@ def _ab_value_counts(spark: SparkSession, sf: str) -> DataFrame:
     two rank tests below share: one groupBy(value) with map-side
     combine reduces the event stream to its distinct-value table."""
     ev = t(spark, sf, "events").filter(F.col("event_type").isin("click", "view"))
-    # r13: measured parallelize_cpu_scan here (interleaved A/B x4):
-    # 0.43-0.65x on both consumers — a regression; the value-count
-    # partial aggregate is codegen-cheap and map-side combine already
-    # shrinks the shuffle. Deliberately left on the raw scan.
+    # Raw scan: parallelize_cpu_scan measured 0.43-0.65x here (OPTIMIZATION_r13.md §2).
     return ev.groupBy("value").agg(
         F.sum((F.col("event_type") == "click").cast("long")).alias("n_a"),
         F.sum((F.col("event_type") == "view").cast("long")).alias("n_b"),
@@ -1722,19 +1642,12 @@ def bootstrap_ci_order_total(spark: SparkSession, sf: str) -> DataFrame:
     ~93.75% interval for B=32; explicit ranks, not engine-specific
     percentile interpolation).
 
-    Measured floor (r9, 100x = 15M orders): 16.6 s / alpha +0.61 —
-    the cost is the 480M-row weighted aggregation itself (~29M
-    rows/s/box), not the hashing (hoisting digests before the fan-out
-    and quartering the md5 count both moved it < 5%). B, not data
-    size, is the knob if the budget matters; halving B halves the
-    floor at the cost of CI resolution.
+    The cost is the B-fold weighted aggregation, not the hashing: B,
+    not data size, is the knob; halving B halves the time at the cost
+    of CI resolution.
     """
     o = t(spark, sf, "orders").select("o_orderkey", "o_totalprice")
-    # r13: the md5 fan-out below is the cost (8 digests + 32 Poisson
-    # rows per order), and a single-row-group fixture scan runs it on
-    # ONE task (measured 10.4 s single-threaded at sf0.1).
-    # parallelize_cpu_scan adds a 16-byte/row round-robin exchange
-    # only when the layout under-splits; at scale it is a no-op.
+    # Spread the md5 fan-out off one scan task (OPTIMIZATION_r13.md §2).
     o = parallelize_cpu_scan(o, spark, sf, "orders")
     # One digest serves replicates 4d..4d+3 via disjoint 7-hex
     # substrings, and the 8 digests per row are computed BEFORE the
@@ -2651,16 +2564,7 @@ def split_conformal_ols(spark: SparkSession, sf: str) -> DataFrame:
     b_ = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     )
-    # r13: the fit and the conformal quantile are 1-ROW values whose
-    # subtrees (full split scans + per-row sha256 bucketing) the r12
-    # plan re-executed once per consumer — fit fed two broadcasts plus
-    # a separate n_train re-count (4th full scan), and the q subtree
-    # ran for both the test pass and the output row. Collecting each
-    # once (bounded 1-row collects, the train_ivf_centroids/bpe
-    # convention) and re-injecting the doubles as literals cuts the
-    # query from ~6 split scans to 3 — one per split. Python floats
-    # round-trip py4j bit-exactly, so every downstream value is
-    # unchanged (parity-gated at 3 scales).
+    # Collect each 1-row value once as a literal: one scan per split (OPTIMIZATION_r13.md §4).
     fit = m.select(
         b_.alias("b"),
         ((F.col("sy") - b_ * F.col("sx")) / F.col("n")).alias("a"),
@@ -2676,9 +2580,7 @@ def split_conformal_ols(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     w = Window.orderBy("r").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    # n_cal rides the SAME pass as the cumulative (an unpartitioned
-    # total over the distinct-residual table) — the r12 plan re-scanned
-    # the calibration split for a separate count.
+    # n_cal rides the cumulative's pass, not a second scan (OPTIMIZATION_r13.md §4).
     ranked = counts.select(
         "r",
         F.sum("cnt").over(w).alias("cum"),
@@ -2718,7 +2620,7 @@ def split_conformal_ols(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dp_laplace_counts",
-    # Hash contract (hardened r12, item 5): the Laplace draw is
+    # Hash contract: the Laplace draw is
     # inverse-CDF over an md5-derived uniform (u = hash/2^60, a dyadic
     # rational) through the portable ln, so the noise double is
     # bit-identical on any engine/libm build; presentation is

@@ -553,9 +553,9 @@ def provenance_dedup_priority(spark: SparkSession, sf: str) -> DataFrame:
 def assign_sequence_ids(spark: SparkSession, sf: str) -> DataFrame:
     """Mint dense 0..n-1 sequence ids for the corpus — equal to the
     single-partition ``ROW_NUMBER() OVER (ORDER BY doc_id)`` the oracle
-    runs, but computed with the data distributed throughout: range
-    exchange, partition-local rank, and a parallelism-sized offset
-    table broadcast back (``operators/ids.py``). The shape every
+    runs, but computed with the data distributed throughout: one range
+    exchange, and ids from per-partition counts folded into the plan
+    as literal offsets (``operators/ids.py``). The shape every
     shard-manifest writer needs at 100 TB, where a global-sort window
     would serialize on one task."""
     from ag_data_ingestion_github_to_snowflake_spark.operators.ids import (
@@ -563,7 +563,7 @@ def assign_sequence_ids(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     docs = t(spark, sf, "documents").select("doc_id")
-    return assign_sequential_ids(docs, "doc_id")
+    return assign_sequential_ids(docs, "doc_id")[0]
 
 
 # ---------------------------------------------------------------------------

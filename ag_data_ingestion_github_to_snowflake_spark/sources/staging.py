@@ -13,7 +13,9 @@ root, ``{tmp}/spark_graft``, with one of two lifetimes.
   coordinated.
 - ``scratch_dir`` is a per-build output that each build rewrites. It is
   unique to the process, so a concurrent process never rewrites it
-  under a lazy read, and it is removed when the process exits.
+  under a lazy read, and it is removed when the process exits. A
+  process killed before its exit hooks ran leaves its dirs behind; the
+  next process to ask for a scratch dir removes them.
 
 Both key the dir by the WHOLE dataset path (``stage_dir``): two roots
 ending in ``sf0.01`` never share one. Try/finally temp dirs are made
@@ -23,8 +25,10 @@ with ``tempfile.mkdtemp(dir=scratch_root())``.
 from __future__ import annotations
 
 import atexit
+import glob
 import hashlib
 import os
+import re
 import shutil
 import tempfile
 from collections.abc import Callable, Iterable
@@ -102,12 +106,29 @@ def staged(
 _SCRATCH: set[str] = set()
 
 
+def _prune_dead_scratch() -> None:
+    """Remove every ``{root}/*_pid{N}`` dir whose process N is gone."""
+    for path in glob.glob(os.path.join(scratch_root(), "*_pid*")):
+        m = re.search(r"_pid(\d+)$", path)
+        if not m:
+            continue
+        try:
+            os.kill(int(m.group(1)), 0)
+        except ProcessLookupError:
+            shutil.rmtree(path, ignore_errors=True)
+        except PermissionError:
+            pass  # alive, owned by another user
+
+
 def scratch_dir(prefix: str, sf: str) -> str:
     """Return an absent path ``{stage_dir(prefix, sf)}_pid{pid}`` for a
     build to write its output to; whatever an earlier build of this
     process left there is removed first. The dir is removed at process
-    exit, not by the caller: the returned DataFrame reads it lazily."""
+    exit, not by the caller: the returned DataFrame reads it lazily.
+    The first call in a process also removes dead processes' dirs."""
     path = f"{stage_dir(prefix, sf)}_pid{os.getpid()}"
+    if not _SCRATCH:
+        _prune_dead_scratch()
     if path not in _SCRATCH:
         _SCRATCH.add(path)
         atexit.register(shutil.rmtree, path, ignore_errors=True)

@@ -54,6 +54,8 @@ def test_retired_naive_names_serve_their_scale_path():
         "join_theta_acctbal": "theta_join_rank_rewrite",
         "concurrent_intervals_sweep": "concurrent_intervals_distributed",
         "autocorrelation_lag1_events": "autocorrelation_lag1_distributed",
+        "gini_revenue_concentration": "gini_revenue_distributed",
+        "decile_lift_acctbal": "decile_lift_distributed",
     }.items():
         assert specs[retired].build is specs[twin].build, retired
         assert specs[retired].oracle is specs[twin].oracle, retired

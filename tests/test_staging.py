@@ -17,6 +17,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from ag_data_ingestion_github_to_snowflake_spark.plans.registry import all_specs
+from ag_data_ingestion_github_to_snowflake_spark.sources import staging
 from ag_data_ingestion_github_to_snowflake_spark.sources.staging import (
     scratch_root,
     stage_dir,
@@ -172,22 +173,23 @@ sys.stdin.read()
 """
 
 
+def _scratch_child(sf: str) -> subprocess.Popen:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return subprocess.Popen(
+        [sys.executable, "-c", _SCRATCH_CHILD, sf],
+        cwd=root,
+        stdin=subprocess.PIPE,
+        stdout=subprocess.PIPE,
+        text=True,
+    )
+
+
 def test_scratch_dir_is_per_process_and_removed_at_exit(tmp_path):
     """Two live processes asking for the same (prefix, dataset) get
     different dirs, so neither rewrites the other's output under a lazy
     read; each dir is gone once its process exits."""
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sf = str(tmp_path / "sf0.01")
-    procs = [
-        subprocess.Popen(
-            [sys.executable, "-c", _SCRATCH_CHILD, sf],
-            cwd=root,
-            stdin=subprocess.PIPE,
-            stdout=subprocess.PIPE,
-            text=True,
-        )
-        for _ in range(2)
-    ]
+    procs = [_scratch_child(sf) for _ in range(2)]
     try:
         paths = [p.stdout.readline().strip() for p in procs]
         assert all(paths) and paths[0] != paths[1], paths
@@ -197,3 +199,26 @@ def test_scratch_dir_is_per_process_and_removed_at_exit(tmp_path):
             p.communicate(timeout=60)
     assert [p.returncode for p in procs] == [0, 0]
     assert not any(os.path.exists(p) for p in paths), paths
+
+
+def test_first_scratch_dir_call_prunes_dead_processes_dirs(tmp_path, monkeypatch):
+    """A process killed by SIGKILL never runs its exit hook; the next
+    process's first ``scratch_dir`` removes what it left, and keeps
+    the dir of a process that is still alive."""
+    sf = str(tmp_path / "sf0.01")
+    procs = [_scratch_child(sf) for _ in range(2)]
+    dead, live = procs
+    try:
+        dead_path, live_path = (p.stdout.readline().strip() for p in procs)
+        dead.kill()
+        dead.wait(timeout=60)  # reaped: a zombie still answers kill(pid, 0)
+        assert os.path.isdir(dead_path)
+        monkeypatch.setattr(staging, "_SCRATCH", set())  # this process's first call
+        staging.scratch_dir("ag_json_sink", sf)
+        assert not os.path.exists(dead_path)
+        assert os.path.isdir(live_path)
+    finally:
+        live.communicate(timeout=60)
+        dead.kill()
+        dead.communicate(timeout=60)
+    assert live.returncode == 0

@@ -24,7 +24,8 @@ Usage::
     python tools/plan_audit.py [--sf-dir /root/testdata/sf0.001] [--write-md]
 
 ``--write-md`` regenerates ``PLANAUDIT.md``. Exit code 1 if any query
-carries a red flag. ``tests/test_plan_audit.py`` runs the same sweep.
+carries a red flag. ``tests/test_plan_audit.py`` runs the same sweep and
+checks that ``PLANAUDIT.md`` equals its regeneration.
 """
 
 from __future__ import annotations
@@ -171,11 +172,6 @@ ALLOWED_FLAGS = {
     # an explicit crossJoin — both sides are scalar aggregates, so the
     # BNLJ multiplies 1x1 rows regardless of data volume.
     ("hll_verified_users_by_type", "BroadcastNestedLoopJoin"),
-    # The distributed decile twin attaches the 1-row global row-count
-    # aggregate (needed by the closed-form NTILE cut) to the ranked
-    # table via a broadcast cross join — one broadcast row, invariant
-    # in the data size; the rank itself is range-partitioned.
-    ("decile_lift_distributed", "BroadcastNestedLoopJoin"),
     # The bloom probe attaches the 1-row bitmap aggregate to the fact
     # via a broadcast cross join (the membership forall rides the join
     # condition) — one broadcast row, invariant in the data size.
@@ -203,9 +199,6 @@ ALLOWED_FLAGS = {
     # estimate, exact-overlap witness) — 1x1 broadcast joins,
     # invariant in the data size.
     ("hll_overlap_users", "BroadcastNestedLoopJoin"),
-    # The returned summary attaches the 1-row DLQ-count aggregate to
-    # the 1-row main-table aggregate — a 1x1 broadcast scalar join.
-    ("streaming_dlq_ingest", "BroadcastNestedLoopJoin"),
     # The 1-row first-week-mean target attaches to the calendar-
     # bounded daily series via a broadcast cross join.
     ("cusum_changepoint_daily", "BroadcastNestedLoopJoin"),
@@ -217,10 +210,6 @@ ALLOWED_FLAGS = {
     # The three per-side summary counts are 1-row aggregates joined
     # 1x1x1 into the audit row.
     ("join_fanout_audit", "BroadcastNestedLoopJoin"),
-    # Conformal attaches three 1-row scalars (the OLS fit, the
-    # calibration count, the conformal quantile) to data-scale scans
-    # via broadcast cross joins — all invariant in the data size.
-    ("split_conformal_ols", "BroadcastNestedLoopJoin"),
     # Two exact brute-force top-k sides (full-dim + truncated), each
     # the LIMITed broadcast query batch streaming the corpus map-side.
     ("matryoshka_truncation_recall", "BroadcastNestedLoopJoin"),
@@ -351,7 +340,7 @@ def to_markdown(results: dict[str, dict]) -> str:
         "| query | shuffles | broadcasts | red flags |",
         "|---|---|---|---|",
     ]
-    for name, r in results.items():
+    for name, r in sorted(results.items()):
         flags = ", ".join(r["flags"]) if r["flags"] else (
             ", ".join(f"{f} (allowed)" for f in r["allowed"]) if r["allowed"] else "—"
         )
