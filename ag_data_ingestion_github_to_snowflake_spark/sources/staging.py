@@ -28,7 +28,6 @@ import atexit
 import glob
 import hashlib
 import os
-import re
 import shutil
 import tempfile
 from collections.abc import Callable, Iterable
@@ -109,11 +108,11 @@ _SCRATCH: set[str] = set()
 def _prune_dead_scratch() -> None:
     """Remove every ``{root}/*_pid{N}`` dir whose process N is gone."""
     for path in glob.glob(os.path.join(scratch_root(), "*_pid*")):
-        m = re.search(r"_pid(\d+)$", path)
-        if not m:
+        pid = path.rpartition("_pid")[2]
+        if not pid.isdigit():
             continue
         try:
-            os.kill(int(m.group(1)), 0)
+            os.kill(int(pid), 0)
         except ProcessLookupError:
             shutil.rmtree(path, ignore_errors=True)
         except PermissionError:
